@@ -65,35 +65,46 @@ object Bench {
     val results = picked.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val gc0 = gcMs
-      val sec =
+      val (sec, err) =
         try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+          ((System.nanoTime() - t0) / 1e9, None)
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+            (-1.0, Some(e.getClass.getName))
+        }
       // UNTIMED (after the clock is read): release this entry's
       // lineage-cut blocks so storage memory does not accumulate
       // localCheckpoint frames across the 495-entry run (r15 VERDICT
       // item 4). The timing methodology is unchanged — the save() above
       // is the same timed action as every prior round.
       graft.Checkpoints.release()
-      (name, sec, osBean.getSystemLoadAverage, gcMs - gc0)
+      (name, sec, osBean.getSystemLoadAverage, gcMs - gc0, err)
     }
     // Locale.ROOT: a comma-decimal default locale would emit unparseable JSON
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results
-      .map { case (k, v, _, _) => "\"" + k + "\":" + num(v) }
+      .map { case (k, v, _, _, _) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     // per-query host context, full file only (the compact line carries
     // a run-level summary — the 1700-char budget has no room for 368
     // rows of context)
     val ctx = results
-      .map { case (k, _, l, g) => "\"" + k + "\":{\"load\":" + num(l) + ",\"gc_ms\":" + g + "}" }
+      .map { case (k, _, l, g, _) => "\"" + k + "\":{\"load\":" + num(l) + ",\"gc_ms\":" + g + "}" }
       .mkString("{", ",", "}")
     val loads = results.map(_._3).filter(_ >= 0)
     val loadMax = if (loads.isEmpty) -1.0 else loads.max
     val loadMean = if (loads.isEmpty) -1.0 else loads.sum / loads.size
     val gcTotalS = results.map(_._4).sum / 1000.0
+    // total sums the successful entries only; a failed entry keeps its
+    // -1 in `queries` and is named with its error class in `failed`, so
+    // a crash cannot pass for a faster run
     val total = results.map(_._2).filter(_ >= 0).sum
+    val failed = results.collect { case (k, _, _, _, Some(e)) => k -> e }
+    val failedJson = failed
+      .map { case (k, e) => "{\"entry\":\"" + k + "\",\"error\":\"" + e + "\"}" }
+      .mkString("[", ",", "]")
     // per-family subtotals: round-over-round drift in the 200+
     // non-headline queries was unattributable from the compact line
     // alone — one bounded line per operator family localizes it
@@ -112,13 +123,13 @@ object Bench {
         case "dq" => "quality"
         case other => other // ann / text / mm / graph / sketch / model
       }
-    val fams = results.filter(_._2 >= 0).groupBy { case (n, _, _, _) => family(n) }
+    val fams = results.filter(_._2 >= 0).groupBy { case (n, _, _, _, _) => family(n) }
       .map { case (f, rs) => f -> rs.map(_._2).sum }.toSeq.sortBy(_._1)
     val famJson = fams.map { case (f, v) => "\"" + f + "\":" + num(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"family_subtotals","families":$famJson,"sf":"$sfDir"}""")
     val hostJson = s"""{"cpus":$cpus,"load_max":${num(loadMax)},"load_mean":${num(loadMean)},"gc_total_s":${num(gcTotalS)}}"""
-    val json = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"ctx":$ctx,"host":$hostJson,"families":$famJson,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"ctx":$ctx,"host":$hostJson,"families":$famJson,"failed":$failedJson,"n_failed":${failed.size},"sf":"$sfDir"}"""
     println(json)
     // the sbt log tail can truncate the (long) JSON line — also land it
     // in a file so per-query numbers survive regardless of log capture,
@@ -173,7 +184,7 @@ object Bench {
     def compact(names: Seq[String]): String = {
       val qsC = names.flatMap(n => got.get(n).map(v => "\"" + n + "\":" + num(v)))
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qsC,"host":$hostJson,"sf":"$sfDir","n_queries":${results.size},"full":"$out"}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qsC,"host":$hostJson,"sf":"$sfDir","n_queries":${results.size},"n_failed":${failed.size},"full":"$out"}"""
     }
     val lastLine = Iterator.iterate(headline)(_.dropRight(1))
       .take(headline.size + 1).map(compact)

@@ -80,7 +80,6 @@ object Affinity {
       .select(col("part_a"), col("part_b"), col("support_cnt"),
         (floor(col("support_cnt") * col("n_orders") * lit(10000) /
           (col("cnt_a") * col("cnt_b"))) / 10000.0).as("lift"))
-      .orderBy(col("part_a"), col("part_b"))
   }
 
   val basketPairsSql: String =
@@ -123,7 +122,6 @@ object Affinity {
     steps.join(broadcast(totals), Seq("from_type"))
       .select(col("from_type"), col("to_type"), col("n"),
         (floor(col("n") * lit(10000) / col("row_total")) / 10000.0).as("prob"))
-      .orderBy(col("from_type"), col("to_type"))
   }
 
   val transitionMatrixSql: String =
@@ -190,7 +188,6 @@ object Affinity {
     val totalR = types.map(v).sum
     types.toSeq.map(t => (t, v(t), (v(t) * 10000L / totalR) / 10000.0))
       .toDF("event_type", "rank_fp", "share")
-      .orderBy(col("event_type"))
   }
 
   val markovSteadySql: String = {
@@ -262,7 +259,6 @@ object Affinity {
       .groupBy(col("r_q"), col("f_q"), col("m_q"))
       .agg(count(lit(1)).as("n_customers"),
         expr("sum(m_cents) DIV count(*)").as("avg_monetary_cents"))
-      .orderBy(col("r_q"), col("f_q"), col("m_q"))
   }
 
   val rfmSegmentsSql: String =
@@ -328,7 +324,6 @@ object Affinity {
         coalesce(col("tier_b"), lit(0)).as("tier_b"))
       .groupBy(col("tier_a"), col("tier_b"))
       .agg(count(lit(1)).as("n_customers"))
-      .orderBy(col("tier_a"), col("tier_b"))
   }
 
   val rfmMigrationSql: String =
@@ -412,7 +407,6 @@ object Affinity {
             .over(Window.orderBy(col("hour"))
               .rowsBetween(Window.unboundedPreceding, Window.currentRow))),
           coalesce(col("carry") + col("peak_in_hour"), lit(0L))).as("peak_concurrency"))
-      .orderBy(col("hour"))
   }
 
   val concurrencySql: String =
@@ -484,7 +478,6 @@ object Affinity {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"), min(col("cents")).as("lo_cents"),
         max(col("cents")).as("hi_cents"))
-      .orderBy(col("bucket"))
   }
 
   val equidepthHistogramSql: String = {
@@ -547,7 +540,6 @@ object Affinity {
       .withColumn("rk", row_number().over(
         Window.orderBy(col("jaccard").desc, col("page_a"), col("page_b"))).cast("int"))
       .select(col("page_a"), col("page_b"), col("co"), col("jaccard"), col("rk"))
-      .orderBy(col("rk"))
   }
 
   val nodeSimilaritySql: String =
@@ -616,7 +608,6 @@ object Affinity {
       .groupBy(col("day_nr"))
       .agg(sum(col("n_segs")).as("n_intervals"), sum(col("len")).as("covered_sec"))
       .withColumn("coverage_frac", floor(col("covered_sec") * 1e4 / 86400) / 1e4)
-      .orderBy(col("day_nr"))
   }
 
   val intervalCoverageSql: String =
@@ -709,7 +700,6 @@ object Affinity {
       .agg(max(col("tot")).as("total_weight"),
         max(when(col("q") === 50, col("wc"))).as("w50_cents"),
         max(when(col("q") === 90, col("wc"))).as("w90_cents"))
-      .orderBy(col("l_returnflag"))
   }
 
   val weightedPercentileSql: String =
@@ -757,7 +747,6 @@ object Affinity {
       .agg(count(lit(1)).as("n_converted"),
         expr("percentile(lag_sec, 0.5e0)").as("p50_sec"),
         expr("percentile(lag_sec, 0.9e0)").as("p90_sec"))
-      .orderBy(col("cohort_week"))
   }
 
   val timeToConvertSql: String =
@@ -836,7 +825,6 @@ object Affinity {
           + col("regular_flag").cast("int")) >= 2)
       .select(col("user_id"), col("n_events"), col("active_sec"), col("n_pages"),
         col("rate_flag"), col("sweep_flag"), col("regular_flag"), col("is_bot"))
-      .orderBy(col("user_id"))
   }
 
   val botScoreSql: String =
@@ -910,7 +898,6 @@ object Affinity {
           Window.orderBy(col("day_nr"))
             .rowsBetween(Window.unboundedPreceding, 0)))
       .select(col("day_nr"), col("distinct_users_7d"))
-      .orderBy(col("day_nr"))
   }
 
   val slidingDistinctUsersSql: String = {
@@ -1010,7 +997,6 @@ object Affinity {
         count(when(col("day_nr") =!= col("first_day"), 1)).as("n_returning"))
       .withColumn("returning_frac",
         floor(col("n_returning") * lit(10000) / (col("n_new") + col("n_returning"))) / 1e4)
-      .orderBy(col("day_nr"))
   }
 
   val newVsReturningSql: String =
@@ -1064,7 +1050,6 @@ object Affinity {
       .select(col("day_nr"), coalesce(col("dau"), lit(0L)).as("dau"), col("mau"),
         (floor(coalesce(col("dau"), lit(0L)) * lit(10000) / col("mau")) / 1e4)
           .as("stickiness"))
-      .orderBy(col("day_nr"))
   }
 
   val stickinessSql: String = {
@@ -1139,7 +1124,6 @@ object Affinity {
         Window.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, 0)))
       .select(col("bucket"), col("n_users"), col("n_events"),
         (floor(col("cum_events") * lit(10000) / col("total")) / 1e4).as("cum_share"))
-      .orderBy(col("bucket"))
   }
 
   val paretoShareSql: String = {
@@ -1186,7 +1170,7 @@ object Affinity {
     val nulls = fact.filter(col("k_null").isNull)
       .select(col("event_id"), col("k_null"), lit(null).cast("int").as("page_group"),
         col("cents"))
-    matched.unionByName(nulls).orderBy(col("event_id"))
+    matched.unionByName(nulls)
   }
 
   val nullSkewJoinSql: String =
@@ -1262,7 +1246,6 @@ object Affinity {
     chi2CellMargins(s, d)
       .select(col("event_type"), col("dow"), col("o"),
         (floor(chi2TermCol * 1e6) / 1e6).as("chi2_term"))
-      .orderBy(col("event_type"), col("dow"))
 
   val chi2IndependenceSql: String =
     s"""WITH $chi2CellMarginsSql
@@ -1294,7 +1277,6 @@ object Affinity {
       .select(col("day_a"), col("day_b"), col("n_common"),
         (floor(col("n_common") * lit(10000.0) / (col("na") + col("nb") - col("n_common")))
           / 10000.0).as("jaccard"))
-      .orderBy(col("day_a"), col("day_b"))
   }
 
   val dayOverlapSql: String =
@@ -1341,7 +1323,6 @@ object Affinity {
         (floor(col("n_both").cast("double")
           / least(col("n_a"), col("n_b")).cast("double") * 1e4) / 1e4)
           .as("overlap_coef"))
-      .orderBy(col("type_a"), col("type_b"))
   }
 
   val audienceOverlapSql: String =
@@ -1487,7 +1468,6 @@ object Affinity {
         col("est_jaccard"), col("jaccard_exact"),
         (floor(abs(col("est_jaccard") - col("jaccard_exact")) * 1e4) / 1e4)
           .as("abs_err"))
-      .orderBy(col("type_a"), col("type_b"))
   }
 
   val audienceMinhashSql: String =
@@ -1558,7 +1538,6 @@ object Affinity {
         expr("cast(sum(cast(n_from as decimal(38,0)) * h_x1e6) over () div sum(n_from) over () as bigint)"))
       .select(col("from_type"), col("n_from"), col("h_x1e6"),
         col("entropy_rate_x1e6"))
-      .orderBy(col("from_type"))
   }
 
   val entropyRateSql: String =

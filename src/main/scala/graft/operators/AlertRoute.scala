@@ -65,7 +65,6 @@ object AlertRoute {
       .agg(count(lit(1)).as("n_alerts"),
         count(when(col("severity") === "critical", 1)).as("n_critical"),
         (min(col("t0")) + 30 + col("batch") * 300).as("flush_es"))
-      .orderBy(col("alertname"), col("batch"))
   }
 
   val groupWaitSql: String =
@@ -108,7 +107,6 @@ object AlertRoute {
         .otherwise(0)).as("inhibited"))
     flagged.groupBy(col("alertname"), col("instance"))
       .agg(count(lit(1)).as("n_warnings"), sum(col("inhibited")).as("n_inhibited"))
-      .orderBy(col("alertname"), col("instance"))
   }
 
   val inhibitionSql: String =
@@ -164,7 +162,6 @@ object AlertRoute {
       .agg(count(lit(1)).as("n_alerts"),
         count(col("first_silence")).as("n_silenced"),
         coalesce(min(col("first_silence")), lit(0L)).as("min_silence_id"))
-      .orderBy(col("alertname"))
   }
 
   val silenceMatchSql: String =
@@ -223,7 +220,6 @@ object AlertRoute {
     routed.select(col("alertname"), explode(col("receivers")).as("receiver"))
       .groupBy(col("receiver"), col("alertname"))
       .agg(count(lit(1)).as("n_alerts"))
-      .orderBy(col("receiver"), col("alertname"))
   }
 
   val routingTreeSql: String =
@@ -315,7 +311,6 @@ object AlertRoute {
       .select(col("alertname"), col("instance"), col("n_cells"),
         col("n_firing_cells"), col("n_transitions"),
         col("flap_rate_x1e6"), col("flapping"))
-      .orderBy(col("alertname"), col("instance"))
   }
 
   val flapDetectSql: String =

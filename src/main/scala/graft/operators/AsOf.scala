@@ -38,7 +38,6 @@ object AsOf {
     e.withColumn("click_ts", max(when(col("side") === 0, col("ts"))).over(w))
       .filter(col("side") === 1 && col("click_ts").isNotNull)
       .select(col("event_id"), col("user_id"), col("ts"), col("click_ts"))
-      .orderBy(col("event_id"))
   }
 
   val asofJoinSql: String =
@@ -70,7 +69,6 @@ object AsOf {
           unix_timestamp(date_trunc("second", min(col("ts"))))).as("duration_sec"),
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("value_sum"))
-      .orderBy(col("user_id"), col("session_idx"))
   }
 
   val sessionizeSql: String =
@@ -114,7 +112,6 @@ object AsOf {
     e.withColumn("next_click_ts", min(when(col("side") === 1, col("ts"))).over(w))
       .filter(col("side") === 0 && col("next_click_ts").isNotNull)
       .select(col("event_id"), col("user_id"), col("ts"), col("next_click_ts"))
-      .orderBy(col("event_id"))
   }
 
   val asofJoinForwardSql: String =
@@ -146,7 +143,6 @@ object AsOf {
       .select(col("user_id"),
         date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
         col("n_events"), col("value_sum"))
-      .orderBy(col("user_id"), col("session_start"))
   }
 
   /** Oracle: the lag/cumsum formulation reduced to the same output
@@ -191,7 +187,6 @@ object AsOf {
         unix_timestamp(col("ts")) - unix_timestamp(col("click_ts")))
       .filter(col("side") === 1 && col("staleness_sec") <= ToleranceSeconds)
       .select(col("event_id"), col("user_id"), col("ts"), col("click_ts"), col("staleness_sec"))
-      .orderBy(col("event_id"))
   }
 
   val asofToleranceSql: String =
@@ -238,7 +233,6 @@ object AsOf {
         when(col("df").isNull || (col("db").isNotNull && col("db") <= col("df")),
           lit("backward")).otherwise(lit("forward")).as("direction"),
         least(coalesce(col("db"), col("df")), coalesce(col("df"), col("db"))).as("gap_us"))
-      .orderBy(col("event_id"))
   }
 
   val asofNearestSql: String =
@@ -315,7 +309,6 @@ object AsOf {
         (col("n_users") + col("n_boundaries")).as("n_sessions"),
         expr("n_events * 10000 div (n_users + n_boundaries)")
           .as("mean_events_per_session_x1e4"))
-      .orderBy(col("gap_sec"))
   }
 
   val sessionizeGapSweepSql: String = {
@@ -371,7 +364,6 @@ object AsOf {
       .select(col("bucket"), col("n"), col("w0"), col("w1"),
         floor(col("score")).cast("long").as("score_floor"), col("is_chosen"),
         expr("shiftleft(1L, bucket)").as("timeout_sec"))
-      .orderBy(col("bucket"))
   }
 
   val sessionizeOtsuSql: String =

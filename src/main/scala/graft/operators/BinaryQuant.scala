@@ -73,7 +73,6 @@ object BinaryQuant {
         count(col("in_truth")).as("n_overlap"),
         min(col("hamming")).cast("long").as("best_hamming"),
         max(col("hamming")).cast("long").as("worst_top_hamming"))
-      .orderBy(col("query_id"))
   }
 
   val binaryRecallSql: String =

@@ -66,7 +66,6 @@ object BloomDedup {
         count(when(col("bloom_pos"), 1)).as("n_bloom_pos"),
         count(when(col("exact") === 1, 1)).as("n_true_dup"),
         count(when(col("bloom_pos") && col("exact").isNull, 1)).as("n_false_pos"))
-      .orderBy(col("source"))
   }
 
   val bloomPrefilterSql: String =

@@ -54,7 +54,6 @@ object Cdc {
         coalesce(col("log_bal"), col("snap_bal")).as("balance"),
         coalesce(col("last_op"), lit("-")).as("last_op"),
         coalesce(col("log_ops"), lit(0L)).as("log_ops"))
-      .orderBy(col("entity_key"))
   }
 
   val cdcApplySql: String =
@@ -122,7 +121,6 @@ object Cdc {
       .withColumn("in_sync",
         col("n_snapshot") === col("n_applied")
           && col("digest_snapshot") === col("digest_applied"))
-      .orderBy(col("bucket"))
   }
 
   val reconcileSql: String = {
@@ -190,7 +188,6 @@ object Cdc {
         col("event_id"), col("balance").as("bal"))
       .union(batch2.select(col("entity_key"), col("ord_sec"), col("event_id"), col("bal")))
     unaffected.union(intervals(replay))
-      .orderBy(col("entity_key"), col("from_sec"), col("event_id"))
   }
 
   /** One-shot rebuild over the full log — incremental must equal this. */

@@ -32,21 +32,17 @@ object Cluster {
   def dedupCluster: Q = (s, d) => {
     // materialize pairs ONCE before fanning out: the union below
     // references them twice, and an unmaterialized reference would
-    // re-run the whole minhash pipeline per branch. minhashPairs, not
-    // minhashLsh: the entry's presentation orderBy would add a range
-    // exchange whose bounds-sampling pass re-executes the verify-join
-    // stage before the cut even materializes (r16, guide §2.4).
-    val pairs = cut(Dedup.minhashPairs(s, d).select(col("doc_a"), col("doc_b")))
+    // re-run the whole minhash pipeline per branch.
+    val pairs = cut(Dedup.minhashLsh(s, d).select(col("doc_a"), col("doc_b")))
     ccLabels(pairs)
       .select(col("doc").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy(col("doc_id"))
   }
 
   /** The min-label-propagation loop over an already-materialized pair
-    * table — shared by `dedup_cluster` and `split_dedup_aware` so the
-    * LSH pipeline is never executed twice for one entry. Returns
-    * (doc, label) for every doc appearing in a pair. */
-  private[graft] def ccLabels(pairs: DataFrame): DataFrame = {
+    * table — shared by `dedup_cluster`, `split_dedup_aware` and
+    * `dedup_cluster_buckets`. Returns (doc, label) for every doc
+    * appearing in a pair. */
+  private def ccLabels(pairs: DataFrame): DataFrame = {
     // undirected edge list, both directions
     val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
@@ -127,7 +123,7 @@ object Cluster {
     * groupBy — the membership rule stays a pure content-hash function
     * (reproducible on any partitioning, the split family's contract). */
   def splitDedupAware: Q = (s, d) => {
-    val pairs = cut(Dedup.minhashPairs(s, d).select(col("doc_a"), col("doc_b")))
+    val pairs = cut(Dedup.minhashLsh(s, d).select(col("doc_a"), col("doc_b")))
     val labels = ccLabels(pairs)
     val assigned = cut(Tables.documents(s, d).select(col("doc_id"))
       .join(labels.select(col("doc").as("doc_id"), col("label")), Seq("doc_id"), "left")
@@ -145,7 +141,6 @@ object Cluster {
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("canon")).as("n_components"))
       .crossJoin(broadcast(cross))
-      .orderBy(col("split"))
   }
 
   val splitDedupAwareSql: String = {
@@ -194,21 +189,15 @@ object Cluster {
     * plan. */
   def softWeight: Q = (s, d) => {
     import graft.sources.Tables
-    // labels straight from the loop, NOT via dedupCluster: the entry's
-    // presentation orderBy(doc_id) would add a range exchange + global
-    // sort that the cluster_id-partitioned window below immediately
-    // destroys (r16: 1 fewer Exchange; guide §2.4)
-    val pairs = cut(Dedup.minhashPairs(s, d).select(col("doc_a"), col("doc_b")))
-    val labels = ccLabels(pairs)
     // component size via ONE window over the component label rather
     // than aggregate + join-back: same values, one shuffle instead of
     // two, and no component-keyed join for a giant near-dup cluster to
     // skew (a pathological component still lands on one partition, but
     // it pays one pass, not an agg + a probe)
-    val perDoc = labels
+    val perDoc = dedupCluster(s, d)
       .withColumn("csz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("label"))))
-      .select(col("doc").as("doc_id"), col("csz"))
+        org.apache.spark.sql.expressions.Window.partitionBy(col("cluster_id"))))
+      .select(col("doc_id"), col("csz"))
     Tables.documents(s, d)
       .join(perDoc, Seq("doc_id"), "left")
       .withColumn("c", coalesce(col("csz"), lit(1L)))
@@ -222,7 +211,6 @@ object Cluster {
       .withColumn("eff_share",
         floor(col("eff_chars_ppm").cast("double")
           / (col("chars").cast("double") * 1e6) * 10000) / 10000.0)
-      .orderBy(col("source"))
   }
 
   /** DuckDB oracle: same transitive closure, same ppm arithmetic. */
@@ -282,7 +270,6 @@ object Cluster {
         expr("ds[0]").as("doc_b")))
     ccLabels(stars)
       .select(col("doc").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy(col("doc_id"))
   }
 
   val clusterBucketsSql: String =
@@ -315,131 +302,4 @@ object Cluster {
     ("dedup_cluster_buckets", clusterBuckets, Some(clusterBucketsSql)),
     ("split_dedup_aware", splitDedupAware, Some(splitDedupAwareSql)),
     ("dedup_soft_weight", softWeight, Some(softWeightSql)))
-}
-
-/** r16 measurement probes for ProfileScratch — piecewise attribution of
-  * the cluster family (dedup_soft_weight / dedup_cluster_buckets). NOT
-  * entries; never registered. */
-private[graft] object ClusterProbe {
-  import graft.Checkpoints.cut
-  import graft.sources.Tables
-  import org.apache.spark.sql.expressions.Window
-
-  /** Shared prefix of the family: LSH pairs + the label loop. */
-  def prefixLabels(s: SparkSession, d: String): DataFrame = {
-    val pairs = cut(Dedup.minhashPairs(s, d).select(col("doc_a"), col("doc_b")))
-    Cluster.ccLabels(pairs)
-  }
-
-  /** Current softWeight tail shape, for reference (calls the entry). */
-  def swCurrent(s: SparkSession, d: String): DataFrame = Cluster.softWeight(s, d)
-
-  /** Variant A: skip dedupCluster's orderBy (labels straight from the
-    * loop), same SMJ-or-AQE join. */
-  def swNoSort(s: SparkSession, d: String): DataFrame = {
-    val labels = prefixLabels(s, d)
-    val perDoc = labels
-      .withColumn("csz", count(lit(1)).over(Window.partitionBy(col("label"))))
-      .select(col("doc").as("doc_id"), col("csz"))
-    swTail(s, d, perDoc)
-  }
-
-  /** Variant B: A + explicit broadcast of the pair-graph-bounded
-    * per-doc weight table (no corpus shuffle at all). */
-  def swBroadcast(s: SparkSession, d: String): DataFrame = {
-    val labels = prefixLabels(s, d)
-    val perDoc = labels
-      .withColumn("csz", count(lit(1)).over(Window.partitionBy(col("label"))))
-      .select(col("doc").as("doc_id"), col("csz"))
-    swTail(s, d, broadcast(perDoc))
-  }
-
-  private def swTail(s: SparkSession, d: String, perDoc: DataFrame): DataFrame =
-    Tables.documents(s, d)
-      .join(perDoc, Seq("doc_id"), "left")
-      .withColumn("c", coalesce(col("csz"), lit(1L)))
-      .groupBy(col("source"))
-      .agg(
-        count(lit(1)).as("docs"),
-        sum(when(col("c") > 1, 1L).otherwise(0L)).as("dup_docs"),
-        sum(expr("1000000 DIV c")).as("eff_docs_ppm"),
-        sum(col("n_chars")).as("chars"),
-        sum(expr("(n_chars * 1000000) DIV c")).as("eff_chars_ppm"))
-      .withColumn("eff_share",
-        floor(col("eff_chars_ppm").cast("double")
-          / (col("chars").cast("double") * 1e6) * 10000) / 10000.0)
-      .orderBy(col("source"))
-
-  /** clusterBuckets pieces: the band-list build alone, the star-edge
-    * aggregation alone, and the label loop on precomputed stars. */
-  def cbBandList(s: SparkSession, d: String): DataFrame =
-    Dedup.bandList(Dedup.shingleSets(s, d))
-
-  def cbStars(s: SparkSession, d: String): DataFrame =
-    cut(Dedup.bandList(Dedup.shingleSets(s, d))
-      .groupBy(col("band_idx"), col("bh"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(expr("slice(ds, 2, size(ds) - 1)")).as("doc_a"),
-        expr("ds[0]").as("doc_b")))
-
-  def cbFull(s: SparkSession, d: String): DataFrame = Cluster.clusterBuckets(s, d)
-
-  /** Variant: the whole family's label loop with LAZY per-round cuts —
-    * each round's materialization rides the convergence-count job
-    * instead of an eager blocking job per cut. */
-  def ccLabelsLazy(pairs: DataFrame): DataFrame = {
-    import graft.Checkpoints.cutLazy
-    val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-      .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
-    var labels = cutLazy(edges.groupBy(col("u").as("doc"))
-      .agg(min(col("v")).as("nbr"))
-      .select(col("doc"), least(col("doc"), col("nbr")).as("label"))
-      .coalesce(8))
-    var round = 0
-    var converged = false
-    while (!converged && round < Cluster.MaxRounds) {
-      val nbrMin = edges
-        .join(labels.select(col("doc").as("v"), col("label").as("vl")), "v")
-        .groupBy(col("u").as("doc"))
-        .agg(min(col("vl")).as("nbr_label"))
-      val hop = labels.join(nbrMin, Seq("doc"), "left")
-        .select(col("doc"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-      val next = cutLazy(hop
-        .join(hop.select(col("doc").as("jd"), col("label").as("jl")),
-          hop("label") === col("jd"), "left")
-        .select(hop("doc").as("doc"),
-          coalesce(col("jl"), hop("label")).as("label"),
-          (coalesce(col("jl"), hop("label")) =!= col("old")).as("chg"))
-        .coalesce(8))
-      val changed = next.filter(col("chg")).count()
-      labels = next.select(col("doc"), col("label"))
-      converged = changed == 0
-      round += 1
-    }
-    labels
-  }
-
-  def cbLazyLoop(s: SparkSession, d: String): DataFrame = {
-    import graft.Checkpoints.cutLazy
-    val bl = Dedup.bandList(Dedup.shingleSets(s, d))
-    val stars = cutLazy(bl
-      .groupBy(col("band_idx"), col("bh"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .filter(size(col("ds")) >= 2)
-      .select(explode(expr("slice(ds, 2, size(ds) - 1)")).as("doc_a"),
-        expr("ds[0]").as("doc_b")))
-    ccLabelsLazy(stars)
-      .select(col("doc").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy(col("doc_id"))
-  }
-
-  def clusterLazyLoop(s: SparkSession, d: String): DataFrame = {
-    import graft.Checkpoints.cutLazy
-    val pairs = cutLazy(Dedup.minhashPairs(s, d).select(col("doc_a"), col("doc_b")))
-    ccLabelsLazy(pairs)
-      .select(col("doc").as("doc_id"), col("label").as("cluster_id"))
-      .orderBy(col("doc_id"))
-  }
 }

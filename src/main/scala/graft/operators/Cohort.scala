@@ -31,7 +31,6 @@ object Cohort {
     orders.join(firsts, Seq("o_custkey"))
       .groupBy(col("cohort_m"), (col("m") - col("cohort_m")).as("month_offset"))
       .agg(countDistinct(col("o_custkey")).as("n_active"))
-      .orderBy(col("cohort_m"), col("month_offset"))
   }
 
   val cohortRetentionSql: String =
@@ -75,7 +74,6 @@ object Cohort {
         max(col("lag_days")).as("max_days"))
       .select(col("priority"), col("n").as("n_lines"),
         col("p50_days"), col("p90_days"), col("max_days"))
-      .orderBy(col("priority"))
   }
 
   val fulfillmentLagSql: String =
@@ -120,7 +118,6 @@ object Cohort {
     cells
       .withColumn("cum_ltv", round(sum(col("rev")).over(w), 2))
       .select(col("cohort_m"), col("month_offset"), col("rev"), col("cum_ltv"))
-      .orderBy(col("cohort_m"), col("month_offset"))
   }
 
   val cohortLtvSql: String =
@@ -161,7 +158,6 @@ object Cohort {
       .agg(max(col("len")).as("longest_streak"),
         count(lit(1)).as("n_streaks"),
         min(col("start_day")).as("first_day"))
-      .orderBy(col("user_id"))
   }
 
   val userStreaksSql: String =
@@ -195,7 +191,6 @@ object Cohort {
     firsts.groupBy(col("first_day").as("day"))
       .agg(count(lit(1)).as("new_users"))
       .withColumn("cumulative_users", sum(col("new_users")).over(w))
-      .orderBy(col("day"))
   }
 
   val cumulativeUsersSql: String =
@@ -321,7 +316,6 @@ object Cohort {
           """aggregate(factors, cast(1.0 as double),
                (acc, x) -> acc * (cast(1.0 as double) - cast(x.d as double) / cast(x.n_risk as double)))""")
           * 1e6) / 1e6).as("survival"))
-      .orderBy(col("t_days"))
   }
 
   val survivalKmSql: String =
@@ -390,7 +384,6 @@ object Cohort {
           .otherwise(col("prev_active") - col("n_retained")))
       .select(col("week"), col("n_active"), col("n_new"), col("n_retained"),
         col("n_resurrected"), col("n_churned"))
-      .orderBy(col("week"))
   }
 
   val lifecycleSql: String =
@@ -443,7 +436,6 @@ object Cohort {
       .withColumn("ndr",
         floor(col("retained_cents").cast("double") / col("rev_cents").cast("double")
           * 1e4) / 1e4)
-      .orderBy(col("month"))
   }
 
   val cohortNdrSql: String =

@@ -63,7 +63,6 @@ object Curation {
         count(when(col("df") >= 2, 1)).as("n_boiler_segments"))
       .withColumn("kept_tokens",
         col("n_tokens") - col("n_boiler_segments") * SegTokens)
-      .orderBy(col("doc_id"))
   }
 
   val dedupBoilerplateSql: String =
@@ -109,7 +108,6 @@ object Curation {
       .join(broadcast(evalGrams), Seq("gram"))
       .groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).as("n_shared_ngrams"))
-      .orderBy(col("doc_id"))
   }
 
   val textContaminationSql: String =
@@ -152,7 +150,6 @@ object Curation {
         trunc4((col("n_3grams") - col("n_distinct_3grams")) * lit(1.0) /
           greatest(col("n_3grams"), lit(1))))
       .withColumn("pass_filter", col("dup_3gram_frac") <= 0.2)
-      .orderBy(col("doc_id"))
   }
 
   val textRepetitionSql: String =
@@ -209,7 +206,6 @@ object Curation {
         max(col("keep_per_10k")).as("keep_per_10k"),
         count(lit(1)).as("n_kept"),
         sum(ceil(col("n_chars") / 4.0).cast("long")).as("tok_est"))
-      .orderBy(col("lang"))
   }
 
   val mixTemperatureSql: String =
@@ -303,7 +299,6 @@ object Curation {
       .select(col("doc_id"), col("n_tokens"),
         (floor(col("sum_surprisal") / col("n_tokens") * 1e4) / 1e4).as("cross_entropy"))
       .withColumn("pass_filter", col("cross_entropy") <= 4.0)
-      .orderBy(col("doc_id"))
   }
 
   val textPerplexitySql: String =
@@ -368,7 +363,6 @@ object Curation {
         count(when(col("first_doc") === col("doc_id"), 1)).as("n_novel"))
       .withColumn("novelty",
         floor(col("n_novel") * 1e4 / col("n_grams")) / 1e4)
-      .orderBy(col("doc_id"))
   }
 
   val textNoveltySql: String =
@@ -452,7 +446,6 @@ object Curation {
         coalesce(col("dup_covered_tokens"), lit(0L)).as("dup_covered_tokens"))
       .withColumn("dup_frac",
         floor(col("dup_covered_tokens") * 1e4 / col("n_tokens")) / 1e4)
-      .orderBy(col("doc_id"))
   }
 
   val dedupSubstringSql: String =
@@ -552,7 +545,6 @@ object Curation {
       .select(col("doc_id"), col("n_bigrams"),
         (floor(col("sum_surprisal") / col("n_bigrams") * 1e4) / 1e4).as("cross_entropy"))
       .withColumn("pass_filter", col("cross_entropy") <= 5.0)
-      .orderBy(col("doc_id"))
   }
 
   val textBigramLmSql: String =
@@ -674,7 +666,6 @@ object Curation {
       .select(col("doc_id"), col("n_bigrams"),
         (floor(col("sum_surprisal") / col("n_bigrams") * 1e4) / 1e4).as("cross_entropy"))
       .withColumn("pass_filter", col("cross_entropy") <= 4.5)
-      .orderBy(col("doc_id"))
   }
 
   val textBigramLmKnSql: String =
@@ -729,8 +720,7 @@ object Curation {
     * dedup/packing key.
     *
     * Scale shape: a pure map-side explode — ZERO shuffles at any
-    * corpus size (the trailing orderBy exists for the deterministic
-    * gate dump only). Chunk count is start-arithmetic, computed
+    * corpus size. Chunk count is start-arithmetic, computed
     * identically by both engines in exact integers. */
   def textChunkOverlap: Q = (s, d) => {
     Tables.documents(s, d)
@@ -745,7 +735,6 @@ object Curation {
         col("c.start_tok").cast("long").as("start_tok"),
         size(col("c.ctoks")).as("n_tok"),
         md5(array_join(col("c.ctoks"), " ")).as("sig"))
-      .orderBy(col("doc_id"), col("chunk_id"))
   }
 
   val textChunkOverlapSql: String =
@@ -831,7 +820,6 @@ object Curation {
         sum(col("n_tokens")).as("n_tokens"),
         (min(col("ce_q")) / 1e4).as("ce_min"),
         (max(col("ce_q")) / 1e4).as("ce_max"))
-      .orderBy(col("lang"), col("bucket"))
   }
 
   val textCcnetBucketsSql: String =
@@ -951,7 +939,6 @@ object Curation {
       (r, x, y, cnt, mass)
     }
     rows.toDF("round", "w1", "w2", "pair_freq", "n_symbols_after")
-      .orderBy(col("round"))
   }
 
   /** The DuckDB replay unrolls the same [[BpeRounds]] rounds as CTEs;
@@ -1110,7 +1097,6 @@ object Curation {
         count(when(col("wq") >= col("thr"), 1)).as("n_selected"),
         coalesce(sum(when(col("wq") >= col("thr"), col("n_feats"))), lit(0L)).as("sel_feats"),
         (max(col("thr")) / 1e4).as("w_threshold"))
-      .orderBy(col("source"))
   }
 
   val mixDsirSql: String =
@@ -1186,7 +1172,6 @@ object Curation {
       .groupBy(col("source"), col("epoch"))
       .agg(max(col("epochs")).as("epochs"),
         count(lit(1)).as("n_rows"), sum(col("tok")).as("tok_out"))
-      .orderBy(col("source"), col("epoch"))
   }
 
   val mixEpochUpsampleSql: String =
@@ -1264,7 +1249,6 @@ object Curation {
       .select(col("phase").cast("int").as("phase"), col("source"),
         col("weight"), col("alloc"),
         (floor(col("alloc") * lit(1000000) / col("budget")) / 1e6).as("phase_share"))
-      .orderBy(col("phase"), col("source"))
   }
 
   val mixAnnealSql: String = {
@@ -1356,7 +1340,6 @@ object Curation {
       .select(col("lang"), col("n_docs"), col("n_both"), col("n_a_only"),
         col("n_b_only"), col("n_neither"),
         expr("floor(po * 1e4) / 1e4").as("observed_agreement"), col("kappa"))
-      .orderBy(col("lang"))
   }
 
   val annotationAgreementSql: String = {

@@ -61,7 +61,6 @@ object CurationC4 {
         count(lit(1)).as("n_segments"),
         count(when(col("pos_key") =!= col("keeper_key"), 1)).as("n_removed"))
       .withColumn("kept_tokens", col("n_tokens") - col("n_removed") * Seg)
-      .orderBy(col("doc_id"))
   }
 
   /** Order-free body (composable as a CTE); the entry's oracle adds
@@ -135,7 +134,6 @@ object CurationC4 {
         (expr("cast(cast(kept_tokens as decimal(38,0)) * 1000000 div tot_kept as bigint)")
           - expr("cast(cast(orig_tokens as decimal(38,0)) * 1000000 div tot_orig as bigint)"))
           .as("shift_x1e6"))
-      .orderBy(col("source"))
   }
 
   val dedupMixShiftSql: String =
@@ -194,7 +192,6 @@ object CurationC4 {
           .as("n_boiler_distinct"))
       .withColumn("boiler_share_x1e6",
         expr("n_boiler_segments * 1000000 div n_segments"))
-      .orderBy(col("source"))
   }
 
   val boilerplateShareSql: String = {

@@ -60,7 +60,6 @@ object Dedup {
     Tables.documents(s, d)
       .groupBy(md5(col("text")).as("text_hash"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("keep_doc_id"))
-      .orderBy(col("keep_doc_id"))
   }
 
   val exactSql: String =
@@ -102,7 +101,6 @@ object Dedup {
         countDistinct(col("canon_hash")).as("n_canon_groups"))
       .withColumn("n_merged_by_normalization",
         col("n_raw_groups") - col("n_canon_groups"))
-      .orderBy(col("source"))
   }
 
   val normalizedExactSql: String =
@@ -393,7 +391,6 @@ object Dedup {
       .selectExpr(s"stack(${SaturationPcts.size}, $stackArgs) as (pct, n_docs, n_unique)")
       .withColumn("dup_share_x1e6",
         expr("CASE WHEN n_docs > 0 THEN (n_docs - n_unique) * 1000000 div n_docs ELSE 0 END"))
-      .orderBy(col("pct"))
   }
 
   val saturationCurveSql: String = {
@@ -429,7 +426,6 @@ object Dedup {
         trunc4(col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter"))).as("jaccard"),
         col("sample_ppm"))
       .filter(col("jaccard") >= 0.5)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Asymmetric containment: |A∩B|/|A| and |A∩B|/|B| — catches the
@@ -449,7 +445,6 @@ object Dedup {
         trunc4(col("inter") * lit(1.0) / col("nb")).as("containment_b_in_a"),
         col("sample_ppm"))
       .filter(greatest(col("containment_a_in_b"), col("containment_b_in_a")) >= 0.5)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val containmentSql: String =
@@ -516,15 +511,7 @@ object Dedup {
   private[operators] def bandList(sets: DataFrame): DataFrame =
     bandListFor(sigTable(sets), BandSize)
 
-  /** The verified near-dup pair stream WITHOUT the entry's presentation
-    * orderBy — for internal consumers (the cluster family, the fuzzy
-    * verify, the leakage audit), which aggregate or join the pairs. The
-    * entry's global sort is not merely a wasted exchange on their path:
-    * a rangepartitioning exchange first runs a SAMPLING pass over its
-    * child to pick range bounds, re-executing the final verify-join
-    * stage (array_intersect over shingle arrays) a second time (r16,
-    * guide §2.4). */
-  private[operators] def minhashPairs(s: SparkSession, d: String): DataFrame = {
+  def minhashLsh: Q = (s, d) => {
     // sets is referenced three times (signature build + both verify
     // joins): cut it once so the tokenizer runs one pass, not three.
     // r16 adjudication of VERDICT item 1 (the driver's 1.755→2.387 s /
@@ -552,9 +539,6 @@ object Dedup {
         trunc4(col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= 0.4)
   }
-
-  def minhashLsh: Q = (s, d) =>
-    minhashPairs(s, d).orderBy(col("doc_a"), col("doc_b"))
 
   /** SQL fragments of the one-permutation signature → band-list chain
     * (CTE names `e`/`sig`/`banded`), shared by every oracle that
@@ -646,7 +630,6 @@ object Dedup {
         coalesce(col("n_dups"), lit(0L)).as("n_dups"),
         coalesce(col("best.db"), lit(-1L)).as("best_partner"),
         coalesce(col("best.jaccard"), lit(0.0)).as("best_jaccard"))
-      .orderBy(col("doc_id"))
   }
 
   val incrementalSql: String = {
@@ -739,7 +722,6 @@ object Dedup {
       .filter(col("hamming") <= 3) // filter BEFORE distinct: dedup only survivors
       .select(col("da").as("doc_a"), col("db").as("doc_b"), col("hamming"))
       .distinct()
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** The same simhash pipeline in DuckDB: 60-bit md5-prefix hashes,
@@ -795,7 +777,6 @@ object Dedup {
         trunc4(col("dot") / (sqrt(col("n2a")) * sqrt(col("n2b")))).as("cosine"))
       .filter(col("cosine") >= 0.4)
       .distinct()
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   val embeddingCosineSql: String =
@@ -825,7 +806,6 @@ object Dedup {
       .withColumn("canonical_doc_id", min(col("doc_id")).over(w))
       .filter(col("doc_id") =!= col("canonical_doc_id"))
       .select(col("doc_id").as("dup_doc_id"), col("canonical_doc_id"), col("fp").as("fingerprint"))
-      .orderBy(col("dup_doc_id"))
   }
 
   val keepCanonicalSql: String =
@@ -911,7 +891,6 @@ object Dedup {
         first(col("lang")).as("lang"))
       .select(col("doc_id"), col("m").getField("b_id").as("nn_doc_id"),
         col("lang"), col("m").getField("edit_distance").as("edit_distance"))
-      .orderBy(col("doc_id"))
   }
 
   val fuzzyEditSql: String =
@@ -974,7 +953,6 @@ object Dedup {
       .groupBy(col("band_lo"))
       .agg(count(lit(1)).as("n_truth"), count(col("caught")).as("n_caught"))
       .withColumn("recall", floor(col("n_caught") * lit(10000) / col("n_truth")) / 1e4)
-      .orderBy(col("band_lo"))
   }
 
   val lshRecallSql: String = {
@@ -1035,7 +1013,6 @@ object Dedup {
       .filter(col("n_copies") > 1)
       .select(col("fp").as("fingerprint"), col("n_copies"), col("n_sources"),
         col("w.doc_id").as("keep_doc_id"), col("w.source").as("keep_source"))
-      .orderBy(col("keep_doc_id"))
   }
 
   val crossSourceSql: String =
@@ -1071,7 +1048,6 @@ object Dedup {
         (floor(col("p_band") * 1e6) / 1e6).as("p_band"),
         (floor(col("p_candidate") * 1e6) / 1e6).as("p_candidate"),
         (col("p_candidate") >= 0.5).as("detected"))
-      .orderBy(col("s_x100"))
   }
 
   val lshScurveSql: String =
@@ -1101,7 +1077,7 @@ object Dedup {
       val b = Pipeline.hashBucket(concat(lit("split:"), c.cast("string")))
       when(b < 80, "train").when(b < 90, "val").otherwise("test")
     }
-    minhashPairs(s, d)
+    minhashLsh(s, d)
       .select(col("doc_a"), col("doc_b"), col("jaccard"),
         splitCol(col("doc_a")).as("split_a"), splitCol(col("doc_b")).as("split_b"))
       .groupBy(col("split_a"), col("split_b"))
@@ -1109,7 +1085,6 @@ object Dedup {
         min(col("doc_a")).as("example_doc_a"),
         max(col("jaccard")).as("max_jaccard"))
       .withColumn("leaks_eval", col("split_a") =!= col("split_b"))
-      .orderBy(col("split_a"), col("split_b"))
   }
 
   val splitLeakageAuditSql: String = {
@@ -1169,7 +1144,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_selected"),
         sum(when(col("n_docs") >= 2, 1L).otherwise(0L)).as("n_shared"),
         min(col("wmin")).as("min_fp"))
-      .orderBy(col("doc_id"))
   }
 
   val winnowSql: String =
@@ -1314,7 +1288,6 @@ object Dedup {
           floor(col("n_caught").cast("double") / col("n_candidates").cast("double") * 1e4)
             / 1e4)
           .otherwise(lit(0.0)))
-      .orderBy(col("rows_per_band"))
   }
 
   lazy val lshTuningSql: String = {
@@ -1435,7 +1408,6 @@ object Dedup {
       .select(col("source_a"), col("source_b"), col("inter"), col("na"), col("nb"),
         trunc4(col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter")))
           .as("jaccard"))
-      .orderBy(col("source_a"), col("source_b"))
   }
 
   val sourceOverlapSql: String =
@@ -1474,7 +1446,7 @@ object Dedup {
     // discipline): the two prefix joins below would otherwise each
     // re-derive the whole minhash pipeline under their own branch
     val cand = graft.Checkpoints.cut(
-      minhashPairs(s, d).select(col("doc_a"), col("doc_b")))
+      minhashLsh(s, d).select(col("doc_a"), col("doc_b")))
     val pref = Tables.documents(s, d)
       .select(col("doc_id"), substring(col("text"), 1, FuzzyPrefix).as("prefix"))
     val half = cand
@@ -1490,7 +1462,6 @@ object Dedup {
       .select(col("doc_id"), col("n_cands"),
         col("m").getField("doc_b").as("nn_doc_id"),
         col("m").getField("edit_distance").as("edit_distance"))
-      .orderBy(col("doc_id"))
   }
 
   val fuzzyLshSql: String =
@@ -1556,7 +1527,6 @@ object Dedup {
       .select(col("n_match"), col("n_pairs"), col("est_x1e4"),
         col("mean_exact_x1e4"), col("min_exact_x1e4"), col("max_exact_x1e4"),
         col("sample_ppm"))
-      .orderBy(col("n_match"))
   }
 
   val minhashCalibrationSql: String = {
@@ -1613,84 +1583,4 @@ object Dedup {
     ("dedup_simhash", simhash, Some(simhashSql)),
     ("dedup_embedding_cosine", embeddingCosine, Some(embeddingCosineSql)),
     ("dedup_keep_canonical", keepCanonical, Some(keepCanonicalSql)))
-}
-
-/** r16 measurement probes for ProfileScratch — piecewise attribution of
-  * the minhash-LSH pipeline's stages. NOT entries; never registered. */
-private[graft] object DedupProbe {
-  import org.apache.spark.sql.functions._
-  import TextAnalysis.trunc4
-
-  def setsCut(s: SparkSession, d: String): DataFrame =
-    graft.Checkpoints.cutLazy(Dedup.shingleSets(s, d))
-
-  def blCut(s: SparkSession, d: String): DataFrame =
-    graft.Checkpoints.cutLazy(Dedup.bandList(Dedup.shingleSets(s, d)))
-
-  def candFromBl(s: SparkSession, d: String): DataFrame = {
-    val bl = blCut(s, d)
-    bl.select(col("doc_id").as("da"), col("band_idx"), col("bh"))
-      .join(bl.select(col("doc_id").as("db"), col("band_idx"), col("bh")),
-        Seq("band_idx", "bh"))
-      .filter(col("da") < col("db")).select("da", "db").distinct()
-  }
-
-  /** Two-phase one-permutation signature: min per (doc, slot) first
-    * (1 comparison/row), then fold the ≤16 slot-mins per doc into the
-    * 16 signature columns — vs 16 when-guarded mins per exploded row. */
-  def blCut2(s: SparkSession, d: String): DataFrame = {
-    val sets = Dedup.shingleSets(s, d)
-    val e = sets.select(col("doc_id"), explode(col("shingles")).as("sh"))
-      .select(col("doc_id"), md5(col("sh")).as("h"))
-    val slotMin = e.groupBy(col("doc_id"), substring(col("h"), 1, 1).as("slot"))
-      .agg(min(col("h")).as("mh"))
-    val sigCols = (0 until Dedup.NumHashes).map { i =>
-      val slot = Integer.toHexString(i)
-      coalesce(min(when(col("slot") === slot, col("mh"))), lit("e" + slot)).as(s"s$i")
-    }
-    val sig = slotMin.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until Dedup.NumBands).map(b =>
-      md5(concat((b * Dedup.BandSize until (b + 1) * Dedup.BandSize).map(i => col(s"s$i")): _*)).as(s"band$b"))
-    val banded = sig.select(col("doc_id") +: bandCols: _*)
-    val stackArgs = (0 until Dedup.NumBands).map(b => s"'$b', band$b").mkString(", ")
-    graft.Checkpoints.cutLazy(
-      banded.selectExpr("doc_id", s"stack(${Dedup.NumBands}, $stackArgs) as (band_idx, bh)"))
-  }
-
-  /** Single agg but slot precomputed as a column (guaranteed CSE). */
-  def blCut3(s: SparkSession, d: String): DataFrame = {
-    val sets = Dedup.shingleSets(s, d)
-    val e = sets.select(col("doc_id"), explode(col("shingles")).as("sh"))
-      .select(col("doc_id"), md5(col("sh")).as("h"))
-      .withColumn("slot", substring(col("h"), 1, 1))
-    val sigCols = (0 until Dedup.NumHashes).map { i =>
-      val slot = Integer.toHexString(i)
-      coalesce(min(when(col("slot") === slot, col("h"))), lit("e" + slot)).as(s"s$i")
-    }
-    val sig = e.groupBy(col("doc_id")).agg(sigCols.head, sigCols.tail: _*)
-    val bandCols = (0 until Dedup.NumBands).map(b =>
-      md5(concat((b * Dedup.BandSize until (b + 1) * Dedup.BandSize).map(i => col(s"s$i")): _*)).as(s"band$b"))
-    val banded = sig.select(col("doc_id") +: bandCols: _*)
-    val stackArgs = (0 until Dedup.NumBands).map(b => s"'$b', band$b").mkString(", ")
-    graft.Checkpoints.cutLazy(
-      banded.selectExpr("doc_id", s"stack(${Dedup.NumBands}, $stackArgs) as (band_idx, bh)"))
-  }
-
-  /** The r15 shape of dedup_minhash_lsh (wide sets cut, SMJ verify). */
-  def oldFull(s: SparkSession, d: String): DataFrame = {
-    val sets = graft.Checkpoints.cutLazy(Dedup.shingleSets(s, d))
-    val bl = Dedup.bandList(sets)
-    val cand = bl.select(col("doc_id").as("da"), col("band_idx"), col("bh"))
-      .join(bl.select(col("doc_id").as("db"), col("band_idx"), col("bh")),
-        Seq("band_idx", "bh"))
-      .filter(col("da") < col("db")).select("da", "db").distinct()
-    cand
-      .join(sets.select(col("doc_id").as("da"), col("shingles").as("sha"), col("n_sh").as("na")), "da")
-      .join(sets.select(col("doc_id").as("db"), col("shingles").as("shb"), col("n_sh").as("nb")), "db")
-      .withColumn("inter", size(array_intersect(col("sha"), col("shb"))))
-      .select(col("da").as("doc_a"), col("db").as("doc_b"),
-        trunc4(col("inter") * lit(1.0) / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= 0.4)
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
 }

@@ -61,7 +61,6 @@ object Federation {
         when(col("elected_replica") === 0, col("n_r0")).otherwise(col("n_r1")))
       .withColumn("n_dropped",
         when(col("elected_replica") === 0, col("n_r1")).otherwise(col("n_r0")))
-      .orderBy(col("event_type"), col("win_sec"))
   }
 
   val haDedupSql: String =
@@ -100,7 +99,6 @@ object Federation {
         count(when(abs(col("iv") - col("med")) * 10 > col("med"), 1)).as("n_jitter"))
       .withColumn("jitter_share",
         floor(col("n_jitter") * lit(10000) / col("n_intervals")) / 1e4)
-      .orderBy(col("event_type"))
   }
 
   val scrapeJitterSql: String =
@@ -154,7 +152,6 @@ object Federation {
       .agg(lit(-1L).as("shard"), sum(col("n_samples")).as("n_samples"),
         sum(col("sum_cents")).as("sum_cents"))
     partials.unionByName(totals)
-      .orderBy(col("event_type"), col("shard"))
   }
 
   val queryShardSql: String =

@@ -50,7 +50,6 @@ object Funnel {
           .otherwise(lit(0)))
       .select(col("user_id"), col("stage"), col("first_view"),
         col("first_qual_click"), col("first_qual_purchase"))
-      .orderBy(col("user_id"))
   }
 
   val funnelStagesSql: String =
@@ -116,7 +115,6 @@ object Funnel {
           floor(lit(1.0) / col("n_touches").cast("double") * 1e4) / 1e4))
       .select(col("user_id"), col("event_id"), col("sec"),
         col("n_touches"), col("credit_per_touch"))
-      .orderBy(col("user_id"), col("sec"), col("event_id"))
   }
 
   val attributionLinearSql: String =
@@ -164,7 +162,6 @@ object Funnel {
         Window.orderBy(col("n").desc, col("path"))))
       .filter(col("rk") <= 10)
       .select(col("rk").cast("int").as("rk"), col("path"), col("n"), col("n_users"))
-      .orderBy(col("rk"))
   }
 
   val topPathsSql: String =
@@ -216,7 +213,6 @@ object Funnel {
             - col("mid_each_bp") * greatest(col("n_touches") - 2, lit(0L))))
       .select(col("user_id"), col("event_id"), col("sec"), col("n_touches"),
         col("first_bp"), col("last_bp"), col("mid_each_bp"))
-      .orderBy(col("user_id"), col("sec"), col("event_id"))
   }
 
   val attributionPositionSql: String =
@@ -267,7 +263,6 @@ object Funnel {
         col("seq").rlike("v.*c.*p").as("funnel_match"),
         expr("CAST((length(seq) - length(replace(seq, 'cp', ''))) div 2 AS INT)")
           .as("n_quick_convert"))
-      .orderBy(col("user_id"))
   }
 
   val sequenceMatchSql: String =
@@ -359,7 +354,6 @@ object Funnel {
         math.floor(re.toDouble / AttrUScale * 1e4) / 1e4,
         if (reSum > 0) (re * 10000L / reSum) / 10000.0 else 0.0)
     }.toDF("channel", "p_conv_full", "p_conv_removed", "removal_effect", "attribution")
-      .orderBy(col("channel"))
   }
 
   lazy val attributionMarkovSql: String = {
@@ -455,7 +449,6 @@ object Funnel {
         "CASE WHEN n > 0 THEN floor(CAST(k AS DOUBLE) / n * 1e6) / 1e6 END AS p_hat",
         s"${wilsonExpr("k", "n", "-")} AS wilson_lo",
         s"${wilsonExpr("k", "n", "+")} AS wilson_hi")
-      .orderBy(col("transition"))
   }
 
   lazy val conversionCiSql: String =

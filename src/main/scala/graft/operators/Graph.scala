@@ -126,7 +126,6 @@ object Graph {
         "CASE WHEN node % 2 = 0 THEN concat('c', CAST(node DIV 2 AS STRING)) " +
           "ELSE concat('s', CAST(node DIV 2 AS STRING)) END").as("node"),
         col("r"))
-      .orderBy(col("node"))
   }
 
   /** The same computation as plain SQL: 10 unrolled CTE iterations. */
@@ -187,7 +186,6 @@ object Graph {
       .unionByName(
         pairs.groupBy(col("sup")).agg(count(lit(1)).as("degree")).select(col("degree")))
       .groupBy(col("degree")).agg(count(lit(1)).as("n_nodes"))
-      .orderBy(col("degree"))
   }
 
   val degreeHistogramSql: String =
@@ -255,7 +253,6 @@ object Graph {
     val sizes = labels.groupBy(col("lab")).agg(count(lit(1)).as("community_size"))
     labels.join(broadcast(sizes), Seq("lab"))
       .select(col("node").as("page"), col("lab").as("community"), col("community_size"))
-      .orderBy(col("page"))
   }
 
   /** The unrolled LPA rounds as CTEs (l0..l5), shared by the two
@@ -312,7 +309,6 @@ object Graph {
           - (col("degree_sum").cast("double") / col("e2").cast("double"))
             * (col("degree_sum").cast("double") / col("e2").cast("double"))) * 1e6) / 1e6)
           .as("q_contrib"))
-      .orderBy(col("community"))
   }
 
   val modularitySql: String =
@@ -361,7 +357,7 @@ object Graph {
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
       if (i % 2 == 0 || i == BfsMaxHops) dist = cut(dist)
     }
-    dist.orderBy(col("node"))
+    dist
   }
 
   val bfsDistanceSql: String =
@@ -394,7 +390,6 @@ object Graph {
       .select(col("a"), col("b"), col("c"))
     tri.select(explode(array(col("a"), col("b"), col("c"))).as("page"))
       .groupBy(col("page")).agg(count(lit(1)).as("n_triangles"))
-      .orderBy(col("page"))
   }
 
   val triangleCountSql: String =
@@ -444,7 +439,6 @@ object Graph {
       if (i % 2 == 0 || i == KCoreRounds) e = graft.Checkpoints.cutLazy(e)
     }
     e.groupBy(col("src").as("page")).agg(count(lit(1)).as("core_degree"))
-      .orderBy(col("page"))
   }
 
   val kcoreSql: String = {
@@ -617,7 +611,7 @@ object Graph {
       acc = acc.unionByName(next)
       cur = next
     }
-    acc.orderBy(col("start"), col("step"), col("node"))
+    acc
   }
 
   lazy val walkSampleSql: String = {
@@ -723,7 +717,6 @@ object Graph {
         col("col.score").cast("long").as("score_fp"),
         (col("pos") + 1).cast("int").as("rank"))
     top(h, "hub").unionByName(top(a, "authority"))
-      .orderBy(col("side"), col("rank"))
   }
 
   lazy val hitsSql: String = {

@@ -48,7 +48,6 @@ object IvmQuantile {
       .groupBy(col("event_type"))
       .agg(max(col("tot")).as("n_net"), max(col("n_cells")).as("n_cells"),
         min(col("cents")).as("median_cents"))
-      .orderBy(col("event_type"))
   }
 
   val quantileDeltaSql: String =
@@ -98,7 +97,6 @@ object IvmQuantile {
     rc.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
       .select(col("event_type"), col("rank"), col("cents"), col("rc"))
-      .orderBy(col("event_type"), col("rank"))
   }
 
   val topkDeltaSql: String =

@@ -60,7 +60,6 @@ object Models {
       .withColumn("is_anomaly", abs(col("residual")) > 50.0)
       .select(col("event_type"), col("hour_sec"), col("avg_value"),
         col("predicted"), col("residual"), col("is_anomaly"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val registryScoreSql: String =
@@ -141,7 +140,6 @@ object Models {
         floor((col("cum_pos") * col("total_n")).cast("double")
             / (col("cum_n") * col("total_pos")).cast("double") * 10000)
           .divide(10000.0).as("cum_lift"))
-      .orderBy(col("decile"))
   }
 
   val decileLiftSql: String = {
@@ -222,7 +220,6 @@ object Models {
     scored.crossJoin(broadcast(ece))
       .select(col("bin"), col("n_events"), col("n_purchases"),
         col("conf_x1e6"), col("acc_x1e6"), col("gap_x1e6"), col("ece_x1e6"))
-      .orderBy(col("bin"))
   }
 
   val calibrationSql: String =
@@ -293,7 +290,6 @@ object Models {
       .groupBy(col("t").as("event_type"))
       .agg(sum(col("g")).as("n_games"), sum(col("p2")).as("points_x2"))
       .withColumn("bt_x1e6", expr("points_x2 * 1000000 div n_games"))
-      .orderBy(col("event_type"))
   }
 
   val bradleyTerrySql: String =
@@ -406,7 +402,6 @@ object Models {
         expr("tp * 1000000 div tot_p").as("recall_x1e6"),
         expr("2 * tp * 1000000 div nullif(2 * tp + fp + (tot_p - tp), 0)")
           .as("f1_x1e6"))
-      .orderBy(col("threshold_cents"))
   }
 
   val precisionRecallSql: String = {

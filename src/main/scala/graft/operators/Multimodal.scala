@@ -38,7 +38,6 @@ object Multimodal {
         col("n_frames"),
         expr("array_join(transform(sequence(0, n_frames - 1), i -> i * 256), ',')")
           .as("frame_offsets"))
-      .orderBy(col("doc_id"))
   }
 
   val metaSql: String =
@@ -86,7 +85,7 @@ object Multimodal {
     * the DuckDB oracle via hex(encode(text)) windows, so even the
     * mapPartitions path is hash-verified end-to-end. */
   def decodeFrames: Q = (s, d) =>
-    decodeStub(s, d).toDF().orderBy(col("doc_id"), col("frame_idx"))
+    decodeStub(s, d).toDF()
 
   /** Scene-change threshold on the mean-intensity delta. */
   val SceneDelta = 30.0
@@ -110,7 +109,6 @@ object Multimodal {
         (count(when(col("delta") > SceneDelta, 1)) + 1).as("n_scenes"),
         (floor(round(sum(col("delta")), 4) /
           greatest(count(col("delta")), lit(1)) * 1e4) / 1e4).as("mean_delta"))
-      .orderBy(col("doc_id"))
   }
 
   // lazy: framesCte is declared later in the file (initialization order)
@@ -160,7 +158,6 @@ object Multimodal {
         countDistinct(col("doc_id")).as("n_docs"),
         min(col("doc_id")).as("canonical_doc"))
       .filter(col("n_docs") >= 2)
-      .orderBy(col("frame_hash"))
   }
 
   val frameDedupSql: String =
@@ -236,7 +233,6 @@ object Multimodal {
 
   def patchGrid: Q = (s, d) =>
     patchStub(s, d).toDF()
-      .orderBy(col("doc_id"), col("frame_idx"), col("patch_row"), col("patch_col"))
 
   val patchGridSql: String =
     s"""WITH p AS (
@@ -310,7 +306,6 @@ object Multimodal {
       .withColumn("hamming", expr("bit_count(phash_a ^ phash_b)"))
       .filter(col("hamming") <= PhashMaxHamming)
       .select(col("doc_a"), col("frame_a"), col("doc_b"), col("frame_b"), col("hamming"))
-      .orderBy(col("doc_a"), col("frame_a"), col("doc_b"), col("frame_b"))
   }
 
   val phashDedupSql: String =
@@ -373,7 +368,6 @@ object Multimodal {
       .select(col("doc_id"), col("modality"), col("width"), col("height"),
         floor(col("width") * col("scale")).cast("int").as("out_w"),
         floor(col("height") * col("scale")).cast("int").as("out_h"))
-      .orderBy(col("doc_id"))
   }
 
   val resizeSql: String =
@@ -407,7 +401,6 @@ object Multimodal {
         max(col("mean_intensity")).as("feat_max"),
         TextAnalysis.trunc4(sqrt(avg(col("mean_intensity") * col("mean_intensity"))))
           .as("feat_rms"))
-      .orderBy(col("doc_id"))
   }
 
   /** One audio document's energy profile. */
@@ -459,7 +452,7 @@ object Multimodal {
   }
 
   def audioEnergy: Q = (s, d) =>
-    audioStub(s, d).toDF().orderBy(col("doc_id"))
+    audioStub(s, d).toDF()
 
   /** Fixed GOP pattern for the structure ledger: I every 12, P every 4. */
   val GopSize = 12
@@ -488,7 +481,6 @@ object Multimodal {
       .withColumn("bit_units",
         col("n_i") * BitsI + col("n_p") * BitsP + col("n_b") * BitsB)
       .withColumn("avg_units_x100", expr("bit_units * 100 div n_frames"))
-      .orderBy(col("doc_id"))
   }
 
   val gopStructureSql: String =
@@ -537,7 +529,6 @@ object Multimodal {
       .withColumn("n_phases", least(col("n_out"), lit(ResampleM.toLong)))
       .withColumn("ratio_x1e6",
         expr("cast(cast(n_out as decimal(38,0)) * 1000000 div n_in as bigint)"))
-      .orderBy(col("doc_id"))
   }
 
   val audioResampleSql: String =
@@ -623,7 +614,6 @@ object Multimodal {
         .over(Window.partitionBy(col("doc_id")).orderBy(col("start_widx"))).cast("int"))
       .select(col("doc_id"), col("seg_id"), col("start_widx"), col("end_widx"),
         col("n_active"), col("seg_energy"))
-      .orderBy(col("doc_id"), col("seg_id"))
   }
 
   /** Same PCM16 window math as `audioEnergySql`, then the identical
@@ -743,7 +733,6 @@ object Multimodal {
         expr(s"(coalesce(n_images, 0L) + ${BatchSize - 1}) div $BatchSize").as("n_batches"),
         TextAnalysis.trunc4(coalesce(col("n_images"), lit(0L)).cast("double")
           / col("t").cast("double")).as("share"))
-      .orderBy(col("bucket_id"))
   }
 
   val aspectBucketSql: String = {
@@ -804,7 +793,6 @@ object Multimodal {
           * 1e4) / 1e4)
       .select(col("modality"), col("bin"), col("n_frames"), col("modality_total"),
         col("share"))
-      .orderBy(col("modality"), col("bin"))
   }
 
   lazy val exposureHistogramSql: String =
@@ -870,7 +858,6 @@ object Multimodal {
         floor(col("lap_energy").cast("double") / (col("flen") - 2).cast("double") * 1e4) / 1e4)
         .otherwise(lit(0.0)).as("sharpness"))
       .withColumn("is_blurry", col("sharpness") < BlurTau)
-      .orderBy(col("doc_id"), col("frame_idx"))
   }
 
   val blurDetectSql: String =

@@ -120,7 +120,7 @@ object NativeHistogram {
                      + cast(inb as double) * (cast($x as double) - $lo) / ($hi - $lo))
                    / cast(total as double) * 1e6) as bigint)""").as("frac_x1e6"))
     }
-    per.reduce(_ unionByName _).orderBy(col("event_type"), col("x"))
+    per.reduce(_ unionByName _)
   }
 
   val nativeFractionSql: String = {
@@ -176,7 +176,6 @@ object NativeHistogram {
         max(when(col("q") === 0.5, col("est"))).as("p50"),
         max(when(col("q") === 0.9, col("est"))).as("p90"),
         max(when(col("q") === 0.99, col("est"))).as("p99"))
-      .orderBy(col("event_type"))
   }
 
   val nativeQuantileSql: String =
@@ -245,7 +244,6 @@ object NativeHistogram {
           .as("p90"),
         expr(s"floor(CAST(total AS DOUBLE) / $RateWinSec * 1e6) / 1e6")
           .as("rate_per_sec"))
-      .orderBy(col("event_type"), col("win_sec"))
   }
 
   val nativeRateQuantileSql: String =
@@ -276,7 +274,6 @@ object NativeHistogram {
       .withColumn("bucket_idx", expr("cast(ceil(idx / 4.0) as int)"))
       .groupBy(col("event_type"), col("bucket_idx"))
       .agg(sum(col("cnt")).as("cnt"), count(lit(1)).as("n_merged"))
-      .orderBy(col("event_type"), col("bucket_idx"))
   }
 
   val nativeDownscaleSql: String =
@@ -313,7 +310,6 @@ object NativeHistogram {
       .crossJoin(broadcast(merged.agg(sum(col("cnt")).as("total"))))
       .select(col("idx"), col("n_series"), col("cnt"), col("cum"),
         (floor(col("cum") * lit(10000) / col("total")) / 1e4).as("mass_share"))
-      .orderBy(col("idx"))
   }
 
   val nativeSumSql: String =

@@ -49,7 +49,6 @@ object Pipeline {
         hashBucket(concat(lit("split:"), col("doc_id").cast("string"))).as("bucket"))
       .withColumn("split",
         when(col("bucket") < 80, "train").when(col("bucket") < 90, "val").otherwise("test"))
-      .orderBy(col("doc_id"))
   }
 
   val splitTrainTestSql: String = {
@@ -83,7 +82,6 @@ object Pipeline {
       .agg(count(lit(1)).as("n_out"),
         countDistinct(col("doc_id")).as("n_unique"),
         sum(col("n_chars")).as("chars_out"))
-      .orderBy(col("source"))
   }
 
   val mixCorporaSql: String = {
@@ -118,7 +116,6 @@ object Pipeline {
         floor(coalesce(sum(col("tok_est")).over(w), lit(0L)) / PackBudget).cast("long"))
       .groupBy(col("lang"), col("pack_id"))
       .agg(count(lit(1)).as("n_docs"), sum(col("tok_est")).as("pack_tokens"))
-      .orderBy(col("lang"), col("pack_id"))
   }
 
   val packTokenBudgetSql: String =
@@ -157,7 +154,6 @@ object Pipeline {
         sum(col("tok_est")).as("pack_tokens"),
         expr("array_join(transform(array_sort(collect_list(off)), x -> CAST(x AS STRING)), ',')")
           .as("boundaries"))
-      .orderBy(col("lang"), col("pack_id"))
   }
 
   /** Block-diagonal attention-mask DENSITY per pack — the cost read a
@@ -185,7 +181,6 @@ object Pipeline {
         sum(col("tok_est") * col("tok_est")).as("sum_sq_tokens"))
       .withColumn("mask_valid_x1e6",
         expr("sum_sq_tokens * 1000000 div (pack_tokens * pack_tokens)"))
-      .orderBy(col("lang"), col("pack_id"))
   }
 
   val packMaskDensitySql: String =
@@ -223,7 +218,6 @@ object Pipeline {
         expr(s"cast(ceil(sum_tokens / $PackBudget.0) as bigint)").as("n_packed_seqs"),
         expr(s"cast(ceil(sum_tokens / $PackBudget.0) as bigint) * 1000000 div n_docs")
           .as("packed_to_padded_x1e6"))
-      .orderBy(col("lang"))
   }
 
   val packPaddingWasteSql: String =
@@ -296,7 +290,6 @@ object Pipeline {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_kept"),
         min(col("score")).as("lo_score"), max(col("score")).as("hi_score"))
-      .orderBy(col("lang"))
   }
 
   val curateQualityBandSql: String =
@@ -326,7 +319,6 @@ object Pipeline {
         Window.partitionBy(col("lang")).orderBy(col("tfidf").desc, col("term"))))
       .filter(col("rn") <= 5)
       .select(col("lang"), col("term"), col("tf"), col("df"), col("tfidf"), col("rn"))
-      .orderBy(col("lang"), col("rn"))
   }
 
   val tfidfTopkSql: String =
@@ -362,7 +354,6 @@ object Pipeline {
       .filter(col("bucket") < frac)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_sampled"), sum(col("n_chars")).as("chars_sampled"))
-      .orderBy(col("lang"))
   }
 
   val sampleStratifiedSql: String = {
@@ -392,7 +383,6 @@ object Pipeline {
       .agg(expr(s"graft_topk(neg_h, doc_id, $ReservoirK)").as("top"))
       .select(col("lang"), posexplode(col("top")))
       .select(col("lang"), col("col.id").as("doc_id"), (col("pos") + 1).cast("int").as("rk"))
-      .orderBy(col("lang"), col("rk"))
   }
 
   val sampleReservoirSql: String =
@@ -438,7 +428,6 @@ object Pipeline {
       .agg(count(lit(1)).as("n_docs"),
         sum(ceil(col("n_chars") / 4.0).cast("long")).as("tok_est"),
         min(col("score")).as("lo_score"), max(col("score")).as("hi_score"))
-      .orderBy(col("split"), col("lang"))
   }
 
   val endToEndSql: String = {
@@ -493,7 +482,6 @@ object Pipeline {
       .select((col("pos") + 1).cast("int").as("rk"), col("col.id").as("doc_id"))
       .join(Tables.documents(s, d).select(col("doc_id"), col("n_chars")), Seq("doc_id"))
       .select(col("rk"), col("doc_id"), col("n_chars"))
-      .orderBy(col("rk"))
   }
 
   val sampleWeightedSql: String =
@@ -548,7 +536,6 @@ object Pipeline {
       }
       .toDF("lang", "bin_id", "n_docs", "bin_tokens")
       .withColumn("utilization", trunc4(col("bin_tokens") * lit(1.0) / PackBudget))
-      .orderBy(col("lang"), col("bin_id"))
   }
 
   /** Class-balanced downsampling — equalize label counts to the
@@ -574,7 +561,6 @@ object Pipeline {
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_orig"), max(col("n_min")).as("n_kept"),
         sum(when(col("rk") <= col("n_min"), col("doc_id"))).as("kept_id_sum"))
-      .orderBy(col("lang"))
   }
 
   val sampleClassBalancedSql: String =
@@ -609,7 +595,6 @@ object Pipeline {
       .crossJoin(broadcast(Tables.documents(s, d).agg(count(lit(1)).as("total"))))
       .select(col("fold").cast("int").as("fold"), col("n_docs"), col("id_checksum"),
         trunc4(col("n_docs").cast("double") / col("total").cast("double")).as("share"))
-      .orderBy(col("fold"))
   }
 
   val splitKfoldSql: String =
@@ -647,7 +632,6 @@ object Pipeline {
       .select(col("source"), col("col.id").as("doc_id"),
         col("col.score").cast("long").as("n_chars"),
         (col("pos") + 1).cast("int").as("domain_rank"))
-      .orderBy(col("source"), col("domain_rank"))
   }
 
   val curateDomainCapSql: String =
@@ -690,7 +674,6 @@ object Pipeline {
         (col("base") + col("extra")).as("alloc"),
         (floor((col("base") + col("extra")).cast("double")
           / lit(ApportionBudget.toDouble) * 1e6) / 1e6).as("achieved_share"))
-      .orderBy(col("source"))
   }
 
   val budgetApportionSql: String =
@@ -783,7 +766,6 @@ object Pipeline {
           .as("mean_quality"),
         sum(col("is_dup")).as("n_dup_docs"))
       .join(langTop, "source")
-      .orderBy(col("source"))
   }
 
   val datasetCardSql: String = {
@@ -881,7 +863,6 @@ object Pipeline {
       .select(col("fold").cast("int").as("fold"), col("train_days").cast("int").as("train_days"),
         col("n_train"), col("n_purged"), col("n_test"),
         col("n_users_overlap").cast("long").as("n_users_overlap"))
-      .orderBy(col("fold"))
   }
 
   val splitPurgedCvSql: String = {
@@ -942,7 +923,6 @@ object Pipeline {
       .agg(sum(col("n")).as("n_events"),
         count(lit(1)).as("n_users"),
         sum(col("in_train")).cast("long").as("n_users_in_train"))
-      .orderBy(col("split"))
   }
 
   val splitTemporalSql: String =
@@ -992,7 +972,6 @@ object Pipeline {
           / sum(col("n_tokens")).over().cast("double")))
       .select(col("phase"), col("n_docs"), col("n_tokens"), col("token_share"),
         col("min_score"), col("max_score"), col("n_langs"))
-      .orderBy(col("phase"))
   }
 
   val packCurriculumSql: String =
@@ -1061,7 +1040,6 @@ object Pipeline {
     base.select(col("doc_id"), col("source"), col("lam_idx"),
       element_at(array(PoissonLams.map(lit): _*), col("lam_idx") + 1).as("lam"),
       nCopies.cast("int").as("n_copies"))
-      .orderBy(col("doc_id"))
   }
 
   val samplePoissonSql: String = {
@@ -1116,7 +1094,6 @@ object Pipeline {
       .unionByName(stage("rule_kept", 1, kept))
       .unionByName(stage("dedup_survivors", 2, survivors))
       .unionByName(stage("train_split", 3, train))
-      .orderBy(col("stage_idx"))
   }
 
   val reproLedgerSql: String = {
@@ -1177,7 +1154,6 @@ object Pipeline {
           / col("capacity").cast("double") * 1e4) / 1e4)
       .select(col("bucket"), col("n_docs"), col("sum_tokens"), col("capacity"),
         col("waste_ratio"))
-      .orderBy(col("bucket"))
   }
 
   val lengthBucketsSql: String = {
@@ -1232,7 +1208,6 @@ object Pipeline {
           col("n_chars"), col("n_sources"), col("n_leaked_sources"))
     }
     audit("by_doc", "split_doc").unionByName(audit("by_source", "split_src"))
-      .orderBy(col("strategy"), col("split"))
   }
 
   val splitGroupedSql: String = {
@@ -1292,7 +1267,6 @@ object Pipeline {
         expr(s"CASE WHEN tmass > 0 THEN (mass * $NeymanBudget) div tmass END")
           .as("neyman_alloc"),
         expr(s"(n * $NeymanBudget) div n_total").as("prop_alloc"))
-      .orderBy(col("source"))
   }
 
   val sampleNeymanSql: String =
@@ -1363,7 +1337,6 @@ object Pipeline {
             * log((col("copies").cast("decimal(38,0)") * col("qtot")).cast("double")
               / (col("q_mass").cast("decimal(38,0)") * col("ctot")).cast("double"))
             * 1e6) / 1e6).as("kl_term"))
-      .orderBy(col("source"))
   }
 
   val mixKlDivergenceSql: String = {
@@ -1447,7 +1420,7 @@ object Pipeline {
     val sorted = arm("source_sorted", col("source"), Seq(col("doc_id")))
     val shuffled = arm("hash_shuffled", substring(col("h"), 1, 2),
       Seq(col("h"), col("doc_id")))
-    sorted.unionByName(shuffled).orderBy(col("layout"))
+    sorted.unionByName(shuffled)
   }
 
   val shuffleQualitySql: String = {
@@ -1525,7 +1498,7 @@ object Pipeline {
       centers :+= ((k, pid, pv, pd))
     }
     centers.map { case (k, id, _, dq) => (k, id, dq / 1e6) }
-      .toDF("k", "vec_id", "radius").orderBy(col("k"))
+      .toDF("k", "vec_id", "radius")
   }
 
   /** DuckDB replay: the same K−1 unrolled rounds; the dot product is a

@@ -277,7 +277,7 @@ object PromApi {
           expr(s"cast(instr('${BadSelector.replace("'", "\\'")}', '#') as string)"),
           lit(": parse error: unexpected character inside braces: '#'\"}"))
           .as("body"))
-    ok.unionByName(bad).orderBy(col("http_status"))
+    ok.unionByName(bad)
   }
 
   val errorJsonSql: String = {

@@ -72,7 +72,6 @@ object PromPush {
         col("creq_sha256")))
       .select(col("identifier"), col("n_lines"), col("payload_sha256"),
         col("creq_sha256"), col("string_to_sign"))
-      .orderBy(col("identifier"))
   }
 
   val pushSigv4Sql: String = {

@@ -64,7 +64,6 @@ object PromQl {
         (floor(col("sum_value") / col("n_samples") * 1e6) / 1e6).as("avg_value"),
         col("day_total"),
         (floor(col("sum_value") / col("day_total") * 1e6) / 1e6).as("share_of_day"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val vectorMatchingSql: String =
@@ -114,7 +113,6 @@ object PromQl {
       .agg(max(struct(col("ts_us"), col("event_id"), col("value"))).as("last"))
       .select(col("event_type"), col("step_sec"),
         col("last.ts_us").as("sample_ts_us"), col("last.value").as("value"))
-      .orderBy(col("event_type"), col("step_sec"))
   }
 
   val queryRangeSql: String =
@@ -201,7 +199,6 @@ object PromQl {
       .select(col("event_type"), col("bucket_start"), col("n_samples"),
         col("sum_inc").as("raw_increase"),
         col("increase_extrapolated"), col("rate_per_sec"))
-      .orderBy(col("event_type"), col("bucket_start"))
   }
 
   val rateExtrapolatedSql: String = {
@@ -250,7 +247,6 @@ object PromQl {
         format_string("%d", floor(col("value")).cast("long")).as("value_label"))
       .groupBy(col("event_type"), col("value_label"))
       .agg(count(lit(1)).as("n_samples"))
-      .orderBy(col("event_type"), col("value_label"))
 
   val countValuesSql: String =
     """SELECT event_type,
@@ -309,7 +305,6 @@ object PromQl {
       .select(col("event_type"), col("step_sec"), col("n_max"),
         (floor(col("n_max").cast("double") / lit(SubStepSec.toDouble) * 1e6) / 1e6)
           .as("max_rate"))
-      .orderBy(col("event_type"), col("step_sec"))
   }
 
   val subqueryMaxRateSql: String =
@@ -381,7 +376,6 @@ object PromQl {
     deltaStagedExprs.foldLeft(g) { case (df, (name, e)) => df.withColumn(name, expr(e)) }
       .select(col("event_type"), col("bucket_start"), col("n_samples"),
         col("raw_delta"), col("delta_extrapolated"))
-      .orderBy(col("event_type"), col("bucket_start"))
   }
 
   val deltaGaugeSql: String = {
@@ -433,7 +427,6 @@ object PromQl {
         expr("cast(day(to_date(timestamp_seconds(es))) as bigint)").as("day_of_month"),
         expr("cast(day(last_day(to_date(timestamp_seconds(es)))) as bigint)")
           .as("days_in_month"))
-      .orderBy(col("event_type"))
   }
 
   val timestampFnsSql: String =

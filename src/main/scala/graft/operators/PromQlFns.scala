@@ -92,7 +92,6 @@ object PromQlFns {
         Window.partitionBy(col("step_sec"), col("job"))
           .orderBy(col("cents").desc, col("instance"))).cast("long"))
       .filter(col("rank") <= 2)
-      .orderBy(col("step_sec"), col("job"), col("rank"))
   }
 
   /** The `*_over_time` aggregation family — `min_over_time
@@ -117,7 +116,6 @@ object PromQlFns {
         max(struct(col("sec"), col("event_id"), col("cents"))).as("l"))
       .select(col("job"), col("step_sec"), col("n"), col("min_c"), col("max_c"),
         col("sum_c"), expr("sum_c div n").as("avg_c"), col("l.cents").as("last_c"))
-      .orderBy(col("job"), col("step_sec"))
   }
 
   val overTimeFamilySql: String =
@@ -163,7 +161,6 @@ object PromQlFns {
     series.crossJoin(steps)
       .join(present, Seq("job", "instance", "step_sec"), "left_anti")
       .select(col("job"), col("instance"), col("step_sec"), lit(1L).as("absent"))
-      .orderBy(col("job"), col("instance"), col("step_sec"))
   }
 
   val absentOverTimeSql: String =
@@ -222,7 +219,6 @@ object PromQlFns {
         least(greatest(col("cents"), lit(5000L)), lit(20000L)).as("clamp_cents"),
         greatest(col("cents"), lit(5000L)).as("clamp_min_cents"),
         least(col("cents"), lit(20000L)).as("clamp_max_cents"))
-      .orderBy(col("job"), col("instance"))
 
   /** The inverted-bounds edge: PromQL returns the empty vector when
     * min > max (never a crossed clamp). Exposed for the spec. */
@@ -257,7 +253,6 @@ object PromQlFns {
         concat(col("job"), lit("-"), col("instance_eff")))
       .select(col("job"), col("instance"), col("instance_eff"),
         col("zone_before"), col("zone_after"), col("cents"))
-      .orderBy(col("job"), col("instance"))
 
   val labelJoinSql: String =
     s"""WITH $instantVectorSql
@@ -292,7 +287,6 @@ object PromQlFns {
       .select(col("job"), lit(1L).as("group_value"), col("n_series"),
         (floor(col("var_raw") * 1e4) / 1e4).as("stdvar"),
         (floor(sqrt(col("var_raw")) * 1e4) / 1e4).as("stddev"))
-      .orderBy(col("job"))
 
   val groupStdvarSql: String =
     s"""WITH $instantVectorSql,
@@ -341,7 +335,6 @@ object PromQlFns {
         (floor((col("lo_cents").cast("double") +
           (col("hi_cents") - col("lo_cents")).cast("double") * col("frac")) * 1e4) / 1e4)
           .as("quantile_cents"))
-      .orderBy(col("job"))
   }
 
   val quantileAggregatorSql: String =

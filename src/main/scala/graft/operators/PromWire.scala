@@ -209,7 +209,6 @@ object PromWire {
     encodeSamples(stacked)
       .selectExpr("family_type", "metric_name", "event_type", "ts_ms", "value",
         s"${sparkDia.idiv("length(wire_hex)")} AS wire_len", "wire_hex")
-      .orderBy(col("metric_name"), col("event_type"))
   }
 
   val wireFrameSql: String = {
@@ -261,7 +260,6 @@ object PromWire {
         "length(body_hex) div 2 AS body_len",
         "md5(body_hex) AS body_md5",
         "lower(hex(graft_unsnappy(graft_snappy(unhex(body_hex))))) = body_hex AS roundtrip_ok")
-      .orderBy(col("metric_name"))
   }
 
   val wireSnappySql: String =
@@ -305,7 +303,6 @@ object PromWire {
         "CAST(length(rr_hex) div 2 AS BIGINT) AS body_len",
         "md5(rr_hex) AS body_md5",
         "substring(rr_hex, 1, 8) AS head_hex")
-      .orderBy(col("metric_name"))
   }
 
   val remoteReadFrameSql: String =
@@ -428,7 +425,7 @@ object PromWire {
          FROM hist1)
      SELECT event_type, n_buckets, n_spans, total,
             ${dia.idiv("length(hist_hex)")} AS hist_len, hist_hex
-     FROM hist ORDER BY event_type"""
+     FROM hist"""
 
   def nativeHistogramWire: Q = (s, d) => {
     Tables.events(s, d).createOrReplaceTempView("graft_events_nhw")
@@ -437,7 +434,7 @@ object PromWire {
   }
 
   val nativeHistogramWireSql: String =
-    nhSql(duckDia, "events", (c, o) => s"string_agg($c, '' ORDER BY $o)")
+    nhSql(duckDia, "events", (c, o) => s"string_agg($c, '' ORDER BY $o)") + " ORDER BY event_type"
 
   // --------------------------- Remote-Write 2.0 (symbol interning)
 

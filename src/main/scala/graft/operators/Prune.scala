@@ -47,7 +47,6 @@ object Prune {
       .groupBy(year(col("o_orderdate")).cast("int").as("o_year"))
       .agg(count(lit(1)).as("n_lines"),
         round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-      .orderBy(col("o_year"))
   }
 
   val bloomJoinPruneSql: String =
@@ -74,7 +73,6 @@ object Prune {
         col("o_custkey") === col("c_custkey"))
       .groupBy(col("cohort"), col("c_mktsegment"))
       .agg(count(lit(1)).as("customers"))
-      .orderBy(col("cohort"), col("c_mktsegment"))
   }
 
   val setOpsSql: String =
@@ -142,7 +140,6 @@ object Prune {
               * 1e4) / 1e4).as("read_amplification"))
     }
     ledger("clustered", "file_clustered").unionByName(ledger("hash", "file_hash"))
-      .orderBy(col("layout"))
   }
 
   val manifestPruneSql: String = {

@@ -74,7 +74,7 @@ object Quality {
           col("n_distinct"), col("num_min"), col("num_max"),
           col("len_min"), col("len_max"))
     }
-    branches.reduce(_ unionByName _).orderBy(col("col_name"))
+    branches.reduce(_ unionByName _)
   }
 
   val dqProfileSql: String = {
@@ -123,7 +123,6 @@ object Quality {
       .select(col("l_returnflag"), col("l_linestatus"),
         col("rev").cast("decimal(28,4)").cast("string").as("revenue"),
         col("n_lines"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
 
   val decimalMoneySql: String =
@@ -172,7 +171,6 @@ object Quality {
         'orders_custkey_references_customer', n, v) as (rule, n_checked, violations)""")
     li.unionByName(o).unionByName(c).unionByName(fk)
       .withColumn("pass", col("violations") === 0)
-      .orderBy(col("rule"))
   }
 
   val dqRulesSql: String =
@@ -245,7 +243,6 @@ object Quality {
           (col("pd") * col("qd")).cast("double")) *
           log((col("pn") * col("qd")).cast("double") / (col("qn") * col("pd")).cast("double")) *
           1e6) / 1e6).as("psi_term"))
-      .orderBy(col("bucket"))
   }
 
   val driftPsiSql: String = {
@@ -304,7 +301,6 @@ object Quality {
         expr(s"CASE digit $expectedCase END").as("expected_share"),
         trunc4(abs(col("n_orders").cast("double") / col("total").cast("double")
           - expr(s"CASE digit $expectedCase END"))).as("abs_gap"))
-      .orderBy(col("digit"))
   }
 
   val dqBenfordSql: String = {
@@ -349,7 +345,6 @@ object Quality {
         expr(s"CASE digit $expectedCase END").as("expected_share"),
         trunc4(abs(col("n_orders").cast("double") / col("total").cast("double")
           - expr(s"CASE digit $expectedCase END"))).as("abs_gap"))
-      .orderBy(col("digit"))
   }
 
   val dqBenfordDigit2Sql: String = {
@@ -395,7 +390,6 @@ object Quality {
         count(when(col("c_acctbal") > col("fence_hi"), 1)).as("n_high"))
       .select(col("c_mktsegment"), col("n_customers"), col("q1"), col("q3"),
         col("fence_lo"), col("fence_hi"), col("n_low"), col("n_high"))
-      .orderBy(col("c_mktsegment"))
   }
 
   val dqOutlierIqrSql: String =
@@ -451,7 +445,6 @@ object Quality {
       .withColumn("sla_ok", col("lag_sec") <= lit(2L) * col("cadence_sec"))
       .select(col("table_name"), col("latest_sec"), col("ref_sec"),
         col("lag_sec"), col("cadence_sec"), col("sla_ok"))
-      .orderBy(col("table_name"))
   }
 
   val freshnessSlaSql: String = {
@@ -522,7 +515,6 @@ object Quality {
           floor(col("cov").cast("double")
             / (sqrt(col("vx").cast("double")) * sqrt(col("vy").cast("double")))
             * 1e4) / 1e4).as("corr"))
-      .orderBy(col("col_a"), col("col_b"))
   }
 
   val corrMatrixSql: String = {
@@ -582,7 +574,6 @@ object Quality {
       .select(col("user_id"), col("amt"), col("ev_a"), col("ev_b"),
         floor(abs(col("sec_a") - col("sec_b")).cast("double") / 3600.0e0)
           .cast("long").as("hours_apart"))
-      .orderBy(col("user_id"), col("amt"), col("ev_a"), col("ev_b"))
   }
 
   val duplicatePaymentsSql: String =
@@ -639,7 +630,6 @@ object Quality {
       .select(col("tbl"), col("day"), col("n"), col("med"), col("mad"),
         (abs(col("n") - col("med")) > col("mad") * 3).as("is_anomaly"))
       .filter(col("is_anomaly"))
-      .orderBy(col("tbl"), col("day"))
   }
 
   val volumeAnomalySql: String = {

@@ -52,7 +52,6 @@ object RangeJoin {
       .groupBy(col("event_id"), col("p_sec"))
       .agg(count(col("w_start")).as("n_windows"),
         min(col("w_start")).as("first_window_start"))
-      .orderBy(col("event_id"))
   }
 
   val rangeJoinBinnedSql: String =
@@ -108,7 +107,6 @@ object RangeJoin {
       .select(col("user_id"), col("lo").as("session_lo"), col("h").as("incident_h"),
         (least(col("hi"), col("h_end")) - greatest(col("lo"), col("h")) + 1).as("overlap_sec"))
       .distinct()
-      .orderBy(col("user_id"), col("session_lo"), col("incident_h"))
   }
 
   val intervalOverlapJoinSql: String =

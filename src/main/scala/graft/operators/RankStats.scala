@@ -159,7 +159,6 @@ object RankStats {
     // one row per group, the shared statistic repeated
     h.selectExpr("stack(3, 'A', n_a, ra_x2, 'N', n_n, rn_x2, 'R', n_r, rr_x2) as (flag, n_j, r_sum_x2)",
       "h_corr")
-      .orderBy(col("flag"))
   }
 
   val kruskalWallisSql: String =
@@ -231,7 +230,6 @@ object RankStats {
       .select(col("event_type"), col("dow"), col("rank"),
         (floor(col("p") * 1e6) / 1e6).as("p_floor"),
         (col("kmax").isNotNull && col("rank") <= col("kmax")).as("rejected"))
-      .orderBy(col("rank"))
   }
 
   val bhFdrSql: String =
@@ -364,7 +362,6 @@ object RankStats {
           / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)) * 1e4) / 1e4)
           .as("rho")
       })
-      .orderBy(col("flag"))
   }
 
   val spearmanSql: String =
@@ -516,7 +513,6 @@ object RankStats {
         when(col("z") >= 1.96, lit("increasing"))
           .when(col("z") <= -1.96, lit("decreasing"))
           .otherwise(lit("none")))
-      .orderBy(col("event_type"))
   }
 
   val mannKendallZSql: String =
@@ -599,7 +595,6 @@ object RankStats {
         min(when(col("ph_b") >= col("b") * lit(PhLambdaCents), col("t")))
           .as("alarm_day"))
       .withColumn("alarmed", col("alarm_day").isNotNull)
-      .orderBy(col("event_type"))
   }
 
   val pageHinkleySql: String =

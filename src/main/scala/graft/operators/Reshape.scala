@@ -32,7 +32,6 @@ object Reshape {
         round(sum(col("o_totalprice")), 2).as("sum_price"))
       .withColumn("lo", (col("bucket") * BucketWidth).cast("double"))
       .select("bucket", "lo", "n_orders", "sum_price")
-      .orderBy(col("bucket"))
   }
 
   val histogramTotalpriceSql: String =
@@ -57,7 +56,6 @@ object Reshape {
       .groupBy(col("event_date"))
       .pivot("event_type", EventTypes)
       .agg(sum(col("cents")) / 100.0)
-      .orderBy(col("event_date"))
   }
 
   val pivotEventsDailySql: String = {
@@ -83,7 +81,6 @@ object Reshape {
         sum(col("k")).as("k_sum"),
         TextAnalysis.trunc4(avg(col("k"))).as("k_avg"),
         max(col("k")).as("k_max"))
-      .orderBy(col("event_type"))
   }
 
   val jsonExtractSql: String =
@@ -111,7 +108,6 @@ object Reshape {
     daily
       .select(col("event_type"), col("day"), col("day_value"),
         round(sum(col("day_value")).over(w), 2).as("rolling_7d"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val rolling7dSql: String =
@@ -143,7 +139,6 @@ object Reshape {
         col("last.event_id").as("last_event_id"),
         col("last.event_type").as("last_event_type"),
         col("last.value").as("last_value"), col("n_events"))
-      .orderBy(col("user_id"))
   }
 
   val latestPerKeySql: String =
@@ -220,7 +215,6 @@ object Reshape {
       .groupBy(col("event_type"), trunc(col("day"), "month").as("month"))
       .agg(count(lit(1)).as("n_days"), sum(col("n")).as("n_events"),
         round(sum(col("day_sum")), 2).as("month_sum"))
-      .orderBy(col("event_type"), col("month"))
   }
 
   val rollupReuseSql: String =
@@ -261,7 +255,6 @@ object Reshape {
           .otherwise("changed"))
       .select(col("user_id"), col("status"),
         col("event_1"), col("event_2"), col("value_2"))
-      .orderBy(col("user_id"))
   }
 
   val snapshotDiffSql: String =
@@ -308,7 +301,6 @@ object Reshape {
     pts.join(broadcast(sky), Seq("x", "y"))
       .groupBy(col("x"), col("y"))
       .agg(count(lit(1)).as("n_parts"))
-      .orderBy(col("x"))
   }
 
   val skyline2dSql: String =
@@ -333,7 +325,6 @@ object Reshape {
     wide.unpivot(Array(col("event_date")),
         EventTypes.map(t => col(t)).toArray, "event_type", "value_sum")
       .filter(col("value_sum").isNotNull)
-      .orderBy(col("event_date"), col("event_type"))
   }
 
   val unpivotEventsDailySql: String =
@@ -364,7 +355,6 @@ object Reshape {
         col("is_weekend"), col("is_month_start"),
         coalesce(col("n_orders"), lit(0L)).as("n_orders"),
         coalesce(col("revenue_cents"), lit(0L)).as("revenue_cents"))
-      .orderBy(col("day"))
   }
 
   val calendarDimSql: String =
@@ -405,7 +395,6 @@ object Reshape {
         expr("cast((sec div 86400 + 4) % 7 as int)").as("dow"),
         expr("cast((sec % 86400) div 3600 as int)").as("hour"))
       .agg(count(lit(1)).as("n_events"), sum(col("v_c")).as("cents_sum"))
-      .orderBy(col("dow"), col("hour"))
   }
 
   val heatmapGridSql: String =
@@ -434,7 +423,6 @@ object Reshape {
           .orderBy(col("n_rows").desc, col("l_quantity"))))
       .filter(col("rn") === 1)
       .select(col("l_returnflag"), col("l_quantity").as("mode_quantity"), col("n_rows"))
-      .orderBy(col("l_returnflag"))
   }
 
   val modePerGroupSql: String =
@@ -476,7 +464,6 @@ object Reshape {
       .select(col("node"), length(col("node").cast("string")).as("depth"),
         col("n_desc"), col("subtree_cents"),
         coalesce(col("own"), lit(0L)).as("own_cents"))
-      .orderBy(col("node"))
   }
 
   val hierarchyRollupSql: String = {
@@ -544,7 +531,6 @@ object Reshape {
           .as("mean_cents"),
         (floor(col("win_sum").cast("double") / col("n").cast("double") * 1e4) / 1e4)
           .as("winsor_mean_cents"))
-      .orderBy(col("l_returnflag"))
   }
 
   val winsorizedMeanSql: String =
@@ -599,7 +585,6 @@ object Reshape {
       .withColumn("additive_overcount",
         floor(col("naive_sum_cents").cast("double")
           / col("eom_balance_cents").cast("double") * 1e4) / 1e4)
-      .orderBy(col("month"))
   }
 
   val semiAdditiveSql: String =

@@ -62,7 +62,6 @@ object SchemaContract {
           .when(col("expected_type") =!= col("actual_type"), lit("type_mismatch"))
           .otherwise(lit("ok")))
       .select(col("column"), col("expected_type"), col("actual_type"), col("verdict"))
-      .orderBy(col("column"))
   }
 
   /** Oracle twin: DESCRIBE gives the actual schema; the contract is a

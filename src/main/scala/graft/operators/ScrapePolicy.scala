@@ -41,7 +41,6 @@ object ScrapePolicy {
       .withColumn("up", when(col("n_series") <= col("sample_limit"), 1L).otherwise(0L))
       .withColumn("n_kept",
         when(col("up") === 1, col("n_series")).otherwise(lit(0L)))
-      .orderBy(col("target"))
   }
 
   val sampleLimitSql: String =
@@ -89,7 +88,6 @@ object ScrapePolicy {
       .withColumn("mode", lit("honor_true"))
     honorFalse.unionByName(honorTrue)
       .select(col("mode"), col("final_job"), col("n_series"))
-      .orderBy(col("mode"), col("final_job"))
   }
 
   val honorLabelsSql: String =

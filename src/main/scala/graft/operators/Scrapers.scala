@@ -27,7 +27,6 @@ object Scrapers {
       .agg(count(lit(1)).as("events_total"),
         round(sum(col("value")), 2).as("events_value_sum"))
     MetricsModel.wideToLong(agg, Seq("event_type"), Seq("events_total", "events_value_sum"))
-      .orderBy(col("event_type"), col("metric_name"))
   }
 
   val globalStatusSql: String =
@@ -53,7 +52,6 @@ object Scrapers {
            'events_users', events_users,
            'events_min_ts', events_min_ts,
            'events_max_ts', events_max_ts) as (variable_name, variable_value)""")
-      .orderBy(col("variable_name"))
   }
 
   val globalVariablesSql: String =
@@ -80,7 +78,6 @@ object Scrapers {
     agg.crossJoin(broadcast(globalMax))
       .select(col("event_type").as("channel_name"),
         (col("gmax") - col("max_sec")).as("seconds_behind"))
-      .orderBy(col("channel_name"))
   }
 
   val slaveStatusSql: String =
@@ -97,7 +94,6 @@ object Scrapers {
       .groupBy(col("event_type").as("state"),
         concat(lit("user_"), pmod(col("user_id"), lit(8))).as("usr"))
       .agg(count(lit(1)).as("processes"))
-      .orderBy(col("state"), col("usr"))
   }
 
   val processlistSql: String =
@@ -111,7 +107,6 @@ object Scrapers {
       .groupBy((floor(col("p_size") / 8) * 8).cast("int").as("page_size"))
       .agg(count(lit(1)).as("compress_ops"),
         round(sum(col("p_retailprice")), 2).as("compress_bytes"))
-      .orderBy(col("page_size"))
   }
 
   val innodbCmpSql: String =
@@ -130,7 +125,6 @@ object Scrapers {
       .agg(count(lit(1)).as("pages_used"),
         count(when(col("p_retailprice") < 500, 1)).as("pages_free"),
         round(sum(col("p_retailprice")), 2).as("relocation_ops"))
-      .orderBy(col("page_size"), col("buffer_pool"))
   }
 
   val innodbCmpMemSql: String =
@@ -150,7 +144,6 @@ object Scrapers {
     val agg = Tables.events(s, d).agg(aggCols.head, aggCols.tail: _*)
     val stackArgs = (les.map(le => s"'$le', b$le") :+ "'+Inf', binf").mkString(", ")
     agg.selectExpr(s"stack(${les.size + 1}, $stackArgs) as (le, cumulative_count)")
-      .orderBy(length(col("le")), col("le"))
   }
 
   val queryResponseTimeSql: String = {
@@ -178,7 +171,6 @@ object Scrapers {
           unix_timestamp(date_trunc("second", min(col("ts"))))) / 3600.0 * 100) / 100.0)
           .as("session_duration_hours"))
       .filter(col("session_duration_hours") > 8 && col("username").like("user_1%"))
-      .orderBy(col("session_duration_hours").desc, col("sid"), col("day"))
   }
 
   val longRunningSessionsSql: String =
@@ -231,7 +223,6 @@ object Scrapers {
       Seq("db_orders_total", "db_orders_price_sum", "db_orders_price_avg"))
     MetricsModel.enrichLabels(long, col("host"), engine = "postgres")
       .select("metric_name", "identifier", "job", "region", "account_id", "engine", "value")
-      .orderBy(col("identifier"), col("metric_name"))
   }
 
   val remoteWriteSql: String =
@@ -254,7 +245,7 @@ object Scrapers {
 
   /** Prometheus text exposition of the remote-write rows. */
   def expositionLines: Q = (s, d) =>
-    MetricsModel.exposition(remoteWrite(s, d)).orderBy(col("line"))
+    MetricsModel.exposition(remoteWrite(s, d))
 
   /** SUMMARY MetricFamily conversion (prometheus.go:89-98): a summary
     * emits one sample per configured quantile plus `_sum` and `_count`
@@ -279,7 +270,6 @@ object Scrapers {
            'events_value_sum', '', vsum,
            'events_value_count', '', vcount) AS (metric_name, quantile, value)""")
       .select(col("metric_name"), col("event_type"), col("quantile"), col("value"))
-      .orderBy(col("metric_name"), col("event_type"), col("quantile"))
   }
 
   val promSummarySql: String =
@@ -329,7 +319,6 @@ object Scrapers {
       .withColumn("dc", regexp_extract(col("identifier"), "^([a-z]+)_", 1))
       .withColumn("instance", concat(col("identifier"), lit(":"), col("engine")))
       .select("metric_name", "identifier", "dc", "instance", "value")
-      .orderBy(col("identifier"), col("metric_name"))
 
   val labelReplaceSql: String =
     """WITH w AS (
@@ -368,7 +357,6 @@ object Scrapers {
         round(sum(col("value")), 2).as("pg_blk_read_time"))
     MetricsModel.wideToLong(agg, Seq("datname"),
       Seq("pg_numbackends", "pg_xact_commit", "pg_xact_rollback", "pg_blk_read_time"))
-      .orderBy(col("datname"), col("metric_name"))
   }
 
   val pgStatDatabaseSql: String =
@@ -423,7 +411,6 @@ object Scrapers {
         s"${hqEstimator(0.5)} as p50",
         s"${hqEstimator(0.9)} as p90",
         s"${hqEstimator(0.99)} as p99")
-      .orderBy(col("event_type"))
   }
 
   val histogramQuantileSql: String = {
@@ -482,8 +469,6 @@ object Scrapers {
       s"stack(${rows.size}, $stackArgs) AS (family_type, metric_name, label, value)")
       .select(col("family_type"), col("metric_name"), col("event_type"),
         col("label"), col("value"))
-      .orderBy(col("family_type"), col("metric_name"), col("event_type"),
-        length(col("label")), col("label"))
   }
 
   val remoteWriteAllSql: String = {
@@ -541,7 +526,6 @@ object Scrapers {
       .groupBy(col("service"), col("shard"))
       .agg(count(lit(1)).as("n_samples"),
         countDistinct(col("user_id")).as("n_series"))
-      .orderBy(col("service"))
   }
 
   val relabelSql: String =
@@ -572,7 +556,6 @@ object Scrapers {
         regexp_extract(col("line"), "identifier=\"([^\"]*)\"", 1).as("identifier"),
         regexp_extract(col("line"), "job=\"([^\"]*)\"", 1).as("job"),
         regexp_extract(col("line"), "\\} (.+)$", 1).cast("double").as("value"))
-      .orderBy(col("metric_name"), col("identifier"))
 
   val expositionParseSql: String =
     s"""WITH rendered AS ($expositionSql)
@@ -610,7 +593,6 @@ object Scrapers {
       .withColumn("bin_count",
         col("cum_count") - coalesce(lag(col("cum_count"), 1).over(w), lit(0L)))
       .select(col("event_type"), col("day"), col("le"), col("cum_count"), col("bin_count"))
-      .orderBy(col("event_type"), col("day"), col("le"))
   }
 
   val histogramRebucketSql: String = {
@@ -649,7 +631,6 @@ object Scrapers {
         countDistinct(col("label")).as("n_label_values"))
       .withColumn("dominant_dim",
         when(col("n_label_values") > col("n_targets"), "label").otherwise("target"))
-      .orderBy(col("family_type"), col("metric_name"))
 
   lazy val seriesCardinalitySql: String =
     s"""WITH rw AS ($remoteWriteAllSql)
@@ -695,7 +676,6 @@ object Scrapers {
              CAST(CAST(b4 AS DECIMAL(38,0)) * n_samples - CAST(a2 AS DECIMAL(38,0)) * a2 AS DOUBLE)
                / (4.0 * CAST(n_samples AS DOUBLE) * CAST(n_samples AS DOUBLE))))
            * 1e4) / 1e4 AS stddev_mid""")
-      .orderBy(col("event_type"), col("day"))
   }
 
   val histogramStddevSql: String = {
@@ -747,7 +727,6 @@ object Scrapers {
         lit(null).cast("string").as("event_type"), col("hour_sec"), col("value")))
       .unionByName(l3.select(lit("total_max6h").as("rule"),
         lit(null).cast("string").as("event_type"), col("hour_sec"), col("value")))
-      .orderBy(col("rule"), col("event_type"), col("hour_sec"))
   }
 
   val recordingRulesSql: String =
@@ -811,7 +790,6 @@ object Scrapers {
       .withColumn("dedup_ratio",
         floor(col("samples_kept").cast("double")
           / col("samples_ingested").cast("double") * 1e4) / 1e4)
-      .orderBy(col("event_type"))
   }
 
   val haDedupSql: String =
@@ -886,7 +864,6 @@ object Scrapers {
         coalesce(col("own_region"), lit("us-east-1")).as("region"),
         col("own_region").isNotNull.as("honored"),
         col("ts_sec"), col("v").cast("double").as("value"))
-      .orderBy(col("event_type"), col("shard"))
   }
 
   val promFederateSql: String =

@@ -49,7 +49,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   val bruteForceTopKSql: String =
@@ -104,7 +103,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** Hyperplane (t, b) as a SQL array literal. */
@@ -280,7 +278,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** IVF index-health profile — the first read run against any trained
@@ -311,7 +308,6 @@ object Similarity {
           .as("pop_share"),
         trunc4(col("s").cast("double") / col("n_vectors").cast("double") / 1048576.0)
           .as("avg_norm2"))
-      .orderBy(col("cell"))
   }
 
   lazy val ivfStatsSql: String =
@@ -346,7 +342,6 @@ object Similarity {
       .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
       .filter(col("cos") >= RangeTau)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), trunc4(col("cos")).as("cosine"))
-      .orderBy(col("query_id"), col("neighbor_id"))
   }
 
   val rangeSearchSql: String =
@@ -480,7 +475,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** PQ over a BIT-PACKED codes column: the 8 per-subspace 4-bit codes
@@ -533,7 +527,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** The packed codes table alone (vec_id, packed) — exposed for the
@@ -604,7 +597,6 @@ object Similarity {
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   /** FILTERED vector search — the hybrid predicate + ANN read every
@@ -631,7 +623,6 @@ object Similarity {
       .select(col("query_id"), col("label"), posexplode(col("top")))
       .select(col("query_id"), col("label"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   val filteredTopKSql: String =
@@ -696,7 +687,6 @@ object Similarity {
         col("vec_id") === col("r_src") && col("neighbor_id") === col("r_nb"), "left")
       .select(col("vec_id"), col("label"), col("neighbor_id"), col("cosine"), col("rank"),
         col("r_src").isNotNull.as("mutual"))
-      .orderBy(col("vec_id"), col("rank"))
   }
 
   val knnGraphSql: String =
@@ -750,7 +740,6 @@ object Similarity {
       .select(col("va").as("vec_id"), col("label"), posexplode(col("top")))
       .select(col("vec_id"), col("label"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("vec_id"), col("rank"))
   }
 
   // lazy: forces semCtes, whose interpolands (fixedMeanSql et al.) are
@@ -826,7 +815,6 @@ object Similarity {
         s"floor(CAST(n_matches AS DOUBLE) / CAST(n_queries * $TopK AS DOUBLE) * 1e4) / 1e4"))
       .select(col("dim_prefix").cast("int").as("dim_prefix"), col("n_queries"),
         col("n_matches"), col("recall"))
-      .orderBy(col("dim_prefix"))
   }
 
   val matryoshkaTruncateSql: String = {
@@ -1096,7 +1084,6 @@ object Similarity {
       .select(col("query_id"), col("col.id").as("doc_id"),
         (floor(col("col.score") * 1e6) / 1e6).as("rrf_score"),
         (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   lazy val hybridRrfSql: String =
@@ -1193,7 +1180,6 @@ object Similarity {
         when(coalesce(col("n_old"), lit(0L)) === 0, lit(null).cast("double"))
           .otherwise(trunc4(col("n_stay").cast("double") / col("n_old").cast("double")))
           .as("stay_share"))
-      .orderBy(col("cell"))
   }
 
   lazy val indexDriftSql: String =
@@ -1381,7 +1367,6 @@ object Similarity {
       .join(dup, Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("dup_of").isNull.as("keep"),
         col("dup_of"), col("max_cos"))
-      .orderBy(col("vec_id"))
   }
 
   lazy val semanticDedupSql: String =
@@ -1423,7 +1408,6 @@ object Similarity {
         sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .withColumn("recall",
         floor(col("n_hit").cast("double") / col("n_truth").cast("double") * 1e4) / 1e4)
-      .orderBy(col("query_id"))
   }
 
   lazy val recallEvalSql: String =
@@ -1541,7 +1525,6 @@ object Similarity {
       .filter(col("pos") < TopK)
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   lazy val graphSearchSql: String = {
@@ -1643,7 +1626,6 @@ object Similarity {
         (floor(col("n_candidates").cast("double")
           / (lit(NumQueries) * (col("n_corpus") - 1)).cast("double") * 1e4) / 1e4)
           .as("scan_share"))
-      .orderBy(col("nprobe"))
   }
 
   lazy val ivfTuningSql: String = {
@@ -1731,7 +1713,6 @@ object Similarity {
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         (-col("col.score")).cast("bigint").as("sq_dist"),
         (col("pos") + 1).cast("int").as("rank"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   lazy val sq8TopKSql: String =
@@ -1790,7 +1771,6 @@ object Similarity {
     mips.join(cosSet, Seq("query_id", "neighbor_id"), "left")
       .select(col("query_id"), col("neighbor_id"), col("dot"), col("rank"),
         coalesce(col("in_cos"), lit(false)).as("in_cosine_topk"))
-      .orderBy(col("query_id"), col("rank"))
   }
 
   lazy val mipsTopKSql: String =
@@ -1857,7 +1837,6 @@ object Similarity {
         expr(s"CAST(max_q AS DOUBLE) / $EmbStatGrid").as("max_v"),
         expr("var_num = 0").as("dead"),
         expr("abs(CAST(sq AS DOUBLE)) > 2 * sqrt(CAST(var_num AS DOUBLE))").as("dominant"))
-      .orderBy(col("dim"))
   }
 
   val embDimStatsSql: String =
@@ -1995,7 +1974,6 @@ object Similarity {
     val share = math.floor(lam / vtv / trace * 1e6) / 1e6
     (1 to PcaDim).map(i => (i, v(i - 1), share))
       .toDF("dim", "loading", "pc1_var_share")
-      .orderBy(col("dim"))
   }
 
   val embPcaPowerSql: String = {
@@ -2085,7 +2063,6 @@ object Similarity {
     assigned.groupBy(col("level"))
       .agg(count(lit(1)).as("n_nodes"), min(col("vec_id")).as("entry_vec_id"))
       .withColumn("layer_population", sum(col("n_nodes")).over(w))
-      .orderBy(col("level").desc)
   }
 
   val hnswLevelsSql: String = {

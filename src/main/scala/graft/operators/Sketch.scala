@@ -64,7 +64,6 @@ object Sketch {
     perGroup.select(col("event_type").as("scope"), col("sk"))
       .unionByName(globalSk)
       .select(col("scope"), expr(estFromSketch("sk")).as("est_distinct"))
-      .orderBy(col("scope"))
   }
 
   val thetaDistinctSql: String =
@@ -127,7 +126,6 @@ object Sketch {
       .select(col("scope"),
         expr(qFromSample("sk", "0.5e0")).as("p50"),
         expr(qFromSample("sk", "0.9e0")).as("p90"))
-      .orderBy(col("scope"))
   }
 
   val sampleQuantileSql: String =
@@ -182,7 +180,6 @@ object Sketch {
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") * HhK > col("n"))
       .select(col("tok"), col("cnt"))
-      .orderBy(col("tok"))
   }
 
   val heavyHittersSql: String =
@@ -214,7 +211,6 @@ object Sketch {
       .select(coalesce(col("event_type"), all).as("event_type"),
         coalesce(col("day"), all).as("day"),
         expr(estExpr("sk")).as("est_distinct"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val cubeDistinctSql: String = {
@@ -287,7 +283,6 @@ object Sketch {
       .withColumn("est_intersection",
         expr(s"CAST(floor(CAST(c AS DOUBLE) * (${U}e0 / CAST(theta AS DOUBLE))) AS DOUBLE)"))
       .select(col("src_a"), col("src_b"), col("est_union"), col("est_intersection"))
-      .orderBy(col("src_a"), col("src_b"))
   }
 
   val setOpsSql: String =
@@ -353,7 +348,6 @@ object Sketch {
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_words"),
         sum(bit_count(col("word")).cast("long")).as("n_users"))
-      .orderBy(col("event_type"))
   }
 
   val bitmapDistinctSql: String =
@@ -423,7 +417,6 @@ object Sketch {
       .select(col("event_type"), col("v_hit").as("n_registers_hit"),
         col("zeros").as("n_registers_empty"), col("est"), col("exact_distinct"),
         expr("abs(est - exact_distinct) * 10000 div exact_distinct").as("err_x1e4"))
-      .orderBy(col("event_type"))
   }
 
   val hllDistinctSql: String =

@@ -34,7 +34,6 @@ object Skew {
     ev.join(saltedBuild, Seq("user_id", "salt"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), sum(col("user_total")).as("sum_user_total"))
-      .orderBy(col("event_type"))
   }
 
   /** Oracle: the PLAIN join — salting must not change the result. */

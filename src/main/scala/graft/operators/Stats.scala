@@ -60,7 +60,6 @@ object Stats {
             - (col("n_cust") + 1).cast("decimal(38,0)") * col("total_cents")).cast("double")
           / (col("n_cust").cast("decimal(38,0)") * col("total_cents")).cast("double")
           * 1e4) / 1e4).as("gini"))
-      .orderBy(col("n_name"))
   }
 
   val giniRevenueSql: String =
@@ -120,7 +119,6 @@ object Stats {
           .when(col("s_stat") < 0, lit("decreasing")).otherwise(lit("flat")))
       .select(col("event_type"), col("n_days"), col("n_pairs"), col("s_stat"),
         col("var18"), col("trend"))
-      .orderBy(col("event_type"))
   }
 
   val mannKendallSql: String =
@@ -163,7 +161,6 @@ object Stats {
           / col("n_obs").cast("double") * 1e4) / 1e4)
       .select(col("event_type"), col("n_obs"), col("n_pos"), col("n_neg"),
         col("n_runs"), col("expected_runs"))
-      .orderBy(col("event_type"))
   }
 
   val runsTestSql: String =
@@ -213,7 +210,6 @@ object Stats {
       .withColumn("price_effect", col("delta_cents").cast("double") - col("volume_effect"))
       .select(col("o_orderpriority"), col("n_a"), col("n_b"), col("cents_a"),
         col("cents_b"), col("delta_cents"), col("volume_effect"), col("price_effect"))
-      .orderBy(col("o_orderpriority"))
   }
 
   val waterfallBridgeSql: String =
@@ -361,7 +357,6 @@ object Stats {
         * (col("dxy").cast("double") / col("dyy").cast("double")) * 1e4) / 1e4).as("r2"),
       when(col("dxy") > 0, lit("up")).when(col("dxy") < 0, lit("down"))
         .otherwise(lit("flat")).as("trend"))
-      .orderBy(col("n_name"))
   }
 
   val regressionTrendSql: String =
@@ -424,7 +419,6 @@ object Stats {
             / (col("n_i").cast("decimal(38,0)") * col("n_j")).cast("double")) * 1e6) / 1e6)
       .select(col("event_type"), col("dow"), col("n_ij"), col("n_i"), col("n_j"),
         col("n_total"), col("pmi"), col("mi_part"))
-      .orderBy(col("event_type"), col("dow"))
   }
 
   val mutualInfoSql: String =
@@ -472,7 +466,6 @@ object Stats {
         (floor((sqrt(col("rad").cast("double")) - col("sum_gap").cast("double"))
           / (sqrt(col("rad").cast("double")) + col("sum_gap").cast("double")) * 1e4) / 1e4)
           .as("burstiness"))
-      .orderBy(col("event_type"))
   }
 
   val burstinessSql: String =
@@ -541,7 +534,6 @@ object Stats {
           .when(col("llr") <= SprtLowA, lit("accept_h0"))
           .otherwise(lit("continue")))
       .select(col("day"), col("n_cum"), col("k_cum"), col("llr"), col("verdict"))
-      .orderBy(col("day"))
   }
 
   val sprtAbtestSql: String =
@@ -604,7 +596,6 @@ object Stats {
         (floor(log((col("n_ab").cast("decimal(38,0)") * col("n_groups")).cast("double")
           / (col("n_a").cast("decimal(38,0)") * col("n_b")).cast("double")) * 1e6) / 1e6)
           .as("pmi"))
-      .orderBy(col("type_a"), col("type_b"))
   }
 
   val cooccurPmiSql: String =
@@ -654,7 +645,6 @@ object Stats {
       .unionByName(audit("lineitem", "l_suppkey", Tables.lineitem(s, d)))
       .unionByName(audit("orders", "o_custkey", Tables.orders(s, d)))
       .unionByName(audit("events", "user_id", Tables.events(s, d)))
-      .orderBy(col("table_name"), col("column_name"))
   }
 
   val skewAuditSql: String = {
@@ -712,7 +702,6 @@ object Stats {
           .as("cust_share"),
         (floor(col("cum_cents").cast("double") / col("total_cents").cast("double") * 1e4)
           / 1e4).as("rev_share"))
-      .orderBy(col("n_name"), col("decile"))
   }
 
   val lorenzCurveSql: String =
@@ -809,7 +798,6 @@ object Stats {
       .select(col("b"), col("n_eff"), col("mean_cents"), col("rank"),
         (col("rank") === BootLoRank).as("is_ci_lo"),
         (col("rank") === BootHiRank).as("is_ci_hi"))
-      .orderBy(col("b"))
   }
 
   val bootstrapCiSql: String = {
@@ -883,7 +871,6 @@ object Stats {
           / (col("v_a") * col("v_a") / (col("n_a") - 1).cast("double")
             + col("v_b") * col("v_b") / (col("n_b") - 1).cast("double"))
           * 1e4) / 1e4).as("df_welch"))
-      .orderBy(col("type_a"), col("type_b"))
   }
 
   val welchTtestSql: String =
@@ -971,7 +958,6 @@ object Stats {
       .select(col("cls"), col("n_parts"), col("class_cents"),
         (floor(col("class_cents").cast("double") / col("tot").cast("double") * 1e4)
           / 1e4).as("revenue_share"))
-      .orderBy(col("cls"))
   }
 
   val abcClassificationSql: String =

@@ -73,7 +73,6 @@ object TextAnalysis {
       expr(s"size($toksExpr)").as("n_ws_tokens"),
       expr("size(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\\\s]', 0))")
         .as("n_bpe_tokens"))
-      .orderBy(col("doc_id"))
   }
 
   val tokensSql: String =
@@ -98,7 +97,6 @@ object TextAnalysis {
           .when(col("hits_de") >= col("hits_fr") && col("hits_de") >= col("hits_es"), "de")
           .when(col("hits_fr") >= col("hits_es"), "fr")
           .otherwise("es"))
-      .orderBy(col("doc_id"))
   }
 
   val langidSql: String = {
@@ -135,7 +133,6 @@ object TextAnalysis {
         (floor(col("n_sym") * 1e4 / greatest(col("n_chars"), lit(1))) / 1e4).as("sym_density"),
         (floor(col("n_digit") * 1e4 / greatest(col("n_chars"), lit(1))) / 1e4).as("digit_density"))
       .withColumn("is_code", col("sym_density") > 0.02 || col("n_kw") >= 2)
-      .orderBy(col("doc_id"))
   }
 
   val codeDetectSql: String = {
@@ -170,7 +167,6 @@ object TextAnalysis {
       .join(broadcast(totals), Seq("lang_declared"))
       .select(col("lang_declared"), col("lang_pred"), col("n"),
         (floor(col("n") * lit(10000) / col("n_declared")) / 1e4).as("share"))
-      .orderBy(col("lang_declared"), col("lang_pred"))
   }
 
   val langConfusionSql: String =
@@ -204,7 +200,6 @@ object TextAnalysis {
             (lit(1.0) - col("np") * lit(1.0) / greatest(col("nc"), lit(1))) *
             (lit(0.5) + lit(0.5) * col("sw") * lit(1.0) / greatest(col("nt"), lit(1))))
           .as("quality_score"))
-      .orderBy(col("doc_id"))
   }
 
   val qualitySql: String = {
@@ -230,7 +225,6 @@ object TextAnalysis {
     Tables.documents(s, d).select(
       col("doc_id"),
       md5(expr(s"array_join(array_sort(array_distinct($toksExpr)), ' ')")).as("fingerprint"))
-      .orderBy(col("doc_id"))
   }
 
   val fingerprintSql: String =
@@ -256,7 +250,6 @@ object TextAnalysis {
         Window.partitionBy(col("lang")).orderBy(col("n").desc, col("bigram"))))
       .filter(col("rn") <= 5)
       .select(col("lang"), col("bigram"), col("n"), col("rn"))
-      .orderBy(col("lang"), col("rn"))
   }
 
   val bigramTopkSql: String =
@@ -302,7 +295,6 @@ object TextAnalysis {
         least(col("k").cast("long"), col("vocab_size")) === col("rank"))
       .select(col("k"), col("vocab_size"), col("total"), col("cum_n").as("covered"),
         trunc4(col("cum_n").cast("double") / col("total").cast("double")).as("coverage"))
-      .orderBy(col("k"))
   }
 
   val ngramCoverageSql: String =
@@ -357,7 +349,6 @@ object TextAnalysis {
         size(regexp_extract_all(col("raw"), lit(phonePat), lit(0))).as("n_phones"),
         substring(regexp_replace(regexp_replace(col("raw"), emailPat, "<EMAIL>"),
           phonePat, "<PHONE>"), 1, 100).as("redacted_prefix"))
-      .orderBy(col("doc_id"))
   }
 
   val piiRedactSql: String =
@@ -403,7 +394,6 @@ object TextAnalysis {
         expr("cast(pow(2, bucket - 1) as bigint)").as("lo_chars"),
         col("n_docs"), col("n_ge"),
         trunc4(col("n_ge").cast("double") / col("total").cast("double")).as("survival"))
-      .orderBy(col("bucket"))
   }
 
   val lengthSurvivalSql: String =
@@ -444,7 +434,6 @@ object TextAnalysis {
         sum(col("n")).over(ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .select(col("rank"), col("tok"), col("n"),
         trunc4(col("cum_n").cast("double") / col("total").cast("double")).as("cum_share"))
-      .orderBy(col("rank"))
   }
 
   val zipfProfileSql: String =
@@ -487,7 +476,6 @@ object TextAnalysis {
       .filter(col("rn") <= KeywordsPerDoc)
       .select(col("doc_id"), col("term").as("keyword"), col("tf"), col("df"),
         col("tfidf"), col("rn"))
-      .orderBy(col("doc_id"), col("rn"))
   }
 
   val keywordsSql: String =
@@ -548,7 +536,6 @@ object TextAnalysis {
         coalesce(col("new_types"), lit(0L)).as("new_types"))
       .withColumn("cum_occ", sum(col("n_occ")).over(w))
       .withColumn("cum_types", sum(col("new_types")).over(w))
-      .orderBy(col("bucket"))
   }
 
   val vocabGrowthSql: String =
@@ -585,8 +572,7 @@ object TextAnalysis {
     * symbol-to-word ratio ≤ 0.1 — each evaluated in INTEGER
     * arithmetic (3·nt ≤ Σlen ≤ 10·nt, never a float division), plus
     * the failure count and the keep verdict. One narrow pass, no
-    * shuffle (the presentation sort is the only exchange); at 100 TB
-    * this is the classic map-only filter stage. */
+    * shuffle; at 100 TB this is the classic map-only filter stage. */
   def gopherRules: Q = (s, d) => {
     val stopArr = "array(" + stop("en").map("'" + _ + "'").mkString(", ") + ")"
     Tables.documents(s, d)
@@ -610,7 +596,6 @@ object TextAnalysis {
           + when(col("r_alpha"), 0).otherwise(1) + when(col("r_stop"), 0).otherwise(1)
           + when(col("r_sym"), 0).otherwise(1)).cast("int"))
       .withColumn("keep", col("n_failed") === 0)
-      .orderBy(col("doc_id"))
   }
 
   /** Order-free body of `gopherRulesSql`, exposed so dependent oracles
@@ -677,7 +662,6 @@ object TextAnalysis {
         floor(col("bpe_tokens").cast("double") / col("ws_tokens").cast("double") * 1e4) / 1e4)
       .withColumn("bytes_per_token",
         floor(col("text_bytes").cast("double") / col("bpe_tokens").cast("double") * 1e4) / 1e4)
-      .orderBy(col("lang"))
   }
 
   val tokenizerFertilitySql: String =
@@ -727,7 +711,6 @@ object TextAnalysis {
         col("c_digit"), col("c_space"), col("c_other"),
         trunc4(-(term("c_lower") + term("c_upper") + term("c_digit")
           + term("c_space") + term("c_other"))).as("entropy"))
-      .orderBy(col("doc_id"))
   }
 
   val charEntropySql: String = {
@@ -787,7 +770,6 @@ object TextAnalysis {
         sum(coalesce(col("sttr_x1e6"), lit(0L))).as("sttr_sum"))
       .select(col("source"), col("n_docs"), col("n_scored"),
         expr("sttr_sum div nullif(n_scored, 0)").as("mean_sttr_x1e6"))
-      .orderBy(col("source"))
   }
 
   val sttrSql: String =
@@ -828,7 +810,6 @@ object TextAnalysis {
       .select(col("source"), col("vocab"), col("n_hapax"), col("n_tokens"),
         expr("n_hapax * 1000000 div vocab").as("hapax_vocab_share_x1e6"),
         expr("n_hapax * 1000000 div n_tokens").as("hapax_token_share_x1e6"))
-      .orderBy(col("source"))
   }
 
   val hapaxSql: String =
@@ -874,7 +855,6 @@ object TextAnalysis {
       .select(col("tok").as("term"), col("df"), col("t_total"), col("n_docs"),
         expr("cast((cast(n_docs as decimal(38,0)) * sum_c2 - cast(t_total as decimal(38,0)) * t_total) * 10000 div (cast(n_docs as decimal(38,0)) * t_total) as bigint)")
           .as("vmr_x1e4"))
-      .orderBy(col("df").desc, col("term"))
   }
 
   val termBurstinessSql: String =
@@ -928,7 +908,6 @@ object TextAnalysis {
         expr("sum(score_x100) div count(1)").as("mean_flesch_x100"),
         min(col("score_x100")).as("min_flesch_x100"),
         max(col("score_x100")).as("max_flesch_x100"))
-      .orderBy(col("source"))
   }
 
   val readabilityFleschSql: String =

@@ -41,7 +41,6 @@ object Timeseries {
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(round(sum(col("inc")), 2).as("increase"))
       .withColumn("rate_per_sec", floor(col("increase") / 86400.0 * 1e6) / 1e6)
-      .orderBy(col("event_type"), col("day"))
   }
 
   val counterRateSql: String =
@@ -70,7 +69,6 @@ object Timeseries {
       .withColumn("delta", col("value") - lag(col("value"), 1).over(w))
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(when(col("delta") < 0, 1)).as("resets"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val resetsSql: String =
@@ -99,7 +97,6 @@ object Timeseries {
         (floor(round(sum(col("value")), 2) / count(lit(1)) * 1e4) / 1e4).as("avg_value"),
         round(min(col("value")), 2).as("min_value"),
         round(max(col("value")), 2).as("max_value"))
-      .orderBy(col("event_type"), col("bucket_start"))
   }
 
   val downsampleSql: String =
@@ -137,7 +134,6 @@ object Timeseries {
       .withColumn("filled", col("avg_value").isNull)
       .withColumn("value", last(col("avg_value"), ignoreNulls = true).over(w))
       .select(col("event_type"), col("hour_sec"), col("value"), col("filled"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val gapFillSql: String =
@@ -177,7 +173,6 @@ object Timeseries {
       .withColumn("p95_24h", element_at(col("frame"),
         (floor(lit(0.95) * (size(col("frame")) - 1)) + 1).cast("int")))
       .select(col("event_type"), col("hour_sec"), col("avg_value"), col("p95_24h"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val quantileOverTimeSql: String =
@@ -200,7 +195,7 @@ object Timeseries {
     * the open interval is the current row. One shuffle on the entity
     * key, two window passes over the same partitioning (change
     * detection, then interval stitching on the change rows only). */
-  private def scd2Core(s: SparkSession, d: String) = {
+  def scd2Dimension: Q = (s, d) => {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val changes = Tables.events(s, d)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
@@ -216,9 +211,6 @@ object Timeseries {
         col("valid_from"), col("valid_to"), col("is_current"))
   }
 
-  def scd2Dimension: Q = (s, d) =>
-    scd2Core(s, d).orderBy(col("user_id"), col("version"))
-
   /** SCD2 point-in-time (PIT) join — the READ side of the dimension:
     * enrich each fact with the dimension version valid at the fact's
     * timestamp. Expressed as an as-of merge, not an interval join: dim
@@ -232,7 +224,7 @@ object Timeseries {
     * hash match proves the equivalence. Facts: purchase events; dim:
     * the user's event-type state chain. */
   def scd2PitJoin: Q = (s, d) => {
-    val dim = scd2Core(s, d)
+    val dim = scd2Dimension(s, d)
       .select(col("user_id"), col("valid_from").as("ord_ts"), lit(0).as("kind"),
         col("attr_value"), col("version"), lit(null).cast("long").as("event_id"))
     val facts = Tables.events(s, d)
@@ -252,7 +244,6 @@ object Timeseries {
       .filter(col("kind") === 1 && col("state").isNotNull)
       .select(col("event_id"), col("user_id"), col("ord_ts").as("purchase_ts"),
         col("state"), col("state_version"))
-      .orderBy(col("user_id"), col("purchase_ts"), col("event_id"))
   }
 
   val scd2PitJoinSql: String =
@@ -332,7 +323,6 @@ object Timeseries {
       .withColumn("is_anomaly", coalesce(abs(col("z")) > 3, lit(false)))
       .select(col("event_type"), col("hour_sec"), col("avg_value"),
         col("z"), col("is_anomaly"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val anomalyZscoreSql: String =
@@ -367,7 +357,6 @@ object Timeseries {
       .withColumn("rank", row_number().over(w).cast("int"))
       .filter(col("rank") <= 3)
       .select(col("hour_sec"), col("rank"), col("event_type"), col("avg_value"))
-      .orderBy(col("hour_sec"), col("rank"))
   }
 
   val topkOverTimeSql: String =
@@ -420,7 +409,6 @@ object Timeseries {
       .withColumn("slope_per_hour", expr(derivExpr))
       .select(col("event_type"), col("hour_sec"), col("avg_value"),
         col("slope_per_hour"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val derivSql: String =
@@ -473,7 +461,6 @@ object Timeseries {
           floor(when(col("value") < col("prev_v"), col("value"))
             .otherwise(col("value") - col("prev_v")) / col("dt") * 1e6) / 1e6))
       .select(col("event_type"), col("hour_sec"), col("irate_per_sec"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val irateSql: String =
@@ -517,7 +504,6 @@ object Timeseries {
         when(col("prev_v").isNotNull,
           floor((col("value") - col("prev_v")) * 1e6) / 1e6))
       .select(col("event_type"), col("hour_sec"), col("idelta"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val ideltaSql: String =
@@ -572,7 +558,6 @@ object Timeseries {
       .withColumn("predicted_24h", expr(predictExpr))
       .select(col("event_type"), col("hour_sec"), col("avg_value"),
         col("predicted_24h"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val predictLinearSql: String =
@@ -627,7 +612,6 @@ object Timeseries {
         col("z.seq.hour_sec").as("hour_sec"),
         (col("z.seq.ym") / 1e4).as("avg_value"),
         (floor(col("z.sm") * 1e4) / 1e4).as("smoothed"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val smoothEwmaSql: String =
@@ -681,7 +665,6 @@ object Timeseries {
                          ELSE 0.3e0 * p.avg_value + 0.7e0 * acc END)"""))
       .select(col("event_type"), col("n_hours"), col("n_anomalies"),
         col("max_abs_z"), (floor(col("level") * 1e4) / 1e4).as("level"))
-      .orderBy(col("event_type"))
   }
 
   val tsdbEndToEndSql: String =
@@ -729,7 +712,6 @@ object Timeseries {
       .withColumn("prev", lag(col("value"), 1).over(w))
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(when(col("prev").isNotNull && col("prev") =!= col("value"), 1)).as("changes"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val changesSql: String =
@@ -756,7 +738,6 @@ object Timeseries {
       .crossJoin(broadcast(bounds))
       .select(col("event_type"), explode(expr("sequence(h0, h1, 3600)")).as("hour_sec"))
     spine.join(h, Seq("event_type", "hour_sec"), "left_anti")
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val absentSql: String =
@@ -810,7 +791,6 @@ object Timeseries {
         (floor(col("z.hw.l") * 1e4) / 1e4).as("level"),
         (floor(col("z.hw.b") * 1e4) / 1e4).as("trend"),
         (floor((col("z.hw.l") + col("z.hw.b")) * 1e4) / 1e4).as("forecast_1h"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val holtWintersSql: String =
@@ -862,7 +842,6 @@ object Timeseries {
       .withColumn("page", col("burn_1h") > 1.0 && col("burn_6h") > 1.0)
       .select(col("hour_sec"), col("total"), col("errors"),
         col("burn_1h"), col("burn_6h"), col("page"))
-      .orderBy(col("hour_sec"))
   }
 
   val burnRateSql: String =
@@ -925,7 +904,6 @@ object Timeseries {
         col("z.seq.av").as("avg_value"),
         col("z.st.f").as("firing"),
         col("z.st.tr").as("transition"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val alertHysteresisSql: String =
@@ -980,7 +958,6 @@ object Timeseries {
       .agg(count(lit(1)).as("active_series"))
       .join(births, Seq("day"), "left")
       .withColumn("new_series", coalesce(col("new_series"), lit(0L)))
-      .orderBy(col("day"))
   }
 
   val seriesChurnSql: String =
@@ -1022,8 +999,7 @@ object Timeseries {
                        sec DIV 86400 * 86400 AS d1,
                        sec DIV 604800 * 604800 AS w1
                 FROM graft_events_mr) t
-          GROUP BY GROUPING SETS ((event_type, b6), (event_type, d1), (event_type, w1))
-          ORDER BY event_type, resolution, bucket_start""")
+          GROUP BY GROUPING SETS ((event_type, b6), (event_type, d1), (event_type, w1))""")
   }
 
   val multiResolutionSql: String =
@@ -1079,7 +1055,6 @@ object Timeseries {
       .agg(max(struct(col("valid_day"), col("txn"), col("bal"))).as("win"))
       .select(col("probe"), col("user_id"), col("win.valid_day").as("valid_day"),
         col("win.txn").as("txn"), col("win.bal").as("balance"))
-      .orderBy(col("probe"), col("user_id"))
   }
 
   val bitemporalSql: String =
@@ -1146,7 +1121,6 @@ object Timeseries {
           / col("n_steps").cast("double") * 1e4) / 1e4).as("monotone_share"),
         when(col("n_down") === col("n_reset") && col("n_down") * 20 <= col("n_steps"),
           "counter").otherwise("gauge").as("inferred_type"))
-      .orderBy(col("series"))
   }
 
   val metricTypeInferSql: String =
@@ -1203,7 +1177,6 @@ object Timeseries {
         col("cnt").as("modal_count"),
         (floor(col("cnt").cast("double") / col("n_gaps").cast("double") * 1e4) / 1e4)
           .as("modal_share"))
-      .orderBy(col("event_type"))
   }
 
   val scrapeIntervalSql: String =
@@ -1266,7 +1239,6 @@ object Timeseries {
       .select(col("event_type"), size(col("seq")).cast("long").as("n_hours"),
         col("st.nn").as("n_incidents"), col("st.nr").as("n_repeats"),
         col("st.nres").as("n_resolves"), col("st.nsup").as("n_suppressed"))
-      .orderBy(col("event_type"))
   }
 
   /** ONE merged recursion: an outer recursive CTE that references an

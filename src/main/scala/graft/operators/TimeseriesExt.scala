@@ -53,7 +53,6 @@ object TimeseriesExt {
       .filter(col("tsum") > 0)
       .select(col("event_type"), col("day"), col("n_segments"),
         (floor(col("wsum") * 100 / col("tsum")) / 1e4).as("twa"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val timeWeightedAvgSql: String =
@@ -102,7 +101,6 @@ object TimeseriesExt {
       .select(col("event_type"), col("sec"), col("v_c"),
         col("med"), col("mad"),
         (floor(col("adev") * 1e4 / col("mad")) / 1e4).as("robust_score"))
-      .orderBy(col("event_type"), col("sec"), col("v_c"))
   }
 
   val madAnomalySql: String =
@@ -151,7 +149,6 @@ object TimeseriesExt {
       .select(col("event_type"),
         (col("bucket") * SubRateWindowSec).as("bucket_sec"),
         (floor(col("max_inc") * lit(10000) / lit(SubRateWindowSec)) / 1e6).as("max_rate"))
-      .orderBy(col("event_type"), col("bucket_sec"))
   }
 
   val subqueryMaxRateSql: String =
@@ -212,7 +209,6 @@ object TimeseriesExt {
     buckets.select(col("event_type"), col("n"), explode(array(shares: _*)).as("s"))
       .select(col("event_type"), col("n"),
         col("s.threshold_c").as("threshold_c"), col("s.share").as("share"))
-      .orderBy(col("event_type"), col("threshold_c"))
   }
 
   val histogramShareSql: String = {
@@ -262,7 +258,6 @@ object TimeseriesExt {
       .filter(abs(col("dev2")) * 2 > col("base2"))
       .select(col("event_type"), col("day_nr"), col("dow"), col("hod"),
         col("mean_c"), col("base2"), col("dev2"))
-      .orderBy(col("event_type"), col("day_nr"), col("hod"))
   }
 
   val dowBaselineSql: String =
@@ -332,7 +327,6 @@ object TimeseriesExt {
         col("z.seq.mean_c").as("mean_c"), col("base2"), col("k4"),
         col("z.s4").as("s4"),
         (col("z.s4") > col("k4") * CusumHMult).as("alarm"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val cusumChangepointSql: String =
@@ -400,7 +394,6 @@ object TimeseriesExt {
       .select(col("event_type"), posexplode(expr(s"graft_lttb(pts, $k)")))
       .select(col("event_type"), (col("pos") + 1).cast("int").as("sel_idx"),
         col("col.sec").as("sec"), col("col.v_c").as("v_c"))
-      .orderBy(col("event_type"), col("sel_idx"))
   }
 
   val downsampleLttbSql: String = {
@@ -480,7 +473,6 @@ object TimeseriesExt {
           + col("hod").cast("long") * 3600).as("hour_sec"),
         lit("dow_seasonal").as("detector"), abs(col("dev2")).as("score"))
     cus.unionByName(dow)
-      .orderBy(col("event_type"), col("hour_sec"), col("detector"))
   }
 
   val alertFeedSql: String = {
@@ -520,7 +512,6 @@ object TimeseriesExt {
       .select(col("event_type"), col("hour_sec"), col("mean_c"), col("prev_c"),
         (col("mean_c") - col("prev_c")).as("wow_diff"),
         (floor(col("mean_c") * lit(10000) / col("prev_c")) / 1e4).as("wow_ratio"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val offsetCompareSql: String =
@@ -562,7 +553,6 @@ object TimeseriesExt {
       .filter(col("rk") <= TopMovers)
       .select(col("day"), col("rk").cast("int").as("rk"), col("event_type"),
         col("n"), col("prev_n"), (col("n") - col("prev_n")).as("delta"))
-      .orderBy(col("day"), col("rk"))
   }
 
   val topMoversSql: String =
@@ -603,7 +593,6 @@ object TimeseriesExt {
         when(col("gap") <= 0, lit(0)).otherwise(length(bin(col("gap")))).cast("int"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"), min(col("gap")).as("lo_sec"), max(col("gap")).as("hi_sec"))
-      .orderBy(col("bucket"))
   }
 
   val gapLog2HistogramSql: String =
@@ -647,7 +636,6 @@ object TimeseriesExt {
       .select(col("event_type"), col("hour_sec"), col("mean_c"),
         col("trend_c"), col("seasonal_c"),
         (col("mean_c") - col("trend_c") - col("seasonal_c")).as("residual_c"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val seasonalDecomposeSql: String =
@@ -697,7 +685,6 @@ object TimeseriesExt {
       .withColumn("apdex",
         floor((col("n_satisfied") * 2 + col("n_tolerating")) * lit(10000) /
           (col("n") * 2)) / 1e4)
-      .orderBy(col("event_type"), col("day"))
   }
 
   val apdexSql: String =
@@ -737,7 +724,6 @@ object TimeseriesExt {
       .filter(col("gap_sec") > StaleGapSec)
       .select(col("event_type"), (col("sec") + StaleMarkerDelaySec).as("stale_at_sec"),
         col("gap_sec"))
-      .orderBy(col("event_type"), col("stale_at_sec"))
   }
 
   val stalenessSql: String =
@@ -784,7 +770,6 @@ object TimeseriesExt {
         "event_id")
       .select(col("event_type"), col("bucket_start"), col("exemplar_rank"),
         col("event_id"), col("value_cents"))
-      .orderBy(col("event_type"), col("bucket_start"), col("exemplar_rank"))
   }
 
   val exemplarsSql: String =
@@ -835,7 +820,6 @@ object TimeseriesExt {
       .select(col("day"), col("total"), col("errors"), col("attainment_ppm"),
         col("cum_total"), col("cum_errors"), col("cum_attainment_ppm"),
         col("budget_left_ppm"), col("breached"))
-      .orderBy(col("day"))
   }
 
   val sloAttainmentSql: String =
@@ -882,7 +866,6 @@ object TimeseriesExt {
       .select(col("event_type"), col("bucket_start"), col("samples"),
         col("f.v").as("first_value"), col("l.v").as("last_value"),
         col("min_value"), col("max_value"))
-      .orderBy(col("event_type"), col("bucket_start"))
   }
 
   val downsampleM4Sql: String =
@@ -920,7 +903,6 @@ object TimeseriesExt {
       .withColumn("was_reset", coalesce(col("delta") < 0, lit(false)))
       .select(col("event_type"), col("sec"), col("event_id"), col("v_c").as("raw_c"),
         col("repaired_c"), col("was_reset"))
-      .orderBy(col("event_type"), col("sec"), col("event_id"))
   }
 
   val counterRepairSql: String =
@@ -978,7 +960,6 @@ object TimeseriesExt {
         (col("day_mean") > col("grand_mean") + lit(SpcA2) * col("rbar")
           || col("day_mean") < col("grand_mean") - lit(SpcA2) * col("rbar"))
           .as("out_of_control"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val spcControlSql: String =
@@ -1051,7 +1032,6 @@ object TimeseriesExt {
         (floor(col("n_up").cast("double") / col("n_slots").cast("double") * 1e4) / 1e4)
           .as("availability"),
         col("n_flaps"), coalesce(col("ldh"), lit(0L)).as("longest_down_hours"))
-      .orderBy(col("event_type"))
   }
 
   val scrapeHealthSql: String =
@@ -1123,7 +1103,6 @@ object TimeseriesExt {
           floor((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
             / (sqrt(col("vx").cast("double")) * sqrt(col("vy").cast("double")))
             * 1e4) / 1e4).as("corr_7d"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val rollingCorrSql: String =
@@ -1186,7 +1165,7 @@ object TimeseriesExt {
               / (sqrt(col("vx").cast("double")) * sqrt(col("vy").cast("double")))
               * 1e4) / 1e4).as("acf"))
     }
-    arms.reduce(_ unionByName _).orderBy(col("event_type"), col("lag"))
+    arms.reduce(_ unionByName _)
   }
 
   val autocorrSql: String = {
@@ -1279,7 +1258,6 @@ object TimeseriesExt {
       .groupBy(col("sax_word"))
       .agg(count(lit(1)).as("n_windows"),
         countDistinct(col("event_type")).as("n_series"))
-      .orderBy(col("n_windows").desc, col("sax_word"))
   }
 
   val saxMotifsSql: String = {
@@ -1344,7 +1322,6 @@ object TimeseriesExt {
       .select(col("event_type"), col("day"),
         expr("size(slopes)").cast("long").as("n_pairs"),
         expr("floor(element_at(slopes, 138) * 100) / 1e6").as("ts_slope_per_hour"))
-      .orderBy(col("event_type"), col("day"))
   }
 
   val theilSenSql: String =
@@ -1415,7 +1392,6 @@ object TimeseriesExt {
           .otherwise("firing"))
       .select(col("event_type"), col("hour_sec"), col("m"),
         col("run_hours"), col("alertstate"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val alertForDurationSql: String =
@@ -1489,7 +1465,6 @@ object TimeseriesExt {
         (floor(greatest(lit(0.0), lit(1.0) - vr / vtr) * 1e4) / 1e4)
           .as("f_trend")
       })
-      .orderBy(col("event_type"))
   }
 
   lazy val seasonalStrengthSql: String =

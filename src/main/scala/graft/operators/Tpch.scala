@@ -35,7 +35,6 @@ object Tpch {
         round(avg(col("l_extendedprice")), 4).as("avg_price"),
         round(avg(col("l_discount")), 4).as("avg_disc"),
         count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
 
   val q1Sql: String =
@@ -94,7 +93,6 @@ object Tpch {
         "left_semi")
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("order_count"))
-      .orderBy(col("o_orderpriority"))
   }
 
   val q4Sql: String =
@@ -124,7 +122,6 @@ object Tpch {
       .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("n_name"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
   }
 
   val q5Sql: String =
@@ -197,7 +194,6 @@ object Tpch {
       .agg(
         count(when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)).as("high_line_count"),
         count(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)).as("low_line_count"))
-      .orderBy(col("l_returnflag"))
   }
 
   val q12Sql: String =
@@ -313,7 +309,6 @@ object Tpch {
         round(expr("percentile(o_totalprice, 0.5)"), 2).as("p50"),
         round(expr("percentile(o_totalprice, 0.9)"), 2).as("p90"),
         round(expr("percentile(o_totalprice, 0.99)"), 2).as("p99"))
-      .orderBy(col("o_orderpriority"))
   }
 
   val qPercentilesSql: String =
@@ -366,7 +361,6 @@ object Tpch {
         lead(col("s_acctbal"), 1).over(w).as("next_bal"),
         ntile(4).over(w).as("quartile"),
         TextAnalysis.trunc4(cume_dist().over(w)).as("cume"))
-      .orderBy(col("s_nationkey"), col("s_suppkey"))
   }
 
   val qWindowStatsSql: String =
@@ -398,7 +392,6 @@ object Tpch {
         (abs(col("ap50") - col("exact_p50")) <= col("exact_p50") * 0.10)
           .as("p50_within_10pct"),
         (col("ap99") >= col("ap50")).as("p99_monotone"))
-      .orderBy(col("o_orderpriority"))
   }
 
   val qApproxPercentileSql: String =
@@ -421,7 +414,6 @@ object Tpch {
       .select(col("event_type"), col("exact_users"),
         (abs(col("approx_users") - col("exact_users")) <=
           col("exact_users") * 0.05).as("hll_within_5pct"))
-      .orderBy(col("event_type"))
   }
 
   val qApproxDistinctSql: String =
@@ -442,7 +434,6 @@ object Tpch {
         round(corr(col("l_quantity"), col("l_extendedprice")), 4).as("corr_qty_price"),
         round(covar_samp(col("l_quantity"), col("l_extendedprice")), 2).as("covar_qty_price"),
         round(stddev_samp(col("l_quantity")), 4).as("sd_qty"))
-      .orderBy(col("l_returnflag"))
   }
 
   val qCorrCovarSql: String =
@@ -464,7 +455,6 @@ object Tpch {
       .groupBy(col("r_name"))
       .agg(count(lit(1)).as("n_nations"),
         array_join(sort_array(collect_list(col("n_name"))), ",").as("nations"))
-      .orderBy(col("r_name"))
   }
 
   val qStringAggSql: String =
@@ -489,7 +479,7 @@ object Tpch {
       FROM g_orders o
       JOIN g_customer c ON o.o_custkey = c.c_custkey
       JOIN g_nation n ON c.c_nationkey = n.n_nationkey
-      GROUP BY n.n_name ORDER BY nation""")
+      GROUP BY n.n_name""")
   }
 
   val sqlInterfaceSql: String =

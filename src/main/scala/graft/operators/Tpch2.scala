@@ -40,7 +40,6 @@ object Tpch2 {
       .groupBy(col("supp_nation"), col("cust_nation"),
         year(col("l_shipdate")).cast("int").as("l_year"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-      .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
   }
 
   val q7Sql: String =
@@ -86,7 +85,6 @@ object Tpch2 {
       .agg(round(
         sum(when(col("nation") === "NATION_5", col("volume")).otherwise(0.0)) / sum(col("volume")),
         4).as("mkt_share"))
-      .orderBy(col("o_year"))
   }
 
   val q8Sql: String =
@@ -121,7 +119,6 @@ object Tpch2 {
       .join(broadcast(nat), col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("nation"), year(col("o_orderdate")).cast("int").as("o_year"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("profit"))
-      .orderBy(col("nation"), col("o_year").desc)
   }
 
   val q9Sql: String =
@@ -147,7 +144,6 @@ object Tpch2 {
       .agg(count(col("o_orderkey")).as("c_count"))
       .groupBy(col("c_count"))
       .agg(count(lit(1)).as("custdist"))
-      .orderBy(col("custdist").desc, col("c_count").desc)
   }
 
   val q13Sql: String =
@@ -170,7 +166,6 @@ object Tpch2 {
     rev.join(broadcast(mx), col("total_revenue") === col("mx"))
       .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
-      .orderBy(col("s_suppkey"))
   }
 
   val q15Sql: String =
@@ -196,7 +191,6 @@ object Tpch2 {
     li.join(broadcast(part), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"), col("p_type"), col("p_size"))
       .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"), col("p_size"))
   }
 
   val q16Sql: String =
@@ -306,7 +300,6 @@ object Tpch2 {
       .join(ord, col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy((col("c_nationkey") % 5).cast("int").as("cntrycode"))
       .agg(count(lit(1)).as("numcust"), round(sum(col("c_acctbal")), 2).as("totacctbal"))
-      .orderBy(col("cntrycode"))
   }
 
   val q22Sql: String =
@@ -333,7 +326,6 @@ object Tpch2 {
       .select(coalesce(col("c_nationkey"), col("s_nationkey")).as("nationkey"),
         coalesce(col("n_cust"), lit(0L)).as("n_cust"),
         coalesce(col("n_supp"), lit(0L)).as("n_supp"))
-      .orderBy(col("nationkey"))
   }
 
   val qFullOuterSql: String =
@@ -370,7 +362,6 @@ object Tpch2 {
     val clicks = side("click", "kc").groupBy(col("kc")).agg(count(lit(1)).as("nc"))
     views.join(clicks, col("kn") <=> col("kc"))
       .select(col("kn"), (col("nv") * col("nc")).as("n_pairs"))
-      .orderBy(col("kn"))
   }
 
   val qNullSafeJoinSql: String =

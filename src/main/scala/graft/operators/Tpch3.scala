@@ -144,7 +144,6 @@ object Tpch3 {
     perPart.crossJoin(broadcast(total))
       .filter(col("value_cents") * 10000L > col("total_cents"))
       .select(col("ps_partkey"), col("value_cents"))
-      .orderBy(col("value_cents").desc, col("ps_partkey"))
   }
 
   val q11Sql: String =
@@ -197,7 +196,6 @@ object Tpch3 {
       .join(broadcast(euNat), col("s_nationkey") === col("n_nationkey"))
       .join(excess, col("s_suppkey") === col("ps_suppkey"), "left_semi")
       .select(col("s_suppkey"), col("s_name"))
-      .orderBy(col("s_suppkey"))
   }
 
   val q20Sql: String =

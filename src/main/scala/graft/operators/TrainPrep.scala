@@ -54,7 +54,6 @@ object TrainPrep {
     terms.crossJoin(broadcast(total))
       .select(col("source"), col("n_docs"), col("loss"), col("term_u"),
         expr("term_u * 1000000 div sum_u").as("w_new_x1e6"))
-      .orderBy(col("source"))
   }
 
   val doremiStepSql: String =
@@ -102,7 +101,6 @@ object TrainPrep {
         coalesce(sum(when(col("fim"), col("c2") - col("c1"))), lit(0L)).as("middle_tokens"),
         coalesce(sum(when(col("fim"), col("n_tok") - col("c2"))), lit(0L)).as("suffix_tokens"),
         coalesce(sum(when(col("fim"), col("n_tok"))), lit(0L)).as("fim_tokens"))
-      .orderBy(col("source"))
   }
 
   val fimTransformSql: String = {

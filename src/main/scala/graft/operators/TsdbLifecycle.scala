@@ -61,7 +61,6 @@ object TsdbLifecycle {
         count(when(!col("accepted"), 1)).as("n_rejected"),
         coalesce(max(when(!col("accepted"), col("head") - col("es"))), lit(0L))
           .as("worst_backward_s"))
-      .orderBy(col("series"))
   }
 
   val oooIngestSql: String =
@@ -104,7 +103,6 @@ object TsdbLifecycle {
         max(col("block_id")).as("last_block"))
       .withColumn("decision",
         when(col("n_child_blocks") >= 2, lit("compact")).otherwise(lit("leave")))
-      .orderBy(col("parent_id"))
   }
 
   val blockPlanSql: String =
@@ -141,7 +139,6 @@ object TsdbLifecycle {
           lit("delete")).otherwise(lit("keep")))
       .select(col("block_id"), col("n_samples"), col("block_max_es"),
         col("boundary_es"), col("decision"))
-      .orderBy(col("block_id"))
   }
 
   val retentionSql: String =
@@ -178,7 +175,6 @@ object TsdbLifecycle {
         count(when(col("chunk_samples") === 120, 1)).as("n_full_chunks"),
         max(col("chunk_samples")).as("max_chunk_fill"))
       .withColumn("avg_fill_x100", expr("n_samples * 100 div n_chunks"))
-      .orderBy(col("series"))
   }
 
   val headChunksSql: String =
@@ -226,7 +222,6 @@ object TsdbLifecycle {
         count(when(col("tombstoned"), 1)).as("n_tombstoned"))
       .withColumn("n_remaining", col("n_samples") - col("n_tombstoned"))
       .withColumn("fully_deletable", col("n_remaining") === 0L)
-      .orderBy(col("block_id"))
   }
 
   val tombstonesSql: String =
@@ -292,7 +287,6 @@ object TsdbLifecycle {
         expr("total_bits * 100 div n_samples"))
       .withColumn("compression_x100",
         expr("n_samples * 64 * 100 div total_bits"))
-      .orderBy(col("series"))
   }
 
   val dodTimestampsSql: String =
@@ -361,7 +355,6 @@ object TsdbLifecycle {
       .select(col("seg"), col("n_records"), col("n_series_created"),
         col("series_after_replay"),
         (col("seg") <= col("max_seg") - lit(WalKeepSegments)).as("checkpointed"))
-      .orderBy(col("seg"))
   }
 
   val walReplaySql: String =

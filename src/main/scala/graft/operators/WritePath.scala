@@ -46,7 +46,6 @@ object WritePath {
         min(col("arrival")).as("first_arrival"),
         max(col("arrival")).as("last_arrival"),
         countDistinct(col("series_key")).as("n_series"))
-      .orderBy(col("shard"), col("batch"))
   }
 
   val queueShardsSql: String =
@@ -94,7 +93,6 @@ object WritePath {
       .select(col("job"), col("instance"), col("n_job"), col("n_instance"),
         col("n_intersect"),
         expr("n_intersect * 10000 div n_total").as("selectivity_x1e4"))
-      .orderBy(col("job"), col("instance"))
   }
 
   val postingsIndexSql: String =

@@ -160,7 +160,6 @@ object SourceRegistry {
     withDsn(parseSecrets(spark, demoSecrets))
       .withColumn("dsn", redactDsn(col("dsn")))
       .select("engine", "host", "port", "dbname", "dsn")
-      .orderBy("engine")
 
   val configDsnSql: String =
     s"""WITH $secretsCte, $parsedCte
@@ -180,7 +179,6 @@ object SourceRegistry {
   def registryRead(spark: SparkSession, dir: String): DataFrame =
     read(spark, Map("format" -> "parquet", "path" -> s"$dir/nation.parquet"))
       .groupBy(col("n_regionkey")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n_regionkey"))
 
   val registryReadSql: String =
     "SELECT n_regionkey, count(*) AS n FROM nation GROUP BY n_regionkey ORDER BY n_regionkey"
@@ -194,7 +192,6 @@ object SourceRegistry {
     parseSecrets(spark, demoSecrets)
       .filter(col("tags").getItem(EnabledTagKey).isNotNull)
       .select("engine", "host", "port", "dbname")
-      .orderBy("engine")
 
   val tagFilterSql: String =
     s"""WITH $secretsCte, $parsedCte
@@ -240,7 +237,6 @@ object SourceRegistry {
           .otherwise("kept").as("status"),
         (col("dsn_old").isNotNull && col("dsn_new").isNotNull &&
           col("dsn_old") =!= col("dsn_new")).as("dsn_changed"))
-      .orderBy(col("host"))
   }
 
   private def secretsCteNamed(cte: String, payloads: Seq[String]): String =
@@ -312,7 +308,6 @@ object SourceRegistry {
       .agg(count(lit(1)).as("n_new"), max(col("sec")).as("new_watermark"))
       .select(col("event_type"), col("stored_watermark"), col("n_new"),
         col("new_watermark"))
-      .orderBy(col("event_type"))
   }
 
   val incrementalReadSql: String =
@@ -360,7 +355,6 @@ object SourceRegistry {
         col("n_rows"),
         (floor(col("n_rows").cast("double") * JdbcParts
           / col("total").cast("double") * 1e4) / 1e4).as("skew_ratio"))
-      .orderBy(col("part_id"))
   }
 
   val partitionBoundsSql: String =
@@ -413,7 +407,6 @@ object SourceRegistry {
       .groupBy(col("chunk"))
       .agg(min(col("day")).as("day_lo"), max(col("day")).as("day_hi"),
         count(lit(1)).as("n_days"), sum(col("n")).as("n_rows"))
-      .orderBy(col("chunk"))
   }
 
   val backfillChunksSql: String =

@@ -73,7 +73,6 @@ object Writers {
       .join(s.table(ot).hint("merge"), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_lines"), round(sum(col("l_extendedprice")), 2).as("total_price"))
-      .orderBy(col("o_orderstatus"))
   }
 
   val bucketedJoinSql: String =
@@ -94,7 +93,6 @@ object Writers {
       .filter(col("event_date") >= lit("2024-01-08") && col("event_date") < lit("2024-01-15"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("value_sum"))
-      .orderBy(col("event_type"))
   }
 
   val partitionedScanSql: String =
@@ -114,7 +112,6 @@ object Writers {
     s.read.option("header", "true").schema(src.schema).csv(path)
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_cust"), round(sum(col("c_acctbal")), 2).as("bal_sum"))
-      .orderBy(col("c_mktsegment"))
   }
 
   val csvRoundtripSql: String =
@@ -129,7 +126,6 @@ object Writers {
     s.read.schema(src.schema).json(path)
       .groupBy(col("s_nationkey"))
       .agg(count(lit(1)).as("n_supp"), round(sum(col("s_acctbal")), 2).as("bal_sum"))
-      .orderBy(col("s_nationkey"))
   }
 
   val jsonRoundtripSql: String =
@@ -169,7 +165,6 @@ object Writers {
       .filter(col("t_qty") > 100)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_lines"), round(sum(col("l_extendedprice")), 2).as("revenue"))
-      .orderBy(col("l_returnflag"))
   }
 
   val bucketedMultiJoinSql: String =
@@ -217,7 +212,6 @@ object Writers {
     s.read.parquet(dir)
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_events"), sum(col("v_c")).as("cents_sum"))
-      .orderBy(col("day"))
   }
 
   val partitionOverwriteSql: String =
@@ -241,7 +235,6 @@ object Writers {
     s.read.parquet(packed)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(col("lang"))
   }
 
   val compactionScanSql: String =
@@ -296,7 +289,6 @@ object Writers {
         col("o_orderdate").between(lit("1995-01-01"), lit("1996-12-31")))
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("total_price"))
-      .orderBy(col("o_orderstatus"))
   }
 
   val zorderScanSql: String =
@@ -366,7 +358,6 @@ object Writers {
       .filter(col("l_orderkey").isin(keys: _*))
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("n_lines"), round(sum(col("l_extendedprice")), 2).as("total_price"))
-      .orderBy(col("l_orderkey"))
   }
 
   val bucketLookupSql: String =
@@ -445,7 +436,6 @@ object Writers {
       .groupBy(col("l_partkey"))
       .agg(count(lit(1)).as("n_lines"),
         round(sum(col("l_extendedprice")), 2).as("total_price"))
-      .orderBy(col("l_partkey"))
   }
 
   val secondaryIndexLookupSql: String =
@@ -482,7 +472,6 @@ object Writers {
         round(sum(col("value")), 2).as("value_sum"),
         count(col("value2")).as("n_v2"),
         round(sum(col("value2")), 2).as("value2_sum"))
-      .orderBy(col("event_type"))
   }
 
   val schemaEvolutionSql: String =
@@ -513,7 +502,6 @@ object Writers {
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_live"),
         round(sum(col("o_totalprice")), 2).as("live_total"))
-      .orderBy(col("o_orderstatus"))
   }
 
   val mergeOnReadSql: String =
@@ -581,7 +569,6 @@ object Writers {
       else stAudit.select(lit("published").as("side"), col("n_rows"), col("digest"))
     srcAudit.unionByName(thirdSide)
       .withColumn("published", lit(published))
-      .orderBy(col("side"))
   }
 
   val writeAuditPublishSql: String =
@@ -633,7 +620,6 @@ object Writers {
            * 1000000 div (cast(n_parts as decimal(38,0)) * tot_bytes) as bigint)"""))
       .select(col("source"), col("n_rows"), col("bytes"), col("share_x1e6"),
         col("skew_x100"), col("gini_x1e6"))
-      .orderBy(col("source"))
   }
 
   val partitionSkewSql: String =

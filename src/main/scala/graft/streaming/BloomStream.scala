@@ -93,7 +93,6 @@ object BloomStream {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("suspect")).as("n_bloom_dup_suspect"))
-      .orderBy(col("source"))
   }
 
   val bloomDedupSql: String = {

@@ -29,7 +29,6 @@ object EventsStream {
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("value_sum"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("value_sum"))
-      .orderBy(col("window_start"), col("event_type"))
   }
 
   val eventsWindowSql: String =
@@ -66,7 +65,6 @@ object EventsStream {
       .agg(max(struct(col("ts_sec"), col("event_id"), col("value"))).as("last"))
       .select(col("event_type"), col("step_ts"),
         col("last.ts_sec").as("sample_ts_sec"), col("last.value").as("value"))
-      .orderBy(col("event_type"), col("step_ts"))
   }
 
   val queryRangeStreamSql: String =
@@ -147,7 +145,6 @@ object EventsStream {
         expr(s"floor(CAST(errors1 AS DOUBLE) / CAST(total1 AS DOUBLE) / $SloBudget * 1e4) / 1e4")
           .as("burn_1h"))
       .withColumn("page", col("burn_6h") > 1.0 && col("burn_1h") > 1.0)
-      .orderBy(col("hop_end"))
 
   val burnRateStreamSql: String =
     s"""WITH hops AS (
@@ -224,7 +221,6 @@ object EventsStream {
         when(col("n_r1") > col("n_r0"), 1).otherwise(0).cast("int").as("elected_replica"),
         when(col("n_r1") > col("n_r0"), col("n_r1")).otherwise(col("n_r0")).as("n_kept"),
         when(col("n_r1") > col("n_r0"), col("n_r0")).otherwise(col("n_r1")).as("n_dropped"))
-      .orderBy(col("event_type"), col("win_end"))
 
   val haDedupStreamSql: String =
     """WITH per AS (
@@ -277,7 +273,6 @@ object EventsStream {
         expr(graft.operators.NativeHistogram.idxLadder).as("idx"))
       .groupBy(col("event_type"), col("day"), col("idx"))
       .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("event_type"), col("day"), col("idx"))
 
   val nativeHistogramStreamSql: String =
     s"""WITH b AS (
@@ -391,7 +386,6 @@ object EventsStream {
         foldSessions(uid, it.toSeq.sortBy(e => (e.tsSec, e.event_id))).iterator
       }
       .toDF()
-      .orderBy(col("user_id"), col("session_idx"))
   }
 
   /** Event-with-watermark row for the streaming path. */
@@ -477,7 +471,6 @@ object EventsStream {
       .distinct()
       .groupBy(col("window_start"), col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
-      .orderBy(col("window_start"), col("event_type"))
   }
 
   val eventsDedupSql: String =
@@ -516,7 +509,6 @@ object EventsStream {
         col("c_ts") <= col("p_ts"))
       .groupBy(col("purchase_id"), col("user_id"))
       .agg(count(lit(1)).as("n_clicks"))
-      .orderBy(col("purchase_id"))
   }
 
   val intervalJoinSql: String =
@@ -560,7 +552,6 @@ object EventsStream {
         col("c_ts") <= col("p_ts"), "left")
       .groupBy(col("purchase_id"), col("user_id"))
       .agg(count(col("c_ts")).as("n_clicks"))
-      .orderBy(col("purchase_id"))
   }
 
   val outerIntervalJoinSql: String =
@@ -601,7 +592,6 @@ object EventsStream {
         col("scrape_events_total"), col("scrape_value_sum"))
     graft.operators.MetricsModel.wideToLong(agg, Seq("window_start", "event_type"),
       Seq("scrape_events_total", "scrape_value_sum"))
-      .orderBy(col("window_start"), col("event_type"), col("metric_name"))
   }
 
   val metricsScrapeSql: String =
@@ -649,7 +639,6 @@ object EventsStream {
       .groupBy(col("event_type"),
         window(col("ts"), "1 hour").getField("start").as("window_start"))
       .agg(round(sum(col("inc")), 2).as("increase"))
-      .orderBy(col("event_type"), col("window_start"))
   }
 
   val counterRateHourlySql: String =
@@ -758,7 +747,6 @@ object EventsStream {
       .select(col("user_id"), col("event_type"),
         col("m").getField("tsSec").as("last_ts_sec"),
         col("m").getField("value").as("last_value"))
-      .orderBy(col("user_id"), col("event_type"))
   }
 
   val upsertSnapshotSql: String =
@@ -851,7 +839,6 @@ object EventsStream {
       .groupBy(col("day"))
       .agg(expr(s"graft_theta(h, $k)").as("sk"))
       .select(col("day"), expr(graft.operators.Sketch.estExpr("sk")).as("est_distinct"))
-      .orderBy(col("day"))
   }
 
   val sketchDistinctSql: String = {
@@ -910,7 +897,6 @@ object EventsStream {
       .withColumn("n", sum(col("cnt")).over(wDay))
       .filter(col("cnt") * StreamHhK > col("n"))
       .select(col("day"), col("user_id"), col("cnt"))
-      .orderBy(col("day"), col("user_id"))
   }
 
   val heavyHittersSql: String =
@@ -995,7 +981,6 @@ object EventsStream {
       .agg(sum(col("op")).as("net_events"),
         round(sum(col("op") * col("value")), 2).as("net_value"))
       .filter(col("net_events") =!= 0)
-      .orderBy(col("user_id"))
   }
 
   val ivmAggSql: String =
@@ -1043,7 +1028,6 @@ object EventsStream {
       .groupBy(col("day"), col("user_id")).agg(sum(col("op")).as("rc"))
       .filter(col("rc") > 0)
       .groupBy(col("day")).agg(count(lit(1)).as("n_users"))
-      .orderBy(col("day"))
   }
 
   val ivmDistinctSql: String =
@@ -1078,7 +1062,6 @@ object EventsStream {
       .filter(col("rc") > 0)
       .groupBy(col("day")).agg(min(col("cents")).as("min_cents"),
         max(col("cents")).as("max_cents"), count(lit(1)).as("n_support"))
-      .orderBy(col("day"))
   }
 
   val ivmMinmaxSql: String =
@@ -1128,7 +1111,6 @@ object EventsStream {
       .select(col("day"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("bucket"),
         ((col("col.score") + col("col.id")) / 16777216.0).cast("long").as("rc"))
-      .orderBy(col("day"), col("rank"))
   }
 
   val ivmTopnSql: String =
@@ -1214,7 +1196,6 @@ object EventsStream {
       .join(broadcast(userSegmentDim(s, d)), "user_id")
       .groupBy(col("segment"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("value_sum"))
-      .orderBy(col("segment"), col("event_type"))
   }
 
   val staticEnrichSql: String =
@@ -1276,7 +1257,6 @@ object EventsStream {
           t.fv, t.fqc, t.fqp)
       }
       .toDF("user_id", "stage", "first_view", "first_qual_click", "first_qual_purchase")
-      .orderBy(col("user_id"))
   }
 
   /** Streaming half: real-time conversion detection. State per user is
@@ -1405,7 +1385,6 @@ object EventsStream {
           }
       }
       .toDF("user_id", "event_id", "sec", "n_touches", "credit_per_touch")
-      .orderBy(col("user_id"), col("sec"), col("event_id"))
   }
 
   // ------------------------------------------------ streaming hysteresis
@@ -1459,7 +1438,6 @@ object EventsStream {
         foldAlert(0, 0, it.toSeq.sortBy(_.hour_sec))._1.iterator
       }
       .toDF()
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   /** Streaming half: the alert machine runs incrementally — closed
@@ -1541,7 +1519,6 @@ object EventsStream {
     * first, mixed later) — parity asserted in StreamingSpec. */
   def schemaEvolutionBatch: Q = (s, d) => {
     schemaEvolutionAgg(Tables.events(s, d).select(payloadCol.as("payload")))
-      .orderBy(col("event_type"), col("channel"))
   }
 
   /** The oracle computes the same aggregate straight off the typed
@@ -1601,7 +1578,6 @@ object EventsStream {
       .unionByName(pairs(pNew, c))    // ΔP against full click history
       .groupBy(col("purchase_id"), col("user_id"))
       .agg(sum(col("n")).as("n_clicks"))
-      .orderBy(col("purchase_id"))
   }
 
   // --------------------------------------------- token-bucket limiter
@@ -1652,7 +1628,6 @@ object EventsStream {
       .select(col("user_id"), col("n_events"),
         col("st.acc").as("n_accepted"), col("st.rej").as("n_rejected"),
         col("st.tokens").as("final_tokens"))
-      .orderBy(col("user_id"))
   }
 
   val rateLimitSql: String = {
@@ -1747,7 +1722,6 @@ object EventsStream {
         col("n_prior") >= 2 && col("rad") > 0 && abs(col("z")) > 3.0)
       .select(col("event_type"), col("hour_sec"), col("cnt"), col("n_prior"),
         col("z"), col("is_anomaly"))
-      .orderBy(col("event_type"), col("hour_sec"))
   }
 
   val anomalyZSql: String =
@@ -1862,7 +1836,6 @@ object EventsStream {
       .select(col("user_id"), col("event_type").as("attr_value"), col("version"),
         date_format(timestamp_seconds(col("sec")), "yyyy-MM-dd HH:mm:ss").as("valid_from"),
         date_format(timestamp_seconds(col("next_sec")), "yyyy-MM-dd HH:mm:ss").as("valid_to"))
-      .orderBy(col("user_id"), col("version"))
   }
 
   val scd2ClosedSql: String =
@@ -1946,7 +1919,6 @@ object EventsStream {
       .select(col("day"),
         expr(graft.operators.Sketch.qFromSample("sk", "0.5e0")).as("p50"),
         expr(graft.operators.Sketch.qFromSample("sk", "0.9e0")).as("p90"))
-      .orderBy(col("day"))
   }
 
   val sampleQuantileDailySql: String = {

@@ -83,7 +83,6 @@ object LateData {
       .groupBy((col("wend") - WindowSec).as("wstart_sec"))
       .agg(count(when(!col("late"), 1)).as("n_accepted"),
         count(when(col("late"), 1)).as("n_late"))
-      .orderBy(col("wstart_sec"))
   }
 
   val lateDataSql: String =
@@ -178,7 +177,6 @@ object LateData {
       .select(col("chunk"), col("wm_pre").as("wm_sec"), col("n_input"),
         col("n_late_rows"), col("n_dropped"), col("n_updated"),
         coalesce(col("state_rows"), lit(0L)).as("state_rows"))
-      .orderBy(col("chunk"))
   }
 
   val stateMetricsSql: String =
@@ -234,7 +232,6 @@ object LateData {
         sum(floor(col("value") * 100).cast("long")).as("cents_sum"))
       .select(unix_timestamp(col("window.start")).as("wstart_sec"),
         col("event_type"), col("n_events"), col("cents_sum"))
-      .orderBy(col("wstart_sec"), col("event_type"))
   }
 
   val hoppingWindowSql: String = {
@@ -273,7 +270,6 @@ object LateData {
         (unix_timestamp(col("session_window.end"))
           - unix_timestamp(col("session_window.start"))).as("window_len_sec"),
         col("n_events"))
-      .orderBy(col("user_id"), col("session_start_sec"))
   }
 
   val sessionNativeSql: String =

@@ -22,7 +22,7 @@ class AffinitySpec extends SparkTestBase {
     import spark.implicits._
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = graft.operators.Affinity.markovSteady(spark, dir).collect()
+    val out = graft.operators.Affinity.markovSteady(spark, dir).orderBy("event_type").collect()
     assert(out.map(_.getString(0)).toSeq == Seq("A", "B", "C"),
       "every type in the chain keeps a vector row")
     val byType = out.map(r => r.getString(0) -> r.getLong(1)).toMap

@@ -115,7 +115,7 @@ class CurationSpec extends SparkTestBase {
       val ce = math.floor(s / toks.length * 1e4) / 1e4
       (id, toks.length.toLong, ce, ce <= 4.0)
     }.sortBy(_._1)
-    val got = Curation.textPerplexityAt(k)(spark, sf).collect()
+    val got = Curation.textPerplexityAt(k)(spark, sf).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
     assert(got.toSeq == expected.toSeq)
   }
@@ -142,7 +142,7 @@ class CurationSpec extends SparkTestBase {
       val ce = math.floor(s / bs.length * 1e4) / 1e4
       (id, bs.length.toLong, ce, ce <= 5.0)
     }.toSeq.sortBy(_._1)
-    val got = Curation.textBigramLmAt(k)(spark, sf).collect()
+    val got = Curation.textBigramLmAt(k)(spark, sf).orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3)))
     assert(got.toSeq == expected)
   }

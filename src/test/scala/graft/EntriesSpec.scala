@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
+
 /** Smoke + shape checks for every SparkEntry entry at sf0.001: runs,
   * non-degenerate, and column names match the oracle SQL contract
-  * (driver hash-compares by sorted column name). */
+  * (the oracle compare hashes by sorted column name). Results are multisets:
+  * no entry ends in a global presentation sort (SURVEY §4) — order is
+  * kept only under a `Limit` (top-k) or inside an ordered payload. */
 class EntriesSpec extends SparkTestBase {
 
   // entries allowed to be empty at this tiny SF. The SAX and Theil–Sen
@@ -12,10 +16,19 @@ class EntriesSpec extends SparkTestBase {
   // gate scale.
   private val mayBeEmpty = Set("dedup_simhash", "metrics_sax_motifs", "metrics_theil_sen")
 
+  private def rootSort(p: LogicalPlan): Option[Sort] = p match {
+    case Project(_, child) => rootSort(child)
+    case s: Sort if s.global => Some(s)
+    case _ => None
+  }
+
   SparkEntry.queries.foreach { case (name, fn) =>
     test(s"$name runs at sf0.001") {
       val df = fn(spark, sf)
       assert(df.columns.nonEmpty)
+      val sorted = rootSort(df.queryExecution.optimizedPlan)
+      assert(sorted.isEmpty,
+        s"$name ends in a global sort (${sorted.map(_.order.map(_.sql).mkString(", ")).getOrElse("")})")
       val n = df.count()
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows")
     }

@@ -25,12 +25,12 @@ class GraphSpec extends SparkTestBase {
   }
 
   test("reliable-checkpoint mode: pagerank bit-identical under spark.graft.reliableCheckpoints") {
-    val base = Graph.pagerank(spark, sf).collect().map(r => (r.getString(0), r.getLong(1)))
+    val base = Graph.pagerank(spark, sf).orderBy("node").collect().map(r => (r.getString(0), r.getLong(1)))
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(Checkpoints.Flag, "true")
     try {
-      val reliable = Graph.pagerank(spark, sf).collect().map(r => (r.getString(0), r.getLong(1)))
+      val reliable = Graph.pagerank(spark, sf).orderBy("node").collect().map(r => (r.getString(0), r.getLong(1)))
       assert(reliable.sameElements(base), "checkpoint mode must not change results")
     } finally {
       spark.conf.set(Checkpoints.Flag, "false")

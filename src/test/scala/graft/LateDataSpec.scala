@@ -66,7 +66,7 @@ class LateDataSpec extends SparkTestBase {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val twin = LateData.stateMetricsBatch(spark, sf).collect()
+    val twin = LateData.stateMetricsBatch(spark, sf).orderBy("chunk").collect()
     val chunks = LateData.arrivals(spark, sf)
       .select(col("chunk"), col("arrival"), col("sec"))
       .collect()

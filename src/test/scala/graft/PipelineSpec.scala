@@ -7,8 +7,8 @@ import graft.operators.Pipeline
 class PipelineSpec extends SparkTestBase {
 
   test("split is deterministic and ~80/10/10") {
-    val a = Pipeline.splitTrainTest(spark, sf).collect()
-    val b = Pipeline.splitTrainTest(spark, sf).collect()
+    val a = Pipeline.splitTrainTest(spark, sf).orderBy("doc_id").collect()
+    val b = Pipeline.splitTrainTest(spark, sf).orderBy("doc_id").collect()
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq, "split must be reproducible")
     val byS = a.groupBy(_.getString(2)).view.mapValues(_.length).toMap
     val n = a.length.toDouble
@@ -24,10 +24,10 @@ class PipelineSpec extends SparkTestBase {
     // is a pure function of the key, so ANY physical layout agrees
     val base = graft.sources.Tables.documents(spark, sf)
     def sampled(parts: Int) =
-      Pipeline.sampleStratified(spark, sf).collect().map(_.toSeq).toSeq
+      Pipeline.sampleStratified(spark, sf).collect().map(_.toSeq).toSeq.sortBy(_.toString)
     // different shuffle layouts of the same op must agree — and the split
     // assignment per doc must match a single-partition recompute
-    val a = Pipeline.splitTrainTest(spark, sf).collect().map(_.toSeq)
+    val a = Pipeline.splitTrainTest(spark, sf).orderBy("doc_id").collect().map(_.toSeq)
     val b = Pipeline.splitTrainTest(spark, sf)
       .repartition(7, col("split")).orderBy(col("doc_id")).collect().map(_.toSeq)
     assert(a.toSeq == b.toSeq, "split must not depend on physical layout")
@@ -36,8 +36,8 @@ class PipelineSpec extends SparkTestBase {
 
   test("weighted sample is k distinct docs, reproducible, and length-biased") {
     import org.apache.spark.sql.functions._
-    val a = Pipeline.sampleWeighted(spark, sf).collect()
-    val b = Pipeline.sampleWeighted(spark, sf).collect()
+    val a = Pipeline.sampleWeighted(spark, sf).orderBy("rk").collect()
+    val b = Pipeline.sampleWeighted(spark, sf).orderBy("rk").collect()
     assert(a.map(_.toString).toSeq == b.map(_.toString).toSeq, "sample must be reproducible")
     assert(a.length == Pipeline.WeightedK)
     assert(a.map(_.getLong(1)).distinct.length == a.length, "without replacement")
@@ -176,8 +176,8 @@ class PipelineSpec extends SparkTestBase {
       docs.agg(sum("doc_id")).head.getLong(0),
       "fold checksums partition the id space exactly")
     // stability: a second run produces the identical manifest
-    val again = graft.operators.Pipeline.splitKfold(spark, sf).collect().map(_.toSeq)
-    assert(df.collect().map(_.toSeq).sameElements(again))
+    val again = graft.operators.Pipeline.splitKfold(spark, sf).orderBy("fold").collect().map(_.toSeq)
+    assert(df.orderBy("fold").collect().map(_.toSeq).sameElements(again))
     df.unpersist()
   }
 

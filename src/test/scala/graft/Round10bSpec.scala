@@ -193,7 +193,7 @@ class Round10bSpec extends SparkTestBase {
     val dir = writeDocs(texts.zipWithIndex.map { case (t, i) =>
       (i.toLong, t, "en", "s0", t.length.toLong) })
     val got = graft.operators.Curation.textBpeTrain(spark, dir)
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
+      .orderBy("round").collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4))).toSeq
     val want = bpeBrute(texts, graft.operators.Curation.BpeRounds)
     assert(got == want, s"got=$got want=$want")
   }
@@ -280,7 +280,7 @@ class Round10bSpec extends SparkTestBase {
       mind = mind.map { case (id, dd) => id -> math.min(dd, dq(pts.find(_._1 == id).get._2, cv)) }
     }
     val got = graft.operators.Pipeline.sampleCoreset(spark, dir)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+      .orderBy("k").collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
     val want = centers.map { case (k, id, dd) => (k, id, dd / 1e6) }
     assert(got.toSeq == want, s"got=${got.toSeq} want=$want")
     // radii non-increasing from k=2 on (the k-center cost curve)
@@ -327,7 +327,7 @@ class Round10bSpec extends SparkTestBase {
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     val got = graft.operators.Cdc.cdcLateArriving(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
+      .orderBy("entity_key", "from_sec", "event_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         if (r.isNullAt(4)) -1L else r.getLong(4)))
     val want = Seq(
       (1L, 1 * hour, 1L, 10.0, 3 * hour),   // spliced: to_sec moved 5h -> 3h

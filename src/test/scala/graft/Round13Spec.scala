@@ -47,7 +47,8 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("model_precision_recall: recall is non-increasing and precision well-formed across thresholds") {
-    val rows = SparkEntry.queries("model_precision_recall")(spark, sf).collect()
+    val rows = SparkEntry.queries("model_precision_recall")(spark, sf)
+      .orderBy("threshold_cents").collect()
     assert(rows.length == graft.operators.Models.PrThresholds.size)
     val recalls = rows.map(_.getAs[Long]("recall_x1e6")).toSeq
     assert(recalls == recalls.sorted.reverse,

@@ -61,7 +61,8 @@ class Round14Spec extends SparkTestBase {
     assert(names == names.sorted, s"label names must be sorted: $names")
     assert(names.contains("__name__") && names.contains("job"))
 
-    val rows = SparkEntry.queries("prom_api_error_json")(spark, sf).collect()
+    val rows = SparkEntry.queries("prom_api_error_json")(spark, sf)
+      .orderBy("http_status").collect()
     assert(rows.map(_.getInt(1)).toSeq == Seq(200, 400))
     val err = jackson.JsonMethods.parse(rows(1).getString(2)).asInstanceOf[JObject]
     // the Go response struct's field order: status < errorType < error

@@ -30,7 +30,7 @@ class Round7Spec extends SparkTestBase {
   }
 
   test("dq_benford: digit shares form a distribution over 1..9") {
-    val rows = run("dq_benford").collect()
+    val rows = run("dq_benford").orderBy("digit").collect()
     assert(rows.map(_.getInt(0)).toSeq == (1 to 9))
     val s = rows.map(_.getDouble(2)).sum
     assert(s > 0.995 && s <= 1.0001)
@@ -72,7 +72,7 @@ class Round7Spec extends SparkTestBase {
   }
 
   test("pack_curriculum: three phases spend the full token budget") {
-    val rows = run("pack_curriculum").collect()
+    val rows = run("pack_curriculum").orderBy("phase").collect()
     assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
     val s = rows.map(_.getDouble(3)).sum
     assert(s > 0.995 && s <= 1.0001)

@@ -93,7 +93,7 @@ class Round8Spec extends SparkTestBase {
 
   test("metrics_slo_attainment: all-integer budget ledger is internally consistent") {
     import spark.implicits._
-    val rows = run("metrics_slo_attainment")
+    val rows = run("metrics_slo_attainment").orderBy("day")
       .select("day", "total", "errors", "attainment_ppm", "cum_total", "cum_errors",
         "cum_attainment_ppm", "budget_left_ppm", "breached")
       .as[(Long, Long, Long, Long, Long, Long, Long, Long, Boolean)].collect()
@@ -114,7 +114,7 @@ class Round8Spec extends SparkTestBase {
 
   test("text_vocab_growth: buckets partition occurrences, growth curve is monotone") {
     import spark.implicits._
-    val rows = run("text_vocab_growth")
+    val rows = run("text_vocab_growth").orderBy("bucket")
       .select("bucket", "n_occ", "new_types", "cum_occ", "cum_types")
       .as[(Long, Long, Long, Long, Long)].collect()
     assert(rows.nonEmpty && rows.length <= graft.operators.TextAnalysis.VocabGrowthBuckets)
@@ -345,7 +345,7 @@ class Round8Spec extends SparkTestBase {
 
   test("dedup_lsh_tuning: candidate volume falls and precision rises with rows per band") {
     import spark.implicits._
-    val rows = run("dedup_lsh_tuning")
+    val rows = run("dedup_lsh_tuning").orderBy("rows_per_band")
       .select("bands", "rows_per_band", "n_candidates", "n_caught", "n_truth",
         "recall", "precision")
       .as[(Int, Int, Long, Long, Long, Double, Double)].collect()
@@ -374,7 +374,7 @@ class Round8Spec extends SparkTestBase {
 
   test("graph_walk_sample: every walk is connected, complete, and hash-deterministic") {
     import spark.implicits._
-    val rows = run("graph_walk_sample")
+    val rows = run("graph_walk_sample").orderBy("start", "step", "node")
       .select("start", "step", "node").as[(Long, Int, Long)].collect()
     val byWalk = rows.groupBy(_._1)
     // adjacency for validation, rebuilt from the same similarity graph
@@ -395,7 +395,7 @@ class Round8Spec extends SparkTestBase {
       }
     }
     // deterministic: a rerun yields the identical corpus
-    val again = run("graph_walk_sample")
+    val again = run("graph_walk_sample").orderBy("start", "step", "node")
       .select("start", "step", "node").as[(Long, Int, Long)].collect()
     assert(rows.toSeq == again.toSeq)
   }
@@ -484,7 +484,7 @@ class Round8Spec extends SparkTestBase {
 
   test("ann_ivf_tuning: nested probe lists make volume and coverage monotone") {
     import spark.implicits._
-    val rows = run("ann_ivf_tuning")
+    val rows = run("ann_ivf_tuning").orderBy("nprobe")
       .select("nprobe", "n_candidates", "n_caught", "n_truth", "coverage", "scan_share")
       .as[(Int, Long, Long, Long, Double, Double)].collect()
     assert(rows.map(_._1).toSeq == graft.operators.Similarity.IvfTuneProbes)

@@ -173,7 +173,7 @@ class StatsSpec extends SparkTestBase {
 
   test("sprt: cumulative counts are exact, llr replays from the embedded constants") {
     import spark.implicits._
-    val rows = SparkEntry.queries("q_sprt_abtest")(spark, sf)
+    val rows = SparkEntry.queries("q_sprt_abtest")(spark, sf).orderBy("day")
       .as[(Long, Long, Long, Double, String)].collect()
     assert(rows.nonEmpty)
     // cumulative counts are monotone and end at the corpus totals
@@ -194,8 +194,8 @@ class StatsSpec extends SparkTestBase {
   test("stats entries are deterministic under repartitioning") {
     for (name <- Seq("q_gini_revenue", "q_mann_kendall", "q_runs_test", "q_waterfall_bridge",
         "q_ks_test", "q_regression_trend", "q_mutual_info", "cohort_lifecycle")) {
-      val a = SparkEntry.queries(name)(spark, sf).collect().toSeq
-      val b = SparkEntry.queries(name)(spark, sf).collect().toSeq
+      val a = SparkEntry.queries(name)(spark, sf).collect().toSeq.sortBy(_.toString)
+      val b = SparkEntry.queries(name)(spark, sf).collect().toSeq.sortBy(_.toString)
       assert(a == b, s"$name unstable across runs")
     }
   }

@@ -241,8 +241,9 @@ class TimeseriesExtSpec extends SparkTestBase {
       .select(col("event_id"), floor(col("value") * 100).cast("long").as("vc"))
     assert(df.join(ev, "event_id").filter(col("value_cents") =!= col("vc")).count() == 0)
     // deterministic: a second run picks the identical exemplar set
-    val again = TimeseriesExt.exemplars(spark, sf).collect().map(_.toSeq)
-    assert(df.collect().map(_.toSeq).sameElements(again))
+    val order = Seq("event_type", "bucket_start", "exemplar_rank")
+    val again = TimeseriesExt.exemplars(spark, sf).orderBy(order.map(col): _*).collect().map(_.toSeq)
+    assert(df.orderBy(order.map(col): _*).collect().map(_.toSeq).sameElements(again))
     df.unpersist()
   }
 
