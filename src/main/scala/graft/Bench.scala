@@ -62,9 +62,17 @@ object Bench {
       while (it.hasNext) t += it.next().getCollectionTime
       t
     }
+    // janino compiles per entry: the count of Spark's compile-time
+    // histogram, and the summed nanoseconds of the same timed compiles
+    // (the histogram only keeps a sample, not a sum)
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    def codegenN: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    final case class Run(name: String, sec: Double, load: Double, gcMs: Long,
+        codegenN: Long, codegenNs: Long, err: Option[String])
     val results = picked.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
       val gc0 = gcMs
+      val (cg0, cgNs0) = (codegenN, CodeGenerator.compileTime)
       val (sec, err) =
         try {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -80,28 +88,31 @@ object Bench {
       // item 4). The timing methodology is unchanged — the save() above
       // is the same timed action as every prior round.
       graft.Checkpoints.release()
-      (name, sec, osBean.getSystemLoadAverage, gcMs - gc0, err)
+      Run(name, sec, osBean.getSystemLoadAverage, gcMs - gc0,
+        codegenN - cg0, CodeGenerator.compileTime - cgNs0, err)
     }
     // Locale.ROOT: a comma-decimal default locale would emit unparseable JSON
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results
-      .map { case (k, v, _, _, _) => "\"" + k + "\":" + num(v) }
+      .map(r => "\"" + r.name + "\":" + num(r.sec))
       .mkString("{", ",", "}")
     // per-query host context, full file only (the compact line carries
     // a run-level summary — the 1700-char budget has no room for 368
     // rows of context)
     val ctx = results
-      .map { case (k, _, l, g, _) => "\"" + k + "\":{\"load\":" + num(l) + ",\"gc_ms\":" + g + "}" }
+      .map(r => "\"" + r.name + "\":{\"load\":" + num(r.load) + ",\"gc_ms\":" + r.gcMs +
+        ",\"codegen_n\":" + r.codegenN + ",\"codegen_ms\":" + num(r.codegenNs / 1e6) + "}")
       .mkString("{", ",", "}")
-    val loads = results.map(_._3).filter(_ >= 0)
+    val loads = results.map(_.load).filter(_ >= 0)
     val loadMax = if (loads.isEmpty) -1.0 else loads.max
     val loadMean = if (loads.isEmpty) -1.0 else loads.sum / loads.size
-    val gcTotalS = results.map(_._4).sum / 1000.0
+    val gcTotalS = results.map(_.gcMs).sum / 1000.0
+    val codegenS = results.map(_.codegenNs).sum / 1e9
     // total sums the successful entries only; a failed entry keeps its
     // -1 in `queries` and is named with its error class in `failed`, so
     // a crash cannot pass for a faster run
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val failed = results.collect { case (k, _, _, _, Some(e)) => k -> e }
+    val total = results.map(_.sec).filter(_ >= 0).sum
+    val failed = results.collect { case Run(k, _, _, _, _, _, Some(e)) => k -> e }
     val failedJson = failed
       .map { case (k, e) => "{\"entry\":\"" + k + "\",\"error\":\"" + e + "\"}" }
       .mkString("[", ",", "]")
@@ -123,13 +134,16 @@ object Bench {
         case "dq" => "quality"
         case other => other // ann / text / mm / graph / sketch / model
       }
-    val fams = results.filter(_._2 >= 0).groupBy { case (n, _, _, _, _) => family(n) }
-      .map { case (f, rs) => f -> rs.map(_._2).sum }.toSeq.sortBy(_._1)
+    val fams = results.filter(_.sec >= 0).groupBy(r => family(r.name))
+      .map { case (f, rs) => f -> rs.map(_.sec).sum }.toSeq.sortBy(_._1)
     val famJson = fams.map { case (f, v) => "\"" + f + "\":" + num(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"family_subtotals","families":$famJson,"sf":"$sfDir"}""")
-    val hostJson = s"""{"cpus":$cpus,"load_max":${num(loadMax)},"load_mean":${num(loadMean)},"gc_total_s":${num(gcTotalS)}}"""
-    val json = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"ctx":$ctx,"host":$hostJson,"families":$famJson,"failed":$failedJson,"n_failed":${failed.size},"sf":"$sfDir"}"""
+    val hostFields = s""""cpus":$cpus,"load_max":${num(loadMax)},"load_mean":${num(loadMean)},"gc_total_s":${num(gcTotalS)}"""
+    // the compact line keeps its host fields; the run's compile total is
+    // in the full file only
+    val hostJson = s"{$hostFields}"
+    val json = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"ctx":$ctx,"host":{$hostFields,"codegen_s":${num(codegenS)}},"families":$famJson,"failed":$failedJson,"n_failed":${failed.size},"sf":"$sfDir"}"""
     println(json)
     // the sbt log tail can truncate the (long) JSON line — also land it
     // in a file so per-query numbers survive regardless of log capture,
@@ -175,7 +189,7 @@ object Bench {
       "pipeline_end_to_end",
       "prom_wire_snappy", "stream_state_metrics", "ann_index_drift",
       "stream_rate_limit", "q2_min_cost_supplier")
-    val got = results.map(t => t._1 -> t._2).toMap
+    val got = results.map(r => r.name -> r.sec).toMap
     // surface headline-list drift: a renamed query would otherwise vanish
     // from the compact line silently
     headline.filterNot(SparkEntry.queries.keySet).foreach { n =>

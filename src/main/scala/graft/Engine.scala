@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Tuned for the driver's local[32] harness but with settings that are
   * the ones you'd want on a real cluster too: AQE (runtime re-plan,
-  * skew-join splitting, partition coalescing) and UTC session time.
+  * skew-join splitting, partition coalescing), a generated-code cache
+  * that holds the warm working set, and UTC session time.
   */
 object Engine {
   def session(master: String = "local[32]", shufflePartitions: Int = 32,
@@ -20,6 +21,20 @@ object Engine {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // generated-code cache, keyed by (class loader, source): the driver
+      // and the executor threads each hold an entry per class. One run of
+      // a benchmark workload compiles 256 (iterative_build) or 287
+      // (scrape_floor) distinct classes, about three times Spark's default
+      // bound of 100, so at the default the cache thrashed: every warm
+      // execution ran janino again and the JIT re-warmed the new classes.
+      // 1024, the smallest power of two above both together (543), holds
+      // them with headroom (CodegenReuseSpec pins that a warm pass
+      // compiles nothing).
+      // Class names carry no stage id: adaptive execution numbers the fused
+      // stages as it plans them, the numbers vary from run to run, and an
+      // id in the name made the same code a new source
+      .config("spark.sql.codegen.cache.maxEntries", "1024")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       // RocksDB state store: spillable + incremental-checkpoint state,

@@ -82,7 +82,11 @@ object Cluster {
           coalesce(col("jl"), hop("label")).as("label"),
           (coalesce(col("jl"), hop("label")) =!= col("old")).as("chg"))
         .coalesce(8))
-      val changed = next.filter(col("chg")).limit(1).count()
+      // a full count, not `limit(1).count()`: Spark names a generated
+      // limit's counter from a process-wide sequence, so a limit stage is
+      // new source on every call and janino recompiles it every round;
+      // the count scans the label state just cut, in the same two stages
+      val changed = next.filter(col("chg")).count()
       labels = next.select(col("doc"), col("label"))
       converged = changed == 0
       round += 1
