@@ -12,9 +12,10 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Engine.session(master = s"local[$cpus]", shufflePartitions = cpus)
-    Engine.quietBoundedWindowWarnings()
+    // optional args: bench only the named queries (dev iteration)
+    val only = args.toSeq
+    val picked = SparkEntry.pickOrExit(only)
+    val spark = Engine.session()
 
     // untimed warmup: JIT/codegen spin-up + parquet footer reads, so the
     // alphabetically-first query doesn't absorb session start-up cost
@@ -39,17 +40,6 @@ object Bench {
     // measures a bucket-pruned READ; the one-time layout build is setup
     try graft.sources.Writers.prewarm(spark, sfDir) catch { case _: Throwable => () }
 
-    // optional args: bench only the named queries (dev iteration)
-    val only = args.toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty) {
-      System.err.println(s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
-      spark.stop()
-      sys.exit(2)
-    }
-    val picked =
-      if (only.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.filter(q => only(q._1)).toSeq
     // contamination markers: per-query 1-min loadavg + GC-time delta
     // (one MXBean read each, ~zero cost). A shared host's load spike
     // shows up as load ≫ cpus on exactly the outlier queries, so a 5×
@@ -67,29 +57,20 @@ object Bench {
     // (the histogram only keeps a sample, not a sum)
     import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
     def codegenN: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    final case class Run(name: String, sec: Double, load: Double, gcMs: Long,
-        codegenN: Long, codegenNs: Long, err: Option[String])
-    val results = picked.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
+    final case class Run(o: SparkEntry.Outcome[Unit], load: Double, gcMs: Long,
+        codegenN: Long, codegenNs: Long) {
+      def name: String = o.name
+      def sec: Double = if (o.failed) -1.0 else o.seconds
+    }
+    // timed: construction plus the noop save; the runner releases the
+    // entry's cut blocks after the clock is read
+    val results = picked.map { entry =>
       val gc0 = gcMs
       val (cg0, cgNs0) = (codegenN, CodeGenerator.compileTime)
-      val (sec, err) =
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          ((System.nanoTime() - t0) / 1e9, None)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
-            (-1.0, Some(e.getClass.getName))
-        }
-      // UNTIMED (after the clock is read): release this entry's
-      // lineage-cut blocks so storage memory does not accumulate
-      // localCheckpoint frames across the 495-entry run (r15 VERDICT
-      // item 4). The timing methodology is unchanged — the save() above
-      // is the same timed action as every prior round.
-      graft.Checkpoints.release()
-      Run(name, sec, osBean.getSystemLoadAverage, gcMs - gc0,
-        codegenN - cg0, CodeGenerator.compileTime - cgNs0, err)
+      val o = SparkEntry.run(spark, sfDir, entry)(_.write.mode("overwrite").format("noop").save())
+      o.reportFailure("bench")
+      Run(o, osBean.getSystemLoadAverage, gcMs - gc0,
+        codegenN - cg0, CodeGenerator.compileTime - cgNs0)
     }
     // Locale.ROOT: a comma-decimal default locale would emit unparseable JSON
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -112,7 +93,7 @@ object Bench {
     // -1 in `queries` and is named with its error class in `failed`, so
     // a crash cannot pass for a faster run
     val total = results.map(_.sec).filter(_ >= 0).sum
-    val failed = results.collect { case Run(k, _, _, _, _, _, Some(e)) => k -> e }
+    val failed = results.flatMap(r => r.o.result.left.toOption.map(e => r.name -> e.getClass.getName))
     val failedJson = failed
       .map { case (k, e) => "{\"entry\":\"" + k + "\",\"error\":\"" + e + "\"}" }
       .mkString("[", ",", "]")
@@ -139,7 +120,7 @@ object Bench {
     val famJson = fams.map { case (f, v) => "\"" + f + "\":" + num(v) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"family_subtotals","families":$famJson,"sf":"$sfDir"}""")
-    val hostFields = s""""cpus":$cpus,"load_max":${num(loadMax)},"load_mean":${num(loadMean)},"gc_total_s":${num(gcTotalS)}"""
+    val hostFields = s""""cpus":${Engine.cpus},"load_max":${num(loadMax)},"load_mean":${num(loadMean)},"gc_total_s":${num(gcTotalS)}"""
     // the compact line keeps its host fields; the run's compile total is
     // in the full file only
     val hostJson = s"{$hostFields}"

@@ -7,10 +7,14 @@ import org.apache.spark.sql.SparkSession
   * Tuned for the driver's local[32] harness but with settings that are
   * the ones you'd want on a real cluster too: AQE (runtime re-plan,
   * skew-join splitting, partition coalescing), a generated-code cache
-  * that holds the warm working set, and UTC session time.
+  * that holds the warm working set, and UTC session time. Every graft
+  * surface (Bench, Verify, PlanDump, ScaleUp, the test base) starts here.
   */
 object Engine {
-  def session(master: String = "local[32]", shufflePartitions: Int = 32,
+  /** Local cores for the graft surfaces: `SPARK_GRAFT_CPUS`, default 32. */
+  lazy val cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  def session(master: String = s"local[$cpus]", shufflePartitions: Int = cpus,
       extraConf: Map[String, String] = Map.empty): SparkSession = {
     val builder = SparkSession
       .builder()
@@ -46,17 +50,21 @@ object Engine {
     val spark = extraConf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    quietBoundedWindowWarnings()
     spark
   }
 
   /** Drop the `WindowExec: No Partition Defined` warning category for
-    * the driver surfaces (Verify/Bench): the unpartitioned frames in
+    * every session `session` builds: the unpartitioned frames in
     * this library are registry/model-sized BY DESIGN and each one is
     * certified bounded by PlanSweepSpec's global-window lint — but a
     * full Verify run emitted hundreds of these lines, burying the real
     * `[verify] … failed` signal (r14 verdict nit). Scoped to the one
-    * logger category; every other WARN still prints. */
-  def quietBoundedWindowWarnings(): Unit = {
+    * logger category; every other WARN still prints. Idempotent: only
+    * the first call adds the filters. */
+  def quietBoundedWindowWarnings(): Unit = quiet
+
+  private lazy val quiet: Unit = {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)

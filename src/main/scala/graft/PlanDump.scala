@@ -8,10 +8,9 @@ import java.nio.file.{Files, Paths}
   * can diff without running Spark.
   *
   * Usage: runMain graft.PlanDump <outDir> [--suffix=<s>] <entry>...
-  * Writes <outDir>/<entry>_<s>.txt (suffix defaults to "plan"). A bare
-  * second arg that is not a registered entry is still accepted as the
-  * suffix for compatibility, but the explicit flag is unambiguous when
-  * a suffix collides with an entry name.
+  * Writes <outDir>/<entry>_<s>.txt (suffix defaults to "plan"); every
+  * other argument is an entry name (none: every entry), and an unknown
+  * one exits 2.
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
   */
 object PlanDump {
@@ -24,26 +23,17 @@ object PlanDump {
     val (suffix, names) = args.drop(1).toSeq match {
       case flag +: rest if flag.startsWith("--suffix=") =>
         (flag.stripPrefix("--suffix="), rest)
-      case maybe +: rest if maybe.nonEmpty && !SparkEntry.queries.contains(maybe) =>
-        (maybe, rest) // legacy positional suffix
       case all => ("plan", all)
     }
+    val picked = SparkEntry.pickOrExit(names)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Engine.session(master = s"local[$cpus]", shufflePartitions = cpus)
-    Engine.quietBoundedWindowWarnings()
+    val spark = Engine.session()
     new java.io.File(outDir).mkdirs()
-    val unknown = names.filterNot(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty) {
-      System.err.println(s"unknown entries: ${unknown.mkString(", ")}")
-      spark.stop(); sys.exit(2)
-    }
-    for (n <- names) {
-      val df = SparkEntry.queries(n)(spark, sfDir)
+    for (entry @ (n, _) <- picked) {
       // queryExecution.explainString == df.explain("formatted") output,
       // captured instead of printed
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val txt = SparkEntry.run(spark, sfDir, entry)(_.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)).get
       Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), txt)
       println(s"wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
     }

@@ -40,8 +40,7 @@ object ScaleUp {
     val dst = args(1)
     val reps = args(2).toInt
     val denseDocs = args.length > 3 && args(3) == "dense-docs"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Engine.session(master = s"local[$cpus]", shufflePartitions = cpus)
+    val spark = Engine.session()
 
     def replicate(table: String, keyCols: Seq[String],
         perturb: (DataFrame, Int) => DataFrame = (df, _) => df): Unit = {

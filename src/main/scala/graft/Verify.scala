@@ -15,82 +15,62 @@ import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
   * (`sink_bucketed_join` drops + rebuilds the table that
   * `sink_bucket_lookup` reads), so those run in one serial lane.
   *
-  * Env knobs: SPARK_GRAFT_CPUS (local[N], default 32),
-  * SPARK_GRAFT_VERIFY_THREADS (dump threads, default 8; 1 = the old
-  * fully-serial behavior). Extra args after (sfDir, outDir) restrict the
-  * dump to the named entries — incremental re-gates while iterating.
+  * Env knob: SPARK_GRAFT_CPUS (local[N], default 32; see
+  * `Engine.session`). Extra args after (sfDir, outDir) restrict the
+  * dump to the named entries — incremental re-gates while iterating; an
+  * unknown name exits 2. A full dump also runs the DuckDB oracle mirror.
   */
 object Verify {
   /** Entries that mutate a layout another entry reads: never dump these
     * concurrently with each other. */
   private val SerialLane = Seq("sink_bucketed_join", "sink_bucket_lookup")
 
+  /** Concurrent dump threads on the one session. */
+  private val Threads = 8
+
   def main(args: Array[String]): Unit = {
     // driver contract: exactly (sfDir, outDir). Extra args are a
     // local-iteration convenience: dump only the named entries.
     val sfDir = args(0); val outDir = args(1)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val threads = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "8").toInt
-      .max(1)
+    val picked = SparkEntry.pickOrExit(args.drop(2).toSeq)
     // Engine.session, not a bare builder: the graft_* native functions
     // are registered via extensions and must exist here too. FAIR
     // scheduling interleaves the concurrent dump jobs' tasks instead of
     // queueing whole jobs behind one long straggler.
-    val spark = Engine.session(master = s"local[$cpus]", shufflePartitions = cpus,
-      extraConf = Map("spark.scheduler.mode" -> "FAIR"))
-    Engine.quietBoundedWindowWarnings()
+    val spark = Engine.session(extraConf = Map("spark.scheduler.mode" -> "FAIR"))
     new java.io.File(outDir).mkdirs()
 
     val t0 = System.nanoTime()
     val failed = new ConcurrentLinkedQueue[String]
-    def dump(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed.add(name)
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      } finally
-        // entry construction + action both ran on THIS pool thread, so
-        // the thread-local ledger holds exactly this entry's cut blocks
-        graft.Checkpoints.release()
+    // construction and the write both run on the pool thread, where the
+    // runner releases the entry's cuts
+    def dump(entry: (String, SparkEntry.Query)): Unit = {
+      val o = SparkEntry.run(spark, sfDir, entry)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${entry._1}"))
+      if (o.failed) failed.add(o.name)
+      o.reportFailure("verify")
+    }
 
-    val picked = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-    val (serial, parallel) =
-      picked.toSeq.sortBy(_._1).partition(e => SerialLane.contains(e._1))
-    val pool = Executors.newFixedThreadPool(threads)
+    val (serial, parallel) = picked.partition(e => SerialLane.contains(e._1))
+    val pool = Executors.newFixedThreadPool(Threads)
     // the serial lane is itself one task: its entries run in a fixed
     // order relative to EACH OTHER, concurrently with everything else
     if (serial.nonEmpty) pool.submit(new Runnable {
-      def run(): Unit =
-        SerialLane.flatMap(n => serial.find(_._1 == n))
-          .foreach { case (n, f) => dump(n, f) }
+      def run(): Unit = SerialLane.flatMap(n => serial.find(_._1 == n)).foreach(dump)
     })
-    parallel.foreach { case (name, fn) =>
-      pool.submit(new Runnable { def run(): Unit = dump(name, fn) })
+    parallel.foreach { entry =>
+      pool.submit(new Runnable { def run(): Unit = dump(entry) })
     }
     pool.shutdown()
     pool.awaitTermination(7, TimeUnit.DAYS)
     val secs = (System.nanoTime() - t0) / 1e9
     System.err.println(f"[verify] dumped ${picked.size - failed.size()}/${picked.size} " +
-      f"entries in $secs%.1f s ($threads threads, local[$cpus])" +
+      f"entries in $secs%.1f s ($Threads threads, ${spark.sparkContext.master})" +
       (if (failed.isEmpty) "" else s"; FAILED: ${failed.toArray.mkString(", ")}"))
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // json4s escapes every control char, so a tab or CR inside an oracle
+    // SQL string still parses with json.load
+    val json = org.json4s.jackson.Serialization.write(SparkEntry.oracleSql)(org.json4s.DefaultFormats)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
 
@@ -99,10 +79,9 @@ object Verify {
     // performs) and leave the driver-shaped JSON BESIDE the dump and at
     // the repo root, so a driver that captures files rather than stdout
     // still finds a correctness artifact (the stdout capture produced
-    // empty CORRECTNESS_r8–r11). Disable with SPARK_GRAFT_ORACLE=0.
+    // empty CORRECTNESS_r8–r11).
     val script = new java.io.File("tools/local_verify.py")
-    if (only.isEmpty && script.exists &&
-        sys.env.getOrElse("SPARK_GRAFT_ORACLE", "1") != "0") {
+    if (args.length == 2 && script.exists) {
       val artifact = s"$outDir/CORRECTNESS.json"
       try {
         // a STALE artifact from a previous run in a reused outDir must

@@ -6,9 +6,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * (`Engine.session` sizes it) holds the working set of the benchmark's
   * entries, and no entry puts per-run state into its generated code.
   * Runs the 31 entries of the two benchmark workloads (26 scrape-floor,
-  * 5 iterative-build) as one pass, each through a `noop` write and then
-  * `Checkpoints.release()`, and the same pass again; the second pass
-  * must compile no class. A compile is one update of Spark's
+  * 5 iterative-build) as one pass, each through `SparkEntry.run` with a
+  * `noop` write (the runner then releases its cuts), and the same pass
+  * again; the second pass must compile no class. A compile is one update of Spark's
   * compilation-time histogram, counted on the driver and the executor
   * threads alike, so one new class counts twice (one per class loader). */
 class CodegenReuseSpec extends SparkTestBase {
@@ -46,8 +46,8 @@ class CodegenReuseSpec extends SparkTestBase {
   /** One pass; the classes each entry compiled. */
   private def pass(): Seq[(String, Long)] = (scrapeFloor ++ iterativeBuild).map { name =>
     val before = compiles
-    try SparkEntry.queries(name)(spark, sf).write.mode("overwrite").format("noop").save()
-    finally Checkpoints.release()
+    SparkEntry.run(spark, sf, name -> SparkEntry.queries(name))(
+      _.write.mode("overwrite").format("noop").save()).get
     name -> (compiles - before)
   }
 

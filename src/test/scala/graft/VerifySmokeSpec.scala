@@ -41,21 +41,25 @@ class VerifySmokeSpec extends SparkTestBase {
     "dedup_bloom_prefilter",        // cross-corpus key-overlap fixture
     "tsdb_ooo_ingest")              // 1h OOO admission window
 
+  /** the oracle gate scale, next to the test scale */
+  private val gateSf = new java.io.File(sf).getParent + "/sf0.01"
+
   test("threshold-sensitive sample is non-empty with one schema at sf0.001 AND sf0.01") {
     val missing = sample.filterNot(SparkEntry.queries.contains)
     assert(missing.isEmpty, s"sample names drifted from the registry: $missing")
-    val failures = sample.flatMap { name =>
-      try {
-        val a = SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-        val b = SparkEntry.queries(name)(spark, "/root/testdata/sf0.01")
-        val sa = a.schema.map(f => (f.name, f.dataType.simpleString))
-        val sb = b.schema.map(f => (f.name, f.dataType.simpleString))
-        val na = a.count(); val nb = b.count()
-        (if (sa != sb) Seq(s"$name: schema forked across SFs: $sa vs $sb") else Nil) ++
-          (if (na == 0) Seq(s"$name: EMPTY at sf0.001") else Nil) ++
-          (if (nb == 0) Seq(s"$name: EMPTY at sf0.01") else Nil)
-      } catch {
-        case e: Throwable => Seq(s"$name: threw ${e.getClass.getSimpleName}: ${e.getMessage}")
+    def shapeAndCount(entry: (String, SparkEntry.Query), sfDir: String) =
+      SparkEntry.run(spark, sfDir, entry) { df =>
+        (df.schema.map(f => (f.name, f.dataType.simpleString)), df.count())
+      }.result
+    val failures = SparkEntry.pick(sample).flatMap { entry =>
+      val name = entry._1
+      (shapeAndCount(entry, sf), shapeAndCount(entry, gateSf)) match {
+        case (Right((sa, na)), Right((sb, nb))) =>
+          (if (sa != sb) Seq(s"$name: schema forked across SFs: $sa vs $sb") else Nil) ++
+            (if (na == 0) Seq(s"$name: EMPTY at sf0.001") else Nil) ++
+            (if (nb == 0) Seq(s"$name: EMPTY at sf0.01") else Nil)
+        case (a, b) => Seq(a, b).flatMap(_.left.toOption).take(1)
+          .map(e => s"$name: threw ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
