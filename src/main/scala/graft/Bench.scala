@@ -18,19 +18,18 @@ object Bench {
     val spark = Engine.session()
 
     // untimed warmup: JIT/codegen spin-up + parquet footer reads, so the
-    // alphabetically-first query doesn't absorb session start-up cost
+    // alphabetically-first query doesn't absorb session start-up cost.
+    // Through the loaders, so each table's schema is inferred here once
+    // (the `Tables` memo) and no timed entry pays an inference job.
+    import graft.sources.Tables
     spark.range(1000).selectExpr("sum(id)").collect()
-    Seq("lineitem", "orders", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count() catch { case _: Throwable => () }
-    }
-    // events needs the nanos-aware loader — a raw read aborts its job
-    // and litters the log with task errors
-    try graft.sources.Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+    Seq(Tables.lineitem _, Tables.orders _, Tables.documents _, Tables.embeddings _, Tables.events _)
+      .foreach { t => try t(spark, sfDir).count() catch { case _: Throwable => () } }
     // warm the tokenize→shingle→hash pipeline (JIT + codegen): the
     // dedup family's first query otherwise pays ~6s of compilation
     try {
       import org.apache.spark.sql.functions.{col, explode, expr, md5}
-      spark.read.parquet(s"$sfDir/documents.parquet").limit(300)
+      Tables.documents(spark, sfDir).limit(300)
         .select(expr(graft.operators.TextAnalysis.toksExpr).as("toks"))
         .select(graft.functions.TextUdfs.shingle3(col("toks")).as("sh"))
         .select(explode(col("sh")).as("s")).select(md5(col("s")).as("h"))
@@ -62,16 +61,37 @@ object Bench {
       def name: String = o.name
       def sec: Double = if (o.failed) -1.0 else o.seconds
     }
+    // Spark jobs per entry: a job carries the local property `EntryKey`
+    // of the thread that started it (worker threads inherit it), so every
+    // job of an entry's construction plus action counts toward that entry
+    val EntryKey = "graft.bench.entry"
+    val jobCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(EntryKey)))
+          .foreach(jobCounts.merge(_, 1L, (a, b) => a + b))
+    })
     // timed: construction plus the noop save; the runner releases the
     // entry's cut blocks after the clock is read
     val results = picked.map { entry =>
       val gc0 = gcMs
       val (cg0, cgNs0) = (codegenN, CodeGenerator.compileTime)
+      spark.sparkContext.setLocalProperty(EntryKey, entry._1)
       val o = SparkEntry.run(spark, sfDir, entry)(_.write.mode("overwrite").format("noop").save())
+      spark.sparkContext.setLocalProperty(EntryKey, null)
       o.reportFailure("bench")
       Run(o, osBean.getSystemLoadAverage, gcMs - gc0,
         codegenN - cg0, CodeGenerator.compileTime - cgNs0)
     }
+    // the listener bus delivers in order: once a marked job is seen, every
+    // entry's jobs have been counted
+    val drained = " drained"
+    spark.sparkContext.setLocalProperty(EntryKey, drained)
+    spark.range(1).collect()
+    spark.sparkContext.setLocalProperty(EntryKey, null)
+    val deadline = System.nanoTime() + 30e9.toLong
+    while (!jobCounts.containsKey(drained) && System.nanoTime() < deadline) Thread.sleep(5)
+    def jobs(name: String): Long = jobCounts.getOrDefault(name, 0L)
     // Locale.ROOT: a comma-decimal default locale would emit unparseable JSON
     def num(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val qs = results
@@ -82,7 +102,8 @@ object Bench {
     // rows of context)
     val ctx = results
       .map(r => "\"" + r.name + "\":{\"load\":" + num(r.load) + ",\"gc_ms\":" + r.gcMs +
-        ",\"codegen_n\":" + r.codegenN + ",\"codegen_ms\":" + num(r.codegenNs / 1e6) + "}")
+        ",\"codegen_n\":" + r.codegenN + ",\"codegen_ms\":" + num(r.codegenNs / 1e6) +
+        ",\"jobs\":" + jobs(r.name) + "}")
       .mkString("{", ",", "}")
     val loads = results.map(_.load).filter(_ >= 0)
     val loadMax = if (loads.isEmpty) -1.0 else loads.max
@@ -121,10 +142,11 @@ object Bench {
       .mkString("{", ",", "}")
     println(s"""{"metric":"family_subtotals","families":$famJson,"sf":"$sfDir"}""")
     val hostFields = s""""cpus":${Engine.cpus},"load_max":${num(loadMax)},"load_mean":${num(loadMean)},"gc_total_s":${num(gcTotalS)}"""
-    // the compact line keeps its host fields; the run's compile total is
-    // in the full file only
+    // the compact line keeps its host fields; the run's compile and job
+    // totals are in the full file only
     val hostJson = s"{$hostFields}"
-    val json = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"ctx":$ctx,"host":{$hostFields,"codegen_s":${num(codegenS)}},"families":$famJson,"failed":$failedJson,"n_failed":${failed.size},"sf":"$sfDir"}"""
+    val jobsTotal = results.map(r => jobs(r.name)).sum
+    val json = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"ctx":$ctx,"host":{$hostFields,"codegen_s":${num(codegenS)},"jobs":$jobsTotal},"families":$famJson,"failed":$failedJson,"n_failed":${failed.size},"sf":"$sfDir"}"""
     println(json)
     // the sbt log tail can truncate the (long) JSON line — also land it
     // in a file so per-query numbers survive regardless of log capture,

@@ -88,11 +88,10 @@ object Verify {
         // never masquerade as this run's attestation: only a file the
         // mirror writes NOW may be published
         Files.deleteIfExists(Paths.get(artifact))
-        // 16 compare workers (32 cores available): headroom against the
-        // 15-min hard cap as the surface grows ~40 entries/round — r12
-        // ran ~6 min at 8 jobs/442 entries, r13 targets ≤8 min at 480+
+        // one compare worker per core: more only fight over the same
+        // CPUs, fewer leave cores idle under the 15-min hard cap
         val pb = new ProcessBuilder("python3", script.getPath,
-          "--json", artifact, "--jobs", "16", sfDir, outDir)
+          "--json", artifact, "--jobs", Runtime.getRuntime.availableProcessors.toString, sfDir, outDir)
         pb.redirectErrorStream(true)
         val p = pb.start()
         // hard cap: the mirror must never hold the driver's Verify step

@@ -299,31 +299,6 @@ object EventsStream {
       .select(col("event_type"), col("w.start").as("day"), col("idx"), col("cnt"))
   }
 
-  /** The events schema as the streaming reader needs it, in the two
-    * driver testdata vintages (see `Tables.events`): ts as raw nanos
-    * (TIMESTAMP(NANOS) + nanosAsLong) or as TIMESTAMP_NTZ micros. */
-  private def rawSchema(tsType: org.apache.spark.sql.types.DataType): StructType =
-    StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", tsType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-
-  /** Streaming source over a parquet directory — vintage-adaptive like
-    * the batch loader (one footer probe picks the schema + conversion). */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsIsNanos = spark.read.parquet(dir).schema("ts").dataType == LongType
-    if (tsIsNanos)
-      spark.readStream.schema(rawSchema(LongType)).parquet(dir)
-        .withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else
-      spark.readStream.schema(rawSchema(TimestampNTZType)).parquet(dir)
-        .withColumn("ts", col("ts").cast("timestamp"))
-  }
-
   /** Watermarked hourly windowed aggregation — the streaming twin of
     * `eventsWindowBatch`. */
   def eventsWindowStream(events: DataFrame): DataFrame = {

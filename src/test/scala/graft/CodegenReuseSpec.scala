@@ -8,7 +8,8 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * Runs the 31 entries of the two benchmark workloads (26 scrape-floor,
   * 5 iterative-build) as one pass, each through `SparkEntry.run` with a
   * `noop` write (the runner then releases its cuts), and the same pass
-  * again; the second pass must compile no class. A compile is one update of Spark's
+  * again; the second pass must compile no class, and start no job
+  * outside a SQL execution (a schema inference). A compile is one update of Spark's
   * compilation-time histogram, counted on the driver and the executor
   * threads alike, so one new class counts twice (one per class loader). */
 class CodegenReuseSpec extends SparkTestBase {
@@ -51,11 +52,23 @@ class CodegenReuseSpec extends SparkTestBase {
     name -> (compiles - before)
   }
 
+  /** The cold pass, shared by the tests below: each then runs a warm one. */
+  private lazy val cold = pass()
+
   test("a warm pass over the benchmark entries compiles no generated class") {
-    val cold = pass()
     assert(cold.map(_._2).sum > 0, "the cold pass compiled nothing: is the counter live?")
     val over = pass().filter { case (name, n) => n > residual.getOrElse(name, 0) }
     assert(over.isEmpty, s"warm pass recompiled: ${over.map { case (n, c) => s"$n=$c" }.mkString(", ")}" +
       s" (cold pass: ${cold.map(_._2).sum} classes)")
+  }
+
+  /** A warm table read supplies its schema (the `Tables` memo), so the
+    * only jobs are the entries' SQL executions: a footer inference job
+    * runs outside any. */
+  test("a warm pass over the benchmark entries starts no job outside a SQL execution") {
+    cold
+    val (_, outside) = JobsOutsideSql(spark)(pass())
+    assert(outside.isEmpty, s"warm pass started ${outside.size} jobs outside a SQL execution: " +
+      outside.distinct.mkString(", "))
   }
 }

@@ -8,14 +8,19 @@ same parquet tables and compares with the Spark-side parquet dumps
 Usage: after `sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/gv"`:
     python3 tools/local_verify.py /root/testdata/sf0.01 /tmp/gv [name...]
     python3 tools/local_verify.py --json OUT.json SFDIR OUTDIR [name...]
-    python3 tools/local_verify.py --jobs 8 ...   # parallel compare
+    python3 tools/local_verify.py --jobs N ...   # N compare workers
 
 --json writes a machine-readable artifact in the driver's shape:
     {name: {rows_match, schema_match, hash_match, err}} — committed each
 round as CORRECTNESS_LOCAL_r{N}.json so the round carries a diffable
 correctness file even when the driver-side capture fails. graft.Verify
-invokes this script itself at the end of a full dump (--jobs 8), so the
-artifact also lands beside the dump without a separate manual step.
+invokes this script itself at the end of a full dump (--jobs = the host's
+available processors), so the artifact also lands beside the dump without
+a separate manual step.
+
+Under --jobs N, N worker processes take entries one at a time from one
+shared queue, each through its own DuckDB connection, so a costly entry
+holds up only its own worker.
 """
 import sys, os, json, glob
 import duckdb
@@ -98,11 +103,16 @@ def check_one(con, oracle, outdir, name):
                     "; ".join(mism[:3]) + (f" DTYPES {dt_mism}" if dt_mism else "")), True)
     return (name, f"✓ {name:34s} {len(g)} rows", rec(True, True, True), False)
 
-def run_chunk(args):
-    """Worker for --jobs: fresh connection per process, check a slice."""
-    sfdir, outdir, oracle, names, threads = args
-    con = connect(sfdir, threads)
-    return [check_one(con, oracle, outdir, n) for n in names]
+_worker = None
+
+def init_worker(sfdir, outdir, oracle, threads):
+    """Worker for --jobs: one connection per process, kept for its entries."""
+    global _worker
+    _worker = (connect(sfdir, threads), oracle, outdir)
+
+def check_queued(name):
+    con, oracle, outdir = _worker
+    return check_one(con, oracle, outdir, name)
 
 def main():
     argv = sys.argv[1:]
@@ -120,12 +130,10 @@ def main():
     names = sorted(n for n in os.listdir(outdir)
                    if os.path.isdir(os.path.join(outdir, n)) and (not only or n in only))
     if jobs > 1 and len(names) > 1:
-        from concurrent.futures import ProcessPoolExecutor
+        from multiprocessing import Pool
         per_worker = max(1, (os.cpu_count() or 8) // jobs)
-        chunks = [(sfdir, outdir, oracle, names[i::jobs], per_worker)
-                  for i in range(jobs)]
-        with ProcessPoolExecutor(max_workers=jobs) as ex:
-            results = [r for part in ex.map(run_chunk, chunks) for r in part]
+        with Pool(jobs, init_worker, (sfdir, outdir, oracle, per_worker)) as pool:
+            results = list(pool.imap_unordered(check_queued, names, chunksize=1))
         results.sort(key=lambda r: r[0])
     else:
         con = connect(sfdir)
