@@ -43,54 +43,6 @@ import org.apache.spark.sql.DataFrame
 object Checkpoints {
   val Flag = "spark.graft.reliableCheckpoints"
 
-  /** RDD ids of checkpoint cuts whose INPUT plan was provably bounded
-    * (every root→leaf path passes an aggregate / range spine / local
-    * data / another bounded cut). A checkpoint erases lineage — the
-    * scan it leaves behind looks corpus-sized to any plan audit — so
-    * the cut records boundedness HERE and PlanSpec's global-window
-    * sweep consults it instead of carrying per-entry exemptions for
-    * checkpoint-hidden aggregate barriers. Keyed by (applicationId,
-    * rddId), not the bare int: RDD ids are only unique per
-    * SparkContext, so after a context restart in the same JVM a stale
-    * bare id could mark an unbounded scan of the NEW context as
-    * bounded and silently weaken the plan lint. Growth is one entry
-    * per cut of a bounded frame. */
-  private val boundedRdds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Int)]()
-
-  /** Is this RDD the materialization of a provably bounded frame? The
-    * application id comes from the RDD's OWN SparkContext — never from
-    * a thread-local active/default-session lookup, which is unset on
-    * pool threads (the r14 ADVICE finding: a "" key there silently
-    * missed recorded cuts and produced a conservative-but-confusing
-    * false lint failure). */
-  def isBoundedRdd(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
-    boundedRdds.contains((rdd.context.applicationId, rdd.id))
-
-  private def boundedLogical(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    p match {
-      case _: Aggregate => true
-      case _: Range => true
-      case _: LocalRelation => true
-      case _: GlobalLimit => true
-      case lr: org.apache.spark.sql.execution.LogicalRDD => isBoundedRdd(lr.rdd)
-      case leaf if leaf.children.isEmpty => false
-      case other => other.children.forall(boundedLogical)
-    }
-  }
-
-  private def recordIfBounded(in: DataFrame, out: DataFrame): DataFrame = {
-    if (boundedLogical(in.queryExecution.analyzed))
-      out.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          boundedRdds.add((in.sparkSession.sparkContext.applicationId, lr.rdd.id)); ()
-        case _ => ()
-      }
-    out
-  }
-
   /** Per-thread ledger of the cut RDDs an entry created, so the entry
     * runner can release their localCheckpoint blocks once the entry's
     * action completes (VERDICT r15 item 4: nothing unpersisted the cut
@@ -142,7 +94,7 @@ object Checkpoints {
     val ss = df.sparkSession
     val reliable = ss.conf.get(Flag, "false").toBoolean &&
       ss.sparkContext.getCheckpointDir.isDefined
-    trackCut(recordIfBounded(df, if (reliable) df.checkpoint() else df.localCheckpoint()))
+    trackCut(if (reliable) df.checkpoint() else df.localCheckpoint())
   }
 
   /** LAZY lineage cut for in-loop frontiers: the Catalyst plan is cut
@@ -159,7 +111,6 @@ object Checkpoints {
     val ss = df.sparkSession
     val reliable = ss.conf.get(Flag, "false").toBoolean &&
       ss.sparkContext.getCheckpointDir.isDefined
-    trackCut(recordIfBounded(df,
-      if (reliable) df.checkpoint() else df.localCheckpoint(eager = false)))
+    trackCut(if (reliable) df.checkpoint() else df.localCheckpoint(eager = false))
   }
 }

@@ -56,12 +56,13 @@ object Engine {
 
   /** Drop the `WindowExec: No Partition Defined` warning category for
     * every session `session` builds: the unpartitioned frames in
-    * this library are registry/model-sized BY DESIGN and each one is
-    * certified bounded by PlanSweepSpec's global-window lint — but a
-    * full Verify run emitted hundreds of these lines, burying the real
-    * `[verify] … failed` signal (r14 verdict nit). Scoped to the one
-    * logger category; every other WARN still prints. Idempotent: only
-    * the first call adds the filters. */
+    * this library are registry/model-sized BY DESIGN and each one over
+    * a scan carries its written bound in PlanSnapshotSpec's
+    * `declaredBounded` window lint — but a full Verify run emitted
+    * hundreds of these lines, burying the real `[verify] … failed`
+    * signal (r14 verdict nit). Scoped to the one logger category;
+    * every other WARN still prints. Idempotent: only the first call
+    * adds the filters. */
   def quietBoundedWindowWarnings(): Unit = quiet
 
   private lazy val quiet: Unit = {

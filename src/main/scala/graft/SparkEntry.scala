@@ -6,8 +6,9 @@ import graft.operators._
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory. */
 object SparkEntry {
 
-  /** All operator entries: (name, query, optional DuckDB oracle SQL). */
-  private def all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =
+  /** All operator entries: (name, query, optional DuckDB oracle SQL),
+    * built once. */
+  private val all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =
     Tpch.entries ++ Tpch2.entries ++ Tpch3.entries ++ Scrapers.entries ++ PromWire.entries ++ PromPush.entries ++ graft.sources.SourceRegistry.entries ++
       graft.sources.Writers.entries ++
       TextAnalysis.entries ++ Dedup.entries ++ Cluster.entries ++ Similarity.entries ++ Multimodal.entries ++
@@ -22,12 +23,12 @@ object SparkEntry {
     Tpch.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map { case (n, f, _) => n -> f }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
+  val oracleSql: Map[String, String] =
     all.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 
   type Query = (SparkSession, String) => DataFrame

@@ -77,7 +77,7 @@ object Graph {
     val deg = cut(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       .withColumnRenamed("src", "dnode"))
     val n = deg.count() // every node in this graph has an out-edge
-    val r0 = Base / n
+    val r0 = if (n == 0) 0L else Base / n // an empty graph ranks no node
     val teleport = (15L * r0) / 100L
     // Round shape (the r15 rework of the r14 38.8 s sf3 reading —
     // measured phase-by-phase: the old pre-joined eDeg table cost
@@ -678,8 +678,7 @@ object Graph {
     // once in place (one single-partition pass over |side| rows, the
     // same data movement the broadcast build paid), so each round
     // drops two blocking broadcast exchanges and the raw aggregate is
-    // no longer read twice. The frame is aggregate output — exactly
-    // the bounded-barrier class the global-window plan lint admits —
+    // no longer read twice. The frame is node-sized aggregate output,
     // and the shape now matches the SQL oracle's own `sum(raw) OVER ()`.
     def rescale(df: DataFrame, node: String): DataFrame =
       df.select(col(node).as("node"),
@@ -694,7 +693,7 @@ object Graph {
     def small(df: DataFrame, n: Long): DataFrame =
       if (n <= RankBroadcastMax) broadcast(df) else df
     var h = pairs.select(col("hub")).distinct()
-      .select(col("hub").as("node"), lit(Base / nHubs).as("r"))
+      .select(col("hub").as("node"), lit(if (nHubs == 0) 0L else Base / nHubs).as("r"))
     var a: DataFrame = null
     for (_ <- 1 to HitsIters) {
       // cutLazy() each RAW aggregate: the window rescale reads it once,

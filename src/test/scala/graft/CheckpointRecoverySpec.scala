@@ -76,4 +76,15 @@ class CheckpointRecoverySpec extends SparkTestBase {
       }
     } finally PoisonGuard.armed = false
   }
+
+  // the next two tests run in order on one thread: the first leaves a
+  // cut in the ledger, the second sees it released by SparkTestBase
+  test("a test may leave its cuts unreleased") {
+    Checkpoints.cut(spark.range(10).toDF("id"))
+    assert(Checkpoints.liveCutCount > 0)
+  }
+
+  test("the cuts a test left are released after it") {
+    assert(Checkpoints.liveCutCount == 0)
+  }
 }

@@ -24,6 +24,18 @@ class GraphSpec extends SparkTestBase {
     df.unpersist()
   }
 
+  test("pagerank and hits return their columns and no rows on an empty graph") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_graph").toString
+    for (t <- Seq("orders", "lineitem"))
+      spark.read.parquet(s"$sf/$t.parquet").limit(0).write.parquet(s"$dir/$t.parquet")
+    val columns = Map("graph_pagerank" -> Seq("node", "r"),
+      "graph_hits" -> Seq("side", "node_id", "score_fp", "rank"))
+    for (entry <- SparkEntry.pick(columns.keys.toSeq)) {
+      val o = SparkEntry.run(spark, dir, entry)(df => (df.columns.toSeq, df.count()))
+      assert(o.get == (columns(entry._1), 0L), entry._1)
+    }
+  }
+
   test("reliable-checkpoint mode: pagerank bit-identical under spark.graft.reliableCheckpoints") {
     val base = Graph.pagerank(spark, sf).orderBy("node").collect().map(r => (r.getString(0), r.getLong(1)))
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString

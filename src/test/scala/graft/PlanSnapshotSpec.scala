@@ -1,35 +1,41 @@
 package graft
 
-/** Plan-shape snapshot regression: EVERY entry appears in the
-  * checked-in ledger — either with a signature (exchange / broadcast /
-  * join / aggregate / scan counts at sf0.001) or as an explicit EXEMPT
-  * line carrying the reason it cannot be lazily planned. A change that
-  * silently adds a shuffle, drops a broadcast, or doubles a scan fails
-  * HERE with a diff, before it costs anything on a cluster; an entry
-  * missing from the ledger (new, renamed, or silently dropped) also
-  * fails. Regenerate intentionally with
-  * `GRAFT_REGEN_PLANS=1 sbt "testOnly graft.PlanSnapshotSpec"`. */
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.ExplainMode
+
+/** The plan lints: the promises SURVEY.md §5 makes about scale
+  * behavior, checked against every entry's plans in one sweep.
+  *
+  * Plan-shape snapshot: EVERY entry appears in the checked-in ledger —
+  * either with a signature (exchange / broadcast / join / aggregate /
+  * scan counts at sf0.001) or as an explicit EXEMPT line carrying the
+  * reason it cannot be lazily planned. A change that silently adds a
+  * shuffle, drops a broadcast, or doubles a scan fails HERE with a
+  * diff, before it costs anything on a cluster; an entry missing from
+  * the ledger (new, renamed, or silently dropped) also fails.
+  * Regenerate intentionally with
+  * `GRAFT_REGEN_PLANS=1 sbt "testOnly graft.PlanSnapshotSpec"`.
+  *
+  * Sweep: no entry may plan a CartesianProduct, broadcast-nested-loop
+  * joins are allowed only where the operator genuinely joins on a
+  * non-equi condition, no plan carries a ScalaUDF, and a partitionless
+  * window over a scan-reaching frame needs a written bound. */
 class PlanSnapshotSpec extends SparkTestBase {
 
   // entries whose CONSTRUCTION runs Spark jobs (model training, layout
-  // writes, eager checkpoints, driver-side bounds) — planning them here
-  // would execute those jobs; each carries the suite that pins its
-  // plan/behavior instead
+  // writes, iterative loops, driver-side bounds) are exercised by their
+  // own suites; each carries the suite that pins its plan/behavior
   private val skip = Map(
     "ann_ivf_topk" -> "construction trains the IVF codebook (runs jobs); SimilaritySpec",
     "ann_ivf_tuning" -> "construction trains the IVF codebook (runs jobs); SimilaritySpec",
-    "ann_ivf_stats" -> "construction trains the IVF codebook (runs jobs); SimilaritySpec",
     "ann_ivf_pq_topk" -> "construction trains IVF+PQ codebooks (runs jobs); SimilaritySpec",
     "ann_pq_topk" -> "construction trains the PQ codebook (runs jobs); SimilaritySpec",
     "ann_pq_packed" -> "construction trains the PQ codebook (runs jobs); SimilaritySpec",
     "dedup_semantic" -> "construction checkpoints the scaled-K assignment (runs jobs); Round10Spec",
     "emb_pca_power" -> "construction collects the bounded d-squared covariance model (runs jobs); Round10dSpec",
-    "dedup_embedding_cosine" -> "construction checkpoints the probe table (runs jobs); Round10Spec",
-    "ann_knn_graph_ivf" -> "construction checkpoints the IVF probe table (runs jobs); Round11bSpec",
-    "prom_wire_frame_v2" -> "construction checkpoints the shared family aggregate (runs jobs); Round11dSpec",
     "dedup_cluster" -> "iterative label propagation checkpoints each round; DedupSpec",
     "dedup_fuzzy_lsh" -> "construction checkpoints the LSH candidate pairs; DedupSpec",
-    "events_audience_minhash" -> "construction checkpoints the shared distinct audience set; Round11Spec",
     "q_exact_global_median" -> "construction runs the bucket-bounds pass; StatsSpec",
     "sketch_theta_distinct" -> "construction builds sketch aggregates (runs jobs); SketchSpec",
     "sketch_sample_quantile" -> "construction builds sketch aggregates (runs jobs); SketchSpec",
@@ -49,29 +55,51 @@ class PlanSnapshotSpec extends SparkTestBase {
     "idx_secondary_lookup" -> "construction builds the fact + index layouts; WritersSpec",
     "graph_pagerank" -> "iterative rank loop checkpoints each round; GraphSpec",
     "graph_kcore" -> "iterative peel loop checkpoints each round; GraphSpec",
-    "graph_hits" -> "iterative hub/auth loop checkpoints each round; GraphSpec",
-    "graph_communities_lpa" -> "iterative label loop checkpoints each round; GraphSpec",
-    "graph_bfs_distance" -> "iterative frontier loop checkpoints each round; GraphSpec")
+    "graph_hits" -> "iterative hub/auth loop checkpoints each round; GraphSpec")
 
   private val snapFile = new java.io.File("src/test/resources/plan_signatures.txt")
 
-  /** One analyzed+optimized QueryExecution per non-skip entry, shared by
-    * the signature snapshot and the window lint (planning 350+ entries
-    * twice would double the suite's dominant cost) — plus the number of
-    * lineage cuts each entry's CONSTRUCTION registered (r15 ADVICE: cuts
-    * hide their input plan behind a LogicalRDD, so the scan counter
-    * alone can't see an extra derivation introduced upstream of a cut;
-    * the cut count pins that dimension). */
-  private lazy val (qes, cutCounts): (Map[String, org.apache.spark.sql.execution.QueryExecution], Map[String, Int]) = {
-    val qm = Map.newBuilder[String, org.apache.spark.sql.execution.QueryExecution]
-    val cm = Map.newBuilder[String, Int]
-    for (n <- SparkEntry.queries.keys.toSeq.sorted.filterNot(skip.contains)) {
-      val before = Checkpoints.liveCutCount
-      qm += n -> SparkEntry.queries(n)(spark, sf).queryExecution
-      cm += n -> (Checkpoints.liveCutCount - before)
-    }
-    (qm.result(), cm.result())
+  /** What the lints read of one entry's plans (the QueryExecution is
+    * not kept): its signature with the number of lineage cuts its
+    * construction registered (cuts hide their input plan behind a
+    * LogicalRDD, so the scan counter alone can't see an extra
+    * derivation upstream of a cut; the cut count pins that dimension),
+    * the product-join / UDF checks, and its count of partitionless
+    * windows over scan-reaching frames. */
+  private final case class Planned(sig: String, cartesian: Boolean, bnlj: Boolean,
+      udf: Boolean, globalWindows: Int)
+
+  /** Does some root→leaf path under `x` reach a scan without a bounded
+    * barrier (limit, generated/local data, a one-row aggregate)? */
+  private def corpusLeafBeneath(x: LogicalPlan): Boolean = x match {
+    case _: GlobalLimit | _: LocalLimit => false
+    case _: Range | _: LocalRelation | _: OneRowRelation => false
+    case a: Aggregate if a.groupingExpressions.isEmpty => false // 1 row
+    case _: LeafNode => true
+    case other => other.children.exists(corpusLeafBeneath)
   }
+
+  private def lint(df: DataFrame): Planned = {
+    val qe = df.queryExecution
+    val p = qe.explainString(ExplainMode.fromString("formatted"))
+    Planned(
+      sig = sig(p) + s" cut=${Checkpoints.liveCutCount}",
+      cartesian = p.contains("CartesianProduct"),
+      bnlj = p.contains("BroadcastNestedLoopJoin"),
+      // the whole surface is UDF-free: the dedup kernels are codegen
+      // Catalyst expressions (graft_shingle3/graft_pairs/graft_simhash),
+      // so any ScalaUDF appearing in a plan is an optimizer black box
+      udf = p.contains("ScalaUDF") || p.toLowerCase.contains("udf("),
+      globalWindows = qe.optimizedPlan.collect {
+        case w: Window if w.partitionSpec.isEmpty && corpusLeafBeneath(w.child) => w
+      }.size)
+  }
+
+  /** Every entry outside `skip`, constructed once through the entry
+    * runner, which releases its cuts after the lint has counted them. */
+  private lazy val planned: Map[String, Planned] =
+    SparkEntry.pick(Nil).filterNot(e => skip.contains(e._1))
+      .map(e => e._1 -> SparkEntry.run(spark, sf, e)(lint).get).toMap
 
   /** Count physical nodes via the formatted plan's detail section,
     * where each node appears exactly once as "(n) NodeName". */
@@ -94,12 +122,7 @@ class PlanSnapshotSpec extends SparkTestBase {
 
   private def current(): Seq[(String, String)] =
     SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      skip.get(name) match {
-        case Some(reason) => name -> s"EXEMPT: $reason"
-        case None => name -> (sig(qes(name).explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-          + s" cut=${cutCounts(name)}")
-      }
+      name -> skip.get(name).fold(planned(name).sig)(reason => s"EXEMPT: $reason")
     }
 
   test("physical plan signatures match the checked-in snapshot") {
@@ -125,6 +148,104 @@ class PlanSnapshotSpec extends SparkTestBase {
         .toSeq.sorted.map(n => s"$n: entry removed (regenerate snapshot)")
       assert(diffs.isEmpty, diffs.mkString("\n"))
     }
+  }
+
+  // ------------------------------------------------ product joins and UDFs
+
+  // entries allowed a BroadcastNestedLoopJoin, each with its reason: a
+  // regression that silently turns an equi-join into a product join
+  // fails the sweep before it burns a cluster
+  private val bnljAllowed = Set(
+    "ann_bruteforce_topk", "ann_lsh_topk", "ann_range_search", // query != candidate non-equi pairing
+    "emb_matryoshka_truncate", // same bounded-query != candidate pairing (8-row broadcast)
+    "prom_wire_frame_v2", // 1-row series-frames × 1-row symbol-tail assembly
+    "q_skew_salted_join",                  // salt-range replication broadcast
+    "q15_top_supplier", "q22_idle_customers", "q17_small_qty_revenue",
+    "metrics_slave_status", "metrics_gap_fill", // single-row global-bound broadcast
+    "metrics_absent", "model_registry_score",   // same single-row bounds broadcast
+    "sketch_heavy_hitters", // single-row candidate-set broadcast
+    "dedup_embedding_cosine", "dedup_simhash", "dedup_minhash_lsh", "dedup_ngram_jaccard",
+    // r14 pair-budget family: 1-row volume-adaptive keep_ppm cutoff broadcast
+    "dedup_containment", "dedup_minhash_calibration", "dedup_lsh_recall",
+    "dedup_pair_budget_audit", // the audit row IS three 1-row broadcasts
+    "sketch_bloom_fpp", // 1-row bits-count + fp-count broadcasts
+    // single-row broadcast crossJoins: percentile bounds / totals /
+    // split midpoints / n_min rate tables — 1 row × fact, never fact²
+    "q_rfm_segments", "q_equidepth_histogram", "q_basket_pairs", "q_time_to_convert",
+    "dq_drift_psi", "events_pareto_share", "events_stickiness", "sample_class_balanced",
+    "text_bigram_lm", "metrics_dow_baseline", "metrics_alert_feed",
+    "q_interval_overlap_join", "q_purchase_intervals",
+    // round-5 single-row broadcasts: global horizon / corpus totals
+    "metrics_staleness", "text_length_survival", "text_zipf_profile",
+    "split_kfold", "ann_ivf_stats", "text_keywords",
+    "ann_hybrid_rrf", "cohort_survival_km", "mix_budget_apportion",
+    // round-7: bounded |chunks|×|windows| state-liveness range join;
+    // 9-row aspect-ladder + single-row total broadcasts
+    "stream_state_metrics", "mm_aspect_bucket", "cohort_rfm_migration",
+    "split_leakage_audit", // inherits dedup_minhash_lsh's allowed shape
+    "q11_important_stock", // Q11 HAVING: single-row nation-total broadcast
+    "ann_recall_eval", // composes the two allowed ANN arms (truth + LSH)
+    // round-8 single-row broadcasts: decile bounds / bigram totals /
+    // max doc id / KS arm totals
+    "q_decile_lift", "text_ngram_coverage", "text_vocab_growth", "q_ks_test",
+    "graph_modularity", // single-row |E2| total broadcast
+    "scd2_bitemporal", // 3-row probe grid + 1-row txn-cutoff broadcast
+    "dedup_lsh_tuning", // per-config 1-row count aggregates broadcast
+    "dq_freshness_sla", // 1-row reference-clock broadcast
+    "events_cooccur_pmi", // 1-row context-total broadcast
+    "q_lorenz_curve",     // 10-row decile-grid broadcast against per-nation ranks
+    // round-8 session 3: 1-row bounds/total broadcasts and non-equi
+    // bounded pairings (query≠candidate, type_a<type_b)
+    "ann_sq8_topk",       // 1-row min/max model + 8-query code broadcast
+    "q_welch_ttest",      // |types|² pair join on a groups-sized aggregate
+    "sample_neyman",      // 1-row budget-total broadcast
+    "prom_scrape_health", // 1-row global-hour-bounds broadcast (gap_fill shape)
+    // round-12 session 2: 1-row bounds broadcasts — feed start (silences),
+    // newest-sample boundary (retention), corpus start (tombstones),
+    // now-instant (the PromQlFns instant vector × 3 consumers)
+    "alert_silence_match", "tsdb_retention", "tsdb_tombstones",
+    "prom_clamp", "prom_label_join", "prom_group_stdvar",
+    "model_calibration", // 1-row split-day + 1-row ECE broadcast
+    "tsdb_postings_index", // 1-row series-universe total broadcast
+    "mix_doremi_step", // 1-row loss-bounds + 1-row term-total broadcast
+    "ann_binary_quant_recall", // 8-query != candidate non-equi pairing (bruteforce shape)
+    "prom_quantile_aggregator", // instant vector's 1-row now-bound broadcast
+    // round-13: API envelope family rides the same instant vector
+    "prom_api_query_json", "prom_api_series_json", "prom_api_label_values_json",
+    // round-14: labels + error envelope ride the same instant vector
+    "prom_api_labels_json", "prom_api_error_json",
+    "prom_api_targets_json", // 1-row newest-bound broadcast (staleness rule)
+    "alert_flap_detect", // |identities| × |cells| analysis-plane spine cross
+    "prom_absent_over_time", // |series| × |steps| spine cross (flap_detect shape)
+    "q_levene_bf",           // 1-row per-group-medians broadcast
+    "text_term_burstiness",  // 1-row corpus-doc-count broadcast onto the top-20 head
+    "model_precision_recall", // 9-threshold spine >= probe of the cents histogram
+    "curate_dedup_mix_shift", // 1-row corpus-totals broadcast
+    "split_grouped",      // 1-row leaked-source-count broadcast
+    "sink_manifest_prune", // 1-row predicate-bounds broadcast
+    "ann_mips_topk",       // query≠candidate non-equi pairing (bruteforce shape)
+    // round-12 single-row broadcasts
+    "prom_native_histogram_sum", // 1-row merged-mass total broadcast
+    "prom_subquery_max_rate",    // 1-row step-grid bounds broadcast (gap_fill shape)
+    "source_partition_bounds", // 1-row min/max/total bounds broadcast
+    "sessionize_otsu",     // 1-row histogram-total broadcast
+    "mix_kl_divergence",   // 1-row mixture-total broadcast
+    "q_abc_classification", // 1-row revenue-total broadcast
+    // round-10 single-row broadcasts
+    "text_bigram_lm_kn",   // 1-row bigram-type-count (nbb) broadcast
+    "prom_federate",       // 1-row scrape-horizon broadcast
+    "mix_dsir",            // 1-row model totals + selection threshold broadcasts
+    "split_dedup_aware",   // 1-row cross-split pair-count broadcast
+    "prom_api_buildinfo_json") // 1-row revision x 1-row build-date broadcast
+
+  test("sweep: no CartesianProduct; BNLJ only where intended; no ScalaUDF") {
+    val failures = planned.toSeq.sortBy(_._1).flatMap { case (name, p) =>
+      if (p.cartesian) Some(s"$name: CartesianProduct")
+      else if (p.bnlj && !bnljAllowed(name)) Some(s"$name: unexpected BroadcastNestedLoopJoin")
+      else if (p.udf) Some(s"$name: ScalaUDF in physical plan")
+      else None
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   // ------------------------------------------------ window-partition lint
@@ -155,6 +276,7 @@ class PlanSnapshotSpec extends SparkTestBase {
     "pack_curriculum" -> "token-share window over the 3-phase aggregate",
     "pack_shuffle_quality" -> "seam lag over per-bucket order endpoints — ≤256 md5-prefix buckets / |sources|",
     "prom_recording_rules" -> "6h rolling max over the hourly rollup — |hours| rows (time domain)",
+    "prom_wire_frame_v2" -> "symbol-ref row_number over the cut per-event-type family aggregate — |event types| rows",
     "q_abc_classification" -> "cross-cell carry over the ≤4097-cell revenue grid (two-level prefix sum)",
     "q_bootstrap_ci" -> "rank over the B=64 bootstrap replicate aggregate",
     "q_bh_fdr" -> "rank + step-up windows over the |types|×|dows| cell table",
@@ -186,21 +308,7 @@ class PlanSnapshotSpec extends SparkTestBase {
     "text_vocab_growth" -> "cumulative over the |VocabGrowthBuckets| bucket aggregate")
 
   test("unpartitioned windows run only over declared-bounded frames") {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    def corpusLeafBeneath(x: LogicalPlan): Boolean = x match {
-      case _: GlobalLimit | _: LocalLimit => false
-      case _: Range | _: LocalRelation | _: OneRowRelation => false
-      case a: Aggregate if a.groupingExpressions.isEmpty => false // 1 row
-      case l: LeafNode => true
-      case other => other.children.exists(corpusLeafBeneath)
-    }
-    val found = SparkEntry.queries.keys.toSeq.sorted.filterNot(skip.contains)
-      .flatMap { name =>
-        val n = qes(name).optimizedPlan.collect {
-          case w: Window if w.partitionSpec.isEmpty && corpusLeafBeneath(w.child) => w
-        }.size
-        if (n > 0) Some(name -> n) else None
-      }.toMap
+    val found = planned.collect { case (name, p) if p.globalWindows > 0 => name -> p.globalWindows }
     val undeclared = (found.keySet -- declaredBounded.keySet).toSeq.sorted
     val stale = (declaredBounded.keySet -- found.keySet).toSeq.sorted
     assert(undeclared.isEmpty,

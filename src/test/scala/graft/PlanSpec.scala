@@ -144,166 +144,9 @@ class PlanSpec extends SparkTestBase {
       p.contains("BroadcastHashJoin"), s"<=> must stay an equi-join:\n${p.take(1500)}")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"))
   }
-}
 
-
-/** Inventory-wide plan sweep: no entry may plan a CartesianProduct,
-  * and broadcast-nested-loop joins are allowed only where the operator
-  * genuinely joins on a non-equi condition (ANN query×corpus scoring,
-  * salt-range replication). A regression that silently turns an
-  * equi-join into a product join fails here before it burns a cluster. */
-class PlanSweepSpec extends SparkTestBase {
-
-  // entries whose construction runs jobs (iterative training / writes)
-  // are exercised by their own suites; the sweep covers the rest
-  private val skip = Set(
-    "ann_ivf_topk", "ann_ivf_tuning", "ann_pq_topk", "ann_pq_packed", "dedup_cluster",
-    "q_exact_global_median", "sketch_theta_distinct", "sketch_sample_quantile", "dedup_fuzzy_lsh",
-    "sink_bucketed_join", "sink_bucketed_multi", "sink_partitioned_scan",
-    "sink_compaction_scan", "sink_csv_roundtrip", "sink_json_roundtrip",
-    "sink_zorder_scan", "sink_bucket_lookup", "sink_partition_overwrite", "source_schema_evolution", "sink_merge_on_read", "idx_secondary_lookup", "graph_pagerank", "graph_kcore", "ann_ivf_pq_topk", "sketch_set_ops",
-    "ann_index_drift", // trains two codebooks at construction
-    "dedup_semantic",  // trains the shared IVF quantizer at construction
-    "emb_pca_power",   // collects the bounded d² covariance model at construction
-    "graph_hits",      // iterates with eager lineage cuts at construction
-    "sink_write_audit_publish") // stages + audits + publishes at construction
-
-  private val bnljAllowed = Set(
-    "ann_bruteforce_topk", "ann_lsh_topk", "ann_range_search", // query != candidate non-equi pairing
-    "emb_matryoshka_truncate", // same bounded-query != candidate pairing (8-row broadcast)
-    "prom_wire_frame_v2", // 1-row series-frames × 1-row symbol-tail assembly
-    "q_skew_salted_join",                  // salt-range replication broadcast
-    "q15_top_supplier", "q22_idle_customers", "q17_small_qty_revenue",
-    "metrics_slave_status", "metrics_gap_fill", // single-row global-bound broadcast
-    "metrics_absent", "model_registry_score",   // same single-row bounds broadcast
-    "sketch_heavy_hitters", // single-row candidate-set broadcast
-    "dedup_embedding_cosine", "dedup_simhash", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    // r14 pair-budget family: 1-row volume-adaptive keep_ppm cutoff broadcast
-    "dedup_containment", "dedup_minhash_calibration", "dedup_lsh_recall",
-    "dedup_pair_budget_audit", // the audit row IS three 1-row broadcasts
-    "sketch_bloom_fpp", // 1-row bits-count + fp-count broadcasts
-    // single-row broadcast crossJoins: percentile bounds / totals /
-    // split midpoints / n_min rate tables — 1 row × fact, never fact²
-    "q_rfm_segments", "q_equidepth_histogram", "q_basket_pairs", "q_time_to_convert",
-    "dq_drift_psi", "events_pareto_share", "events_stickiness", "sample_class_balanced",
-    "text_bigram_lm", "metrics_dow_baseline", "metrics_alert_feed",
-    "q_interval_overlap_join", "q_purchase_intervals",
-    // round-5 single-row broadcasts: global horizon / corpus totals
-    "metrics_staleness", "text_length_survival", "text_zipf_profile",
-    "split_kfold", "ann_ivf_stats", "text_keywords",
-    "ann_hybrid_rrf", "cohort_survival_km", "mix_budget_apportion",
-    // round-7: bounded |chunks|×|windows| state-liveness range join;
-    // 9-row aspect-ladder + single-row total broadcasts
-    "stream_state_metrics", "mm_aspect_bucket", "cohort_rfm_migration",
-    "split_leakage_audit", // inherits dedup_minhash_lsh's allowed shape
-    "q11_important_stock", // Q11 HAVING: single-row nation-total broadcast
-    "ann_recall_eval", // composes the two allowed ANN arms (truth + LSH)
-    // round-8 single-row broadcasts: decile bounds / bigram totals /
-    // max doc id / KS arm totals
-    "q_decile_lift", "text_ngram_coverage", "text_vocab_growth", "q_ks_test",
-    "graph_modularity", // single-row |E2| total broadcast
-    "scd2_bitemporal", // 3-row probe grid + 1-row txn-cutoff broadcast
-    "dedup_lsh_tuning", // per-config 1-row count aggregates broadcast
-    "dq_freshness_sla", // 1-row reference-clock broadcast
-    "events_cooccur_pmi", // 1-row context-total broadcast
-    "q_lorenz_curve",     // 10-row decile-grid broadcast against per-nation ranks
-    // round-8 session 3: 1-row bounds/total broadcasts and non-equi
-    // bounded pairings (query≠candidate, type_a<type_b)
-    "ann_sq8_topk",       // 1-row min/max model + 8-query code broadcast
-    "q_welch_ttest",      // |types|² pair join on a groups-sized aggregate
-    "sample_neyman",      // 1-row budget-total broadcast
-    "prom_scrape_health", // 1-row global-hour-bounds broadcast (gap_fill shape)
-    // round-12 session 2: 1-row bounds broadcasts — feed start (silences),
-    // newest-sample boundary (retention), corpus start (tombstones),
-    // now-instant (the PromQlFns instant vector × 3 consumers)
-    "alert_silence_match", "tsdb_retention", "tsdb_tombstones",
-    "prom_clamp", "prom_label_join", "prom_group_stdvar",
-    "model_calibration", // 1-row split-day + 1-row ECE broadcast
-    "tsdb_postings_index", // 1-row series-universe total broadcast
-    "mix_doremi_step", // 1-row loss-bounds + 1-row term-total broadcast
-    "ann_binary_quant_recall", // 8-query != candidate non-equi pairing (bruteforce shape)
-    "prom_quantile_aggregator", // instant vector's 1-row now-bound broadcast
-    // round-13: API envelope family rides the same instant vector
-    "prom_api_query_json", "prom_api_series_json", "prom_api_label_values_json",
-    // round-14: labels + error envelope ride the same instant vector
-    "prom_api_labels_json", "prom_api_error_json",
-    "prom_api_targets_json", // 1-row newest-bound broadcast (staleness rule)
-    "alert_flap_detect", // |identities| × |cells| analysis-plane spine cross
-    "prom_absent_over_time", // |series| × |steps| spine cross (flap_detect shape)
-    "q_levene_bf",           // 1-row per-group-medians broadcast
-    "text_term_burstiness",  // 1-row corpus-doc-count broadcast onto the top-20 head
-    "model_precision_recall", // 9-threshold spine >= probe of the cents histogram
-    "curate_dedup_mix_shift", // 1-row corpus-totals broadcast
-    "split_grouped",      // 1-row leaked-source-count broadcast
-    "sink_manifest_prune", // 1-row predicate-bounds broadcast
-    "ann_mips_topk",       // query≠candidate non-equi pairing (bruteforce shape)
-    // round-12 single-row broadcasts
-    "prom_native_histogram_sum", // 1-row merged-mass total broadcast
-    "prom_subquery_max_rate",    // 1-row step-grid bounds broadcast (gap_fill shape)
-    "source_partition_bounds", // 1-row min/max/total bounds broadcast
-    "sessionize_otsu",     // 1-row histogram-total broadcast
-    "mix_kl_divergence",   // 1-row mixture-total broadcast
-    "q_abc_classification", // 1-row revenue-total broadcast
-    // round-10 single-row broadcasts
-    "text_bigram_lm_kn",   // 1-row bigram-type-count (nbb) broadcast
-    "prom_federate",       // 1-row scrape-horizon broadcast
-    "mix_dsir",            // 1-row model totals + selection threshold broadcasts
-    "split_dedup_aware",   // 1-row cross-split pair-count broadcast
-    "prom_api_buildinfo_json") // 1-row revision x 1-row build-date broadcast
-
-  // entries allowed a partitionless window over a NON-aggregate input,
-  // each with its one-line justification — everything else must derive
-  // a global window from a bounded barrier (aggregate / range spine /
-  // broadcast), or the sweep fails before a corpus-sized global window
-  // burns a cluster
-  // r13: the former two-entry exemption map (pack_shuffle_quality,
-  // prom_wire_frame_v2) is GONE — the lint now sees through checkpoint
-  // cuts via Checkpoints.isBoundedRdd (a cut of a bounded frame records
-  // its RDD id at cut time), so a checkpoint-hidden aggregate barrier
-  // no longer needs grandfathering and a future REAL corpus-sized
-  // global window cannot hide behind stale justification text.
-  private val globalWindowAllowed = Map.empty[String, String]
-
-  /** true iff some root→leaf path under `p` reaches a source scan with
-    * no bounded barrier (aggregate, generated spine, local/broadcast
-    * data, or a checkpoint cut of a provably bounded frame) in between
-    * — i.e. the node sees corpus-sized input. */
-  private def unboundedBelow(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
-    p match {
-      case _: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => false
-      case _: org.apache.spark.sql.execution.RangeExec => false
-      case _: org.apache.spark.sql.execution.LocalTableScanExec => false
-      case _: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => false
-      case r: org.apache.spark.sql.execution.RDDScanExec
-          if graft.Checkpoints.isBoundedRdd(r.rdd) => false
-      case leaf if leaf.children.isEmpty => true // file/rdd/memory scan
-      case other => other.children.exists(unboundedBelow)
-    }
-
-  test("sweep: no CartesianProduct; BNLJ and global windows only where intended; no ScalaUDF") {
-    val failures = SparkEntry.queries.keys.toSeq.sorted.filterNot(skip).flatMap { name =>
-      val qe = SparkEntry.queries(name)(spark, sf).queryExecution
-      val p = qe.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      val cart = p.contains("CartesianProduct")
-      val bnlj = p.contains("BroadcastNestedLoopJoin") && !bnljAllowed(name)
-      // the whole surface is UDF-free: the dedup kernels are codegen
-      // Catalyst expressions (graft_shingle3/graft_pairs/graft_simhash),
-      // so any ScalaUDF appearing in a plan is an optimizer black box
-      // someone snuck in — fail the sweep
-      val udf = p.contains("ScalaUDF") || p.toLowerCase.contains("udf(")
-      // partitionless windows single-thread their whole input: legal
-      // only over provably bounded frames (the WindowExec warning gate)
-      val badWindow = qe.sparkPlan.collect {
-        case w: org.apache.spark.sql.execution.window.WindowExec
-            if w.partitionSpec.isEmpty && unboundedBelow(w.child) => w
-      }.nonEmpty && !globalWindowAllowed.contains(name)
-      if (cart) Some(s"$name: CartesianProduct")
-      else if (bnlj) Some(s"$name: unexpected BroadcastNestedLoopJoin")
-      else if (udf) Some(s"$name: ScalaUDF in physical plan")
-      else if (badWindow) Some(s"$name: partitionless WindowExec over unbounded (corpus-sized) input")
-      else None
-    }
-    assert(failures.isEmpty, failures.mkString("\n"))
+  test("mm_aspect_bucket prunes the binary payload at the scan") {
+    val p = plan("mm_aspect_bucket")
+    assert(!p.contains("encode("), s"payload encode must be pruned:\n${p.take(2000)}")
   }
 }

@@ -505,7 +505,7 @@ class Round8Spec extends SparkTestBase {
   }
 
   test("dedup_semantic: cell pair join is a hash/merge equi-join, never a product") {
-    // the entry is skipped by PlanSweepSpec (quantizer training runs
+    // the entry is skipped by the plan sweep (quantizer training runs
     // jobs at construction), so its scale contract is pinned here: the
     // only nested-loop shape allowed is the K-row centroid broadcast;
     // the within-cell pair generation must ride the cell equi-join

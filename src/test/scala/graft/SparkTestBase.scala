@@ -1,12 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session (one per JVM — suites reuse it via getOrCreate). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = Engine.session(master = "local[4]", shufflePartitions = 4)
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Release the cuts a test's entries left on this thread, pass or
+    * fail, so cut blocks do not pile up in the shared session. */
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally Checkpoints.release()
 
   /** formatted physical plan of an entry, for plan-shape assertions */
   def plan(name: String): String =

@@ -11,7 +11,8 @@ Usage: after `sbt "runMain graft.Verify /root/testdata/sf0.01 /tmp/gv"`:
     python3 tools/local_verify.py --jobs N ...   # N compare workers
 
 --json writes a machine-readable artifact in the driver's shape:
-    {name: {rows_match, schema_match, hash_match, err}} — committed each
+    {name: {rows_match, schema_match, hash_match, err}}, plus each entry's
+compare seconds under "compare_s" — committed each
 round as CORRECTNESS_LOCAL_r{N}.json so the round carries a diffable
 correctness file even when the driver-side capture fails. graft.Verify
 invokes this script itself at the end of a full dump (--jobs = the host's
@@ -22,7 +23,7 @@ Under --jobs N, N worker processes take entries one at a time from one
 shared queue, each through its own DuckDB connection, so a costly entry
 holds up only its own worker.
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -110,9 +111,14 @@ def init_worker(sfdir, outdir, oracle, threads):
     global _worker
     _worker = (connect(sfdir, threads), oracle, outdir)
 
+def timed_check(con, oracle, outdir, name):
+    """check_one's tuple plus the compare's wall seconds."""
+    t0 = time.monotonic()
+    return check_one(con, oracle, outdir, name) + (time.monotonic() - t0,)
+
 def check_queued(name):
     con, oracle, outdir = _worker
-    return check_one(con, oracle, outdir, name)
+    return timed_check(con, oracle, outdir, name)
 
 def main():
     argv = sys.argv[1:]
@@ -137,21 +143,24 @@ def main():
         results.sort(key=lambda r: r[0])
     else:
         con = connect(sfdir)
-        results = [check_one(con, oracle, outdir, n) for n in names]
-    report = {}
+        results = [timed_check(con, oracle, outdir, n) for n in names]
+    report, seconds = {}, {}
     n_ok = n_bad = 0
-    for name, line, rec, bad in results:
+    for name, line, rec, bad, secs in results:
         print(line)
         report[name] = rec
+        seconds[name] = round(secs, 3)
         if rec["hash_match"] is True:
             n_ok += 1
         if bad:
             n_bad += 1
-    print(f"\n{n_ok} ok, {n_bad} bad")
+    slowest = sorted(seconds.items(), key=lambda kv: -kv[1])[:5]
+    print("\nslowest compares: " + ", ".join(f"{n} {s:.1f}s" for n, s in slowest))
+    print(f"{n_ok} ok, {n_bad} bad")
     if json_out:
         with open(json_out, "w") as f:
             json.dump({"sf_dir": sfdir, "n_ok": n_ok, "n_bad": n_bad,
-                       "queries": report}, f, indent=1, sort_keys=True)
+                       "queries": report, "compare_s": seconds}, f, indent=1, sort_keys=True)
         print(f"wrote {json_out}")
     sys.exit(1 if n_bad else 0)
 
