@@ -10,10 +10,8 @@ import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
   * hundreds of small sf0.01 queries is latency-bound on per-query plan/launch
   * overhead, not CPU, and had outgrown the driver's wall-clock budget
   * (two straight rounds of empty CORRECTNESS captures). Entries are
-  * independent single-shot DataFrame programs; the only cross-entry
-  * mutable state is the shared bucketed-lineitem layout
-  * (`sink_bucketed_join` drops + rebuilds the table that
-  * `sink_bucket_lookup` reads), so those run in one serial lane.
+  * independent single-shot DataFrame programs: no entry rewrites a table
+  * or path that another entry reads.
   *
   * Env knob: SPARK_GRAFT_CPUS (local[N], default 32; see
   * `Engine.session`). Extra args after (sfDir, outDir) restrict the
@@ -21,10 +19,6 @@ import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
   * unknown name exits 2. A full dump also runs the DuckDB oracle mirror.
   */
 object Verify {
-  /** Entries that mutate a layout another entry reads: never dump these
-    * concurrently with each other. */
-  private val SerialLane = Seq("sink_bucketed_join", "sink_bucket_lookup")
-
   /** Concurrent dump threads on the one session. */
   private val Threads = 8
 
@@ -51,14 +45,8 @@ object Verify {
       o.reportFailure("verify")
     }
 
-    val (serial, parallel) = picked.partition(e => SerialLane.contains(e._1))
     val pool = Executors.newFixedThreadPool(Threads)
-    // the serial lane is itself one task: its entries run in a fixed
-    // order relative to EACH OTHER, concurrently with everything else
-    if (serial.nonEmpty) pool.submit(new Runnable {
-      def run(): Unit = SerialLane.flatMap(n => serial.find(_._1 == n)).foreach(dump)
-    })
-    parallel.foreach { entry =>
+    picked.foreach { entry =>
       pool.submit(new Runnable { def run(): Unit = dump(entry) })
     }
     pool.shutdown()
@@ -93,27 +81,17 @@ object Verify {
         val pb = new ProcessBuilder("python3", script.getPath,
           "--json", artifact, "--jobs", Runtime.getRuntime.availableProcessors.toString, sfDir, outDir)
         pb.redirectErrorStream(true)
+        pb.redirectOutput(new java.io.File(s"$outDir/mirror.log"))
         val p = pb.start()
         // hard cap: the mirror must never hold the driver's Verify step
         // hostage — the dumps and oracle_sql.json are already on disk,
         // so a driver-side compare can still proceed without it. The
-        // drain is a DAEMON (orphaned compare workers can keep the pipe
-        // open past the kill — a blocked read must not pin the JVM),
-        // and the kill takes the whole process tree, not just the
-        // python parent.
-        val drain = new Thread(() => {
-          try Files.writeString(Paths.get(s"$outDir/mirror.log"),
-            new String(p.getInputStream.readAllBytes, "UTF-8"))
-          catch { case _: Throwable => () }
-        })
-        drain.setDaemon(true)
-        drain.start()
+        // kill takes the whole process tree, not just the python parent.
         val done = p.waitFor(15, TimeUnit.MINUTES)
         if (!done) {
           p.descendants().forEach(h => { h.destroyForcibly(); () })
           p.destroyForcibly()
         }
-        drain.join(10000)
         val out = scala.util.Try(
           Files.readString(Paths.get(s"$outDir/mirror.log"))).getOrElse("")
         val rc = if (done) p.exitValue() else -1

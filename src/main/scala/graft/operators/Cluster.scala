@@ -95,11 +95,14 @@ object Cluster {
   }
 
   /** DuckDB oracle: transitive closure by recursive CTE over the same
-    * pair graph (exact same minhash pipeline), min reachable id. */
+    * pair graph (exact same minhash pipeline), min reachable id. `pairs`
+    * and `bi` are MATERIALIZED here and in the two oracles below: DuckDB
+    * inlines a CTE at every reference, so each step of the recursive
+    * `walk` would otherwise re-run the whole minhash-LSH pipeline. */
   val dedupClusterSql: String = {
     val pairSql = Dedup.minhashLshSql
-    s"""WITH RECURSIVE pairs AS ($pairSql),
-         bi AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+    s"""WITH RECURSIVE pairs AS MATERIALIZED ($pairSql),
+         bi AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
                 UNION ALL SELECT doc_b AS u, doc_a AS v FROM pairs),
          walk(u, v) AS (
            SELECT u, v FROM bi
@@ -149,8 +152,8 @@ object Cluster {
 
   val splitDedupAwareSql: String = {
     val pairSql = Dedup.minhashLshSql
-    s"""WITH RECURSIVE pairs AS ($pairSql),
-         bi AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+    s"""WITH RECURSIVE pairs AS MATERIALIZED ($pairSql),
+         bi AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
                 UNION ALL SELECT doc_b AS u, doc_a AS v FROM pairs),
          walk(u, v) AS (
            SELECT u, v FROM bi
@@ -220,8 +223,8 @@ object Cluster {
   /** DuckDB oracle: same transitive closure, same ppm arithmetic. */
   val softWeightSql: String = {
     val pairSql = Dedup.minhashLshSql
-    s"""WITH RECURSIVE pairs AS ($pairSql),
-         bi AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+    s"""WITH RECURSIVE pairs AS MATERIALIZED ($pairSql),
+         bi AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
                 UNION ALL SELECT doc_b AS u, doc_a AS v FROM pairs),
          walk(u, v) AS (
            SELECT u, v FROM bi
@@ -259,7 +262,7 @@ object Cluster {
     * in the per-doc replica count. The result is a deterministic
     * COARSENING of `dedup_cluster` (every verified pair shares a band
     * bucket, so verified components never split across bucket
-    * components — Round15Spec proves the refinement on the corpus);
+    * components — ClusterSpec proves the refinement on the corpus);
     * the trade is precision: an unverified bucket collision can merge
     * two dissimilar docs, the documented reason the verified entry
     * exists. Same min-label components loop ([[ccLabels]]), same

@@ -356,6 +356,7 @@ object Funnel {
     }.toDF("channel", "p_conv_full", "p_conv_removed", "removal_effect", "attribution")
   }
 
+  /** DuckDB oracle; `p` is MATERIALIZED, else every unrolled iteration re-runs its window pass. */
   lazy val attributionMarkovSql: String = {
     val statesVals = AttrStates.map(s0 => s"('$s0')").mkString(", ")
     def arm(name: String, removed: Option[String]): String = {
@@ -402,7 +403,7 @@ object Funnel {
           WHERE rn_last = 1 AND event_type <> 'purchase'),
         c AS (SELECT f, t, count(*) AS n FROM trans GROUP BY 1, 2),
         tot AS (SELECT f, sum(n) AS tn FROM c GROUP BY 1),
-        p AS (SELECT c.f, c.t, (c.n * $AttrPScale) // tot.tn AS pfp
+        p AS MATERIALIZED (SELECT c.f, c.t, (c.n * $AttrPScale) // tot.tn AS pfp
               FROM c JOIN tot USING (f)),
         states(s) AS (VALUES $statesVals),
         $arms,

@@ -500,7 +500,7 @@ object PromWire {
     * distributed (projection over the aggregated family table); the
     * symbol table is label-cardinality-bounded; the single-request
     * gather at the end is the |series|-bounded string_agg a real
-    * sender does per request batch. Spec-side, Round11dSpec decodes
+    * sender does per request batch. Spec-side, PromWireSpec decodes
     * the body structurally (symbols → refs → labels) and round-trips
     * every series. */
   def wireFrameV2: Q = (s, d) => {

@@ -648,7 +648,7 @@ object Similarity {
     * 256 keeps every shipped SF single-shard (max label block: 63 at
     * sf0.001, 59 at sf0.01, 218 at sf0.1), so below the cap the result
     * is EXACTLY the uncapped in-block kNN — the same graph
-    * Round11bSpec's IVF-recall measurement uses as truth — and the
+    * SimilaritySpec's IVF-recall measurement uses as truth — and the
     * DuckDB oracle applies the identical hash rule at every scale. */
   val KnnGraphCap = 256
 
@@ -722,7 +722,7 @@ object Similarity {
     * pairs — the sf1 probe measures it at 6.3×, the suite's worst
     * ratio), this stays linear. Multi-probe duplicate pairs are
     * deduped by a (va, vb) max before the bounded `graft_topk`;
-    * Round11bSpec measures recall@k against the exact graph and pins
+    * SimilaritySpec measures recall@k against the exact graph and pins
     * the candidate discipline. Same scoring arithmetic as the exact
     * entry, so shared edges carry identical cosines. */
   def knnGraphIvf: Q = (s, d) => {
@@ -1450,7 +1450,7 @@ object Similarity {
     * certifies the whole search trajectory, not just the end state. */
   /** ann_graph_search's edge build, PRE-cut (src → dst at degree
     * [[GsK]]): the ann_knn_graph construction sharing knnGraph's cap
-    * key (same "knn:" salt → same shards). Exposed so Round13Spec can
+    * key (same "knn:" salt → same shards). Exposed so SimilaritySpec can
     * assert the (label, shard) equi-key on the edge plan — the eager
     * checkpoint cut inside [[graphSearch]] hides it from the entry's
     * own plan. */

@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *      semantics; the reference re-lists secrets every 15 min).
   *   3. SCRAPE, INCREMENTALLY — read each enrolled source through
   *      [[SourceRegistry.read]] with the ENGINE'S OWN scrape-query
-  *      templates ([[scrapeQueries]] — the reference exporters hardcode
+  *      templates ([[scrapersFor]] — the reference exporters hardcode
   *      a per-engine scraper list: mysql-exporter.go:12-48 global
   *      status/variables/processlist, postgres-exporter.go:1-34
   *      pg_stat_database, oracle-exporter.go:1-33 v$ views) and keep
@@ -159,13 +159,6 @@ object CollectorLoop {
       ScraperDef("v_sysstat", "oracledb_", "stat_name", "stat_value", "v_sysstat")),
     "derby" -> Seq(
       ScraperDef(ScrapeTable, "", "name", "val", ScrapeTable)))
-
-  /** ANSI rendering of every template — the historical map shape, kept
-    * for entries/specs that read the registry directly. */
-  val scrapeQueries: Map[String, Seq[(String, String)]] =
-    scraperDefs.map { case (eng, defs) =>
-      eng -> defs.map(sd => sd.family -> renderScraper(sd, AnsiDialect))
-    }
 
   /** Engine → its scraper list rendered for the connection's dialect;
     * `oracle-ee`/`custom-oracle-ee` route to the oracle set (same

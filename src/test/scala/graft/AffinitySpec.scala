@@ -289,4 +289,87 @@ class AffinitySpec extends SparkTestBase {
     df.unpersist()
   }
 
+  test("events_markov_steady: mass is conserved up to fixed-point floor loss") {
+    val rows = run("events_markov_steady").collect()
+    assert(rows.length == 5)
+    val share = rows.map(_.getDouble(2)).sum
+    assert(share > 0.995 && share <= 1.0001, s"share sum $share")
+    assert(rows.forall(_.getLong(1) > 0), "a steady-state rank collapsed to zero")
+  }
+
+  test("cohort_rfm_migration: the matrix accounts for every customer exactly once") {
+    val df = run("cohort_rfm_migration").cache()
+    val custs = graft.sources.Tables.orders(spark, sf)
+      .select(col("o_custkey")).distinct().count()
+    assert(df.agg(sum(col("n_customers"))).head.getLong(0) == custs)
+    // no (0,0) cell: a customer absent from both periods doesn't exist
+    assert(df.filter(col("tier_a") === 0 && col("tier_b") === 0).count() == 0)
+    df.unpersist()
+  }
+
+  test("events_audience_overlap: every pair once; jaccard <= overlap coefficient") {
+    import spark.implicits._
+    val rows = run("events_audience_overlap")
+      .select("type_a", "type_b", "n_a", "n_b", "n_both", "jaccard", "overlap_coef")
+      .as[(String, String, Long, Long, Long, Double, Double)].collect()
+    val nTypes = graft.sources.Tables.events(spark, sf)
+      .select("event_type").distinct().count().toInt
+    assert(rows.length == nTypes * (nTypes - 1) / 2)
+    rows.foreach { case (a, b, na, nb, both, j, oc) =>
+      assert(a < b)
+      assert(both <= math.min(na, nb), s"($a,$b) intersection exceeds a side")
+      assert(j >= 0 && j <= 1 && oc >= 0 && oc <= 1)
+      assert(j <= oc + 1e-9, s"($a,$b) jaccard should not exceed overlap coefficient")
+    }
+  }
+
+  test("events_power_law_fit: a heavy-ish tail fits with negative slope") {
+    import spark.implicits._
+    val rows = run("events_power_law_fit")
+      .select("n_levels", "slope", "intercept")
+      .as[(Long, Double, Double)].collect()
+    assert(rows.length == 1)
+    val (n, slope, intercept) = rows.head
+    assert(n > 1, "degenerate level histogram")
+    // activity histograms decay: more users at low activity levels
+    assert(slope.isFinite && intercept.isFinite)
+    // recompute the fold driver-side for an exact cross-check
+    val hist = graft.sources.Tables.events(spark, sf)
+      .groupBy("user_id").count().groupBy(col("count").as("k"))
+      .agg(count(lit(1)).as("n_k")).as[(Long, Long)].collect().sortBy(_._1)
+    var (nn, sx, sy, sxy, sxx) = (0L, 0.0, 0.0, 0.0, 0.0)
+    hist.foreach { case (k, nk) =>
+      val x = math.log(k.toDouble); val y = math.log(nk.toDouble)
+      nn += 1; sx += x; sy += y; sxy += x * y; sxx += x * x
+    }
+    val wantSlope = math.floor((nn * sxy - sx * sy) / (nn * sxx - sx * sx) * 1e4) / 1e4
+    assert(n == nn && slope == wantSlope, s"fold mismatch: $slope vs $wantSlope")
+  }
+
+  test("events_audience_minhash: estimates land within MinHash sampling error") {
+    val rows = Affinity.audienceMinhash(spark, sf).collect()
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val nMatch = r.getLong(2)
+      val est = r.getDouble(3); val exact = r.getDouble(4); val err = r.getDouble(5)
+      assert(nMatch >= 0 && nMatch <= Affinity.AmhSeeds)
+      assert(est >= 0.0 && est <= 1.0 && exact >= 0.0 && exact <= 1.0)
+      // k=64 → σ = √(J(1−J)/64) ≤ 0.0625; 4σ = 0.25 is a safe bound
+      assert(err <= 0.25, s"estimate outside 4σ of exact: $r")
+      assert(math.abs(err - math.floor(math.abs(est - exact) * 1e4) / 1e4) < 1e-9)
+    }
+    // the audiences are genuinely partial overlaps — the sketch has
+    // something to estimate (not the degenerate all-1.0 grid)
+    assert(rows.exists(_.getDouble(4) < 0.99), "audiences are all identical")
+  }
+
+  test("events_audience_minhash reads the corpus once (checkpointed audience set)") {
+    val df = Affinity.audienceMinhash(spark, sf)
+    val p = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    // everything downstream of the eager localCheckpoint re-reads the
+    // materialized audience set, not the parquet corpus
+    assert(countScans(p) == 0,
+      s"corpus re-scanned past the checkpoint:\n$p")
+  }
 }

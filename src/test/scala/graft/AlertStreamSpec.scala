@@ -62,4 +62,32 @@ class AlertStreamSpec extends SparkTestBase {
           s"diff=${want.keySet.intersect(got.keySet).filter(k => want(k) != got(k)).take(3).map(k => (k, want(k), got(k)))}")
     } finally q.stop()
   }
+
+  test("stream_group_wait: the pre-t0 straggler detector fires on a violating feed") {
+    import graft.streaming.AlertStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[AlertStream.AlertSample]
+    val q = AlertStream.groupWaitStream(input.toDS())
+      .writeStream.format("memory").queryName("gw_viol")
+      .outputMode(OutputMode.Append).start()
+    try {
+      // batch 1 pins t0 = 1000; batch 2 delivers an EARLIER alert
+      input.addData(AlertStream.AlertSample("a", 1000L, critical = false))
+      q.processAllAvailable()
+      input.addData(AlertStream.AlertSample("a", 900L, critical = false))
+      q.processAllAvailable()
+      // sentinel group pushes the watermark far past every slot
+      input.addData(AlertStream.AlertSample("__wm__", 100000L, critical = false))
+      q.processAllAvailable()
+      input.addData(AlertStream.AlertSample("__wm__", 200000L, critical = false))
+      q.processAllAvailable()
+      val rows = spark.table("gw_viol").collect().filter(_.getString(0) == "a")
+      assert(rows.nonEmpty, "violating group never flushed")
+      // the straggler landed in slot 0 under the SHIFTED grid — and the
+      // detector reports exactly one pre-t0 arrival instead of silence
+      assert(rows.forall(_.getLong(5) == 1L),
+        s"expected n_pre_t0 = 1 on every emission, got ${rows.mkString(",")}")
+    } finally q.stop()
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Protobuf.readVarint
 import graft.streaming.CollectorLoop
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -12,13 +13,6 @@ import org.apache.spark.sql.functions._
   * decodable snappy'd WriteRequest. */
 class CollectorLoopSpec extends SparkTestBase {
 
-  // minimal independent protobuf wire decoder (same approach as
-  // PromWireSpec: written against the public encoding spec)
-  private def readVarint(b: Array[Byte], p: Int): (Long, Int) = {
-    var x = 0L; var shift = 0; var i = p
-    while ({ val c = b(i); x |= (c & 0x7fL) << shift; shift += 7; i += 1; (c & 0x80) != 0 }) ()
-    (x, i)
-  }
   private def lenFields(b: Array[Byte], num: Int): Seq[Array[Byte]] = {
     var p = 0; val out = Seq.newBuilder[Array[Byte]]
     while (p < b.length) {

@@ -55,4 +55,22 @@ class HllStreamSpec extends SparkTestBase {
       assert(got == want, s"stream/batch fork: got=$got want=$want")
     } finally q.stop()
   }
+
+  test("hllStream default mode carries no exact truth set (O(registers) state)") {
+    import graft.streaming.HllStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[HllStream.HllInput]
+    val q = HllStream.hllStream(input.toDS()) // default: auditExact = false
+      .writeStream.format("memory").queryName("hll_r14_sink")
+      .outputMode(OutputMode.Update).start()
+    try {
+      input.addData(Seq(HllStream.HllInput("s1", 1L), HllStream.HllInput("s1", 2L)))
+      q.processAllAvailable()
+      val row = spark.table("hll_r14_sink").collect().head
+      assert(row.getLong(4) == -1L && row.getLong(5) == -1L,
+        "default mode must not report exact-distinct truth")
+      assert(row.getLong(3) > 0L, "the sketch estimate itself still works")
+    } finally q.stop()
+  }
 }

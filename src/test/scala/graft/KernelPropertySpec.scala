@@ -232,4 +232,54 @@ class KernelPropertySpec extends SparkTestBase {
       assert(got(cid) == ((d, n2)), s"case $cid: ${got(cid)} != ${(d, n2)}")
     }
   }
+
+  test("graft_lttb kernel picks the hand-computable points on a tiny series") {
+    import spark.implicits._
+    // 8 points, k=3 → first + 2 interior buckets + last.
+    // pts sorted by sec; values chosen so the largest-triangle pick is
+    // unambiguous: bucket 1 = secs 1..3, bucket 2 = secs 4..6 (anchor
+    // for b1 is b2's centroid; anchor for b2 is the final point).
+    val pts = Seq(
+      (0L, 0L, 10L), (1L, 1L, 10L), (2L, 2L, 90L), (3L, 3L, 10L),
+      (4L, 4L, 10L), (5L, 5L, 5L), (6L, 6L, 80L), (7L, 7L, 20L))
+    val df = pts.toDF("sec", "event_id", "v_c")
+      .agg(org.apache.spark.sql.functions.sort_array(
+        org.apache.spark.sql.functions.collect_list(
+          org.apache.spark.sql.functions.struct($"sec", $"event_id", $"v_c"))).as("pts"))
+      .selectExpr("inline(graft_lttb(pts, 3))")
+    val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // first and last always kept; sec=2 (v=90) dominates bucket 1.
+    // bucket 2 anchors on prev pick (2,90) and the final point (7,20):
+    // areas are |(2-7)(v-90) - (2-s)(20-90)| = 260 / 215 / 230 for
+    // s=4,5,6 — the deep DIP at (4,10) wins, not the (6,80) spike
+    // (largest-triangle, not largest-value)
+    assert(got == Seq((0L, 10L), (2L, 90L), (4L, 10L), (7L, 20L)), s"got $got")
+  }
+
+  test("graft_lttb output length is exact: first + ceil((n-2)/k) picks + last") {
+    import spark.implicits._
+    for (n <- Seq(3, 4, 7, 10, 23); k <- Seq(2, 3, 7)) {
+      val pts = (0 until n).map(i => (i.toLong, i.toLong, (i * 37 % 101).toLong))
+      val cnt = pts.toDF("sec", "event_id", "v_c")
+        .agg(org.apache.spark.sql.functions.sort_array(
+          org.apache.spark.sql.functions.collect_list(
+            org.apache.spark.sql.functions.struct($"sec", $"event_id", $"v_c"))).as("pts"))
+        .selectExpr(s"size(graft_lttb(pts, $k)) AS m")
+        .head().getInt(0)
+      assert(cnt == 2 + (n - 2 + k - 1) / k, s"n=$n k=$k -> $cnt")
+    }
+  }
+
+  test("graft_pairs: a block past 65536 ids fails loudly instead of mis-sizing") {
+    val big = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate(65537)(_.toLong.asInstanceOf[Any]))
+    val e = intercept[IllegalArgumentException] {
+      graft.functions.TextKernels.pairCombos(big)
+    }
+    assert(e.getMessage.contains("cap the block"))
+    // and the boundary below still sizes exactly
+    val ok = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate(200)(_.toLong.asInstanceOf[Any]))
+    assert(graft.functions.TextKernels.pairCombos(ok).numElements() == 200 * 199 / 2)
+  }
 }

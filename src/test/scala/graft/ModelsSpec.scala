@@ -46,4 +46,52 @@ class ModelsSpec extends SparkTestBase {
     assert(rows.forall(r => r._2 > 0))
     df.unpersist()
   }
+
+  test("model_precision_recall: recall is non-increasing and precision well-formed across thresholds") {
+    val rows = SparkEntry.queries("model_precision_recall")(spark, sf)
+      .orderBy("threshold_cents").collect()
+    assert(rows.length == graft.operators.Models.PrThresholds.size)
+    val recalls = rows.map(_.getAs[Long]("recall_x1e6")).toSeq
+    assert(recalls == recalls.sorted.reverse,
+      s"recall must fall as the threshold rises: $recalls")
+    rows.foreach { r =>
+      val p = r.getAs[Any]("precision_x1e6")
+      if (p != null) {
+        val pv = p.asInstanceOf[Long]
+        assert(pv >= 0L && pv <= 1000000L, s"precision out of range: $r")
+      }
+      assert(r.getAs[Long]("tp") + r.getAs[Long]("fn") ==
+        rows.head.getAs[Long]("tp") + rows.head.getAs[Long]("fn"),
+        "tp + fn must equal the positive total at every threshold")
+    }
+  }
+
+  test("model_auc_roc agrees with a brute-force pair count on a sample") {
+    import org.apache.spark.sql.functions._
+    val r = SparkEntry.queries("model_auc_roc")(spark, sf).head()
+    val auc = r.getAs[Long]("auc_x1e6")
+    assert(auc > 0L && auc < 1000000L)
+    // brute force on the small sf0.001 feed: P(pos > neg) + P(=)/2
+    val ev = graft.sources.Tables.events(spark, sf)
+      .select(floor(col("value") * 100).cast("long").as("c"),
+        (col("event_type") === "purchase").as("pos")).collect()
+    val pos = ev.filter(_.getBoolean(1)).map(_.getLong(0))
+    val neg = ev.filterNot(_.getBoolean(1)).map(_.getLong(0))
+    val negSorted = neg.sorted
+    def countLt(v: Long): Long = {
+      var lo = 0; var hi = negSorted.length
+      while (lo < hi) { val m = (lo + hi) >>> 1
+        if (negSorted(m) < v) lo = m + 1 else hi = m }
+      lo.toLong
+    }
+    def countLe(v: Long): Long = {
+      var lo = 0; var hi = negSorted.length
+      while (lo < hi) { val m = (lo + hi) >>> 1
+        if (negSorted(m) <= v) lo = m + 1 else hi = m }
+      lo.toLong
+    }
+    val auc2 = pos.map(v => countLt(v) + countLe(v)).sum // 2·lt + eq
+    val expect = auc2 * 1000000L / (2L * pos.length * neg.length)
+    assert(auc == expect, s"AUC mismatch: entry $auc vs brute force $expect")
+  }
 }

@@ -64,4 +64,28 @@ class OooStreamSpec extends SparkTestBase {
       }
     } finally q.stop()
   }
+
+  test("stream_ooo_ingest: the cross-batch disorder detector fires on a reordered feed") {
+    import graft.streaming.OooStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[OooStream.OooSample]
+    val q = OooStream.oooIngestStream(input.toDS())
+      .writeStream.format("memory").queryName("ooo_viol")
+      .outputMode(OutputMode.Update).start()
+    try {
+      // batch 1 carries arrivals {5, 6}; batch 2 delivers arrival 2 —
+      // a cross-batch reorder the in-batch sort cannot repair
+      input.addData(OooStream.OooSample("s", 100L, 5L),
+        OooStream.OooSample("s", 200L, 6L))
+      q.processAllAvailable()
+      input.addData(OooStream.OooSample("s", 300L, 2L))
+      q.processAllAvailable()
+      val last = spark.table("ooo_viol").collect()
+        .filter(_.getString(0) == "s").maxBy(_.getLong(1))
+      assert(last.getLong(1) == 3L)
+      assert(last.getLong(5) == 1L,
+        s"expected n_disorder = 1 after the reordered chunk, got $last")
+    } finally q.stop()
+  }
 }

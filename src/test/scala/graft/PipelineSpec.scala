@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Pipeline
+import org.apache.spark.sql.functions._
 
 /** Invariants of the training-data pipeline operators: deterministic
   * membership, mixture copy counts, pack-size bounds, band fractions. */
@@ -267,4 +268,208 @@ class PipelineSpec extends SparkTestBase {
     assert(again.toSeq == rows.toSeq)
   }
 
+  test("split_temporal: the three splits partition the corpus and the embargo is non-empty") {
+    val rows = run("split_temporal").collect()
+    assert(rows.map(_.getString(0)).sorted.toSeq == Seq("embargo", "test", "train"))
+    assert(rows.map(_.getLong(1)).sum ==
+      graft.sources.Tables.events(spark, sf).count())
+    assert(rows.forall(_.getLong(1) > 0))
+  }
+
+  test("pack_curriculum: three phases spend the full token budget") {
+    val rows = run("pack_curriculum").orderBy("phase").collect()
+    assert(rows.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
+    val s = rows.map(_.getDouble(3)).sum
+    assert(s > 0.995 && s <= 1.0001)
+    // curriculum is ordered: phase 1's floor is at least phase 3's
+    assert(rows.head.getDouble(5) >= rows.last.getDouble(5))
+  }
+
+  test("split_grouped: source-keyed split provably leaks zero sources; doc counts conserve") {
+    import spark.implicits._
+    val rows = run("split_grouped")
+      .select("strategy", "split", "n_docs", "n_sources", "n_leaked_sources")
+      .as[(String, String, Long, Long, Long)].collect()
+    assert(rows.length == 4)
+    val total = graft.sources.Tables.documents(spark, sf).count()
+    Seq("by_doc", "by_source").foreach { st =>
+      val arm = rows.filter(_._1 == st)
+      assert(arm.map(_._3).sum == total, s"$st docs don't conserve")
+    }
+    assert(rows.filter(_._1 == "by_source").forall(_._5 == 0), "source split leaked a source")
+    // doc-keyed split scatters at least one source across both sides here
+    assert(rows.filter(_._1 == "by_doc").forall(_._5 > 0), "by_doc unexpectedly leak-free")
+  }
+
+  test("sample_neyman: allocations respect the budget and integer-mass proportionality") {
+    import spark.implicits._
+    val rows = run("sample_neyman")
+      .select("source", "n", "mass", "neyman_alloc", "prop_alloc")
+      .as[(String, Long, Long, Long, Long)].collect()
+    assert(rows.nonEmpty)
+    val budget = graft.operators.Pipeline.NeymanBudget
+    assert(rows.map(_._4).sum <= budget, "Neyman allocation over budget")
+    assert(rows.map(_._5).sum <= budget, "proportional allocation over budget")
+    assert(rows.forall(r => r._4 >= 0 && r._5 >= 0))
+    // floor-share monotonicity: more mass never gets fewer slots
+    val byMass = rows.sortBy(_._3)
+    assert(byMass.sliding(2).forall(p => p(0)._4 <= p(1)._4), "allocation not monotone in mass")
+  }
+
+  test("mix_kl_divergence: shares are distributions; kl term signs follow lift") {
+    import spark.implicits._
+    val rows = run("mix_kl_divergence")
+      .select("source", "n_docs", "copies", "q_mass", "p_share", "q_share", "lift", "kl_term")
+      .as[(String, Long, Long, Long, Double, Double, Double, Double)].collect()
+    assert(rows.nonEmpty)
+    val pSum = rows.map(_._5).sum; val qSum = rows.map(_._6).sum
+    assert(pSum > 0.98 && pSum <= 1.0 + 1e-9, s"p shares sum $pSum")
+    assert(qSum > 0.98 && qSum <= 1.0 + 1e-9, s"q shares sum $qSum")
+    rows.foreach { case (src, n, copies, qm, p, q, lift, kl) =>
+      assert(copies >= 0 && copies <= 2 * n, s"$src copies outside [0, 2n]")
+      assert(qm == n * 6 || qm == n * 18, s"$src target mass not weight-implied")
+      assert(p >= 0 && q > 0 && lift >= 0)
+      // floored values: a clearly down/up-delivered source signs its KL term
+      if (lift > 1.01) assert(kl > 0, s"$src over-delivered but kl $kl")
+      if (lift < 0.99 && p > 0) assert(kl < 0, s"$src under-delivered but kl $kl")
+    }
+  }
+
+  test("pack_shuffle_quality: hash order interleaves, source order degenerates") {
+    import spark.implicits._
+    val rows = run("pack_shuffle_quality")
+      .select("layout", "n_docs", "n_runs", "mean_run")
+      .as[(String, Long, Long, Double)].collect()
+    val byLayout = rows.map(r => r._1 -> r).toMap
+    assert(byLayout.keySet == Set("source_sorted", "hash_shuffled"))
+    val nSources = graft.sources.Tables.documents(spark, sf)
+      .select("source").distinct().count()
+    assert(byLayout("source_sorted")._3 == nSources,
+      "sorted layout must produce exactly one run per source")
+    val sh = byLayout("hash_shuffled")
+    assert(sh._3 > nSources, "hash order failed to interleave")
+    assert(sh._4 < 3.0, s"hash-shuffled mean run ${sh._4} too long for ~uniform sources")
+  }
+
+  // ------------------------------------------------------------ coreset
+
+  test("sample_coreset equals a driver-side greedy farthest-point replay") {
+    import spark.implicits._
+    // 40 vectors in 4 well-separated blobs + jitter: farthest-point
+    // must visit all blobs before densifying any one of them
+    val vecs = (0 until 40).map { i =>
+      val blob = i % 4
+      val base = Array.fill(8)(0.0f)
+      base(blob * 2) = 10.0f * (blob + 1)
+      base(7) = (i / 4).toFloat * 0.01f
+      (i.toLong, base.toSeq, blob)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_coreset").toString
+    vecs.toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+
+    def dot(a: Seq[Double], b: Seq[Double]): Double = {
+      var acc = 0.0; var i = 0
+      while (i < a.length) { acc += a(i) * b(i); i += 1 }; acc
+    }
+    def dq(e: Seq[Double], c: Seq[Double]): Long =
+      math.floor((dot(e, e) + dot(c, c) - 2 * dot(e, c)) * 1e6).toLong
+    val pts = vecs.map { case (id, v, _) => id -> v.map(_.toDouble) }
+    var centers = Vector((1, pts.head._1, 0L))  // min vec_id = 0
+    var mind = pts.map { case (id, v) => id -> dq(v, pts.head._2) }.toMap
+    for (k <- 2 to graft.operators.Pipeline.CoresetK) {
+      val (pid, pd) = mind.toSeq.maxBy { case (id, dd) => (dd, -id) }
+      centers :+= ((k, pid, pd))
+      val cv = pts.find(_._1 == pid).get._2
+      mind = mind.map { case (id, dd) => id -> math.min(dd, dq(pts.find(_._1 == id).get._2, cv)) }
+    }
+    val got = graft.operators.Pipeline.sampleCoreset(spark, dir)
+      .orderBy("k").collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+    val want = centers.map { case (k, id, dd) => (k, id, dd / 1e6) }
+    assert(got.toSeq == want, s"got=${got.toSeq} want=$want")
+    // radii non-increasing from k=2 on (the k-center cost curve)
+    val radii = got.drop(1).map(_._3)
+    assert(radii.zip(radii.drop(1)).forall { case (a, b) => a >= b })
+    // the first 4 picks cover all 4 blobs (diversity, not density)
+    assert(got.take(4).map(_._2 % 4).toSet.size == 4)
+  }
+
+  // ------------------------------------------------ split_purged_cv
+
+  test("split_purged_cv replays the fold ladder and purge discipline") {
+    // day d at epoch of 2024-01-01 + d days (the entry anchors there)
+    val day0 = java.time.LocalDate.parse("2024-01-01")
+      .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
+    def at(d: Int) = day0 + d * 86400L + 3600L
+    // users: 1 active early+late (overlaps), 2 only early, 3 only late
+    val raw = Seq(
+      (1L, at(0), 1L), (2L, at(1), 2L), (3L, at(3), 1L), (4L, at(4), 2L),
+      (5L, at(5), 3L), (6L, at(6), 1L), (7L, at(8), 3L),
+      (8L, at(10), 2L), (9L, at(12), 1L), (10L, at(14), 3L),
+      (11L, at(16), 1L), (12L, at(19), 2L), (13L, at(21), 1L), (14L, at(24), 3L))
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_cv").toString
+    raw.map { case (id, ts, uid) =>
+      (id, new java.sql.Timestamp(ts * 1000L), uid, "t", 1.0, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+
+    val got = Pipeline.splitPurgedCv(spark, dir).collect()
+      .map(r => r.getInt(0) -> (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+      .toMap
+    val days = raw.map { case (id, ts, uid) => (uid, ((ts - day0) / 86400L).toInt) }
+    val expected = (1 to Pipeline.CvFolds).map { k =>
+      val te = k * (Pipeline.CvPurgeDays + Pipeline.CvTestDays)
+      val ts0 = te + Pipeline.CvPurgeDays
+      val nTrain = days.count(_._2 < te)
+      val nPurge = days.count(d => d._2 >= te && d._2 < ts0)
+      val nTest = days.count(d => d._2 >= ts0 && d._2 < ts0 + Pipeline.CvTestDays)
+      val overlap = days.groupBy(_._1).count { case (_, ds) =>
+        ds.exists(_._2 < te) && ds.exists(d => d._2 >= ts0 && d._2 < ts0 + Pipeline.CvTestDays)
+      }
+      k -> (te, nTrain.toLong, nPurge.toLong, nTest.toLong, overlap.toLong)
+    }.toMap
+    assert(got == expected, s"got $got\nexpected $expected")
+    // ladder property: training sets only grow; roles are disjoint per fold
+    val trains = (1 to Pipeline.CvFolds).map(k => got(k)._2)
+    assert(trains == trains.sorted, "walk-forward training sets must be monotone")
+    got.values.foreach { case (_, tr, pu, te2, _) =>
+      assert(tr + pu + te2 <= raw.size, "fold roles overlap")
+    }
+  }
+
+  test("pack_boundary_offsets agrees with pack_token_budget and starts at 0") {
+    val packs = SparkEntry.queries("pack_token_budget")(spark, sf).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val bounds = SparkEntry.queries("pack_boundary_offsets")(spark, sf).collect()
+    assert(bounds.nonEmpty)
+    bounds.foreach { r =>
+      val key = (r.getString(0), r.getLong(1))
+      val (nDocs, packTokens) = (r.getLong(2), r.getLong(3))
+      assert(packs(key) == ((nDocs, packTokens)),
+        s"boundary pack $key disagrees with the packer")
+      val offs = r.getString(4).split(",").map(_.toLong)
+      assert(offs.length == nDocs, s"one boundary per doc at $key")
+      assert(offs.head == 0, s"first doc starts the window at $key")
+      assert(offs.zip(offs.tail).forall { case (a, b) => a < b },
+        s"offsets strictly increase at $key")
+      assert(offs.last < packTokens, s"last boundary inside the window at $key")
+    }
+  }
+
+  test("pack_mask_density describes the same packs as pack_token_budget") {
+    val packs = SparkEntry.queries("pack_token_budget")(spark, sf).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    val dens = SparkEntry.queries("pack_mask_density")(spark, sf).collect()
+    assert(dens.nonEmpty)
+    dens.foreach { r =>
+      val key = (r.getString(0), r.getLong(1))
+      assert(packs(key) == ((r.getLong(2), r.getLong(3))),
+        s"pack $key diverged between the two ledgers")
+      val valid = r.getLong(5)
+      assert(valid >= 0 && valid <= 1000000L)
+      if (r.getLong(2) == 1L)
+        assert(valid == 1000000L, "a single-doc pack has a full mask")
+    }
+  }
 }

@@ -32,8 +32,8 @@ class PlanSnapshotSpec extends SparkTestBase {
     "ann_ivf_pq_topk" -> "construction trains IVF+PQ codebooks (runs jobs); SimilaritySpec",
     "ann_pq_topk" -> "construction trains the PQ codebook (runs jobs); SimilaritySpec",
     "ann_pq_packed" -> "construction trains the PQ codebook (runs jobs); SimilaritySpec",
-    "dedup_semantic" -> "construction checkpoints the scaled-K assignment (runs jobs); Round10Spec",
-    "emb_pca_power" -> "construction collects the bounded d-squared covariance model (runs jobs); Round10dSpec",
+    "dedup_semantic" -> "construction checkpoints the scaled-K assignment (runs jobs); SimilaritySpec",
+    "emb_pca_power" -> "construction collects the bounded d-squared covariance model (runs jobs); SimilaritySpec",
     "dedup_cluster" -> "iterative label propagation checkpoints each round; DedupSpec",
     "dedup_fuzzy_lsh" -> "construction checkpoints the LSH candidate pairs; DedupSpec",
     "q_exact_global_median" -> "construction runs the bucket-bounds pass; StatsSpec",

@@ -152,4 +152,24 @@ class SketchSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(bm == exact, s"bitmap $bm vs exact $exact")
   }
+
+  test("sketch_hll_distinct: measured error stays inside 3x the published 1.04/sqrt(m) bound") {
+    val rows = SparkEntry.queries("sketch_hll_distinct")(spark, sf).collect()
+    val bound = (3.0 * 1.04 / math.sqrt(graft.operators.Sketch.HllM) * 1e4).toLong
+    rows.foreach { r =>
+      assert(r.getAs[Long]("err_x1e4") <= bound,
+        s"HLL error past 3 sigma: $r (bound $bound)")
+    }
+  }
+
+  test("sketch_bloom_fpp: split partitions the users; rates on their grids") {
+    val r = SparkEntry.queries("sketch_bloom_fpp")(spark, sf).head()
+    val distinctUsers = graft.sources.Tables.events(spark, sf)
+      .select("user_id").distinct().count()
+    assert(r.getLong(0) + r.getLong(1) == distinctUsers)
+    assert(r.getLong(2) <= graft.operators.Sketch.BloomM)
+    assert(r.getLong(4) <= r.getLong(1), "false positives bounded by probes")
+    assert(r.getLong(5) >= 0 && r.getLong(5) <= 1000000L)
+    assert(r.getLong(6) >= 0 && r.getLong(6) <= 1000000L)
+  }
 }

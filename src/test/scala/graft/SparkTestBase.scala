@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +13,26 @@ trait SparkTestBase extends AnyFunSuite {
     * fail, so cut blocks do not pile up in the shared session. */
   override def withFixture(test: NoArgTest): Outcome =
     try super.withFixture(test) finally Checkpoints.release()
+
+  /** An entry's result at the test scale factor. */
+  def run(name: String): DataFrame = SparkEntry.queries(name)(spark, sf)
+
+  /** Writes `events.parquet` rows (event_id, ts in epoch seconds, user_id,
+    * event_type, value) with empty props into a fresh directory and returns
+    * it, for entries run on a hand-built series. */
+  def writeEvents(rows: Seq[(Long, Long, Long, String, Double)]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_events").toString
+    rows.map { case (id, tsSec, user, et, v) =>
+      (id, new java.sql.Timestamp(tsSec * 1000L), user, et, v, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  /** The messages along a throwable's cause chain, outermost first. */
+  def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
 
   /** formatted physical plan of an entry, for plan-shape assertions */
   def plan(name: String): String =

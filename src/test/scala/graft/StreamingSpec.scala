@@ -920,4 +920,128 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("stream_rate_limit: accepted + rejected == events per user, and pressure is real") {
+    val df = run("stream_rate_limit").cache()
+    assert(df.filter(col("n_accepted") + col("n_rejected") =!= col("n_events")).count() == 0)
+    assert(df.agg(sum(col("n_rejected"))).head.getLong(0) > 0, "limiter never fired")
+    assert(df.count() ==
+      graft.sources.Tables.events(spark, sf).select(col("user_id")).distinct().count())
+    df.unpersist()
+  }
+
+  test("ivm_minmax_delta: refcounted extrema match a direct windowless recompute") {
+    import spark.implicits._
+    val got = run("ivm_minmax_delta")
+      .select("day", "min_cents", "max_cents", "n_support")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    // direct recompute of the net multiset per day
+    val want = graft.sources.Tables.events(spark, sf)
+      .select(expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 as bigint)").as("day"),
+        floor(col("value") * 100).cast("long").as("cents"),
+        when(col("event_type") === "error", -1L).otherwise(1L).as("op"))
+      .groupBy("day", "cents").agg(sum("op").as("rc"))
+      .filter(col("rc") > 0)
+      .groupBy("day").agg(min("cents").as("mn"), max("cents").as("mx"),
+        count(lit(1)).as("ns"))
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(got == want)
+    got.foreach { case (_, mn, mx, ns) => assert(mn <= mx && ns > 0) }
+  }
+
+  test("ivm_topn_delta: podium matches a direct recompute of the live multiset") {
+    import spark.implicits._
+    val got = run("ivm_topn_delta")
+      .select("day", "rank", "bucket", "rc")
+      .as[(Long, Int, Long, Long)].collect()
+    // rank keys assume the bucket domain fits below 2^24
+    assert(got.forall(r => r._3 >= 0 && r._3 < (1L << 24)))
+    val live = graft.sources.Tables.events(spark, sf)
+      .select(expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 as bigint)").as("day"),
+        floor(col("value")).cast("long").as("bucket"),
+        when(col("event_type") === "error", -1L).otherwise(1L).as("op"))
+      .groupBy("day", "bucket").agg(sum("op").as("rc"))
+      .filter(col("rc") > 0)
+      .as[(Long, Long, Long)].collect()
+    val want = live.groupBy(_._1).toSeq.flatMap { case (day, rows) =>
+      rows.sortBy(r => (-r._3, r._2)).take(3).zipWithIndex
+        .map { case ((_, b, rc), i) => (day, i + 1, b, rc) }
+    }.toSet
+    assert(got.map(r => (r._1, r._2, r._3, r._4)).toSet == want)
+  }
+
+  test("refcount top-N maintenance equals the batch view, any chunking") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // same refcount state as the min/max view, keyed on the dollar bucket
+    val rows = graft.sources.Tables.events(spark, sf)
+      .select(
+        expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 as bigint)").as("day"),
+        floor(col("value")).cast("long").as("cents"),
+        when(col("event_type") === "error", -1L).otherwise(1L).as("op"),
+        col("event_id"))
+      .as[(Long, Long, Long, Long)].collect()
+    val snapDir = java.nio.file.Files.createTempDirectory("graft_ivmt").toString
+    val input = MemoryStream[(Long, Long, Long, Long)]
+    val q = input.toDF().toDF("day", "cents", "op", "event_id")
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        EventsStream.ivmMinmaxBatchInto(snapDir, df)
+      }.start()
+    try {
+      val chunks = rows.sortBy(_._4).grouped(math.max(1, rows.length / 3 + 1)).toSeq.reverse
+      chunks.foreach { c => input.addData(c.toSeq); q.processAllAvailable() }
+      // read the maintained refcounts back through the top-N rule
+      val snap = spark.read.parquet(s"$snapDir/current")
+        .filter(col("rc") > 0)
+        .select(col("day"), col("cents").as("bucket"), col("rc"))
+        .as[(Long, Long, Long)].collect()
+      val got = snap.groupBy(_._1).toSeq.flatMap { case (day, rs) =>
+        rs.sortBy(r => (-r._3, r._2)).take(3).zipWithIndex
+          .map { case ((_, b, rc), i) => (day, i + 1, b, rc) }
+      }.toSet
+      val want = run("ivm_topn_delta")
+        .select("day", "rank", "bucket", "rc")
+        .as[(Long, Int, Long, Long)].collect()
+        .map(r => (r._1, r._2, r._3, r._4)).toSet
+      assert(got == want, s"streaming=${got.size} batch=${want.size}")
+    } finally q.stop()
+  }
+
+  test("stream_ha_dedup: a real MemoryStream run elects exactly the batch twin's replicas") {
+    import graft.streaming.EventsStream
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.OutputMode
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val samples = graft.sources.Tables.events(spark, sf)
+      .selectExpr("event_type", "unix_timestamp(date_trunc('second', ts)) AS tsSec",
+        "CAST(event_id % 2 AS INT) AS replica")
+      .as[EventsStream.HaSample].collect()
+    val input = MemoryStream[EventsStream.HaSample]
+    val q = EventsStream.haDedupStream(input.toDS())
+      .writeStream.format("memory").queryName("ha_sink")
+      .outputMode(OutputMode.Append).start()
+    try {
+      val sorted = samples.sortBy(_.tsSec)
+      val (early, late) = sorted.splitAt(sorted.length / 2)
+      input.addData(early.toSeq); q.processAllAvailable()
+      input.addData(late.toSeq); q.processAllAvailable()
+      // hour-aligned sentinel far past the data closes every window
+      val sentinelSec = (sorted.last.tsSec / 3600L + 4L) * 3600L
+      input.addData(EventsStream.HaSample("__wm__", sentinelSec, 0))
+      q.processAllAvailable()
+      def key(r: org.apache.spark.sql.Row) =
+        (r.getTimestamp(0).getTime, r.getString(1)) ->
+          (r.getLong(2), r.getLong(3), r.getInt(4), r.getLong(5), r.getLong(6))
+      val got = spark.table("ha_sink").collect()
+        .filter(_.getString(1) != "__wm__").map(key).toMap
+      val dupes = spark.table("ha_sink").collect().groupBy(r =>
+        (r.getTimestamp(0).getTime, r.getString(1))).filter(_._2.length > 1)
+      assert(dupes.isEmpty, "a window's election emitted twice")
+      val want = EventsStream.haDedupBatch(spark, sf).collect().map(key).toMap
+      assert(got == want,
+        s"stream/batch fork: ${ (want.toSet -- got.toSet).take(2) } / ${ (got.toSet -- want.toSet).take(2) }")
+    } finally q.stop()
+  }
 }

@@ -247,4 +247,202 @@ class TimeseriesExtSpec extends SparkTestBase {
     df.unpersist()
   }
 
+  test("metrics_slo_attainment: all-integer budget ledger is internally consistent") {
+    import spark.implicits._
+    val rows = run("metrics_slo_attainment").orderBy("day")
+      .select("day", "total", "errors", "attainment_ppm", "cum_total", "cum_errors",
+        "cum_attainment_ppm", "budget_left_ppm", "breached")
+      .as[(Long, Long, Long, Long, Long, Long, Long, Long, Boolean)].collect()
+    assert(rows.nonEmpty)
+    // cumulative columns are the running sums; ledger identities hold
+    var (ct, ce) = (0L, 0L)
+    rows.foreach { case (_, t, e, app, cumT, cumE, cApp, left, breached) =>
+      ct += t; ce += e
+      assert(cumT == ct && cumE == ce)
+      assert(app == (t - e) * 1000000L / t)
+      assert(cApp == (ct - ce) * 1000000L / ct)
+      assert(left == cApp - graft.operators.TimeseriesExt.SloObjectivePpm)
+      assert(breached == (left < 0))
+    }
+    val events = graft.sources.Tables.events(spark, sf).count()
+    assert(rows.last._5 == events)
+  }
+
+  test("metrics_downsample_m4: envelope bounds hold and the plan is one aggregation") {
+    import spark.implicits._
+    val rows = run("metrics_downsample_m4")
+      .select("event_type", "bucket_start", "samples", "first_value", "last_value",
+        "min_value", "max_value")
+      .as[(String, Long, Long, Double, Double, Double, Double)].collect()
+    assert(rows.nonEmpty)
+    rows.foreach { case (t, b, n, f, l, mn, mx) =>
+      assert(n >= 1)
+      assert(mn <= mx && f >= mn && f <= mx && l >= mn && l <= mx,
+        s"$t@$b envelope violated")
+    }
+    // M4 must stay a single map-side-combinable aggregation: no window,
+    // no join — this is its advantage over the LTTB fold
+    val p = plan("metrics_downsample_m4")
+    assert(!p.contains("Window") && !p.contains("Join"), "M4 must be one groupBy")
+  }
+
+  test("prom_scrape_health: one global spine; up, flap and run bounds hold") {
+    import spark.implicits._
+    val rows = run("prom_scrape_health")
+      .select("event_type", "n_slots", "n_up", "availability", "n_flaps", "longest_down_hours")
+      .as[(String, Long, Long, Double, Long, Long)].collect()
+    assert(rows.nonEmpty)
+    assert(rows.map(_._2).distinct.length == 1, "targets disagree on the global slot count")
+    rows.foreach { case (t, slots, up, avail, flaps, ldh) =>
+      assert(up >= 0 && up <= slots, s"$t up count")
+      assert(math.abs(avail - math.floor(up.toDouble / slots * 1e4) / 1e4) < 1e-12)
+      assert(flaps < slots, s"$t flaps")
+      assert(ldh <= slots - up, s"$t longest down run exceeds total downtime")
+      assert((ldh == 0) == (up == slots), s"$t down-run/availability mismatch")
+    }
+  }
+
+  test("metrics_rolling_corr: click autocorrelation is exactly 1; all values in [-1, 1]") {
+    import spark.implicits._
+    val rows = run("metrics_rolling_corr")
+      .select("event_type", "day", "corr_7d")
+      .as[(String, Long, Option[Double])].collect()
+    assert(rows.nonEmpty)
+    rows.foreach { case (t, day, c) =>
+      c.foreach(v => assert(v >= -1.0 - 1e-9 && v <= 1.0 + 1e-9, s"($t,$day) corr $v"))
+    }
+    val click = rows.filter(_._1 == "click").flatMap(_._3)
+    assert(click.nonEmpty && click.forall(v => math.abs(v - 0.9999) < 1e-9 || v == 1.0),
+      "click-vs-click rolling correlation must floor to 0.9999/1.0")
+  }
+
+  test("metrics_autocorr: one row per (series, lag); acf bounded; support shrinks with lag") {
+    import spark.implicits._
+    val rows = run("metrics_autocorr")
+      .select("event_type", "lag", "n_pairs", "acf")
+      .as[(String, Long, Long, Option[Double])].collect()
+    val lags = graft.operators.TimeseriesExt.AcfLags
+    val types = rows.map(_._1).distinct
+    assert(rows.length == types.length * lags.length)
+    rows.foreach { case (t, l, n, a) =>
+      assert(n > 0, s"($t,$l) no pairs")
+      a.foreach(v => assert(v >= -1.0 - 1e-9 && v <= 1.0 + 1e-9, s"($t,$l) acf $v"))
+    }
+    types.foreach { t =>
+      val byLag = rows.filter(_._1 == t).sortBy(_._2)
+      assert(byLag.sliding(2).forall(p => p(0)._3 >= p(1)._3),
+        s"$t pair support should not grow with lag")
+    }
+  }
+
+  // --------------------------------------------- metrics_sax_motifs
+
+  /** Driver-side SAX replay with the entry's exact integer pipeline. */
+  private def saxWord(hourly: Seq[(Int, Seq[Double])]): Option[String] = {
+    if (hourly.size != 24) None
+    else {
+      val vq = hourly.sortBy(_._1).map { case (_, vs) =>
+        val sum2 = math.round(vs.sum * 100.0) / 100.0
+        math.floor(sum2 / vs.size * 1e4).toLong
+      }
+      val n = 24L
+      val sTot = vq.sum; val ss = vq.map(q => q * q).sum
+      val varNum = n * ss - sTot * sTot
+      val word = (0 until TimeseriesExt.SaxSegs).map { g =>
+        val seg = vq.slice(g * 4, g * 4 + 4)
+        val num = seg.sum * n - sTot * seg.size
+        val z = if (varNum <= 0) 0.0
+          else num.toDouble / (seg.size.toDouble * math.sqrt(varNum.toDouble))
+        if (z < -0.6745) 'a' else if (z < 0.0) 'b' else if (z < 0.6745) 'c' else 'd'
+      }.mkString
+      Some(word)
+    }
+  }
+
+  test("metrics_sax_motifs symbolizes shapes and drops partial days") {
+    // series r: a clean ramp day (word abbccd-ish, replayed exactly)
+    // series f: a flat day -> zero variance -> all-'c'
+    // series p: 23 hours only -> excluded
+    // series s: midday spike day
+    val rows = Seq.newBuilder[(Long, Long, String, Double)]
+    var id = 0L
+    def add(et: String, day: Int, hour: Int, v: Double): Unit = {
+      id += 1; rows += ((id, day * 86400L + hour * 3600L + 60L, et, v))
+    }
+    (0 until 24).foreach(h => add("r", 0, h, 1.0 + h))
+    (0 until 24).foreach(h => add("f", 0, h, 7.77))
+    (0 until 23).foreach(h => add("p", 0, h, 1.0 + h))
+    (0 until 24).foreach(h => add("s", 0, h, if (h >= 10 && h < 14) 100.0 else 1.0))
+    val dir = writeEvents(rows.result().map { case (id, ts, et, v) => (id, ts, id % 7, et, v) })
+    val got = TimeseriesExt.saxMotifs(spark, dir).collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+    def wordOf(et: String) = saxWord(
+      rows.result().filter(_._3 == et).groupBy(t => ((t._2 % 86400) / 3600).toInt)
+        .map { case (h, ts) => (h, ts.map(_._4)) }.toSeq).get
+    val expected = Seq("r", "f", "s").map(wordOf).groupBy(identity)
+      .map { case (w, ws) => w -> (ws.size.toLong, ws.size.toLong) }
+    assert(got == expected, s"got $got\nexpected $expected")
+    assert(wordOf("f") == "cccccc", "zero-variance day is all-'c'")
+    assert(wordOf("r").toSeq == wordOf("r").toSeq.sorted, "ramp word is monotone in the alphabet")
+    val spike = wordOf("s")
+    assert(spike.substring(2, 4).contains('d') && spike.head < 'c',
+      s"midday spike word surprises in segments 2-3: $spike")
+  }
+
+  // ---------------------------------------------- metrics_theil_sen
+
+  test("metrics_theil_sen shrugs off the outlier that swings least squares") {
+    // clean ramp value = h, except hour 12 glitches to 1000.
+    // LSQ slope over this day is ~> 2x the true slope; Theil-Sen's
+    // pairwise median stays ~1/hour.
+    val rows = (0 until 24).map { h =>
+      ((h + 1).toLong, h * 3600L + 30L, "g", if (h == 12) 1000.0 else 1.0 + h)
+    } ++ (0 until 24).map { h => ((100 + h).toLong, h * 3600L + 30L, "clean", 5.0 + 2.0 * h) }
+    val dir = writeEvents(rows.map { case (id, ts, et, v) => (id, ts, id % 7, et, v) })
+    val got = TimeseriesExt.theilSen(spark, dir).collect()
+      .map(r => r.getString(0) -> (r.getLong(2), r.getDouble(3))).toMap
+    assert(got("clean")._1 == 276L)
+    assert(got("clean")._2 == 2.0, s"clean ramp slope: ${got("clean")}")
+    val g = got("g")._2
+    assert(g >= 0.9 && g <= 1.2, s"outlier swung the robust slope: $g")
+    // replay: lower median of all pairwise slopes on the exact grid
+    val vq = (0 until 24).map(h => math.floor(
+      math.round((if (h == 12) 1000.0 else 1.0 + h) * 100.0) / 100.0 * 1e4).toLong)
+    val slopes = (for {
+      i <- 0 until 23; j <- i + 1 until 24
+    } yield (vq(j) - vq(i)).toDouble / (j - i).toDouble).sorted
+    assert(g == math.floor(slopes(137) * 100) / 1e6, "entry != driver-side replay")
+  }
+
+  // -------------------------------------- metrics_alert_for_duration
+
+  test("alert for-duration: pending clock, firing, gap reset, below reset") {
+    // series "a": 2 hot hours (pending only) / below / 4 hot hours
+    // (pending, pending, firing, firing) / GAP at hour 11 / 2 hot
+    // hours after the gap must restart from pending
+    val hot = 100.0; val cold = 1.0
+    val hours = Seq(
+      0 -> hot, 1 -> hot,          // run of 2: never fires
+      2 -> cold,                   // below reset
+      3 -> hot, 4 -> hot, 5 -> hot, 6 -> hot, // pending x2 then firing x2
+      7 -> cold,
+      9 -> hot, 10 -> hot,         // run of 2...
+      // hour 11 MISSING (gap)
+      12 -> hot, 13 -> hot, 14 -> hot) // ...gap resets: pending x2, firing
+    val rows = hours.zipWithIndex.map { case ((h, v), i) =>
+      ((i + 1).toLong, h * 3600L + 120L, "a", v)
+    }
+    val dir = writeEvents(rows.map { case (id, ts, et, v) => (id, ts, id % 7, et, v) })
+    val got = TimeseriesExt.alertForDuration(spark, dir).collect()
+      .map(r => (r.getLong(1) / 3600).toInt -> (r.getInt(3), r.getString(4))).toMap
+    val want = Map(
+      0 -> (1, "pending"), 1 -> (2, "pending"),
+      2 -> (0, "inactive"),
+      3 -> (1, "pending"), 4 -> (2, "pending"), 5 -> (3, "firing"), 6 -> (4, "firing"),
+      7 -> (0, "inactive"),
+      9 -> (1, "pending"), 10 -> (2, "pending"),
+      12 -> (1, "pending"), 13 -> (2, "pending"), 14 -> (3, "firing"))
+    assert(got == want, s"got $got\nexpected $want")
+  }
 }

@@ -8,8 +8,6 @@ import graft.operators.Tpch3
   * contract, threshold conservation). */
 class Tpch3Spec extends SparkTestBase {
 
-  private def run(name: String) = SparkEntry.queries(name)(spark, sf)
-
   test("partsupp derivation: one row per distinct supply pair, values in range") {
     val ps = Tpch3.partsupp(spark, sf).cache()
     val pairs = graft.sources.Tables.lineitem(spark, sf)

@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.PromQl
 
-/** Semantic pins for the round-12 TSDB-lifecycle, Alertmanager-routing,
-  * rank-statistics and scrape-policy families — each claim is verified
-  * against an independent recomputation (driver-side fold, brute-force
-  * pair join, or direct rank sort), not just the DuckDB oracle. */
+/** Semantic pins for the TSDB-lifecycle, Alertmanager-routing,
+  * rank-statistics, scrape-policy and PromQL read families, and for the
+  * api/v1 response envelopes — each claim is verified against an
+  * independent recomputation (driver-side fold, brute-force pair join,
+  * direct rank sort, or a JSON parse), not just the DuckDB oracle. */
 class TsdbAlertSpec extends SparkTestBase {
 
   // ------------------------------------------------ tsdb_ooo_ingest
@@ -511,5 +513,342 @@ class TsdbAlertSpec extends SparkTestBase {
         s"${CurationC4.KeyBase}L AS seg_idx)").collect()
     }
     assert(e.getMessage.contains("seg_idx"), s"guard must name the bound: ${e.getMessage}")
+  }
+
+  // ------------------------------------------------- PromQL reads
+  // Vector matching, range-query step resolution with the staleness
+  // lookback, and Prometheus' boundary-extrapolated rate(), each checked
+  // against a driver-side brute force over synthetic series built to hit
+  // every branch of the algorithm.
+
+  private case class Pt(tsSec: Long, id: Long, v: Double)
+
+  // ------------------------------------------- extrapolated rate()
+
+  /** Driver-side replay of Prometheus' extrapolatedRate with the
+    * IDENTICAL op order as the shared staged expressions. */
+  private def extrapolate(points: Seq[Pt], bucketStart: Long)
+      : Option[(Long, Double, Double, Double)] = {
+    val ps = points.sortBy(p => (p.tsSec, p.id))
+    if (ps.size < 2 || ps.last.tsSec == ps.head.tsSec) None
+    else {
+      val incs = ps.zip(ps.tail).map { case (a, b) =>
+        val delta = b.v - a.v
+        if (delta < 0) b.v else delta
+      }
+      val sumInc = math.round(incs.sum * 100.0) / 100.0
+      val n = ps.size
+      val samp = (ps.last.tsSec - ps.head.tsSec).toDouble
+      val avgDur = samp / (n - 1).toDouble
+      // ≥v2.44 staging: threshold reduction FIRST, then the zero clamp
+      val dts0 = (ps.head.tsSec - bucketStart).toDouble
+      val dtsThr = if (dts0 >= avgDur * 1.1) avgDur / 2 else dts0
+      val dts =
+        if (sumInc > 0 && ps.head.v >= 0) math.min(samp * (ps.head.v / sumInc), dtsThr)
+        else dtsThr
+      val dte0 = (bucketStart + PromQl.RateWindowSec - ps.last.tsSec).toDouble
+      val dte = if (dte0 >= avgDur * 1.1) avgDur / 2 else dte0
+      val ext = samp + dts + dte
+      val incE = math.floor(sumInc * (ext / samp) * 1e6) / 1e6
+      val rate = math.floor(sumInc * (ext / samp) / PromQl.RateWindowSec * 1e6) / 1e6
+      Some((n.toLong, sumInc, incE, rate))
+    }
+  }
+
+  test("metrics_rate_extrapolated replays Prometheus' algorithm branch by branch") {
+    // a: both edges within 1.1×avg → extrapolate to the boundaries
+    // b: counter-zero clamp (firstV/inc tiny, first sample 10 ks into the window)
+    // c: both edges beyond 1.1×avg → extend by avg/2 each; reset inside
+    // d: single sample → no rate defined
+    // e: the ≥v2.44 staging order case — zero crossing lands BETWEEN
+    //    avg/2 and the 1.1×avg threshold, so the threshold reduction
+    //    (→ avg/2) must win over the (larger) zero clamp
+    // a2: second window for series a
+    val rows = Seq(
+      (1L, 100L, "a", 10.0), (2L, 5000L, "a", 11.0),
+      (3L, 10000L, "a", 12.0), (4L, 21000L, "a", 13.0),
+      (10L, 10000L, "b", 1.0), (11L, 15000L, "b", 500.0), (12L, 20000L, "b", 999.0),
+      (20L, 10000L, "c", 5.0), (21L, 11000L, "c", 3.0),
+      (30L, 500L, "d", 42.0),
+      (40L, 10000L, "e", 400.0), (41L, 15000L, "e", 900.0), (42L, 20000L, "e", 1400.0),
+      (5L, 21700L, "a", 14.0), (6L, 21800L, "a", 15.5))
+    val dir = writeEvents(rows.map { case (id, ts, et, v) => (id, ts, id, et, v) })
+    val got = PromQl.rateExtrapolated(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1)) ->
+        (r.getLong(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))).toMap
+    val expected = rows.groupBy { case (_, ts, et, _) => (et, ts / PromQl.RateWindowSec * PromQl.RateWindowSec) }
+      .flatMap { case ((et, b), rs) =>
+        extrapolate(rs.map { case (id, ts, _, v) => Pt(ts, id, v) }, b)
+          .map(x => (et, b) -> x)
+      }
+    assert(got == expected, s"got $got\nexpected $expected")
+    // branch sanity: the clamp actually fired for b (dzero < durationToStart)
+    val b = got(("b", 0L))
+    assert(b._2 == 998.0, "b's reset-free increase")
+    // with the clamp, start extension is ~10.02 s instead of 10000 s
+    assert(b._3 < 998.0 * (11600.0 + 10000.0) / 10000.0,
+      "b extrapolated increase shows the zero-crossing clamp, not full start extension")
+    // c: reset handling (delta −2 → inc = fallen-to value 3)
+    assert(got(("c", 0L))._2 == 3.0)
+    assert(!got.contains(("d", 0L)), "single-sample window emits no rate")
+    // e: samp=10000, avg=5000 → threshold 5500, avg/2=2500; zero crossing
+    // at 10000·400/1000 = 4000 ∈ (2500, 5500). Current Prometheus takes
+    // min(4000, 2500) = 2500 (pre-2.44 would have taken 4000 → 1560.0)
+    assert(got(("e", 0L))._3 == 1410.0,
+      "threshold reduction must precede the zero-crossing clamp")
+  }
+
+  // ---------------------------------------------------- query_range
+
+  test("prom_query_range picks the latest sample within the lookback, else stale") {
+    val step = PromQl.StepSec.toLong
+    val rows = Seq(
+      (1L, step, "x", 1.0),                 // exactly on the boundary: distance 0
+      (2L, step - 1799L, "y", 2.0),         // one inside the lookback: kept
+      (3L, step - 1800L, "z", 3.0),         // exactly lookback old: STALE (3.x left-open)
+      (4L, 2 * step - 700L, "x", 4.0),      // two in one window:
+      (5L, 2 * step - 200L, "x", 5.0),      //   the later one wins
+      (6L, 3 * step - 100L, "x", 6.0),      // same second, higher id wins
+      (7L, 3 * step - 100L, "x", 7.0))
+    val dir = writeEvents(rows.map { case (id, ts, et, v) => (id, ts, id, et, v) })
+    val got = PromQl.queryRange(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getDouble(3))).toMap
+    val expected = rows
+      .map { case (id, ts, et, v) => (et, (ts + step - 1) / step * step, ts, id, v) }
+      .filter { case (_, k, ts, _, _) => k - ts < PromQl.LookbackSec }
+      .groupBy { case (et, k, _, _, _) => (et, k) }
+      .map { case (key, g) =>
+        val (_, _, ts, _, v) = g.maxBy { case (_, _, ts, id, _) => (ts, id) }
+        key -> (ts * 1000000L, v)
+      }
+    assert(got == expected, s"got $got\nexpected $expected")
+    assert(!got.keySet.exists(_._1 == "z"),
+      "a sample exactly lookback seconds before the step is stale (left-open window)")
+    assert(got.keySet.exists(_._1 == "y"), "1799 s before the step is still live")
+    assert(got(("x", 2 * step)) == ((2 * step - 200L) * 1000000L, 5.0))
+    assert(got(("x", 3 * step))._2 == 7.0, "ties on the second break by event_id")
+  }
+
+  // ------------------------------------------------ vector matching
+
+  test("prom_vector_matching: one-to-one avg and group_left share-of-total") {
+    val rows = Seq(
+      (1L, 3600L, "a", 10.0), (2L, 7200L, "a", 20.0),
+      (3L, 3600L, "b", 30.0),
+      (4L, 90000L, "a", 5.0), (5L, 93600L, "b", 15.0))
+    val dir = writeEvents(rows.map { case (id, ts, et, v) => (id, ts, id, et, v) })
+    val got = PromQl.vectorMatching(spark, dir).collect()
+      .map(r => (r.getString(0), r.getDate(1).toString) ->
+        (r.getDouble(2), r.getLong(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
+      .toMap
+    def q6(x: Double) = math.floor(x * 1e6) / 1e6
+    assert(got(("a", "1970-01-01")) == ((30.0, 2L, q6(30.0 / 2), 60.0, q6(30.0 / 60.0))))
+    assert(got(("b", "1970-01-01")) == ((30.0, 1L, 30.0, 60.0, q6(30.0 / 60.0))))
+    assert(got(("a", "1970-01-02")) == ((5.0, 1L, 5.0, 20.0, q6(5.0 / 20.0))))
+    assert(got(("b", "1970-01-02")) == ((15.0, 1L, 15.0, 20.0, q6(15.0 / 20.0))))
+    // group_left conservation: shares of a day sum to 1 within quantization
+    got.keys.map(_._2).toSeq.distinct.foreach { day =>
+      val shares = got.collect { case ((_, d), t) if d == day => t._5 }
+      assert(shares.sum <= 1.0 + 1e-9 && shares.sum > 1.0 - 5e-6 * shares.size, s"$day shares: $shares")
+    }
+  }
+
+  test("prom_vector_matching re-aggregates the family, not the corpus: one events scan") {
+    // the sum-by(day) operand is a window over the aggregated family
+    // frame — adding it must not re-scan or re-aggregate the corpus
+    val p = plan("prom_vector_matching")
+    assert(countScans(p) == 1,
+      "sum by(day)(fam) operand re-scanned the corpus instead of windowing the family")
+  }
+
+  test("promql entries on the real tables: staleness and window-count invariants") {
+    // query_range: every emitted sample really is within the lookback of its step
+    val qr = PromQl.queryRange(spark, sf).collect()
+    assert(qr.nonEmpty)
+    qr.foreach { r =>
+      val dist = r.getLong(1) - r.getLong(2) / 1000000L
+      assert(dist >= 0 && dist < PromQl.LookbackSec, s"stale sample emitted: $r")
+    }
+    // rate: extrapolated increase is bounded by the raw increase × window/sampled
+    PromQl.rateExtrapolated(spark, sf).collect().foreach { r =>
+      val raw = r.getDouble(3); val ext = r.getDouble(4)
+      assert(ext >= 0 && ext <= raw * PromQl.RateWindowSec + 1e-6, s"unbounded extrapolation: $r")
+      assert(r.getLong(2) >= 2)
+    }
+  }
+
+  test("prom_count_values: counts partition the corpus and labels parse back") {
+    val rows = PromQl.countValues(spark, sf).collect()
+    val total = rows.map(_.getLong(2)).sum
+    val corpus = graft.sources.Tables.events(spark, sf).count()
+    assert(total == corpus, s"count_values must partition the corpus: $total vs $corpus")
+    rows.foreach { r =>
+      val label = r.getString(1)
+      assert(label.matches("-?\\d+"), s"value label is the rendered integer: $label")
+      assert(r.getLong(2) > 0)
+    }
+    // per series, labels are distinct (it's a GROUP BY — sanity on the dump)
+    val keys = rows.map(r => (r.getString(0), r.getString(1)))
+    assert(keys.distinct.length == keys.length)
+  }
+
+  test("prom_subquery_max_rate: outer max equals the trailing-12-step max of inner counts") {
+    import org.apache.spark.sql.functions._
+    val out = SparkEntry.queries("prom_subquery_max_rate")(spark, sf)
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Long]("n_max")).toMap
+    // independent recompute of the inner step counts
+    val step = graft.operators.PromQl.SubStepSec
+    val counts = graft.sources.Tables.events(spark, sf)
+      .select(col("event_type"),
+        expr(s"((unix_timestamp(date_trunc('second', ts)) + ${step - 1}) DIV $step) * $step")
+          .as("t"))
+      .groupBy(col("event_type"), col("t")).agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val sample = out.keys.toSeq.sortBy(k => (k._1, k._2)).grouped(97).map(_.head).toSeq
+    sample.foreach { case (et, t) =>
+      val window = (0 until graft.operators.PromQl.SubWinSteps)
+        .flatMap(i => counts.get((et, t - i * step)))
+      assert(window.nonEmpty && window.max == out((et, t)),
+        s"($et, $t): reported ${out((et, t))} vs recomputed ${window.maxOption}")
+    }
+    // absence rule: a grid point with an all-empty 6h trail emits nothing
+    out.keys.foreach { case (et, t) =>
+      assert((0 until graft.operators.PromQl.SubWinSteps)
+        .exists(i => counts.contains((et, t - i * step))))
+    }
+  }
+
+  test("tsdb_dod_timestamps: class histogram tiles the post-header samples; bits reconcile") {
+    val rows = SparkEntry.queries("tsdb_dod_timestamps")(spark, sf).collect()
+    rows.foreach { r =>
+      val n = r.getAs[Long]("n_samples")
+      val classes = Seq("n_dod0", "n_bits14", "n_bits17", "n_bits20", "n_bits64")
+        .map(r.getAs[Long])
+      assert(classes.sum == math.max(n - 2, 0L),
+        s"classes must tile samples 3..n: $r")
+      val bits = 64L * math.min(n, 2L) + classes(0) * 1L + classes(1) * 16L +
+        classes(2) * 20L + classes(3) * 24L + classes(4) * 68L
+      assert(bits == r.getAs[Long]("total_bits"), s"bit ledger mismatch: $r")
+    }
+  }
+
+  // ------------------------------------------------ api/v1 envelopes
+
+  test("api/v1 labels + error envelopes parse as JSON with the spec's key order") {
+    import org.json4s._
+    val labels = SparkEntry.queries("prom_api_labels_json")(spark, sf)
+      .head().getString(0)
+    val lj = jackson.JsonMethods.parse(labels).asInstanceOf[JObject]
+    assert(lj.obj.map(_._1) == List("status", "data"))
+    val names = (lj \ "data").asInstanceOf[JArray].arr.map(_.asInstanceOf[JString].s)
+    assert(names == names.sorted, s"label names must be sorted: $names")
+    assert(names.contains("__name__") && names.contains("job"))
+
+    val rows = SparkEntry.queries("prom_api_error_json")(spark, sf)
+      .orderBy("http_status").collect()
+    assert(rows.map(_.getInt(1)).toSeq == Seq(200, 400))
+    val err = jackson.JsonMethods.parse(rows(1).getString(2)).asInstanceOf[JObject]
+    // the Go response struct's field order: status < errorType < error
+    assert(err.obj.map(_._1) == List("status", "errorType", "error"))
+    assert((err \ "status") == JString("error"))
+    assert((err \ "errorType") == JString("bad_data"))
+    val msg = (err \ "error").asInstanceOf[JString].s
+    assert(msg.startsWith("invalid parameter \"query\": 1:"))
+    // the pinned column really is the offending byte's 1-based position
+    val col = "1:(\\d+):".r.findFirstMatchIn(msg).get.group(1).toInt
+    assert(graft.operators.PromApi.BadSelector.charAt(col - 1) == '#')
+  }
+
+  test("api/v1 exemplars + targets bodies parse as JSON with the published shapes") {
+    import org.json4s._
+    val ex = jackson.JsonMethods.parse(
+      SparkEntry.queries("prom_api_query_exemplars_json")(spark, sf).head().getString(0))
+    val series = (ex \ "data").asInstanceOf[JArray].arr
+    assert(series.nonEmpty)
+    series.map(_.asInstanceOf[JObject]).foreach { s0 =>
+      assert(s0.obj.map(_._1) == List("seriesLabels", "exemplars"))
+      val els = (s0 \ "exemplars").asInstanceOf[JArray].arr
+      assert(els.nonEmpty && els.size <= graft.operators.TimeseriesExt.ExemplarK)
+      els.map(_.asInstanceOf[JObject]).foreach(e =>
+        assert(e.obj.map(_._1) == List("labels", "value", "timestamp")))
+    }
+    val tg = jackson.JsonMethods.parse(
+      SparkEntry.queries("prom_api_targets_json")(spark, sf).head().getString(0))
+    val active = (tg \ "data" \ "activeTargets").asInstanceOf[JArray].arr
+    assert(active.nonEmpty)
+    active.map(_.asInstanceOf[JObject]).foreach { t =>
+      assert(t.obj.map(_._1) ==
+        List("labels", "scrapePool", "lastError", "lastScrape", "health"))
+      val h = (t \ "health").asInstanceOf[JString].s
+      assert(h == "up" || h == "down")
+    }
+    assert((tg \ "data" \ "droppedTargets") == JArray(Nil))
+  }
+
+  test("api/v1 metadata: derived names, reference-pinned events metric, Go key order") {
+    import org.json4s._
+    val body = SparkEntry.queries("prom_api_metadata_json")(spark, sf)
+      .head().getString(0)
+    val j = jackson.JsonMethods.parse(body).asInstanceOf[JObject]
+    assert(j.obj.map(_._1) == List("status", "data"))
+    val data = (j \ "data").asInstanceOf[JObject]
+    val names = data.obj.map(_._1)
+    assert(names == names.sorted, s"map keys must be alphabetical: $names")
+    // names derive from the remote-write stream: every metric the
+    // converter emits must appear, plus the events counter
+    val streamNames = graft.operators.Scrapers.remoteWrite(spark, sf)
+      .select("metric_name").distinct().collect().map(_.getString(0)).toSet
+    assert(streamNames.subsetOf(names.toSet), s"missing: ${streamNames -- names.toSet}")
+    assert(names.contains("rds_service_events"))
+    data.obj.foreach { case (name, arr) =>
+      val m = arr.asInstanceOf[JArray].arr.head.asInstanceOf[JObject]
+      assert(m.obj.map(_._1) == List("type", "help", "unit"),
+        s"$name metadata field order")
+      val mtype = (m \ "type").asInstanceOf[JString].s
+      if (name == "rds_service_events") {
+        assert(mtype == "counter")
+        assert((m \ "help").asInstanceOf[JString].s.startsWith("This metric indicates"))
+      } else {
+        val conv = if (name.endsWith("_total") || name.endsWith("_count"))
+          "counter" else "gauge"
+        assert(mtype == conv, s"$name: $mtype != $conv")
+      }
+    }
+  }
+
+  test("api/v1 buildinfo: Go struct field order, computed revision + buildDate") {
+    import org.json4s._
+    val body = SparkEntry.queries("prom_api_buildinfo_json")(spark, sf)
+      .head().getString(0)
+    val j = jackson.JsonMethods.parse(body).asInstanceOf[JObject]
+    assert(j.obj.map(_._1) == List("status", "data"))
+    val data = (j \ "data").asInstanceOf[JObject]
+    assert(data.obj.map(_._1) ==
+      List("version", "revision", "branch", "buildUser", "buildDate", "goVersion"))
+    val rev = (data \ "revision").asInstanceOf[JString].s
+    assert(rev.matches("[0-9a-f]{7}"), s"revision must be a 7-hex fingerprint: $rev")
+    val bd = (data \ "buildDate").asInstanceOf[JString].s
+    assert(bd.matches("\\d{8}-\\d{2}:\\d{2}:\\d{2}"), s"buildDate layout: $bd")
+  }
+
+  test("api/v1 label listings emit data:[] on an empty vector (no engine fork)") {
+    // both label entries aggregate the instant vector; an empty corpus
+    // slice must yield the valid empty array, not [""] (Spark concat
+    // over an empty collect_list) or a NULL body (DuckDB string_agg)
+    import org.apache.spark.sql.functions._
+    // the exact agg shape both label entries use, over a 0-row frame
+    val empty = spark.range(0).select(lit("j").as("job"))
+      .select(col("job")).distinct()
+      .agg(
+        when(count(col("job")) > 0,
+          concat(lit("{\"status\":\"success\",\"data\":[\""),
+            array_join(sort_array(collect_list(col("job"))), "\",\""),
+            lit("\"]}")))
+          .otherwise(lit("{\"status\":\"success\",\"data\":[]}")).as("body"))
+      .head().getString(0)
+    assert(empty == "{\"status\":\"success\",\"data\":[]}")
+    // and the real entries still produce non-empty sorted arrays
+    val body = SparkEntry.queries("prom_api_labels_json")(spark, sf).head().getString(0)
+    assert(body.contains("\"data\":[\""))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.Writers
+import org.apache.spark.sql.functions._
 
 /** The write-side scale promises: bucketed joins shuffle nothing,
   * partitioned reads prune directories. */
@@ -62,6 +63,15 @@ class WritersSpec extends SparkTestBase {
     assert(m.isDefined, s"expected a bucket-pruned scan:\n${p.take(1500)}")
     assert(m.get.group(1).toInt < m.get.group(2).toInt,
       s"lookup must not scan every bucket: ${m.get.matched}")
+  }
+
+  test("sink_bucketed_join leaves the lookup entry's bucketed table untouched") {
+    val lt = Writers.ensureBucketedLineitem(spark, sf)
+    // every write names its files afresh, so a rebuild changes the listing
+    def files = spark.table(lt).inputFiles.sorted.toSeq
+    val before = files
+    run("sink_bucketed_join").collect()
+    assert(files == before, s"$lt was rewritten by sink_bucketed_join")
   }
 
   test("secondary-index lookup: fact scan is dynamic-partition-pruned; index probe bucket-pruned") {
@@ -181,4 +191,15 @@ class WritersSpec extends SparkTestBase {
       .forall(d0 => days.contains(s"day=$d0")), s"partition dirs: $days")
   }
 
+  test("sink_write_audit_publish: staged bytes round-trip and the publish is audited") {
+    import spark.implicits._
+    val rows = run("sink_write_audit_publish")
+      .select("side", "n_rows", "digest", "published")
+      .as[(String, Long, String, Boolean)].collect()
+    assert(rows.map(_._1).sorted.toSeq == Seq("published", "source"))
+    assert(rows.forall(_._4), "audit failed — staging did not round-trip")
+    val Array(p, s0) = rows.sortBy(_._1)
+    assert(p._2 == s0._2 && p._3 == s0._3, "published audit differs from source audit")
+    assert(p._2 > 0)
+  }
 }
