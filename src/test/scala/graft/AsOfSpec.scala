@@ -41,26 +41,4 @@ class AsOfSpec extends SparkTestBase {
       .filter(col("n_err") <= p90).count() == 0)
     df.unpersist()
   }
-
-  test("sessionize_otsu: exactly one winner maximizing the between-class score") {
-    import spark.implicits._
-    val rows = run("sessionize_otsu")
-      .select("bucket", "n", "w0", "w1", "score_floor", "is_chosen", "timeout_sec")
-      .as[(Int, Long, Long, Long, Long, Boolean, Long)].collect().sortBy(_._1)
-    assert(rows.nonEmpty)
-    assert(rows.count(_._6) == 1, "not exactly one chosen threshold")
-    // the last bucket is rightly absent (no split leaves both classes
-    // nonempty there), so the grand total is any row's w0+w1
-    val total = rows.head._3 + rows.head._4
-    rows.foreach { case (b, n, w0, w1, sf_, _, ts) =>
-      assert(w0 + w1 == total, s"bucket $b classes don't partition")
-      assert(w0 > 0 && w1 > 0, s"bucket $b empty class survived the sweep")
-      assert(sf_ >= 0)
-      assert(ts == (1L << b), s"bucket $b timeout")
-    }
-    // cumulative w0 must be monotone in bucket
-    assert(rows.sliding(2).forall(p => p(0)._3 < p(1)._3), "w0 not strictly increasing")
-    val chosen = rows.find(_._6).get
-    assert(rows.forall(r => r._5 <= chosen._5), "winner does not maximize the score")
-  }
 }

@@ -220,93 +220,6 @@ class DedupSpec extends SparkTestBase {
     df.unpersist()
   }
 
-  test("dedup_incremental: delta-only probe equals the full pipeline restricted to delta") {
-    import spark.implicits._
-    val inc = run("dedup_incremental").cache()
-    // every reported doc is a delta member by the content-hash rule
-    val deltaDocs = graft.sources.Tables.documents(spark, sf)
-      .filter(substring(md5(col("text")), 1, 1)
-        .isin(graft.operators.Dedup.IncDeltaHex: _*))
-      .select("doc_id")
-    assert(inc.join(deltaDocs, Seq("doc_id"), "left_anti").count() == 0)
-    // a 'dup' row must name a real partner with jaccard ≥ 0.4;
-    // a 'unique' row must carry the sentinels
-    assert(inc.filter(col("status") === "dup" &&
-      (col("best_partner") < 0 || col("best_jaccard") < 0.4)).count() == 0)
-    assert(inc.filter(col("status") === "unique" &&
-      (col("best_partner") =!= -1L || col("best_jaccard") =!= 0.0 ||
-        col("n_dups") =!= 0L)).count() == 0)
-    // cross-check against the FULL minhash pair list: a delta doc is
-    // 'dup' iff it appears in some full-pipeline pair (either side)
-    val pairs = run("dedup_minhash_lsh")
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
-    val full = deltaDocs.join(pairs, Seq("doc_id")).as[Long].collect().toSet
-    val mine = inc.filter(col("status") === "dup").select("doc_id").as[Long].collect().toSet
-    assert(mine == full, s"incremental dup set ${mine.size} != full-restricted ${full.size}")
-    inc.unpersist()
-  }
-
-  test("dedup_winnow: selection bounds hold and a driver-side replay agrees") {
-    import spark.implicits._
-    val W = graft.operators.Dedup.WinnowW
-    val rows = run("dedup_winnow")
-      .select("doc_id", "n_grams", "n_selected", "n_shared", "min_fp")
-      .as[(Long, Long, Long, Long, Long)].collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (id, ng, sel, sh, _) =>
-      assert(sel >= 1 && sel <= ng - W + 1, s"doc $id selection out of bounds")
-      assert(sh >= 0 && sh <= sel)
-    }
-    // driver-side replay of the winnowing fold for a sample
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select("doc_id", "text").as[(Long, String)].collect().take(30)
-    val got = rows.map(r => r._1 -> r).toMap
-    val md = java.security.MessageDigest.getInstance("MD5")
-    docs.foreach { case (id, text) =>
-      val toks = text.trim.toLowerCase.split("\\s+").filter(_.nonEmpty)
-      if (toks.length >= W + 2) {
-        val hs = toks.sliding(3).map(_.mkString(" ")).map { g =>
-          val hx = md.digest(g.getBytes("UTF-8")).map("%02x".format(_)).mkString
-          java.lang.Long.parseLong(hx.take(13), 16)
-        }.toArray
-        val selected = (0 to hs.length - W).map(i => hs.slice(i, i + W).min).distinct
-        val (_, ng, sel, _, minFp) = got(id)
-        assert(ng == hs.length, s"doc $id gram count")
-        assert(sel == selected.length, s"doc $id selected ${sel} vs ${selected.length}")
-        assert(minFp == selected.min)
-      }
-    }
-  }
-
-  test("dedup_lsh_tuning: candidate volume falls and precision rises with rows per band") {
-    import spark.implicits._
-    val rows = run("dedup_lsh_tuning").orderBy("rows_per_band")
-      .select("bands", "rows_per_band", "n_candidates", "n_caught", "n_truth",
-        "recall", "precision")
-      .as[(Int, Int, Long, Long, Long, Double, Double)].collect()
-    assert(rows.map(_._2).toSeq == graft.operators.Dedup.TuneRows)
-    rows.foreach { case (b, r, nc, caught, truth, rec, prec) =>
-      assert(b * r == graft.operators.Dedup.NumHashes)
-      assert(caught <= truth && caught <= nc)
-      if (truth > 0) assert(rec == math.floor(caught.toDouble / truth * 1e4) / 1e4)
-      if (nc > 0) assert(prec == math.floor(caught.toDouble / nc * 1e4) / 1e4)
-    }
-    // banding theory: the band boundaries nest (2 | 4 | 8), so wider
-    // bands give a SUBSET of candidates — volume and recall can only
-    // shrink as rows per band grow (precision usually rises but is
-    // not a theorem, so it is reported, not asserted)
-    rows.sliding(2).foreach {
-      case Array(a, b) =>
-        assert(b._3 <= a._3, "candidates must shrink as bands widen")
-        assert(b._4 <= a._4, "caught set is nested")
-        assert(b._6 <= a._6 + 1e-12, "recall cannot rise as bands widen")
-      case _ => ()
-    }
-    // the sweep is non-trivial on this corpus: the widest-net config
-    // pays real candidate overhead over the strictest
-    assert(rows.head._3 > rows.last._3)
-  }
-
   private def lev(a: String, b: String): Int = {
     val dp = Array.tabulate(b.length + 1)(identity)
     for (i <- 1 to a.length) {

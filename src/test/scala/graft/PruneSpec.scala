@@ -52,29 +52,4 @@ class PruneSpec extends SparkTestBase {
     assert(out.getOrElse("churned", 0L) == churned)
     assert(out.getOrElse("retained", 0L) == retained)
   }
-
-  test("sink_manifest_prune: clustering skips files; hash placement scans everything") {
-    import spark.implicits._
-    val rows = run("sink_manifest_prune")
-      .select("layout", "n_files", "files_scanned", "rows_total", "rows_scanned",
-        "rows_matched", "scan_share")
-      .as[(String, Long, Long, Long, Long, Long, Double)].collect()
-    val byLayout = rows.map(r => r._1 -> r).toMap
-    assert(byLayout.keySet == Set("clustered", "hash"))
-    rows.foreach { case (l, nf, fs, rt, rs, rm, share) =>
-      assert(fs <= nf, s"$l scanned more files than exist")
-      assert(rm <= rs && rs <= rt, s"$l row accounting broken")
-      assert(share >= 0 && share <= 1)
-    }
-    // both layouts hold the same corpus and the same predicate
-    assert(byLayout("clustered")._4 == byLayout("hash")._4)
-    assert(byLayout("clustered")._6 == byLayout("hash")._6)
-    // the whole point: clustered min/max prune beats hash placement
-    assert(byLayout("clustered")._7 < byLayout("hash")._7,
-      "clustered layout failed to out-prune hash placement")
-    // hash files span wide ranges → most survive pruning (all of them
-    // once files hold enough rows; sparse sf0.001 files can miss)
-    assert(byLayout("hash")._3 * 2 > byLayout("hash")._2,
-      "hash placement pruned more than half its files — layout not wide-range")
-  }
 }

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
   * restriction, monotone growth curves). */
 class Round8Spec extends SparkTestBase {
 
-  private def run(name: String) = SparkEntry.queries(name)(spark, sf)
-
   test("ann_recall_eval: recall is a proper fraction of the exact top-k") {
     import spark.implicits._
     val rows = run("ann_recall_eval")

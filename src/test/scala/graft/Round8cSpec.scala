@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
   * bootstrap coverage, allocation budgets, rollup conservation). */
 class Round8cSpec extends SparkTestBase {
 
-  private def run(name: String) = SparkEntry.queries(name)(spark, sf)
-
   test("ann_sq8_topk: full result panel, ascending integer distances, nonzero exact overlap") {
     import spark.implicits._
     val rows = run("ann_sq8_topk")

@@ -209,97 +209,6 @@ class SimilaritySpec extends SparkTestBase {
     df.unpersist()
   }
 
-  test("ann_recall_eval: recall is a proper fraction of the exact top-k") {
-    import spark.implicits._
-    val rows = run("ann_recall_eval")
-      .select("query_id", "n_truth", "n_hit", "recall")
-      .as[(Long, Long, Long, Double)].collect()
-    assert(rows.length == graft.operators.Similarity.NumQueries)
-    rows.foreach { case (q, nt, nh, r) =>
-      assert(nt == graft.operators.Similarity.TopK, s"q$q truth size")
-      assert(nh >= 0 && nh <= nt, s"q$q hits out of range")
-      assert(r >= 0.0 && r <= 1.0)
-      assert(math.abs(r - math.floor(nh.toDouble / nt * 1e4) / 1e4) < 1e-12)
-    }
-    // the multi-table LSH index should not be useless on this corpus
-    assert(rows.map(_._3).sum > 0, "zero total recall — index broken")
-  }
-
-  test("ann_ivf_tuning: nested probe lists make volume and coverage monotone") {
-    import spark.implicits._
-    val rows = run("ann_ivf_tuning").orderBy("nprobe")
-      .select("nprobe", "n_candidates", "n_caught", "n_truth", "coverage", "scan_share")
-      .as[(Int, Long, Long, Long, Double, Double)].collect()
-    assert(rows.map(_._1).toSeq == graft.operators.Similarity.IvfTuneProbes)
-    rows.foreach { case (_, nc, caught, truth, cov, share) =>
-      assert(caught <= truth && caught <= nc)
-      assert(cov == math.floor(caught.toDouble / truth * 1e4) / 1e4)
-      assert(share > 0.0 && share <= 1.0)
-    }
-    rows.sliding(2).foreach {
-      case Array(a, b) =>
-        assert(b._2 >= a._2, "candidates grow with nprobe")
-        assert(b._3 >= a._3, "caught set is nested")
-        assert(b._6 >= a._6 - 1e-12, "scan share grows with nprobe")
-      case _ => ()
-    }
-    // the sweep is informative: more probes really buy coverage here
-    assert(rows.last._5 > rows.head._5)
-  }
-
-  test("dedup_semantic: cell pair join is a hash/merge equi-join, never a product") {
-    // the entry is skipped by the plan sweep (quantizer training runs
-    // jobs at construction), so its scale contract is pinned here: the
-    // only nested-loop shape allowed is the K-row centroid broadcast;
-    // the within-cell pair generation must ride the cell equi-join
-    val p = plan("dedup_semantic")
-    assert(!p.contains("CartesianProduct"), "no cartesian anywhere")
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("BroadcastHashJoin"), s"cell pair join must be an equi-join:\n${p.take(1500)}")
-  }
-
-  test("ann_sq8_topk: full result panel, ascending integer distances, nonzero exact overlap") {
-    import spark.implicits._
-    val rows = run("ann_sq8_topk")
-      .select("query_id", "neighbor_id", "sq_dist", "rank")
-      .as[(Long, Long, Long, Int)].collect()
-    val k = graft.operators.Similarity.TopK
-    assert(rows.length == graft.operators.Similarity.NumQueries * k)
-    rows.groupBy(_._1).foreach { case (q, rs) =>
-      assert(rs.map(_._4).sorted.toSeq == (1 to k), s"q$q ranks")
-      val byRank = rs.sortBy(_._4)
-      assert(byRank.sliding(2).forall(p => p(0)._3 <= p(1)._3), s"q$q distances not ascending")
-      assert(rs.forall(_._3 >= 0), s"q$q negative distance")
-      assert(rs.forall(_._2 != q), s"q$q returned itself")
-    }
-    // the 8-bit quantizer must agree with the exact index on a decent share
-    val truth = run("ann_bruteforce_topk").select("query_id", "neighbor_id")
-      .as[(Long, Long)].collect().toSet
-    val overlap = rows.map(r => (r._1, r._2)).count(truth)
-    assert(overlap >= truth.size / 2, s"SQ8 recall too low: $overlap/${truth.size}")
-  }
-
-  test("ann_mips_topk: dot ranking is descending and diverges measurably from cosine") {
-    import spark.implicits._
-    val rows = run("ann_mips_topk")
-      .select("query_id", "neighbor_id", "dot", "rank", "in_cosine_topk")
-      .as[(Long, Long, Double, Int, Boolean)].collect()
-    val k = graft.operators.Similarity.TopK
-    assert(rows.length == graft.operators.Similarity.NumQueries * k)
-    rows.groupBy(_._1).foreach { case (q, rs) =>
-      val byRank = rs.sortBy(_._4)
-      assert(byRank.map(_._4).toSeq == (1 to k), s"q$q ranks")
-      assert(byRank.sliding(2).forall(p => p(0)._3 >= p(1)._3), s"q$q dots not descending")
-      assert(rs.forall(_._2 != q), s"q$q returned itself")
-    }
-    // the flag must agree with an independent recomputation of the cosine panel
-    val cos = run("ann_bruteforce_topk").select("query_id", "neighbor_id")
-      .as[(Long, Long)].collect().toSet
-    rows.foreach { case (q, n, _, _, flag) =>
-      assert(flag == cos((q, n)), s"($q,$n) cosine-membership flag wrong")
-    }
-  }
-
   test("semCellCount: NumCells floor at gate scale, K ∝ corpus past it") {
     assert(Similarity.semCellCount(500) == Similarity.NumCells)
     assert(Similarity.semCellCount(2000) == Similarity.NumCells)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.SourceRegistry
-import org.apache.spark.sql.functions._
 
 /** The registry's live-database path, proven against embedded Derby
   * (the JDBC engine available offline), plus the file-format branches. */
@@ -92,23 +91,5 @@ class SourceRegistrySpec extends SparkTestBase {
       .groupBy("event_type").agg(count(lit(1)).as("n2"))
     assert(df.join(recount, "event_type").filter(col("n_new") =!= col("n2")).count() == 0)
     df.unpersist()
-  }
-
-  test("source_partition_bounds: partitions tile the key space and conserve rows") {
-    import spark.implicits._
-    val rows = run("source_partition_bounds")
-      .select("part_id", "lo_bound", "hi_bound", "n_rows", "skew_ratio")
-      .as[(Long, Long, Option[Long], Long, Double)].collect().sortBy(_._1)
-    assert(rows.length == graft.sources.SourceRegistry.JdbcParts)
-    assert(rows.map(_._1).toSeq == (0L until graft.sources.SourceRegistry.JdbcParts))
-    // contiguous, non-overlapping bounds; last unbounded above
-    rows.sliding(2).foreach { case Array(a, b) =>
-      assert(a._3.contains(b._2), s"partition ${a._1} upper != ${b._1} lower")
-    }
-    assert(rows.last._3.isEmpty, "last partition must be unbounded above")
-    val total = graft.sources.Tables.orders(spark, sf).count()
-    assert(rows.map(_._4).sum == total, "partitions lose or duplicate rows")
-    // a sequence-like key should parallelize near-uniformly
-    assert(rows.forall(r => r._5 > 0.2 && r._5 < 5.0), "pathological partition skew")
   }
 }

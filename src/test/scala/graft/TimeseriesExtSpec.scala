@@ -247,94 +247,6 @@ class TimeseriesExtSpec extends SparkTestBase {
     df.unpersist()
   }
 
-  test("metrics_slo_attainment: all-integer budget ledger is internally consistent") {
-    import spark.implicits._
-    val rows = run("metrics_slo_attainment").orderBy("day")
-      .select("day", "total", "errors", "attainment_ppm", "cum_total", "cum_errors",
-        "cum_attainment_ppm", "budget_left_ppm", "breached")
-      .as[(Long, Long, Long, Long, Long, Long, Long, Long, Boolean)].collect()
-    assert(rows.nonEmpty)
-    // cumulative columns are the running sums; ledger identities hold
-    var (ct, ce) = (0L, 0L)
-    rows.foreach { case (_, t, e, app, cumT, cumE, cApp, left, breached) =>
-      ct += t; ce += e
-      assert(cumT == ct && cumE == ce)
-      assert(app == (t - e) * 1000000L / t)
-      assert(cApp == (ct - ce) * 1000000L / ct)
-      assert(left == cApp - graft.operators.TimeseriesExt.SloObjectivePpm)
-      assert(breached == (left < 0))
-    }
-    val events = graft.sources.Tables.events(spark, sf).count()
-    assert(rows.last._5 == events)
-  }
-
-  test("metrics_downsample_m4: envelope bounds hold and the plan is one aggregation") {
-    import spark.implicits._
-    val rows = run("metrics_downsample_m4")
-      .select("event_type", "bucket_start", "samples", "first_value", "last_value",
-        "min_value", "max_value")
-      .as[(String, Long, Long, Double, Double, Double, Double)].collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (t, b, n, f, l, mn, mx) =>
-      assert(n >= 1)
-      assert(mn <= mx && f >= mn && f <= mx && l >= mn && l <= mx,
-        s"$t@$b envelope violated")
-    }
-    // M4 must stay a single map-side-combinable aggregation: no window,
-    // no join — this is its advantage over the LTTB fold
-    val p = plan("metrics_downsample_m4")
-    assert(!p.contains("Window") && !p.contains("Join"), "M4 must be one groupBy")
-  }
-
-  test("prom_scrape_health: one global spine; up, flap and run bounds hold") {
-    import spark.implicits._
-    val rows = run("prom_scrape_health")
-      .select("event_type", "n_slots", "n_up", "availability", "n_flaps", "longest_down_hours")
-      .as[(String, Long, Long, Double, Long, Long)].collect()
-    assert(rows.nonEmpty)
-    assert(rows.map(_._2).distinct.length == 1, "targets disagree on the global slot count")
-    rows.foreach { case (t, slots, up, avail, flaps, ldh) =>
-      assert(up >= 0 && up <= slots, s"$t up count")
-      assert(math.abs(avail - math.floor(up.toDouble / slots * 1e4) / 1e4) < 1e-12)
-      assert(flaps < slots, s"$t flaps")
-      assert(ldh <= slots - up, s"$t longest down run exceeds total downtime")
-      assert((ldh == 0) == (up == slots), s"$t down-run/availability mismatch")
-    }
-  }
-
-  test("metrics_rolling_corr: click autocorrelation is exactly 1; all values in [-1, 1]") {
-    import spark.implicits._
-    val rows = run("metrics_rolling_corr")
-      .select("event_type", "day", "corr_7d")
-      .as[(String, Long, Option[Double])].collect()
-    assert(rows.nonEmpty)
-    rows.foreach { case (t, day, c) =>
-      c.foreach(v => assert(v >= -1.0 - 1e-9 && v <= 1.0 + 1e-9, s"($t,$day) corr $v"))
-    }
-    val click = rows.filter(_._1 == "click").flatMap(_._3)
-    assert(click.nonEmpty && click.forall(v => math.abs(v - 0.9999) < 1e-9 || v == 1.0),
-      "click-vs-click rolling correlation must floor to 0.9999/1.0")
-  }
-
-  test("metrics_autocorr: one row per (series, lag); acf bounded; support shrinks with lag") {
-    import spark.implicits._
-    val rows = run("metrics_autocorr")
-      .select("event_type", "lag", "n_pairs", "acf")
-      .as[(String, Long, Long, Option[Double])].collect()
-    val lags = graft.operators.TimeseriesExt.AcfLags
-    val types = rows.map(_._1).distinct
-    assert(rows.length == types.length * lags.length)
-    rows.foreach { case (t, l, n, a) =>
-      assert(n > 0, s"($t,$l) no pairs")
-      a.foreach(v => assert(v >= -1.0 - 1e-9 && v <= 1.0 + 1e-9, s"($t,$l) acf $v"))
-    }
-    types.foreach { t =>
-      val byLag = rows.filter(_._1 == t).sortBy(_._2)
-      assert(byLag.sliding(2).forall(p => p(0)._3 >= p(1)._3),
-        s"$t pair support should not grow with lag")
-    }
-  }
-
   // --------------------------------------------- metrics_sax_motifs
 
   /** Driver-side SAX replay with the entry's exact integer pipeline. */

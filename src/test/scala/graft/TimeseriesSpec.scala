@@ -218,90 +218,4 @@ class TimeseriesSpec extends SparkTestBase {
     assert(p.contains("Expand"), "grouping sets should plan an Expand")
     df.unpersist()
   }
-
-  test("scd2_bitemporal: probes respect both axes; the now-probe equals last-writer-wins") {
-    import spark.implicits._
-    val rows = run("scd2_bitemporal")
-      .select("probe", "user_id", "valid_day", "txn", "balance")
-      .as[(String, Long, Long, Long, Double)].collect()
-    val byProbe = rows.groupBy(_._1)
-    assert(byProbe.keySet == Set("known_0115_valid_0110", "known_now_valid_0110",
-      "known_now_valid_0131"))
-    // the full-knowledge, full-validity probe is plain LWW over events
-    val lww = graft.sources.Tables.events(spark, sf)
-      .groupBy(col("user_id"))
-      .agg(max(struct(
-        expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 as bigint)").as("d"),
-        col("event_id").as("t"), round(col("value"), 2).as("b"))).as("w"))
-      .select(col("user_id"), col("w.t"), col("w.b"))
-      .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    byProbe("known_now_valid_0131").foreach { case (_, u, _, t, b) =>
-      assert(lww(u) == ((t, b)), s"user $u now-probe must be LWW")
-    }
-    // the knowledge cutoff really caps the txn axis
-    val cut = graft.sources.Tables.events(spark, sf)
-      .filter(col("ts") < lit("2024-01-15 00:00:00").cast("timestamp"))
-      .agg(max(col("event_id"))).head.getLong(0)
-    byProbe("known_0115_valid_0110").foreach { case (_, u, vd, t, _) =>
-      assert(t <= cut, s"user $u leaked future txn $t > $cut")
-      assert(vd <= 19732L, s"user $u valid_day $vd past the 01-10 cut") // 2024-01-10
-    }
-    // more knowledge can only move a user's version forward
-    val early = byProbe("known_0115_valid_0110").map(r => r._2 -> r._4).toMap
-    byProbe("known_now_valid_0110").foreach { case (_, u, _, t, _) =>
-      early.get(u).foreach(te => assert(t >= te))
-    }
-  }
-
-  test("prom_metric_type_infer: cumulative arms infer counter, raw arms gauge") {
-    import spark.implicits._
-    val rows = run("prom_metric_type_infer")
-      .select("series", "n_steps", "n_down", "n_reset", "monotone_share", "inferred_type")
-      .as[(String, Long, Long, Long, Double, String)].collect()
-    val (cum, raw) = rows.partition(_._1.endsWith(":cum"))
-    assert(cum.nonEmpty && raw.nonEmpty)
-    cum.foreach { r =>
-      assert(r._3 == 0 && r._6 == "counter", s"${r._1}: running total must infer counter")
-      assert(r._5 == 1.0)
-    }
-    raw.foreach { r =>
-      assert(r._6 == "gauge", s"${r._1}: oscillating raw series must infer gauge")
-      assert(r._3 > 0 && r._4 <= r._3)
-    }
-  }
-
-  test("metrics_scrape_interval: one modal row per series with a proper share") {
-    import spark.implicits._
-    val rows = run("metrics_scrape_interval")
-      .select("event_type", "n_gaps", "modal_gap_sec", "modal_count", "modal_share")
-      .as[(String, Long, Long, Long, Double)].collect()
-    assert(rows.map(_._1).distinct.length == rows.length, "duplicate series rows")
-    rows.foreach { case (t, n, gap, cnt, share) =>
-      assert(gap >= 0, s"$t negative modal gap")
-      assert(cnt >= 1 && cnt <= n, s"$t modal count out of range")
-      assert(math.abs(share - math.floor(cnt.toDouble / n * 1e4) / 1e4) < 1e-12)
-    }
-  }
-
-  test("alert_notify_dedup: notification accounting tiles the firing hours") {
-    import spark.implicits._
-    val rows = run("alert_notify_dedup")
-      .select("event_type", "n_hours", "n_incidents", "n_repeats", "n_resolves",
-        "n_suppressed")
-      .as[(String, Long, Long, Long, Long, Long)].collect()
-    assert(rows.nonEmpty)
-    // independent recount from the hysteresis stream itself
-    val hyst = run("metrics_alert_hysteresis")
-      .select("event_type", "firing", "transition")
-      .as[(String, Int, Option[String])].collect()
-    rows.foreach { case (t, nh, ni, nr, nres, nsup) =>
-      val mine = hyst.filter(_._1 == t)
-      assert(nh == mine.length, s"$t hour count")
-      assert(ni == mine.count(_._3.contains("fire")), s"$t incidents != fire transitions")
-      assert(nres == mine.count(_._3.contains("resolve")), s"$t resolves")
-      val steady = mine.count(r => r._2 == 1 && r._3.isEmpty)
-      assert(nr + nsup == steady, s"$t repeats+suppressed must tile steady-firing hours")
-      assert(nr <= ni * (nh * 3600 / graft.operators.Timeseries.NotifyRepeatSec + 1))
-    }
-  }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.Writers
-import org.apache.spark.sql.functions._
 
 /** The write-side scale promises: bucketed joins shuffle nothing,
   * partitioned reads prune directories. */
@@ -189,17 +188,5 @@ class WritersSpec extends SparkTestBase {
     val days = dir.listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(Seq("2024-01-01", "2024-01-04", "2024-01-05")
       .forall(d0 => days.contains(s"day=$d0")), s"partition dirs: $days")
-  }
-
-  test("sink_write_audit_publish: staged bytes round-trip and the publish is audited") {
-    import spark.implicits._
-    val rows = run("sink_write_audit_publish")
-      .select("side", "n_rows", "digest", "published")
-      .as[(String, Long, String, Boolean)].collect()
-    assert(rows.map(_._1).sorted.toSeq == Seq("published", "source"))
-    assert(rows.forall(_._4), "audit failed — staging did not round-trip")
-    val Array(p, s0) = rows.sortBy(_._1)
-    assert(p._2 == s0._2 && p._3 == s0._3, "published audit differs from source audit")
-    assert(p._2 > 0)
   }
 }
