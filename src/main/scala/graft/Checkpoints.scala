@@ -90,12 +90,15 @@ object Checkpoints {
     * upstream of a cut; the cut count pins that dimension instead). */
   private[graft] def liveCutCount: Int = liveCuts.get().size
 
-  def cut(df: DataFrame): DataFrame = {
-    val ss = df.sparkSession
-    val reliable = ss.conf.get(Flag, "false").toBoolean &&
-      ss.sparkContext.getCheckpointDir.isDefined
-    trackCut(if (reliable) df.checkpoint() else df.localCheckpoint())
-  }
+  /** EAGER lineage cut: `df` materializes now, into executor-memory
+    * blocks, or into the checkpoint dir under the reliable-checkpoint
+    * flag (see the object doc). */
+  def cut(df: DataFrame): DataFrame =
+    trackCut(if (reliable(df)) df.checkpoint() else df.localCheckpoint())
+
+  private def reliable(df: DataFrame): Boolean =
+    df.sparkSession.conf.get(Flag, "false").toBoolean &&
+      df.sparkSession.sparkContext.getCheckpointDir.isDefined
 
   /** LAZY lineage cut for in-loop frontiers: the Catalyst plan is cut
     * immediately (each round plans against a LogicalRDD, so per-round
@@ -107,10 +110,6 @@ object Checkpoints {
     * the deferred chain still bound recomputation the usual way. Under
     * the reliable-checkpoint flag this stays the eager reliable
     * checkpoint — mid-loop recoverability beats job-count there. */
-  def cutLazy(df: DataFrame): DataFrame = {
-    val ss = df.sparkSession
-    val reliable = ss.conf.get(Flag, "false").toBoolean &&
-      ss.sparkContext.getCheckpointDir.isDefined
-    trackCut(if (reliable) df.checkpoint() else df.localCheckpoint(eager = false))
-  }
+  def cutLazy(df: DataFrame): DataFrame =
+    trackCut(if (reliable(df)) df.checkpoint() else df.localCheckpoint(eager = false))
 }

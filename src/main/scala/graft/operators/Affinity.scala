@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -111,17 +111,23 @@ object Affinity {
     * is one series-keyed window + one tiny aggregation, the same shape
     * as `metrics_counter_rate`. */
   def transitionMatrix: Q = (s, d) => {
+    val steps = transitionCounts(s, d)
+    val totals = steps.groupBy(col("from_type")).agg(sum(col("n")).as("row_total"))
+    steps.join(broadcast(totals), Seq("from_type"))
+      .select(col("from_type"), col("to_type"), col("n"),
+        (floor(col("n") * lit(10000) / col("row_total")) / 10000.0).as("prob"))
+  }
+
+  /** (from_type, to_type, n): each user's consecutive event-type
+    * transitions over the per-user (ts, event_id) order, counted. */
+  private def transitionCounts(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val steps = Tables.events(s, d)
+    Tables.events(s, d)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("from_type", lag(col("event_type"), 1).over(w))
       .filter(col("from_type").isNotNull)
       .groupBy(col("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n"))
-    val totals = steps.groupBy(col("from_type")).agg(sum(col("n")).as("row_total"))
-    steps.join(broadcast(totals), Seq("from_type"))
-      .select(col("from_type"), col("to_type"), col("n"),
-        (floor(col("n") * lit(10000) / col("row_total")) / 10000.0).as("prob"))
   }
 
   val transitionMatrixSql: String =
@@ -155,14 +161,7 @@ object Affinity {
     * corpus-sized pass; iterating the tiny chain is driver arithmetic. */
   def markovSteady: Q = (s, d) => {
     import s.implicits._
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val counts = Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
+    val counts = transitionCounts(s, d).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val totals = counts.groupBy(_._1).map { case (f, rs) => f -> rs.map(_._3).sum }
     val p = counts.map { case (f, t, n) => (f, t, n * MarkovPScale / totals(f)) }
@@ -364,21 +363,13 @@ object Affinity {
     * touching at an instant count as overlapping (inclusive ends).
     * Pure integer arithmetic — engine-exact. */
   def concurrency: Q = (s, d) => {
-    val gap = AsOf.GapSeconds
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     // sess is consumed three times below (start deltas, end deltas, the
     // hour-spine min/max) — r16: ONE events scan+window pass behind a
     // lazy cut (narrow CORPUS-PROJECTED frame), both ±1 deltas emitted
     // by a single explode instead of a union of two derivations, and
     // the spine bounds read off sess (min session start == min ts,
     // max session end == max ts — sessions tile the event set).
-    val sess = graft.Checkpoints.cutLazy(Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .withColumn("new_session",
-        when(unix_timestamp(col("ts")) - unix_timestamp(lag(col("ts"), 1).over(w)) > gap
-          || lag(col("ts"), 1).over(w).isNull, 1).otherwise(0))
-      .withColumn("session_idx", sum(col("new_session")).over(w))
-      .groupBy(col("user_id"), col("session_idx"))
+    val sess = graft.Checkpoints.cutLazy(userSessions(s, d)
       .agg(min(col("ts")).as("start_ts"), max(col("ts")).as("end_ts")))
     val deltas = sess.select(explode(expr(
         "array(struct(start_ts AS ts, 1 AS delta), struct(end_ts AS ts, -1 AS delta))"))
@@ -567,6 +558,20 @@ object Affinity {
 
   // ---------------------------------------------- interval coverage
 
+  /** Each user's events grouped by (user_id, session_idx): a session
+    * ends where the gap to the user's previous event exceeds
+    * [[AsOf.GapSeconds]]. */
+  private def userSessions(s: SparkSession, d: String): RelationalGroupedDataset = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    Tables.events(s, d)
+      .select(col("user_id"), col("ts"), col("event_id"))
+      .withColumn("new_session",
+        when(unix_timestamp(col("ts")) - unix_timestamp(lag(col("ts"), 1).over(w)) >
+          AsOf.GapSeconds || lag(col("ts"), 1).over(w).isNull, 1).otherwise(0))
+      .withColumn("session_idx", sum(col("new_session")).over(w))
+      .groupBy(col("user_id"), col("session_idx"))
+  }
+
   /** Daily covered-time: the union length of all session intervals per
     * day — "how many seconds of the day had ANY activity" (uptime /
     * utilization from overlapping windows, where summing durations
@@ -577,15 +582,7 @@ object Affinity {
     * past it, island lengths summed. Partitioned by day — balanced at
     * any scale. Integer epoch-seconds throughout. */
   def intervalCoverage: Q = (s, d) => {
-    val gap = AsOf.GapSeconds
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val sess = Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .withColumn("new_session",
-        when(unix_timestamp(col("ts")) - unix_timestamp(lag(col("ts"), 1).over(w)) > gap
-          || lag(col("ts"), 1).over(w).isNull, 1).otherwise(0))
-      .withColumn("session_idx", sum(col("new_session")).over(w))
-      .groupBy(col("user_id"), col("session_idx"))
+    val sess = userSessions(s, d)
       .agg(unix_timestamp(date_trunc("second", min(col("ts")))).as("lo"),
         unix_timestamp(date_trunc("second", max(col("ts")))).as("hi"))
     val segs = sess
@@ -871,12 +868,23 @@ object Affinity {
     * pair, and the answer is a prefix sum over the day spine. Work is
     * O(|user-days|), never |days|×|users|, and the only non-keyed
     * state is the |days|-row delta table. Pure integers. */
-  def slidingDistinctUsers: Q = (s, d) => {
-    val w = SlideDays - 1
-    val ud = Tables.events(s, d)
+  def slidingDistinctUsers: Q = (s, d) =>
+    trailingDistinctUsers(userDays(s, d), SlideDays, "distinct_users_7d")
+      .select(col("day_nr"), col("distinct_users_7d"))
+
+  /** Distinct (user_id, day_nr) pairs of the events table. */
+  private def userDays(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
       .select(col("user_id"),
         expr("unix_timestamp(date_trunc('second', ts)) DIV 86400").as("day_nr"))
       .distinct()
+
+  /** Trailing-`days` distinct users per day over the user-days `ud`,
+    * in column `out` beside (day_nr, delta): user-days → merged
+    * islands → ±1 deltas → prefix sum over the day spine. The one body
+    * of `q_sliding_distinct_users` and the MAU of `events_stickiness`. */
+  private def trailingDistinctUsers(ud: DataFrame, days: Int, out: String): DataFrame = {
+    val w = days - 1
     val wU = Window.partitionBy(col("user_id")).orderBy(col("day_nr"))
     val intervals = ud
       .withColumn("prev_max", max(col("day_nr")).over(
@@ -893,11 +901,8 @@ object Affinity {
     val spine = ud.agg(min(col("day_nr")).as("d0"), max(col("day_nr")).as("d1"))
       .select(explode(expr("sequence(d0, d1)")).as("day_nr"))
     spine.join(deltas, Seq("day_nr"), "left")
-      .withColumn("distinct_users_7d",
-        sum(coalesce(col("delta"), lit(0L))).over(
-          Window.orderBy(col("day_nr"))
-            .rowsBetween(Window.unboundedPreceding, 0)))
-      .select(col("day_nr"), col("distinct_users_7d"))
+      .withColumn(out, sum(coalesce(col("delta"), lit(0L))).over(
+        Window.orderBy(col("day_nr")).rowsBetween(Window.unboundedPreceding, 0)))
   }
 
   val slidingDistinctUsersSql: String = {
@@ -986,10 +991,7 @@ object Affinity {
     * each active (user, day) is "new" iff day == first day. Pure
     * integer counts. */
   def newVsReturning: Q = (s, d) => {
-    val ud = Tables.events(s, d)
-      .select(col("user_id"),
-        expr("unix_timestamp(date_trunc('second', ts)) DIV 86400").as("day_nr"))
-      .distinct()
+    val ud = userDays(s, d)
     val first = ud.groupBy(col("user_id")).agg(min(col("day_nr")).as("first_day"))
     ud.join(first, Seq("user_id"))
       .groupBy(col("day_nr"))
@@ -1017,35 +1019,14 @@ object Affinity {
 
   /** DAU/MAU stickiness — the canonical engagement ratio: daily active
     * users over trailing-30-day active users, per day. DAU is one
-    * distinct count; MAU reuses the `q_sliding_distinct_users`
+    * distinct count; MAU is the `q_sliding_distinct_users`
     * interval decomposition at a 30-day horizon (COUNT(DISTINCT) OVER
     * RANGE without the quadratic explode). Ratio is one floored
     * division of integers. */
   def stickiness: Q = (s, d) => {
-    val w = MauDays - 1
-    val ud = Tables.events(s, d)
-      .select(col("user_id"),
-        expr("unix_timestamp(date_trunc('second', ts)) DIV 86400").as("day_nr"))
-      .distinct()
+    val ud = userDays(s, d)
     val dau = ud.groupBy(col("day_nr")).agg(count(lit(1)).as("dau"))
-    val wU = Window.partitionBy(col("user_id")).orderBy(col("day_nr"))
-    val intervals = ud
-      .withColumn("prev_max", max(col("day_nr")).over(
-        wU.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("new_island",
-        when(col("prev_max").isNull || col("day_nr") > col("prev_max") + w, 1).otherwise(0))
-      .withColumn("island", sum(col("new_island")).over(
-        wU.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("user_id"), col("island"))
-      .agg(min(col("day_nr")).as("lo"), (max(col("day_nr")) + w).as("hi"))
-    val deltas = intervals.select(col("lo").as("day_nr"), lit(1L).as("delta"))
-      .unionByName(intervals.select((col("hi") + 1).as("day_nr"), lit(-1L).as("delta")))
-      .groupBy(col("day_nr")).agg(sum(col("delta")).as("delta"))
-    val spine = ud.agg(min(col("day_nr")).as("d0"), max(col("day_nr")).as("d1"))
-      .select(explode(expr("sequence(d0, d1)")).as("day_nr"))
-    spine.join(deltas, Seq("day_nr"), "left")
-      .withColumn("mau", sum(coalesce(col("delta"), lit(0L))).over(
-        Window.orderBy(col("day_nr")).rowsBetween(Window.unboundedPreceding, 0)))
+    trailingDistinctUsers(ud, MauDays, "mau")
       .join(dau, Seq("day_nr"), "left")
       .select(col("day_nr"), coalesce(col("dau"), lit(0L)).as("dau"), col("mau"),
         (floor(coalesce(col("dau"), lit(0L)) * lit(10000) / col("mau")) / 1e4)
@@ -1518,14 +1499,7 @@ object Affinity {
     * summation order to diverge on. Cell table is |types|² — value
     * domain, not corpus. */
   def entropyRate: Q = (s, d) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val steps = Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("from_type", lag(col("event_type"), 1).over(w))
-      .filter(col("from_type").isNotNull)
-      .groupBy(col("from_type"), col("event_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-    val perI = steps
+    val perI = transitionCounts(s, d)
       .withColumn("row_total", sum(col("n")).over(Window.partitionBy(col("from_type"))))
       .withColumn("term_x1e6",
         floor(col("n").cast("double") / col("row_total").cast("double")

@@ -251,10 +251,6 @@ object Curation {
     * same contract `text_tfidf_topk` already relies on). */
   def textPerplexity: Q = textPerplexityAt(LmVocabK)
 
-  /** Cap-parameterized body — `CurationSpec` exercises a tiny K so the
-    * OOV path is tested even though the default cap is larger than the
-    * test corpus' vocabulary (at which point the output is bit-equal
-    * to the uncapped model). */
   /** Train the capped unigram model in ONE corpus pass: `rollup(term)`
     * emits per-term counts PLUS the grand-total row (term IS NULL), so
     * ordering the total row first lets a single bounded
@@ -271,15 +267,20 @@ object Curation {
       .orderBy(col("term").isNull.desc, col("cnt").desc, col("term"))
       .limit(k + 2)
       .collect()
-    val total = rows.head.getLong(1)
-    val terms = rows.tail.map(r => (r.getString(0), r.getLong(1)))
-    (total, terms.take(k), terms.length > k)
+    // an empty corpus rolls up to no row at all, not a zero total
+    if (rows.isEmpty) (0L, Array.empty, false)
+    else {
+      val terms = rows.tail.map(r => (r.getString(0), r.getLong(1)))
+      (rows.head.getLong(1), terms.take(k), terms.length > k)
+    }
   }
 
-  private[graft] def textPerplexityAt(k: Int): Q = (s, d) => {
+  /** The capped unigram model as a broadcastable (term, surprisal)
+    * table plus the surprisal of the OOV bucket (0 when no tail was
+    * cut): the model `text_perplexity` and `text_ccnet_buckets` both
+    * score with. */
+  private def unigramSurprisal(s: SparkSession, d: String, k: Int): (DataFrame, Double) = {
     import s.implicits._
-    val toks = Tables.documents(s, d)
-      .select(col("doc_id"), explode(expr(toksExpr)).as("term"))
     val (total, topk, _) = lmVocabModel(s, d, k)
     val kept = topk.map(_._2).sum
     // driver-side Math.log is the same correctly-rounded ln the Spark
@@ -289,16 +290,39 @@ object Curation {
       .toDF("term", "surprisal")
     val oovSurprisal =
       if (total > kept) -math.log((total - kept).toDouble / total.toDouble) else 0.0
-    toks.join(broadcast(vocab), Seq("term"), "left")
-      .select(col("doc_id"),
-        coalesce(col("surprisal"), lit(oovSurprisal)).as("surprisal"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
+    (vocab, oovSurprisal)
+  }
+
+  /** The per-document fold every LM scorer ends in: per `keys` group,
+    * the unit count `n` and the surprisal sum `total` over the SORTED
+    * surprisal list, so both engines accumulate the identical IEEE
+    * sequence. */
+  private def sortedSurprisalSum(scored: DataFrame, keys: Seq[String], n: String,
+      total: String): DataFrame =
+    scored.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as(n),
         expr("aggregate(array_sort(collect_list(surprisal)), 0.0e0, (a, x) -> a + x)")
-          .as("sum_surprisal"))
-      .select(col("doc_id"), col("n_tokens"),
-        (floor(col("sum_surprisal") / col("n_tokens") * 1e4) / 1e4).as("cross_entropy"))
-      .withColumn("pass_filter", col("cross_entropy") <= 4.0)
+          .as(total))
+
+  /** Per-document cross-entropy (mean surprisal over `n` units, floored
+    * to 4 dp) and the `pass_filter` flag at `passMax`. */
+  private def crossEntropy(scored: DataFrame, n: String, passMax: Double): DataFrame =
+    sortedSurprisalSum(scored, Seq("doc_id"), n, "sum_surprisal")
+      .select(col("doc_id"), col(n),
+        (floor(col("sum_surprisal") / col(n) * 1e4) / 1e4).as("cross_entropy"))
+      .withColumn("pass_filter", col("cross_entropy") <= passMax)
+
+  /** Cap-parameterized body — `CurationSpec` exercises a tiny K so the
+    * OOV path is tested even though the default cap is larger than the
+    * test corpus' vocabulary (at which point the output is bit-equal
+    * to the uncapped model). */
+  private[graft] def textPerplexityAt(k: Int): Q = (s, d) => {
+    val toks = Tables.documents(s, d)
+      .select(col("doc_id"), explode(expr(toksExpr)).as("term"))
+    val (vocab, oovSurprisal) = unigramSurprisal(s, d, k)
+    crossEntropy(toks.join(broadcast(vocab), Seq("term"), "left")
+      .select(col("doc_id"),
+        coalesce(col("surprisal"), lit(oovSurprisal)).as("surprisal")), "n_tokens", 4.0)
   }
 
   val textPerplexitySql: String =
@@ -506,10 +530,28 @@ object Curation {
     * history table c1 re-aggregates the (K+1)²-bounded bigram table
     * instead of re-scanning the corpus. */
   private[graft] def textBigramLmAt(k: Int): Q = (s, d) => {
-    import s.implicits._
     val (_, topk, hasTail) = lmVocabModel(s, d, k)
-    val vocabDf = topk.toSeq.map(_._1).toDF("t")
     val v = topk.length.toLong + (if (hasTail) 1L else 0L)
+    val (bigrams, c2) = foldedBigrams(s, d, topk)
+    val c1 = c2.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
+    val scored = c2.join(broadcast(c1), Seq("w1"))
+      .select(col("w1"), col("w2"),
+        log((col("c1") + lit(v)).cast("double") / (col("c12") + 1).cast("double"))
+          .as("surprisal"))
+    crossEntropy(bigrams.join(scored, Seq("w1", "w2")), "n_bigrams", 5.0)
+  }
+
+  /** The corpus bigrams with both tokens folded into the `topk`
+    * vocabulary ([[OovTerm]] outside it), and their (w1, w2, c12) count
+    * table: the model both bigram LMs train on and score. Both frames
+    * are cut: `bigrams` is read twice (training and scoring), so the
+    * corpus explode + vocab fold runs one pass, not two; `c2` is the
+    * (K+1)²-bounded model table, cut so its consumers re-aggregate the
+    * small table instead of the corpus (guide §2.4). */
+  private def foldedBigrams(s: SparkSession, d: String, topk: Array[(String, Long)])
+      : (DataFrame, DataFrame) = {
+    import s.implicits._
+    val vocabDf = topk.toSeq.map(_._1).toDF("t")
     val rawBigrams = Tables.documents(s, d)
       .select(col("doc_id"), expr(toksExpr).as("toks"))
       .select(col("doc_id"), explode(expr(
@@ -518,10 +560,6 @@ object Curation {
                             i -> struct(toks[i] AS w1, toks[i + 1] AS w2))
              ELSE array() END""")).as("b"))
       .select(col("doc_id"), col("b.w1").as("rw1"), col("b.w2").as("rw2"))
-    // bigrams is referenced twice (model training + document scoring):
-    // cut it once so the corpus explode + vocab fold runs one pass, not
-    // two; c2 is the (K+1)²-bounded model table, cut so its consumers
-    // re-aggregate the small table instead of the corpus (guide §2.4)
     val bigrams = graft.Checkpoints.cutLazy(rawBigrams
       .join(broadcast(vocabDf.select(col("t").as("rw1"), lit(1).as("in1"))),
         Seq("rw1"), "left")
@@ -532,19 +570,7 @@ object Curation {
         when(col("in2").isNotNull, col("rw2")).otherwise(lit(OovTerm)).as("w2")))
     val c2 = graft.Checkpoints.cutLazy(
       bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
-    val c1 = c2.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
-    val scored = c2.join(broadcast(c1), Seq("w1"))
-      .select(col("w1"), col("w2"),
-        log((col("c1") + lit(v)).cast("double") / (col("c12") + 1).cast("double"))
-          .as("surprisal"))
-    bigrams.join(scored, Seq("w1", "w2"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        expr("aggregate(array_sort(collect_list(surprisal)), 0.0e0, (a, x) -> a + x)")
-          .as("sum_surprisal"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (floor(col("sum_surprisal") / col("n_bigrams") * 1e4) / 1e4).as("cross_entropy"))
-      .withColumn("pass_filter", col("cross_entropy") <= 5.0)
+    (bigrams, c2)
   }
 
   val textBigramLmSql: String =
@@ -623,30 +649,11 @@ object Curation {
   /** Cap-parameterized body — CurationSpec-style tiny-K exercises the
     * OOV fold; at K ≥ |vocab| the model is the uncapped KN exactly. */
   private[graft] def textBigramLmKnAt(k: Int): Q = (s, d) => {
-    import s.implicits._
     val (_, topk, _) = lmVocabModel(s, d, k)
-    val vocabDf = topk.toSeq.map(_._1).toDF("t")
-    val rawBigrams = Tables.documents(s, d)
-      .select(col("doc_id"), expr(toksExpr).as("toks"))
-      .select(col("doc_id"), explode(expr(
-        """CASE WHEN size(toks) >= 2
-             THEN transform(sequence(0, size(toks) - 2),
-                            i -> struct(toks[i] AS w1, toks[i + 1] AS w2))
-             ELSE array() END""")).as("b"))
-      .select(col("doc_id"), col("b.w1").as("rw1"), col("b.w2").as("rw2"))
-    // same cut discipline as the add-one sibling, and MORE load-bearing
-    // here: c2 feeds FOUR consumers (c1, n1p, nbb, scored) — uncut,
-    // each re-ran the corpus explode + bigram aggregation
-    val bigrams = graft.Checkpoints.cutLazy(rawBigrams
-      .join(broadcast(vocabDf.select(col("t").as("rw1"), lit(1).as("in1"))),
-        Seq("rw1"), "left")
-      .join(broadcast(vocabDf.select(col("t").as("rw2"), lit(1).as("in2"))),
-        Seq("rw2"), "left")
-      .select(col("doc_id"),
-        when(col("in1").isNotNull, col("rw1")).otherwise(lit(OovTerm)).as("w1"),
-        when(col("in2").isNotNull, col("rw2")).otherwise(lit(OovTerm)).as("w2")))
-    val c2 = graft.Checkpoints.cutLazy(
-      bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
+    // the c2 cut is MORE load-bearing here than in the add-one sibling:
+    // c2 feeds FOUR consumers (c1, n1p, nbb, scored) — uncut, each
+    // re-ran the corpus explode + bigram aggregation
+    val (bigrams, c2) = foldedBigrams(s, d, topk)
     // history table: total count AND distinct-continuation count per w1
     val c1 = c2.groupBy(col("w1"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))
@@ -658,14 +665,7 @@ object Curation {
       .join(broadcast(n1p), Seq("w2"))
       .crossJoin(broadcast(nbb))
       .select(col("w1"), col("w2"), expr(knSurprisalExpr).as("surprisal"))
-    bigrams.join(scored, Seq("w1", "w2"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        expr("aggregate(array_sort(collect_list(surprisal)), 0.0e0, (a, x) -> a + x)")
-          .as("sum_surprisal"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (floor(col("sum_surprisal") / col("n_bigrams") * 1e4) / 1e4).as("cross_entropy"))
-      .withColumn("pass_filter", col("cross_entropy") <= 4.5)
+    crossEntropy(bigrams.join(scored, Seq("w1", "w2")), "n_bigrams", 4.5)
   }
 
   val textBigramLmKnSql: String =
@@ -772,23 +772,13 @@ object Curation {
   def textCcnetBuckets: Q = textCcnetBucketsAt(LmVocabK)
 
   private[graft] def textCcnetBucketsAt(k: Int): Q = (s, d) => {
-    import s.implicits._
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), explode(expr(toksExpr)).as("term"))
-    val (total, topk, _) = lmVocabModel(s, d, k)
-    val kept = topk.map(_._2).sum
-    val vocab = topk.toSeq
-      .map { case (t, c) => (t, -math.log(c.toDouble / total.toDouble)) }
-      .toDF("term", "surprisal")
-    val oovSurprisal =
-      if (total > kept) -math.log((total - kept).toDouble / total.toDouble) else 0.0
-    val docCe = toks.join(broadcast(vocab), Seq("term"), "left")
-      .select(col("doc_id"), col("lang"),
-        coalesce(col("surprisal"), lit(oovSurprisal)).as("surprisal"))
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(count(lit(1)).as("n_tokens"),
-        expr("aggregate(array_sort(collect_list(surprisal)), 0.0e0, (a, x) -> a + x)")
-          .as("ss"))
+    val (vocab, oovSurprisal) = unigramSurprisal(s, d, k)
+    val docCe = sortedSurprisalSum(toks.join(broadcast(vocab), Seq("term"), "left")
+        .select(col("doc_id"), col("lang"),
+          coalesce(col("surprisal"), lit(oovSurprisal)).as("surprisal")),
+        Seq("doc_id", "lang"), "n_tokens", "ss")
       .select(col("doc_id"), col("lang"), col("n_tokens"),
         floor(col("ss") / col("n_tokens") * 1e4).cast("long").as("ce_q"))
     // grid is the bounded per-language histogram, but it is referenced

@@ -101,7 +101,18 @@ object Funnel {
     * click interval join). RANGE semantics include same-second peers
     * identically in both engines; credit is a single division of two
     * exact integers, floored at 4dp. */
-  def attributionLinear: Q = (s, d) => {
+  def attributionLinear: Q = (s, d) =>
+    purchaseTouches(s, d)
+      .withColumn("credit_per_touch",
+        when(col("n_touches") > 0,
+          floor(lit(1.0) / col("n_touches").cast("double") * 1e4) / 1e4))
+      .select(col("user_id"), col("event_id"), col("sec"),
+        col("n_touches"), col("credit_per_touch"))
+
+  /** Purchase rows (user_id, event_id, sec, event_type) with
+    * `n_touches`, the user's clicks in the [[LookbackSec]] before: the
+    * one body of `attribution_linear` and `attribution_position`. */
+  private def purchaseTouches(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("sec"))
       .rangeBetween(-LookbackSec, 0)
     Tables.events(s, d)
@@ -110,11 +121,6 @@ object Funnel {
       .withColumn("n_touches",
         count(when(col("event_type") === "click", 1)).over(w))
       .filter(col("event_type") === "purchase")
-      .withColumn("credit_per_touch",
-        when(col("n_touches") > 0,
-          floor(lit(1.0) / col("n_touches").cast("double") * 1e4) / 1e4))
-      .select(col("user_id"), col("event_id"), col("sec"),
-        col("n_touches"), col("credit_per_touch"))
   }
 
   val attributionLinearSql: String =
@@ -193,15 +199,8 @@ object Funnel {
     * each, remainder to first. Same one RANGE window as linear — the
     * per-purchase credit VECTOR is described by (n, first, last, mid),
     * no pair explosion. */
-  def attributionPosition: Q = (s, d) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"))
-      .rangeBetween(-LookbackSec, 0)
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        unix_timestamp(col("ts")).as("sec"), col("event_type"))
-      .withColumn("n_touches",
-        count(when(col("event_type") === "click", 1)).over(w))
-      .filter(col("event_type") === "purchase")
+  def attributionPosition: Q = (s, d) =>
+    purchaseTouches(s, d)
       .withColumn("mid_each_bp",
         when(col("n_touches") >= 3, expr("2000 DIV (n_touches - 2)")).otherwise(lit(0L)))
       .withColumn("last_bp",
@@ -213,7 +212,6 @@ object Funnel {
             - col("mid_each_bp") * greatest(col("n_touches") - 2, lit(0L))))
       .select(col("user_id"), col("event_id"), col("sec"), col("n_touches"),
         col("first_bp"), col("last_bp"), col("mid_each_bp"))
-  }
 
   val attributionPositionSql: String =
     s"""WITH e AS (

@@ -288,11 +288,17 @@ object Quality {
     * integer's decimal string (no float log10 in the hot path — engine
     * logs differ in ulps; strings don't). One scan, one 9-group agg.
     */
-  def dqBenford: Q = (s, d) => {
-    val expectedCase = benfordExpected
+  def dqBenford: Q = (s, d) => benfordConformance(s, d, 1, benfordExpected)
+
+  /** Share of orders by the digit at 1-based position `pos` of the exact
+    * cent integer, against the `expected` shares: the one body of
+    * `dq_benford` and `dq_benford_digit2`. */
+  private def benfordConformance(s: SparkSession, d: String, pos: Int,
+      expected: Seq[(Int, Double)]): DataFrame = {
+    val expectedCase = expected
       .map { case (dd, v) => s"WHEN $dd THEN ${v}e0" }.mkString(" ")
     Tables.orders(s, d)
-      .select(expr("CAST(substring(CAST(CAST(floor(o_totalprice * 100) AS BIGINT) AS STRING), 1, 1) AS INT)")
+      .select(expr(s"CAST(substring(CAST(CAST(floor(o_totalprice * 100) AS BIGINT) AS STRING), $pos, 1) AS INT)")
         .as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n_orders"))
       .withColumn("total", sum(col("n_orders")).over())
@@ -332,20 +338,7 @@ object Quality {
     * law P(d₂)=Σ_{d₁} log10(1+1/(10d₁+d₂)). Same digit-from-exact-
     * cent-string extraction (no float log10 in either engine's hot
     * path), same one-scan one-10-group shape as `dq_benford`. */
-  def dqBenfordDigit2: Q = (s, d) => {
-    val expectedCase = benford2Expected
-      .map { case (dd, v) => s"WHEN $dd THEN ${v}e0" }.mkString(" ")
-    Tables.orders(s, d)
-      .select(expr("CAST(substring(CAST(CAST(floor(o_totalprice * 100) AS BIGINT) AS STRING), 2, 1) AS INT)")
-        .as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("n_orders"))
-      .withColumn("total", sum(col("n_orders")).over())
-      .select(col("digit"), col("n_orders"),
-        trunc4(col("n_orders").cast("double") / col("total").cast("double")).as("share"),
-        expr(s"CASE digit $expectedCase END").as("expected_share"),
-        trunc4(abs(col("n_orders").cast("double") / col("total").cast("double")
-          - expr(s"CASE digit $expectedCase END"))).as("abs_gap"))
-  }
+  def dqBenfordDigit2: Q = (s, d) => benfordConformance(s, d, 2, benford2Expected)
 
   val dqBenfordDigit2Sql: String = {
     val expectedCase = benford2Expected

@@ -710,7 +710,7 @@ object Scrapers {
     * three levels union into one rule feed, and because 2 and 3
     * DERIVE from 1's aggregation, Spark's ReuseExchange evaluates the
     * raw scan + first shuffle ONCE for the whole tree (asserted in
-    * Round8Spec) — the cascade costs one pass over the events, which
+    * ScrapersSpec) — the cascade costs one pass over the events, which
     * is the entire point of recording rules. All integer counts. */
   def recordingRules: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window

@@ -40,16 +40,34 @@ object Similarity {
     * over the shuffle, vs a window's corpus-wide sort. */
   def bruteForceTopK: Q = (s, d) => {
     val all = emb(s, d)
-    val q = all.filter(col("vec_id") < NumQueries)
+    cosineTopK(all.join(broadcast(queryVecs(all)), col("vec_id") =!= col("query_id")))
+  }
+
+  /** The query side (query_id, qv, qn2): the vectors with id below
+    * [[NumQueries]]. */
+  private def queryVecs(all: DataFrame): DataFrame =
+    all.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    all.join(broadcast(q), col("vec_id") =!= col("query_id"))
+
+  /** The exact top-k tail of the ANN top-k entries: cosine of each
+    * (query_id, qv, qn2) × (vec_id, v, n2) pair, the bounded
+    * `graft_topk` per query, exploded to (query_id, neighbor_id,
+    * cosine, rank). */
+  private def cosineTopK(pairs: DataFrame): DataFrame =
+    pairs
       .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
       .groupBy(col("query_id"))
       .agg(expr(s"graft_topk(cos, vec_id, $TopK)").as("top"))
       .select(col("query_id"), posexplode(col("top")))
       .select(col("query_id"), col("col.id").as("neighbor_id"),
         trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-  }
+
+  /** Exact re-rank of approximate (query_id, vec_id) candidates — the
+    * candidate-then-refine step: re-attach both vectors, then the exact
+    * cosine top-k over the candidates only. */
+  private def exactReRank(cands: DataFrame, all: DataFrame): DataFrame =
+    cosineTopK(cands.join(broadcast(queryVecs(all)), "query_id")
+      .join(all.select(col("vec_id"), col("v"), col("n2")), "vec_id"))
 
   val bruteForceTopKSql: String =
     s"""SELECT query_id, neighbor_id, floor(cos * 10000) / 10000.0 AS cosine, rank FROM (
@@ -92,17 +110,7 @@ object Similarity {
     val candIds = buckets.join(broadcast(q), Seq("tbl", "sig"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
-    val qVecs = all.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    candIds
-      .join(broadcast(qVecs), "query_id")
-      .join(all.select(col("vec_id"), col("v"), col("n2")), "vec_id")
-      .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
-      .groupBy(col("query_id"))
-      .agg(expr(s"graft_topk(cos, vec_id, $TopK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.id").as("neighbor_id"),
-        trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
+    exactReRank(candIds, all)
   }
 
   /** Hyperplane (t, b) as a SQL array literal. */
@@ -270,14 +278,8 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("qv"), col("qn2"),
         explode(col("pc")).as("p"))
       .select(col("query_id"), col("qv"), col("qn2"), col("p").getField("id").as("cell"))
-    corpus.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
-      .groupBy(col("query_id"))
-      .agg(expr(s"graft_topk(cos, vec_id, $TopK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.id").as("neighbor_id"),
-        trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
+    cosineTopK(corpus.join(broadcast(q), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id")))
   }
 
   /** IVF index-health profile — the first read run against any trained
@@ -336,9 +338,7 @@ object Similarity {
     * is data-dependent and no per-query state is held at all. */
   def rangeSearch: Q = (s, d) => {
     val all = emb(s, d)
-    val q = all.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    all.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    all.join(broadcast(queryVecs(all)), col("vec_id") =!= col("query_id"))
       .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
       .filter(col("cos") >= RangeTau)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), trunc4(col("cos")).as("cosine"))
@@ -440,42 +440,41 @@ object Similarity {
     val subs = all.selectExpr("vec_id", "n2", subsExpr)
     val cb = pqTrainedCodebookDf(s, d, all, subs)
     val codes = pqAssign(subs, cb).select("vec_id", "m", "code", "n2")
-    // ADC lookup table: contribution of (query, m, cell) = <q_sub, cv>
-    val qSubs = subs.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("m"), col("sub"),
-        col("n2").as("qn2"))
-    val lut = qSubs.join(broadcast(cb), "m")
-      .select(col("query_id"), col("m"), col("cell").as("code"), col("qn2"),
-        expr("graft_dot(sub, cv)").as("contrib"))
     // scan codes × broadcast LUT: approx dot per (query, vector).
     // The 8 per-subspace contributions fold in FIXED m order (bounded
     // 8-element list, not a float `sum` whose partial-merge order
     // varies with partitioning) — approx scores are bit-identical
     // across layouts AND engines, so the candidate-set boundary is
     // deterministic and the DuckDB oracle can replay it.
-    val approx = codes.join(broadcast(lut), Seq("m", "code"))
+    val cands = pqCandidates(codes.join(broadcast(adcLut(subs, cb)), Seq("m", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(expr(orderedAdcFold).as("adot"),
-        first(col("n2")).as("n2"), first(col("qn2")).as("qn2"))
+        first(col("n2")).as("n2"), first(col("qn2")).as("qn2")))
+    // bounded exact re-rank of the PqCandidates survivors
+    exactReRank(cands, all)
+  }
+
+  /** ADC lookup table keyed (query_id, m, code): the contribution
+    * <q_sub, cv> of each query subvector and codebook cell, beside the
+    * query's squared norm `qn2`. */
+  private def adcLut(subs: DataFrame, cb: DataFrame): DataFrame =
+    subs.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("query_id"), col("m"), col("sub"), col("n2").as("qn2"))
+      .join(broadcast(cb), "m")
+      .select(col("query_id"), col("m"), col("cell").as("code"), col("qn2"),
+        expr("graft_dot(sub, cv)").as("contrib"))
+
+  /** The [[PqCandidates]] best (query_id, vec_id) pairs per query by
+    * approximate cosine, from (query_id, vec_id, adot, n2, qn2) ADC
+    * dot products. */
+  private def pqCandidates(adc: DataFrame): DataFrame =
+    adc
       .withColumn("approx_cos", col("adot") / (sqrt(col("qn2")) * sqrt(col("n2"))))
-    val cands = approx
       .groupBy(col("query_id"))
       .agg(expr(s"graft_topk(approx_cos, vec_id, $PqCandidates)").as("cand"))
       .select(col("query_id"), explode(col("cand")).as("c"))
       .select(col("query_id"), col("c").getField("id").as("vec_id"))
-    // bounded exact re-rank of the PqCandidates survivors
-    val qVecs = all.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    cands.join(broadcast(qVecs), "query_id")
-      .join(all.select(col("vec_id"), col("v"), col("n2")), "vec_id")
-      .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
-      .groupBy(col("query_id"))
-      .agg(expr(s"graft_topk(cos, vec_id, $TopK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.id").as("neighbor_id"),
-        trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
-  }
 
   /** PQ over a BIT-PACKED codes column: the 8 per-subspace 4-bit codes
     * of each vector packed into ONE BIGINT — the scan-time layout a
@@ -506,27 +505,12 @@ object Similarity {
       .agg(first(col("qn2")).as("qn2"),
         expr("transform(sort_array(collect_list(struct(slot, contrib))), p -> p.contrib)")
           .as("lut"))
-    val approx = packed.join(broadcast(lut), col("vec_id") =!= col("query_id"))
+    val cands = pqCandidates(packed.join(broadcast(lut), col("vec_id") =!= col("query_id"))
       .withColumn("adot", expr(
         s"""aggregate(sequence(0, ${PqM - 1}), 0.0e0,
               (acc, m) -> acc + element_at(lut,
-                CAST(m * $PqK + (shiftright(packed, m * 4) & 15) AS INT) + 1))"""))
-      .withColumn("approx_cos", col("adot") / (sqrt(col("qn2")) * sqrt(col("n2"))))
-    val cands = approx
-      .groupBy(col("query_id"))
-      .agg(expr(s"graft_topk(approx_cos, vec_id, $PqCandidates)").as("cand"))
-      .select(col("query_id"), explode(col("cand")).as("c"))
-      .select(col("query_id"), col("c").getField("id").as("vec_id"))
-    val qVecs = all.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    cands.join(broadcast(qVecs), "query_id")
-      .join(all.select(col("vec_id"), col("v"), col("n2")), "vec_id")
-      .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
-      .groupBy(col("query_id"))
-      .agg(expr(s"graft_topk(cos, vec_id, $TopK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.id").as("neighbor_id"),
-        trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
+                CAST(m * $PqK + (shiftright(packed, m * 4) & 15) AS INT) + 1))""")))
+    exactReRank(cands, all)
   }
 
   /** The packed codes table alone (vec_id, packed) — exposed for the
@@ -566,37 +550,17 @@ object Similarity {
       .agg(expr(s"graft_topk(score, cell, $NProbe)").as("pc"))
       .select(col("vec_id").as("query_id"), explode(col("pc")).as("p"))
       .select(col("query_id"), col("p").getField("id").as("cell"))
-    // ADC lookup table, keyed (query, subspace, code)
-    val qSubs = subs.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("m"), col("sub"), col("n2").as("qn2"))
-    val lut = qSubs.join(broadcast(cb), "m")
-      .select(col("query_id"), col("m"), col("cell").as("code"), col("qn2"),
-        expr("graft_dot(sub, cv)").as("contrib"))
     // candidates = corpus codes inside probed cells, scored by ADC
     // (fixed m-order fold — see ann_pq_topk)
-    val cands = codes.join(coarse, "vec_id")
+    val cands = pqCandidates(codes.join(coarse, "vec_id")
       .join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .join(broadcast(lut), Seq("query_id", "m", "code"))
+      .join(broadcast(adcLut(subs, cb)), Seq("query_id", "m", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(expr(orderedAdcFold).as("adot"),
-        first(col("n2")).as("n2"), first(col("qn2")).as("qn2"))
-      .withColumn("approx_cos", col("adot") / (sqrt(col("qn2")) * sqrt(col("n2"))))
-      .groupBy(col("query_id"))
-      .agg(expr(s"graft_topk(approx_cos, vec_id, $PqCandidates)").as("cand"))
-      .select(col("query_id"), explode(col("cand")).as("c"))
-      .select(col("query_id"), col("c").getField("id").as("vec_id"))
+        first(col("n2")).as("n2"), first(col("qn2")).as("qn2")))
     // bounded exact re-rank of the surviving candidates
-    val qVecs = all.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    cands.join(broadcast(qVecs), "query_id")
-      .join(all.select(col("vec_id"), col("v"), col("n2")), "vec_id")
-      .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
-      .groupBy(col("query_id"))
-      .agg(expr(s"graft_topk(cos, vec_id, $TopK)").as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), col("col.id").as("neighbor_id"),
-        trunc4(col("col.score")).as("cosine"), (col("pos") + 1).cast("int").as("rank"))
+    exactReRank(cands, all)
   }
 
   /** FILTERED vector search — the hybrid predicate + ANN read every
@@ -665,18 +629,7 @@ object Similarity {
     * the shuffle); mutuality is one self-join of the k·|V|-row edge
     * list on the reversed key. */
   def knnGraph: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
-    val blockW = Window.partitionBy(col("label"))
-    val sharded = emb(s, d).withColumn("shard", pmod(
-      conv(substring(md5(concat(lit("knn:"), col("vec_id").cast("string"))), 1, 15), 16, 10)
-        .cast("long"),
-      ceil(count(lit(1)).over(blockW) / lit(KnnGraphCap.toDouble)).cast("long")))
-    val right = sharded.select(col("label").as("nb_label"), col("shard").as("nb_shard"),
-      col("vec_id").as("nb_id"), col("v").as("qv"), col("n2").as("qn2"))
-    val edges = sharded.join(right,
-        col("label") === col("nb_label") && col("shard") === col("nb_shard") &&
-          col("vec_id") =!= col("nb_id"))
-      .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
+    val edges = knnShardPairs(s, d)
       .groupBy(col("vec_id"), col("label"))
       .agg(expr(s"graft_topk(cos, nb_id, $KnnGraphK)").as("top"))
       .select(col("vec_id"), col("label"), posexplode(col("top")))
@@ -1051,9 +1004,7 @@ object Similarity {
   def hybridRrf: Q = (s, d) => {
     val all = emb(s, d)
     // vector ranking: exact cosine, depth RrfDepth
-    val q = all.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("n2").as("qn2"))
-    val vecRanks = all.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    val vecRanks = all.join(broadcast(queryVecs(all)), col("vec_id") =!= col("query_id"))
       .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
       .groupBy(col("query_id"))
       .agg(expr(s"graft_topk(cos, vec_id, $RrfDepth)").as("top"))
@@ -1454,7 +1405,18 @@ object Similarity {
     * assert the (label, shard) equi-key on the edge plan — the eager
     * checkpoint cut inside [[graphSearch]] hides it from the entry's
     * own plan. */
-  def gsEdges(s: SparkSession, d: String): DataFrame = {
+  def gsEdges(s: SparkSession, d: String): DataFrame =
+    knnShardPairs(s, d)
+      .groupBy(col("vec_id"))
+      .agg(expr(s"graft_topk(cos, nb_id, $GsK)").as("top"))
+      .select(col("vec_id").as("src"), posexplode(col("top")))
+      .select(col("src"), col("col.id").as("dst"))
+
+  /** The kNN graph builds' candidate pairs with their cosine `cos`:
+    * each vector against every other vector (nb_id, qv, qn2) of its
+    * (label, shard), where the "knn:"-salted hash splits a label into
+    * shards of at most [[KnnGraphCap]] vectors. */
+  private def knnShardPairs(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val blockW = Window.partitionBy(col("label"))
     val sharded = emb(s, d).withColumn("shard", pmod(
@@ -1467,10 +1429,6 @@ object Similarity {
         col("label") === col("nb_label") && col("shard") === col("nb_shard") &&
           col("vec_id") =!= col("nb_id"))
       .withColumn("cos", expr(dotExpr) / (sqrt(col("qn2")) * sqrt(col("n2"))))
-      .groupBy(col("vec_id"))
-      .agg(expr(s"graft_topk(cos, nb_id, $GsK)").as("top"))
-      .select(col("vec_id").as("src"), posexplode(col("top")))
-      .select(col("src"), col("col.id").as("dst"))
   }
 
   def graphSearch: Q = (s, d) => {

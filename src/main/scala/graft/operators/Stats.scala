@@ -41,16 +41,7 @@ object Stats {
     * ties; Σi·xᵢ accumulates in DECIMAL(38,0) (HUGEINT in the oracle)
     * so the formula is exact until one final double division. */
   def giniRevenue: Q = (s, d) => {
-    val rev = Tables.orders(s, d)
-      .select(col("o_custkey"), floor(col("o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy(col("o_custkey")).agg(sum(col("cents")).as("cust_cents"))
-    val byNation = rev
-      .join(Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("o_custkey").as("custkey"), col("cust_cents"))
-    val ranked = byNation.withColumn("i", row_number().over(
+    val ranked = customerCents(s, d).withColumn("i", row_number().over(
       Window.partitionBy(col("n_name")).orderBy(col("cust_cents"), col("custkey"))))
     ranked.groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_cust"), sum(col("cust_cents")).as("total_cents"),
@@ -61,6 +52,19 @@ object Stats {
           / (col("n_cust").cast("decimal(38,0)") * col("total_cents")).cast("double")
           * 1e4) / 1e4).as("gini"))
   }
+
+  /** Per customer: (n_name, custkey, cust_cents), the exact order
+    * revenue in integer cents — the one body under `q_gini_revenue`
+    * and `q_lorenz_curve`. */
+  private def customerCents(s: SparkSession, d: String): DataFrame =
+    Tables.orders(s, d)
+      .select(col("o_custkey"), floor(col("o_totalprice") * 100).cast("long").as("cents"))
+      .groupBy(col("o_custkey")).agg(sum(col("cents")).as("cust_cents"))
+      .join(Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey")),
+        col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))),
+        col("c_nationkey") === col("n_nationkey"))
+      .select(col("n_name"), col("o_custkey").as("custkey"), col("cust_cents"))
 
   val giniRevenueSql: String =
     """WITH rev AS (
@@ -675,17 +679,8 @@ object Stats {
     * grid on i = (k·n) div 10 — exact integer arithmetic; the two
     * shares are the only divisions. */
   def lorenzCurve: Q = (s, d) => {
-    val rev = Tables.orders(s, d)
-      .select(col("o_custkey"), floor(col("o_totalprice") * 100).cast("long").as("cents"))
-      .groupBy(col("o_custkey")).agg(sum(col("cents")).as("cust_cents"))
-    val byNation = rev
-      .join(Tables.customer(s, d).select(col("c_custkey"), col("c_nationkey")),
-        col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(s, d).select(col("n_nationkey"), col("n_name"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"), col("o_custkey").as("custkey"), col("cust_cents"))
     val w = Window.partitionBy(col("n_name")).orderBy(col("cust_cents"), col("custkey"))
-    val ranked = byNation
+    val ranked = customerCents(s, d)
       .withColumn("i", row_number().over(w).cast("long"))
       .withColumn("cum_cents", sum(col("cust_cents"))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))

@@ -389,16 +389,20 @@ object Timeseries {
                        / CAST(n * sxx - sx * sx AS DOUBLE) / 1e4 * 1e6) / 1e6
        END"""
 
-  def deriv: Q = (s, d) => {
+  def deriv: Q = (s, d) =>
+    hourlyRegressionMoments(s, d)
+      .withColumn("slope_per_hour", expr(derivExpr))
+      .select(col("event_type"), col("hour_sec"), col("avg_value"),
+        col("slope_per_hour"))
+
+  /** Per (event_type, hour): the mean in exact milli-units `ym`,
+    * `avg_value`, the hour index `xi` and the integer least-squares
+    * moments (n, sx, sy, sxy, sxx) over the trailing 24 hours — the one
+    * body of `metrics_deriv` and `metrics_predict_linear`. */
+  private def hourlyRegressionMoments(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("event_type")).orderBy(col("hour_sec"))
       .rowsBetween(-23, 0)
-    Tables.events(s, d)
-      .groupBy(col("event_type"),
-        (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("hour_sec"))
-      // the milli value comes straight from the floor — never by
-      // re-scaling the divided double, whose product can fall a ulp
-      // under the integer and truncate wrong
-      .agg(floor(round(sum(col("value")), 2) / count(lit(1)) * 1e4).cast("long").as("ym"))
+    hourlyMilli(s, d)
       .withColumn("avg_value", col("ym") / 1e4)
       .withColumn("xi", expr("hour_sec DIV 3600"))
       .withColumn("n", count(col("ym")).over(w))
@@ -406,10 +410,25 @@ object Timeseries {
       .withColumn("sy", sum(col("ym")).over(w))
       .withColumn("sxy", sum(col("xi") * col("ym")).over(w))
       .withColumn("sxx", sum(col("xi") * col("xi")).over(w))
-      .withColumn("slope_per_hour", expr(derivExpr))
-      .select(col("event_type"), col("hour_sec"), col("avg_value"),
-        col("slope_per_hour"))
   }
+
+  /** Per (event_type, hour_sec): the hourly mean value in exact
+    * milli-units, `ym`. */
+  private def hourlyMilli(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .groupBy(col("event_type"),
+        (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("hour_sec"))
+      // the milli value comes straight from the floor — never by
+      // re-scaling the divided double, whose product can fall a ulp
+      // under the integer and truncate wrong
+      .agg(floor(round(sum(col("value")), 2) / count(lit(1)) * 1e4).cast("long").as("ym"))
+
+  /** Per event_type: its hourly (hour_sec, ym) series in hour order,
+    * `seq` — the array the smoothing folds run over. */
+  private def hourlySeries(s: SparkSession, d: String): DataFrame =
+    hourlyMilli(s, d)
+      .groupBy(col("event_type"))
+      .agg(sort_array(collect_list(struct(col("hour_sec"), col("ym")))).as("seq"))
 
   val derivSql: String =
     s"""WITH hourly AS (
@@ -541,24 +560,11 @@ object Timeseries {
                        / CAST(n * (n * sxx - sx * sx) AS DOUBLE)) / 1e4
        END"""
 
-  def predictLinear: Q = (s, d) => {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("hour_sec"))
-      .rowsBetween(-23, 0)
-    Tables.events(s, d)
-      .groupBy(col("event_type"),
-        (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("hour_sec"))
-      .agg(floor(round(sum(col("value")), 2) / count(lit(1)) * 1e4).cast("long").as("ym"))
-      .withColumn("avg_value", col("ym") / 1e4)
-      .withColumn("xi", expr("hour_sec DIV 3600"))
-      .withColumn("n", count(col("ym")).over(w))
-      .withColumn("sx", sum(col("xi")).over(w))
-      .withColumn("sy", sum(col("ym")).over(w))
-      .withColumn("sxy", sum(col("xi") * col("ym")).over(w))
-      .withColumn("sxx", sum(col("xi") * col("xi")).over(w))
+  def predictLinear: Q = (s, d) =>
+    hourlyRegressionMoments(s, d)
       .withColumn("predicted_24h", expr(predictExpr))
       .select(col("event_type"), col("hour_sec"), col("avg_value"),
         col("predicted_24h"))
-  }
 
   val predictLinearSql: String =
     s"""WITH hourly AS (
@@ -596,12 +602,7 @@ object Timeseries {
     * the oracle replays it with a recursive CTE and hash-matches
     * bit-for-bit (floor at 4dp only pins display). */
   def smoothEwma: Q = (s, d) => {
-    Tables.events(s, d)
-      .groupBy(col("event_type"),
-        (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("hour_sec"))
-      .agg(floor(round(sum(col("value")), 2) / count(lit(1)) * 1e4).cast("long").as("ym"))
-      .groupBy(col("event_type"))
-      .agg(sort_array(collect_list(struct(col("hour_sec"), col("ym")))).as("seq"))
+    hourlySeries(s, d)
       .withColumn("sm", expr(
         """aggregate(seq, CAST(array() AS ARRAY<DOUBLE>),
              (acc, p) -> concat(acc, array(
@@ -766,12 +767,7 @@ object Timeseries {
     * hash-matches bit-for-bit; floors at 4dp only pin display. The
     * one-hour-ahead forecast l+b is the read alerting rules use. */
   def holtWinters: Q = (s, d) => {
-    Tables.events(s, d)
-      .groupBy(col("event_type"),
-        (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("hour_sec"))
-      .agg(floor(round(sum(col("value")), 2) / count(lit(1)) * 1e4).cast("long").as("ym"))
-      .groupBy(col("event_type"))
-      .agg(sort_array(collect_list(struct(col("hour_sec"), col("ym")))).as("seq"))
+    hourlySeries(s, d)
       .withColumn("hw", expr(
         """aggregate(seq, CAST(array() AS ARRAY<STRUCT<l: DOUBLE, b: DOUBLE>>),
              (acc, p) -> concat(acc, array(

@@ -36,13 +36,15 @@ object Writers {
     if (dir.exists()) {
       // recursive: a leftover _temporary subdir from a crashed write
       // would make a flat delete() silently fail → LOCATION_ALREADY_EXISTS
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
       rm(dir)
       require(!dir.exists(), s"failed to clean table location $dir")
     }
+  }
+
+  /** Delete a file or a directory tree, best effort. */
+  private def rm(f: java.io.File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete()
   }
 
   /** Bucketed sink + co-located join: orders and lineitem bucketed by
@@ -551,8 +553,7 @@ object Writers {
     val auditOk = verdict.collect().head.getBoolean(0)
     val published = auditOk && {
       val pub = new java.io.File(s"$root/published")
-      if (pub.exists()) { def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete() }; rm(pub) }
+      if (pub.exists()) rm(pub)
       new java.io.File(staging).renameTo(pub) || {
         try {
           java.nio.file.Files.move(

@@ -23,13 +23,16 @@ object EventsStream {
     * hourly tumbling counts/sums per event_type (entry
     * `stream_events_window`; the streaming path below produces the
     * same rows, asserted in StreamingSpec). */
-  def eventsWindowBatch: Q = (s, d) => {
-    Tables.events(s, d)
+  def eventsWindowBatch: Q = (s, d) => eventsWindowAgg(Tables.events(s, d))
+
+  /** Hourly tumbling counts/sums per event_type: the one body of
+    * `stream_events_window` and its streaming twin. */
+  private def eventsWindowAgg(events: DataFrame): DataFrame =
+    events
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("value_sum"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("value_sum"))
-  }
 
   val eventsWindowSql: String =
     """SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
@@ -55,17 +58,24 @@ object EventsStream {
     * one (series, step) max(struct) aggregation as `prom_query_range`;
     * the streaming path below emits the identical rows as each step's
     * watermark closes (StreamingSpec parity, chunked). */
-  def queryRangeBatch: Q = (s, d) => {
-    Tables.events(s, d)
+  def queryRangeBatch: Q = (s, d) =>
+    queryRangeGrid(Tables.events(s, d)
       .select(col("event_type"), unix_timestamp(col("ts")).as("ts_sec"),
-        col("event_id"), col("value"))
+        col("event_id"), col("value")))
+
+  /** The range-query grid over (event_type, ts_sec, event_id, value)
+    * samples: the one body of `stream_query_range` and its streaming
+    * twin. The watermark on step time only acts on a streaming input;
+    * on a batch input the analyzer drops it. */
+  private def queryRangeGrid(samples: DataFrame): DataFrame =
+    samples
       .withColumn("step_ts", timestamp_seconds(expr(qrStepExpr("ts_sec"))))
       .where(expr(qrStepExpr("ts_sec")) - col("ts_sec") < QrLookbackSec)
+      .withWatermark("step_ts", "30 minutes")
       .groupBy(col("event_type"), col("step_ts"))
       .agg(max(struct(col("ts_sec"), col("event_id"), col("value"))).as("last"))
       .select(col("event_type"), col("step_ts"),
         col("last.ts_sec").as("sample_ts_sec"), col("last.value").as("value"))
-  }
 
   val queryRangeStreamSql: String =
     s"""WITH s AS (
@@ -95,16 +105,8 @@ object EventsStream {
     * longer change; samples arriving later than the watermark slack
     * are dropped, never double-emitted. State per key is a single
     * struct — bounded by |series| × open steps, not sample volume. */
-  def queryRangeStream(samples: Dataset[QrSample]): DataFrame = {
-    samples
-      .withColumn("step_ts", timestamp_seconds(expr(qrStepExpr("tsSec"))))
-      .where(expr(qrStepExpr("tsSec")) - col("tsSec") < QrLookbackSec)
-      .withWatermark("step_ts", "30 minutes")
-      .groupBy(col("event_type"), col("step_ts"))
-      .agg(max(struct(col("tsSec"), col("event_id"), col("value"))).as("last"))
-      .select(col("event_type"), col("step_ts"),
-        col("last.tsSec").as("sample_ts_sec"), col("last.value").as("value"))
-  }
+  def queryRangeStream(samples: Dataset[QrSample]): DataFrame =
+    queryRangeGrid(samples.withColumnRenamed("tsSec", "ts_sec"))
 
   // -------------------------------- streaming multiwindow burn rate
 
@@ -122,8 +124,12 @@ object EventsStream {
     * `ts ≥ hop_end − 1h` predicate on the same rows), so the stream
     * maintains exactly one count-vector per open hop. */
   def burnRateBatch: Q = (s, d) =>
-    Tables.events(s, d)
-      .select(col("event_type"), col("ts"))
+    burnRateHops(Tables.events(s, d).select(col("event_type"), col("ts")))
+
+  /** The hop aggregation over (event_type, ts) events: the one body of
+    * `stream_burn_rate` and its streaming twin. */
+  private def burnRateHops(events: DataFrame): DataFrame =
+    events
       // an event sits in the FAST (1 h) window of exactly one hop: the
       // one ending at its own ceil-hour — computable before grouping,
       // so both windows' counts ride one aggregation
@@ -174,29 +180,10 @@ object EventsStream {
   /** Streaming path: the same one-aggregation hopping window under a
     * 1 h watermark — each closed hop emits its page/no-page verdict
     * exactly once; watermark-late events are dropped, never re-page. */
-  def burnRateStream(samples: Dataset[BrSample]): DataFrame = {
-    samples
+  def burnRateStream(samples: Dataset[BrSample]): DataFrame =
+    burnRateHops(samples
       .withColumn("ts", timestamp_seconds(col("tsSec")))
-      .withColumn("own_end", timestamp_seconds(
-        expr("(unix_timestamp(ts) div 3600 + 1) * 3600")))
-      .withWatermark("ts", "1 hour")
-      .select(col("event_type"), col("ts"), col("own_end"),
-        window(col("ts"), "6 hours", "1 hour").as("w"))
-      .groupBy(col("w"))
-      .agg(count(lit(1)).as("total6"),
-        count(when(col("event_type") === "error", 1)).as("errors6"),
-        count(when(col("own_end") === col("w.end"), 1)).as("total1"),
-        count(when(col("own_end") === col("w.end")
-          && col("event_type") === "error", 1)).as("errors1"))
-      .filter(col("total1") > 0)
-      .select(col("w.end").as("hop_end"), col("total6"), col("errors6"),
-        col("total1"), col("errors1"),
-        expr(s"floor(CAST(errors6 AS DOUBLE) / CAST(total6 AS DOUBLE) / $SloBudget * 1e4) / 1e4")
-          .as("burn_6h"),
-        expr(s"floor(CAST(errors1 AS DOUBLE) / CAST(total1 AS DOUBLE) / $SloBudget * 1e4) / 1e4")
-          .as("burn_1h"))
-      .withColumn("page", col("burn_6h") > 1.0 && col("burn_1h") > 1.0)
-  }
+      .withWatermark("ts", "1 hour"))
 
   // ----------------------------- streaming HA replica deduplication
 
@@ -211,8 +198,14 @@ object EventsStream {
     * by sample volume. Same integer election arithmetic as the batch
     * audit, so the two entries can never disagree on a closed window. */
   def haDedupBatch: Q = (s, d) =>
-    Tables.events(s, d)
-      .select(col("event_type"), col("ts"), (col("event_id") % 2).as("replica"))
+    haElection(Tables.events(s, d)
+      .select(col("event_type"), col("ts"), (col("event_id") % 2).as("replica")))
+
+  /** The per-(window, series) replica election over (event_type, ts,
+    * replica) samples: the one body of `stream_ha_dedup` and its
+    * streaming twin. */
+  private def haElection(samples: DataFrame): DataFrame =
+    samples
       .select(col("event_type"), col("replica"), window(col("ts"), "1 hour").as("w"))
       .groupBy(col("w"), col("event_type"))
       .agg(count(when(col("replica") === 0, 1)).as("n_r0"),
@@ -243,16 +236,9 @@ object EventsStream {
     * exactly once; watermark-late samples are dropped, never
     * re-elected. */
   def haDedupStream(samples: Dataset[HaSample]): DataFrame =
-    samples
+    haElection(samples
       .withColumn("ts", timestamp_seconds(col("tsSec")))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(when(col("replica") === 0, 1)).as("n_r0"),
-        count(when(col("replica") === 1, 1)).as("n_r1"))
-      .select(col("w.end").as("win_end"), col("event_type"), col("n_r0"), col("n_r1"),
-        when(col("n_r1") > col("n_r0"), 1).otherwise(0).cast("int").as("elected_replica"),
-        when(col("n_r1") > col("n_r0"), col("n_r1")).otherwise(col("n_r0")).as("n_kept"),
-        when(col("n_r1") > col("n_r0"), col("n_r0")).otherwise(col("n_r1")).as("n_dropped"))
+      .withWatermark("ts", "1 hour"))
 
   // --------------------------- streaming native-histogram buckets
 
@@ -301,14 +287,8 @@ object EventsStream {
 
   /** Watermarked hourly windowed aggregation — the streaming twin of
     * `eventsWindowBatch`. */
-  def eventsWindowStream(events: DataFrame): DataFrame = {
-    events
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("value_sum"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n_events"), col("value_sum"))
-  }
+  def eventsWindowStream(events: DataFrame): DataFrame =
+    eventsWindowAgg(events.withWatermark("ts", "2 hours"))
 
   case class Event(user_id: Long, event_id: Long, tsSec: Long, value: Double)
   case class Session(user_id: Long, session_idx: Long, session_start: String,
@@ -558,8 +538,12 @@ object EventsStream {
     * finalizes into long metric rows when the watermark passes. This is
     * the batch-parity query (entry `stream_metrics_scrape`); the
     * streaming path below emits the same rows (StreamingSpec). */
-  def metricsScrapeBatch: Q = (s, d) => {
-    val agg = Tables.events(s, d)
+  def metricsScrapeBatch: Q = (s, d) => metricsScrapeRows(Tables.events(s, d))
+
+  /** 6-hour windows per stream as long metric rows: the one body of
+    * `stream_metrics_scrape` and its streaming twin. */
+  private def metricsScrapeRows(events: DataFrame): DataFrame = {
+    val agg = events
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).cast("double").as("scrape_events_total"),
         round(sum(col("value")), 2).as("scrape_value_sum"))
@@ -581,17 +565,8 @@ object EventsStream {
   /** Streaming twin: watermarked 6-hour windows, finalized to the same
     * long metric rows — the continuous version of the reference's
     * cron-driven scrape/push loop. */
-  def metricsScrapeStream(events: DataFrame): DataFrame = {
-    val agg = events
-      .withWatermark("ts", "6 hours")
-      .groupBy(window(col("ts"), "6 hours"), col("event_type"))
-      .agg(count(lit(1)).cast("double").as("scrape_events_total"),
-        round(sum(col("value")), 2).as("scrape_value_sum"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("scrape_events_total"), col("scrape_value_sum"))
-    graft.operators.MetricsModel.wideToLong(agg, Seq("window_start", "event_type"),
-      Seq("scrape_events_total", "scrape_value_sum"))
-  }
+  def metricsScrapeStream(events: DataFrame): DataFrame =
+    metricsScrapeRows(events.withWatermark("ts", "6 hours"))
 
   /** Batch twin of the streaming counter-rate: hourly PromQL-style
     * `increase()` per series with counter-reset detection — the same
@@ -1167,8 +1142,7 @@ object EventsStream {
     * no state store), which is what makes dimension enrichment free at
     * any stream rate. Parity in StreamingSpec. */
   def staticEnrichBatch: Q = (s, d) => {
-    Tables.events(s, d)
-      .join(broadcast(userSegmentDim(s, d)), "user_id")
+    staticEnrichStream(Tables.events(s, d), userSegmentDim(s, d))
       .groupBy(col("segment"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("value_sum"))
   }

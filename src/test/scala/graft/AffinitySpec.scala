@@ -11,17 +11,13 @@ class AffinitySpec extends SparkTestBase {
     // a user's last event) and C only ever EMITS them — the skew that
     // made the pre-round-8 vector throw on next(t) / drop rank-0 rows.
     import java.sql.Timestamp
-    val dir = java.nio.file.Files.createTempDirectory("graft_markov").toString
-    val rows = Seq(
+    val dir = writeEvents(Seq(
       // user 1: A -> B (B terminal)
-      (1L, Timestamp.valueOf("2024-01-01 00:00:00"), 10L, "A", 1.0, "{}"),
-      (2L, Timestamp.valueOf("2024-01-01 00:01:00"), 10L, "B", 1.0, "{}"),
+      (1L, Timestamp.valueOf("2024-01-01 00:00:00").getTime / 1000, 10L, "A", 1.0),
+      (2L, Timestamp.valueOf("2024-01-01 00:01:00").getTime / 1000, 10L, "B", 1.0),
       // user 2: C -> A (C pure source)
-      (3L, Timestamp.valueOf("2024-01-01 00:00:00"), 20L, "C", 1.0, "{}"),
-      (4L, Timestamp.valueOf("2024-01-01 00:01:00"), 20L, "A", 1.0, "{}"))
-    import spark.implicits._
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      (3L, Timestamp.valueOf("2024-01-01 00:00:00").getTime / 1000, 20L, "C", 1.0),
+      (4L, Timestamp.valueOf("2024-01-01 00:01:00").getTime / 1000, 20L, "A", 1.0)))
     val out = graft.operators.Affinity.markovSteady(spark, dir).orderBy("event_type").collect()
     assert(out.map(_.getString(0)).toSeq == Seq("A", "B", "C"),
       "every type in the chain keeps a vector row")
@@ -305,6 +301,45 @@ class AffinitySpec extends SparkTestBase {
     // no (0,0) cell: a customer absent from both periods doesn't exist
     assert(df.filter(col("tier_a") === 0 && col("tier_b") === 0).count() == 0)
     df.unpersist()
+  }
+
+  test("events_audience_overlap: every pair once; jaccard <= overlap coefficient") {
+    import spark.implicits._
+    val rows = run("events_audience_overlap")
+      .select("type_a", "type_b", "n_a", "n_b", "n_both", "jaccard", "overlap_coef")
+      .as[(String, String, Long, Long, Long, Double, Double)].collect()
+    val nTypes = graft.sources.Tables.events(spark, sf)
+      .select("event_type").distinct().count().toInt
+    assert(rows.length == nTypes * (nTypes - 1) / 2)
+    rows.foreach { case (a, b, na, nb, both, j, oc) =>
+      assert(a < b)
+      assert(both <= math.min(na, nb), s"($a,$b) intersection exceeds a side")
+      assert(j >= 0 && j <= 1 && oc >= 0 && oc <= 1)
+      assert(j <= oc + 1e-9, s"($a,$b) jaccard should not exceed overlap coefficient")
+    }
+  }
+
+  test("events_power_law_fit: a heavy-ish tail fits with negative slope") {
+    import spark.implicits._
+    val rows = run("events_power_law_fit")
+      .select("n_levels", "slope", "intercept")
+      .as[(Long, Double, Double)].collect()
+    assert(rows.length == 1)
+    val (n, slope, intercept) = rows.head
+    assert(n > 1, "degenerate level histogram")
+    // activity histograms decay: more users at low activity levels
+    assert(slope.isFinite && intercept.isFinite)
+    // recompute the fold driver-side for an exact cross-check
+    val hist = graft.sources.Tables.events(spark, sf)
+      .groupBy("user_id").count().groupBy(col("count").as("k"))
+      .agg(count(lit(1)).as("n_k")).as[(Long, Long)].collect().sortBy(_._1)
+    var (nn, sx, sy, sxy, sxx) = (0L, 0.0, 0.0, 0.0, 0.0)
+    hist.foreach { case (k, nk) =>
+      val x = math.log(k.toDouble); val y = math.log(nk.toDouble)
+      nn += 1; sx += x; sy += y; sxy += x * y; sxx += x * x
+    }
+    val wantSlope = math.floor((nn * sxy - sx * sy) / (nn * sxx - sx * sx) * 1e4) / 1e4
+    assert(n == nn && slope == wantSlope, s"fold mismatch: $slope vs $wantSlope")
   }
 
   test("events_audience_minhash: estimates land within MinHash sampling error") {

@@ -52,7 +52,7 @@ class AlertStreamSpec extends SparkTestBase {
           s"${emitted.filter(_.getLong(5) != 0L).take(3).mkString(",")}")
       val got = emitted.map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      val want = SparkEntry.queries("alert_group_wait")(spark, sf).collect()
+      val want = run("alert_group_wait").collect()
         .map(r => (r.getString(0), r.getAs[Long]("batch")) ->
           (r.getAs[Long]("n_alerts"), r.getAs[Long]("n_critical"),
             r.getAs[Long]("flush_es"))).toMap

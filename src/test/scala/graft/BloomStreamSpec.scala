@@ -28,7 +28,7 @@ class BloomStreamSpec extends SparkTestBase {
         .map { case (src, rows) =>
           src -> (rows.length.toLong, rows.count(_.getBoolean(2)).toLong)
         }
-      val want = SparkEntry.queries("stream_bloom_dedup")(spark, sf).collect()
+      val want = run("stream_bloom_dedup").collect()
         .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(got == want, s"stream/batch fork: got=$got want=$want")
       // the filter guarantees no false negatives: every EXACT duplicate

@@ -60,19 +60,15 @@ class CdcSpec extends SparkTestBase {
   // ------------------------------------------------------- late arrivals
 
   test("cdc_late_arriving retroactively splices intervals and equals the rebuild") {
-    import spark.implicits._
     val hour = 3600L
     // user 1: batch-1 changes at h=1 (id 1) and h=5 (id 2); the LATE
     // batch-2 change (id 10, h=3) must close (1..5) into (1..3)(3..5)
     // user 2: batch-1 only (id 3) — untouched by the increment
-    val rows = Seq(
-      (1L, new java.sql.Timestamp(1 * hour * 1000), 1L, "update", 10.0, "{}"),
-      (2L, new java.sql.Timestamp(5 * hour * 1000), 1L, "update", 20.0, "{}"),
-      (3L, new java.sql.Timestamp(2 * hour * 1000), 2L, "update", 30.0, "{}"),
-      (10L, new java.sql.Timestamp(3 * hour * 1000), 1L, "update", 15.0, "{}"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_late").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val dir = writeEvents(Seq(
+      (1L, 1 * hour, 1L, "update", 10.0),
+      (2L, 5 * hour, 1L, "update", 20.0),
+      (3L, 2 * hour, 2L, "update", 30.0),
+      (10L, 3 * hour, 1L, "update", 15.0)))
     val got = graft.operators.Cdc.cdcLateArriving(spark, dir)
       .orderBy("entity_key", "from_sec", "event_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         if (r.isNullAt(4)) -1L else r.getLong(4)))

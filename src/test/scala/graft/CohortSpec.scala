@@ -155,4 +155,89 @@ class CohortSpec extends SparkTestBase {
       assert(r.getLong(2) == maxN, s"${r.getString(0)}: ${r.getLong(2)} != $maxN")
     }
   }
+
+  test("q_hierarchy_rollup: root conserves the corpus; every subtree bounds its own part") {
+    import spark.implicits._
+    val rows = run("q_hierarchy_rollup")
+      .select("node", "depth", "n_desc", "subtree_cents", "own_cents")
+      .as[(Long, Int, Long, Long, Long)].collect()
+    val parts = graft.sources.Tables.part(spark, sf)
+      .select(floor(col("p_retailprice") * 100).cast("long").as("c"))
+      .agg(sum("c"), count(lit(1))).as[(Long, Long)].collect().head
+    val root = rows.find(_._1 == 0L).get
+    assert(root._4 == parts._1, "root subtree != corpus total")
+    assert(root._3 == parts._2, "root descendant count != part count")
+    val byNode = rows.map(r => r._1 -> r).toMap
+    rows.filter(_._1 > 0).foreach { r =>
+      val parent = byNode(r._1 / 10)
+      assert(parent._4 >= r._4, s"parent of ${r._1} smaller subtree")
+      assert(parent._3 >= r._3, s"parent of ${r._1} fewer descendants")
+      assert(r._4 >= r._5, s"node ${r._1} subtree below own value")
+    }
+  }
+
+  test("cohort_ndr: retained revenue comes only from the prior month's users") {
+    import spark.implicits._
+    val rows = run("cohort_ndr")
+      .select("month", "n_users", "rev_cents", "retained_cents", "n_retained", "ndr")
+      .as[(Long, Long, Long, Long, Long, Double)].collect().sortBy(_._1)
+    assert(rows.nonEmpty)
+    rows.foreach { case (m, nu, rev, ret, nr, ndr) =>
+      assert(nu > 0 && rev > 0)
+      assert(nr <= nu, s"month $m retained more users than it had")
+      assert(ndr >= 0)
+      assert(math.abs(ndr - math.floor(ret.toDouble / rev * 1e4) / 1e4) < 1e-12)
+    }
+    // cross-check one month's retained revenue against a direct recompute
+    val monthly = graft.sources.Tables.events(spark, sf)
+      .filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"),
+        expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 div 30 as bigint)")
+          .as("month"))
+      .agg(sum(floor(col("value") * 100).cast("long")).as("cents"))
+      .as[(Long, Long, Long)].collect()
+    val m0 = rows.head._1
+    val users0 = monthly.filter(_._2 == m0).map(_._1).toSet
+    val want = monthly.filter(r => r._2 == m0 + 1 && users0(r._1)).map(_._3).sum
+    assert(rows.head._4 == want, "retained revenue mismatch vs direct recompute")
+  }
+
+  test("q_semi_additive: month-end balance uses each account's last sample only") {
+    import spark.implicits._
+    val rows = run("q_semi_additive")
+      .select("month", "n_accounts", "eom_balance_cents", "naive_sum_cents",
+        "additive_overcount")
+      .as[(Long, Long, Long, Long, Double)].collect()
+    assert(rows.nonEmpty)
+    rows.foreach { case (m, na, eom, naive, over) =>
+      assert(na > 0 && eom > 0)
+      assert(naive >= eom, s"month $m naive sum below last-sample sum")
+      assert(over >= 1.0, s"month $m overcount ratio below 1")
+    }
+    // direct recompute of one month's end-of-month balance
+    val base = graft.sources.Tables.events(spark, sf)
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id"),
+        expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 div 30 as bigint)").as("month"),
+        unix_timestamp(date_trunc("second", col("ts"))).as("sec"), col("event_id"),
+        floor(col("value") * 100).cast("long").as("cents"))
+      .as[(Long, Long, Long, Long, Long)].collect()
+    val m0 = rows.head._1
+    val want = base.filter(_._2 == m0).groupBy(_._1).values
+      .map(_.maxBy(r => (r._3, r._4))._5).sum
+    assert(rows.head._3 == want, "eom balance mismatch vs direct recompute")
+  }
+
+  test("q_winsorized_mean: bounds ordered, winsorized mean clamped inside them") {
+    import spark.implicits._
+    val rows = run("q_winsorized_mean")
+      .select("l_returnflag", "n", "p05_cents", "p95_cents", "mean_cents", "winsor_mean_cents")
+      .as[(String, Long, Long, Long, Double, Double)].collect()
+    assert(rows.nonEmpty)
+    rows.foreach { case (f, n, lo, hi, _, wm) =>
+      assert(n > 0)
+      assert(lo <= hi, s"$f bounds out of order")
+      assert(wm >= lo - 1e-9 && wm <= hi + 1e-9, s"$f winsorized mean outside clamp range")
+    }
+  }
 }

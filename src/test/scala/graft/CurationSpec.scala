@@ -147,6 +147,17 @@ class CurationSpec extends SparkTestBase {
     assert(got.toSeq == expected)
   }
 
+  test("LM scorers on an empty corpus return no rows instead of throwing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_docs").toString
+    graft.sources.Tables.documents(spark, sf).limit(0)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val lms = Seq("text_perplexity", "text_bigram_lm", "text_bigram_lm_kn", "text_ccnet_buckets")
+    for (entry <- SparkEntry.pick(lms)) {
+      val o = SparkEntry.run(spark, dir, entry)(_.count())
+      assert(o.result == Right(0L), s"${o.name}: ${o.result}")
+    }
+  }
+
   test("temperature: rarest language keeps ~everything, largest is downsampled hardest") {
     val df = Curation.mixTemperature(spark, sf).cache()
     val rows = df.select(col("lang"), col("n_orig"), col("keep_per_10k"), col("n_kept"))
@@ -409,7 +420,7 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("text_annotation_agreement: confusion matrix partitions and κ replays") {
-    val rows = SparkEntry.queries("text_annotation_agreement")(spark, sf).collect()
+    val rows = run("text_annotation_agreement").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (n, both, aOnly, bOnly, neither) =
@@ -429,7 +440,7 @@ class CurationSpec extends SparkTestBase {
 
   test("mix_anneal_schedule: each phase apportions its exact budget; anneal up-weights the top quality half") {
     import graft.operators.Curation._
-    val rows = SparkEntry.queries("mix_anneal_schedule")(spark, sf).collect()
+    val rows = run("mix_anneal_schedule").collect()
     val byPhase = rows.groupBy(_.getAs[Int]("phase"))
     assert(byPhase.keySet == Set(1, 2))
     val p2 = AnnealBudget / AnnealPhase2Den

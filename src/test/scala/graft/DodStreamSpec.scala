@@ -40,7 +40,7 @@ class DodStreamSpec extends SparkTestBase {
           val last = rows.maxBy(_.getLong(1))
           k -> (1 to 9).map(last.getLong).toList
         }
-      val want = SparkEntry.queries("tsdb_dod_timestamps")(spark, sf).collect()
+      val want = run("tsdb_dod_timestamps").collect()
         .map(r => r.getString(0) -> (1 to 9).map(r.getLong).toList).toMap
       assert(got == want, s"stream/batch fork: got=$got want=$want")
     } finally q.stop()

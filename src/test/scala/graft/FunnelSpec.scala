@@ -67,8 +67,26 @@ class FunnelSpec extends SparkTestBase {
     df.unpersist()
   }
 
+  test("attribution_markov: removal always hurts, attribution is a normalized split") {
+    import spark.implicits._
+    val rows = run("attribution_markov")
+      .select("channel", "p_conv_full", "p_conv_removed", "removal_effect", "attribution")
+      .as[(String, Double, Double, Double, Double)].collect()
+    assert(rows.map(_._1).sorted.toSeq == graft.operators.Funnel.AttrChannels.sorted)
+    val pFull = rows.head._2
+    assert(rows.forall(_._2 == pFull), "arms disagree on the full-chain conversion prob")
+    assert(pFull > 0 && pFull <= 1.0)
+    rows.foreach { case (c, pf, pr, re, at) =>
+      assert(pr >= 0 && pr <= pf + 1e-9, s"$c removal should not raise conversion")
+      assert(re >= 0 && re <= pf + 1e-9, s"$c removal effect out of range")
+      assert(at >= 0 && at <= 1.0, s"$c attribution out of range")
+    }
+    val atSum = rows.map(_._5).sum
+    assert(atSum > 0.99 && atSum <= 1.0 + 1e-9, s"attribution shares sum to $atSum")
+  }
+
   test("funnel_conversion_ci: Wilson interval brackets p-hat and stays in [0,1]") {
-    val rows = SparkEntry.queries("funnel_conversion_ci")(spark, sf).collect()
+    val rows = run("funnel_conversion_ci").collect()
     assert(rows.length == 3)
     rows.filter(!_.isNullAt(3)).foreach { r =>
       val (p, lo, hi) = (r.getDouble(3), r.getDouble(4), r.getDouble(5))

@@ -120,4 +120,104 @@ class GraphSpec extends SparkTestBase {
     assert(bad.isEmpty, s"core degree exceeded full degree: ${bad.take(3).mkString}")
     df.unpersist()
   }
+
+  test("graph_assortativity: one exact-moment row with a proper correlation") {
+    import spark.implicits._
+    val rows = run("graph_assortativity")
+      .select("m", "sum_deg", "sum_xy", "sum_xx", "assortativity")
+      .as[(Long, Long, Long, Long, Double)].collect()
+    assert(rows.length == 1)
+    val (m, sx, sxy, sxx, r) = rows.head
+    assert(r >= -1.0 && r <= 1.0)
+    // Cauchy–Schwarz on the exact moments: |M·Sxy − Sx²| ≤ M·Sxx − Sx²
+    assert(math.abs(m.toDouble * sxy - sx.toDouble * sx) <=
+      m.toDouble * sxx - sx.toDouble * sx + 1e-6)
+    // the directed symmetric edge list has even cardinality
+    assert(m % 2 == 0 && m > 0)
+    // Σ_edges deg(src) == Σ_v deg(v)² — cross-check via the histogram entry
+    val fromHist = run("graph_degree_histogram")
+      .select((col("degree") * col("degree") * col("n_nodes")).as("c"))
+      .agg(sum("c")).head.getLong(0)
+    assert(sx == fromHist)
+  }
+
+  test("graph_modularity: communities partition nodes, intra edges bounded, Q in range") {
+    import spark.implicits._
+    val rows = run("graph_modularity")
+      .select("community", "n_nodes", "degree_sum", "intra_edges", "q_contrib")
+      .as[(Long, Long, Long, Long, Double)].collect()
+    assert(rows.nonEmpty)
+    // community sizes must sum to the LPA node count
+    val lpaNodes = run("graph_communities_lpa").count()
+    assert(rows.map(_._2).sum == lpaNodes)
+    rows.foreach { case (c, nn, ds, ie, q) =>
+      assert(ie <= ds, s"community $c: intra $ie cannot exceed degree sum $ds")
+      assert(nn >= 1 && q <= 1.0 && q >= -1.0)
+    }
+    // total modularity of a real partition on this graph is positive
+    assert(rows.map(_._5).sum > 0.0, "LPA should beat the null model")
+  }
+
+  test("graph_linkpred_jaccard: candidates are non-edges at distance 2, scores exact") {
+    import spark.implicits._
+    val rows = run("graph_linkpred_jaccard")
+      .select("node_a", "node_b", "inter", "da", "db", "jaccard")
+      .as[(Long, Long, Long, Long, Long, Double)].collect()
+    assert(rows.length == graft.operators.Graph.LinkPredK)
+    rows.foreach { case (a, b, inter, da, db, j) =>
+      assert(a < b, "canonical pair order")
+      assert(inter >= 1 && inter <= math.min(da, db), "intersection bounds")
+      assert(j == math.floor(inter.toDouble / (da + db - inter) * 1e4) / 1e4)
+      assert(j > 0.0 && j <= 1.0)
+    }
+    // scores non-increasing down the ranking
+    assert(rows.sliding(2).forall { case Array(x, y) => x._6 >= y._6; case _ => true })
+  }
+
+  test("graph_walk_sample: every walk is connected, complete, and hash-deterministic") {
+    import spark.implicits._
+    val rows = run("graph_walk_sample").orderBy("start", "step", "node")
+      .select("start", "step", "node").as[(Long, Int, Long)].collect()
+    val byWalk = rows.groupBy(_._1)
+    // adjacency for validation, rebuilt from the same similarity graph
+    val adj = graft.operators.Affinity.nodeSimilarity(spark, sf)
+      .select(col("page_a").cast("long"), col("page_b").cast("long"))
+      .as[(Long, Long)].collect()
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+    byWalk.foreach { case (start, steps) =>
+      val path = steps.sortBy(_._2)
+      assert(path.map(_._2).toSeq == (0 to graft.operators.Graph.WalkLen),
+        s"walk $start must have every step")
+      assert(path.head._3 == start)
+      path.sliding(2).foreach {
+        case Array(a, b) =>
+          assert(adj(a._3).contains(b._3), s"walk $start jumps a non-edge")
+        case _ => ()
+      }
+    }
+    // deterministic: a rerun yields the identical corpus
+    val again = run("graph_walk_sample").orderBy("start", "step", "node")
+      .select("start", "step", "node").as[(Long, Int, Long)].collect()
+    assert(rows.toSeq == again.toSeq)
+  }
+
+  test("graph_hits: top-k panels are complete, sorted and mass-bounded") {
+    import spark.implicits._
+    val rows = run("graph_hits")
+      .select("side", "node_id", "score_fp", "rank")
+      .as[(String, Long, Long, Int)].collect()
+    val nHubs = graft.sources.Tables.orders(spark, sf).select("o_custkey").distinct().count()
+    val nAuths = graft.sources.Tables.supplier(spark, sf).count()
+    Seq("hub" -> nHubs, "authority" -> nAuths).foreach { case (side, nSide) =>
+      val expect = math.min(20L, nSide).toInt
+      val panel = rows.filter(_._1 == side).sortBy(_._4)
+      assert(panel.length == expect, s"$side panel size ${panel.length} != $expect")
+      assert(panel.map(_._4).toSeq == (1 to expect), s"$side ranks")
+      assert(panel.sliding(2).forall(p => p(0)._3 >= p(1)._3), s"$side scores not descending")
+      assert(panel.forall(_._3 > 0), s"$side nonpositive score")
+      // L1 mass is normalized to BASE: no 20 nodes can hold more than all of it
+      assert(panel.map(_._3).sum <= 1000000000000L, s"$side top-k mass exceeds BASE")
+    }
+  }
 }

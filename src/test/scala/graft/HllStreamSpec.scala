@@ -50,7 +50,7 @@ class HllStreamSpec extends SparkTestBase {
           val last = rows.maxBy(_.getLong(4))
           k -> (1 to 5).map(last.getLong).toList
         }
-      val want = SparkEntry.queries("sketch_hll_distinct")(spark, sf).collect()
+      val want = run("sketch_hll_distinct").collect()
         .map(r => r.getString(0) -> (1 to 5).map(r.getLong).toList).toMap
       assert(got == want, s"stream/batch fork: got=$got want=$want")
     } finally q.stop()

@@ -48,7 +48,7 @@ class ModelsSpec extends SparkTestBase {
   }
 
   test("model_precision_recall: recall is non-increasing and precision well-formed across thresholds") {
-    val rows = SparkEntry.queries("model_precision_recall")(spark, sf)
+    val rows = run("model_precision_recall")
       .orderBy("threshold_cents").collect()
     assert(rows.length == graft.operators.Models.PrThresholds.size)
     val recalls = rows.map(_.getAs[Long]("recall_x1e6")).toSeq
@@ -68,7 +68,7 @@ class ModelsSpec extends SparkTestBase {
 
   test("model_auc_roc agrees with a brute-force pair count on a sample") {
     import org.apache.spark.sql.functions._
-    val r = SparkEntry.queries("model_auc_roc")(spark, sf).head()
+    val r = run("model_auc_roc").head()
     val auc = r.getAs[Long]("auc_x1e6")
     assert(auc > 0L && auc < 1000000L)
     // brute force on the small sf0.001 feed: P(pos > neg) + P(=)/2

@@ -155,4 +155,50 @@ class MultimodalSpec extends SparkTestBase {
       (col("n_images") > 0 && col("n_images") <= (col("n_batches") - 1) * 32)).count() == 0)
     df.unpersist()
   }
+
+  test("mm_exposure_histogram: bins partition decoded frames within each modality") {
+    import spark.implicits._
+    val rows = run("mm_exposure_histogram")
+      .select("modality", "bin", "n_frames", "modality_total", "share")
+      .as[(String, Int, Long, Long, Double)].collect()
+    assert(rows.nonEmpty)
+    rows.foreach { case (_, b, n, t, sh) =>
+      assert(b >= 0 && b <= 15)
+      assert(n > 0 && n <= t)
+      assert(sh >= 0.0 && sh <= 1.0)
+    }
+    // per-modality counts really sum to the window total
+    rows.groupBy(_._1).foreach { case (m, rs) =>
+      assert(rs.map(_._3).sum == rs.head._4, s"modality $m total mismatch")
+    }
+    // all decoded frames are binned exactly once
+    val frames = graft.operators.Multimodal.decodeStub(spark, sf).count()
+    assert(rows.map(_._3).sum == frames)
+  }
+
+  test("mm_blur_detect: Laplacian energy matches a driver-side byte replay") {
+    import spark.implicits._
+    val got = run("mm_blur_detect")
+      .select("doc_id", "frame_idx", "flen", "lap_energy", "sharpness")
+      .as[(Long, Int, Int, Long, Double)].collect()
+      .map(r => (r._1, r._2) -> r).toMap
+    val docs = graft.sources.Tables.documents(spark, sf)
+      .select("doc_id", "text").as[(Long, String)].collect()
+    assert(got.nonEmpty)
+    docs.take(50).foreach { case (id, text) =>
+      val bytes = text.getBytes("UTF-8")
+      val n = (bytes.length + 255) / 256
+      (0 until n).foreach { f =>
+        val w = bytes.slice(f * 256, math.min(f * 256 + 256, bytes.length))
+        val e = (1 until w.length - 1).map(i =>
+          math.abs(2 * (w(i) & 0xff) - (w(i - 1) & 0xff) - (w(i + 1) & 0xff)).toLong).sum
+        val row = got((id, f))
+        assert(row._3 == w.length && row._4 == e, s"doc $id frame $f")
+        if (w.length > 2)
+          assert(row._5 == math.floor(e.toDouble / (w.length - 2) * 1e4) / 1e4)
+      }
+    }
+    // frame inventory: every doc contributes ceil(len/256) frames
+    assert(got.size == docs.map(d => (d._2.getBytes("UTF-8").length + 255) / 256).sum)
+  }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 class NativeHistogramSpec extends SparkTestBase {
 
   test("native histogram: sparse buckets conserve mass and stay within the schema-2 grid") {
-    val down = SparkEntry.queries("prom_native_histogram_downscale")(spark, sf)
+    val down = run("prom_native_histogram_downscale")
       .collect()
     val total = down.map(_.getAs[Long]("cnt")).sum
     val events = graft.sources.Tables.events(spark, sf).count()
@@ -24,7 +24,7 @@ class NativeHistogramSpec extends SparkTestBase {
   }
 
   test("native histogram_quantile tracks exact percentiles within one bucket width (19%)") {
-    val est = SparkEntry.queries("prom_native_histogram_quantile")(spark, sf)
+    val est = run("prom_native_histogram_quantile")
       .collect().map(r => r.getAs[String]("event_type") -> r).toMap
     val exact = graft.sources.Tables.events(spark, sf)
       .groupBy(col("event_type"))
@@ -48,14 +48,11 @@ class NativeHistogramSpec extends SparkTestBase {
   }
 
   test("native histogram: a quantile covered by the overflow bucket raises, not NULL") {
-    import spark.implicits._
     // every value far past bound(IdxHi)=1024 → all mass in the
     // overflow bucket → p50's covering bucket is the overflow bucket
-    val dir = java.nio.file.Files.createTempDirectory("graft_nhof").toString
-    (1 to 50).map(i => (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-01 00:00:${i % 60}%02d"),
-      i.toLong, "t", 5000.0 + i, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val dir = writeEvents((1 to 50).map(i => (i.toLong,
+      java.sql.Timestamp.valueOf(f"2024-01-01 00:00:${i % 60}%02d").getTime / 1000,
+      i.toLong, "t", 5000.0 + i)))
     val e = intercept[Exception] {
       graft.operators.NativeHistogram.nativeQuantile(spark, dir).collect()
     }
@@ -64,7 +61,7 @@ class NativeHistogramSpec extends SparkTestBase {
   }
 
   test("prom_native_histogram_rate_quantile: estimates live inside their buckets") {
-    val perWin = SparkEntry.queries("prom_native_histogram_rate_quantile")(spark, sf)
+    val perWin = run("prom_native_histogram_rate_quantile")
       .collect()
     assert(perWin.nonEmpty)
     val values = graft.sources.Tables.events(spark, sf)
@@ -94,7 +91,7 @@ class NativeHistogramSpec extends SparkTestBase {
 
   test("prom_native_histogram_sum: merged histogram conserves mass and matches per-series buckets") {
     import org.apache.spark.sql.functions._
-    val rows = SparkEntry.queries("prom_native_histogram_sum")(spark, sf)
+    val rows = run("prom_native_histogram_sum")
       .orderBy(col("idx")).collect()
     val total = graft.sources.Tables.events(spark, sf).count()
     assert(rows.map(_.getAs[Long]("cnt")).sum == total, "mass not conserved")

@@ -41,7 +41,7 @@ class OooStreamSpec extends SparkTestBase {
           val last = rows.maxBy(_.getLong(1))
           k -> (last.getLong(1), last.getLong(2), last.getLong(3), last.getLong(4))
         }
-      val want = SparkEntry.queries("tsdb_ooo_ingest")(spark, sf).collect()
+      val want = run("tsdb_ooo_ingest").collect()
         .map(r => r.getString(0) ->
           (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
       assert(got == want, s"stream/batch fork: got=$got want=$want")

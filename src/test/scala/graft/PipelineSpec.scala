@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Pipeline
+import org.apache.spark.sql.functions._
 
 /** Invariants of the training-data pipeline operators: deterministic
   * membership, mixture copy counts, pack-size bounds, band fractions. */
@@ -284,6 +285,72 @@ class PipelineSpec extends SparkTestBase {
     assert(rows.head.getDouble(5) >= rows.last.getDouble(5))
   }
 
+  test("split_grouped: source-keyed split provably leaks zero sources; doc counts conserve") {
+    import spark.implicits._
+    val rows = run("split_grouped")
+      .select("strategy", "split", "n_docs", "n_sources", "n_leaked_sources")
+      .as[(String, String, Long, Long, Long)].collect()
+    assert(rows.length == 4)
+    val total = graft.sources.Tables.documents(spark, sf).count()
+    Seq("by_doc", "by_source").foreach { st =>
+      val arm = rows.filter(_._1 == st)
+      assert(arm.map(_._3).sum == total, s"$st docs don't conserve")
+    }
+    assert(rows.filter(_._1 == "by_source").forall(_._5 == 0), "source split leaked a source")
+    // doc-keyed split scatters at least one source across both sides here
+    assert(rows.filter(_._1 == "by_doc").forall(_._5 > 0), "by_doc unexpectedly leak-free")
+  }
+
+  test("sample_neyman: allocations respect the budget and integer-mass proportionality") {
+    import spark.implicits._
+    val rows = run("sample_neyman")
+      .select("source", "n", "mass", "neyman_alloc", "prop_alloc")
+      .as[(String, Long, Long, Long, Long)].collect()
+    assert(rows.nonEmpty)
+    val budget = graft.operators.Pipeline.NeymanBudget
+    assert(rows.map(_._4).sum <= budget, "Neyman allocation over budget")
+    assert(rows.map(_._5).sum <= budget, "proportional allocation over budget")
+    assert(rows.forall(r => r._4 >= 0 && r._5 >= 0))
+    // floor-share monotonicity: more mass never gets fewer slots
+    val byMass = rows.sortBy(_._3)
+    assert(byMass.sliding(2).forall(p => p(0)._4 <= p(1)._4), "allocation not monotone in mass")
+  }
+
+  test("mix_kl_divergence: shares are distributions; kl term signs follow lift") {
+    import spark.implicits._
+    val rows = run("mix_kl_divergence")
+      .select("source", "n_docs", "copies", "q_mass", "p_share", "q_share", "lift", "kl_term")
+      .as[(String, Long, Long, Long, Double, Double, Double, Double)].collect()
+    assert(rows.nonEmpty)
+    val pSum = rows.map(_._5).sum; val qSum = rows.map(_._6).sum
+    assert(pSum > 0.98 && pSum <= 1.0 + 1e-9, s"p shares sum $pSum")
+    assert(qSum > 0.98 && qSum <= 1.0 + 1e-9, s"q shares sum $qSum")
+    rows.foreach { case (src, n, copies, qm, p, q, lift, kl) =>
+      assert(copies >= 0 && copies <= 2 * n, s"$src copies outside [0, 2n]")
+      assert(qm == n * 6 || qm == n * 18, s"$src target mass not weight-implied")
+      assert(p >= 0 && q > 0 && lift >= 0)
+      // floored values: a clearly down/up-delivered source signs its KL term
+      if (lift > 1.01) assert(kl > 0, s"$src over-delivered but kl $kl")
+      if (lift < 0.99 && p > 0) assert(kl < 0, s"$src under-delivered but kl $kl")
+    }
+  }
+
+  test("pack_shuffle_quality: hash order interleaves, source order degenerates") {
+    import spark.implicits._
+    val rows = run("pack_shuffle_quality")
+      .select("layout", "n_docs", "n_runs", "mean_run")
+      .as[(String, Long, Long, Double)].collect()
+    val byLayout = rows.map(r => r._1 -> r).toMap
+    assert(byLayout.keySet == Set("source_sorted", "hash_shuffled"))
+    val nSources = graft.sources.Tables.documents(spark, sf)
+      .select("source").distinct().count()
+    assert(byLayout("source_sorted")._3 == nSources,
+      "sorted layout must produce exactly one run per source")
+    val sh = byLayout("hash_shuffled")
+    assert(sh._3 > nSources, "hash order failed to interleave")
+    assert(sh._4 < 3.0, s"hash-shuffled mean run ${sh._4} too long for ~uniform sources")
+  }
+
   // ------------------------------------------------------------ coreset
 
   test("sample_coreset equals a driver-side greedy farthest-point replay") {
@@ -340,12 +407,7 @@ class PipelineSpec extends SparkTestBase {
       (5L, at(5), 3L), (6L, at(6), 1L), (7L, at(8), 3L),
       (8L, at(10), 2L), (9L, at(12), 1L), (10L, at(14), 3L),
       (11L, at(16), 1L), (12L, at(19), 2L), (13L, at(21), 1L), (14L, at(24), 3L))
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cv").toString
-    raw.map { case (id, ts, uid) =>
-      (id, new java.sql.Timestamp(ts * 1000L), uid, "t", 1.0, "{}")
-    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val dir = writeEvents(raw.map { case (id, ts, uid) => (id, ts, uid, "t", 1.0) })
 
     val got = Pipeline.splitPurgedCv(spark, dir).collect()
       .map(r => r.getInt(0) -> (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
@@ -372,9 +434,9 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("pack_boundary_offsets agrees with pack_token_budget and starts at 0") {
-    val packs = SparkEntry.queries("pack_token_budget")(spark, sf).collect()
+    val packs = run("pack_token_budget").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val bounds = SparkEntry.queries("pack_boundary_offsets")(spark, sf).collect()
+    val bounds = run("pack_boundary_offsets").collect()
     assert(bounds.nonEmpty)
     bounds.foreach { r =>
       val key = (r.getString(0), r.getLong(1))
@@ -391,9 +453,9 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("pack_mask_density describes the same packs as pack_token_budget") {
-    val packs = SparkEntry.queries("pack_token_budget")(spark, sf).collect()
+    val packs = run("pack_token_budget").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3))).toMap
-    val dens = SparkEntry.queries("pack_mask_density")(spark, sf).collect()
+    val dens = run("pack_mask_density").collect()
     assert(dens.nonEmpty)
     dens.foreach { r =>
       val key = (r.getString(0), r.getLong(1))

@@ -234,7 +234,7 @@ class PromWireSpec extends SparkTestBase {
   }
 
   test("v2 request decodes: symbols, packed refs, sorted labels, v1-equal samples") {
-    val row = SparkEntry.queries("prom_wire_frame_v2")(spark, sf).collect().head
+    val row = run("prom_wire_frame_v2").collect().head
     val (nSymbols, nSeries, bodyLen, bodyHex) =
       (row.getLong(0), row.getLong(1), row.getLong(2), row.getString(3))
     assert(bodyLen * 2 == bodyHex.length)
@@ -281,7 +281,7 @@ class PromWireSpec extends SparkTestBase {
 
     // v1 frames carry the identical sample stream — compare (metric,
     // event_type) -> (value, ts)
-    val v1 = SparkEntry.queries("prom_wire_frame")(spark, sf).collect()
+    val v1 = run("prom_wire_frame").collect()
       .map(rr => (rr.getString(1), rr.getString(2)) ->
         (rr.getDouble(4), rr.getLong(3))).toMap
     val names = Seq("__name__", "accountId", "engine", "event_type",

@@ -79,4 +79,66 @@ class QualitySpec extends SparkTestBase {
       assert(r.getLong(6) + r.getLong(7) < r.getLong(1) / 2)
     }
   }
+
+  test("q_corr_matrix: six pairs, bounded correlations, self-consistency with corr()") {
+    import spark.implicits._
+    val rows = run("q_corr_matrix")
+      .select("col_a", "col_b", "n", "corr")
+      .as[(String, String, Long, Option[Double])].collect()
+    assert(rows.length == 6)
+    assert(rows.map(r => (r._1, r._2)).distinct.length == 6)
+    // pairs follow measure declaration order (qty, price, disc, tax),
+    // not alphabetical order
+    val declared = Seq("qty" -> "price", "qty" -> "disc", "qty" -> "tax",
+      "price" -> "disc", "price" -> "tax", "disc" -> "tax").toSet
+    assert(rows.map(r => (r._1, r._2)).toSet == declared)
+    rows.foreach { case (a, b, n, c) =>
+      assert(n > 0)
+      c.foreach(v => assert(v >= -1.0 - 1e-9 && v <= 1.0 + 1e-9, s"($a,$b) corr $v"))
+    }
+    // cross-check one pair against Spark's own corr aggregate (float,
+    // so compare loosely)
+    val want = graft.sources.Tables.lineitem(spark, sf)
+      .select(floor(col("l_quantity")).cast("long").cast("double").as("x"),
+        floor(col("l_extendedprice") * 100).cast("long").cast("double").as("y"))
+      .agg(corr(col("x"), col("y"))).as[Double].collect().head
+    val got = rows.find(r => r._1 == "price" && r._2 == "qty")
+      .orElse(rows.find(r => r._1 == "qty" && r._2 == "price")).get._4.get
+    assert(math.abs(got - want) < 1e-3, s"corr(qty, price) $got vs $want")
+  }
+
+  test("q_duplicate_payments: every pair is same-user same-amount inside the window") {
+    import spark.implicits._
+    val rows = run("q_duplicate_payments")
+      .select("user_id", "amt", "ev_a", "ev_b", "hours_apart")
+      .as[(Long, Long, Long, Long, Long)].collect()
+    val purchases = graft.sources.Tables.events(spark, sf)
+      .filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), floor(col("value")).cast("long").as("amt"))
+      .as[(Long, Long, Long)].collect()
+      .map(r => r._1 -> (r._2, r._3)).toMap
+    rows.foreach { case (u, amt, a, b, h) =>
+      assert(a < b, "pair not anchored on the lower id")
+      assert(purchases(a) == ((u, amt)) && purchases(b) == ((u, amt)),
+        s"pair ($a,$b) members don't share (user, amount)")
+      assert(h >= 0 && h <= 7 * 24, s"pair ($a,$b) outside the window")
+    }
+    assert(rows.map(p => (p._3, p._4)).distinct.length == rows.length, "duplicate pairs")
+  }
+
+  test("dq_volume_anomaly: flagged days truly exceed the robust 3-MAD band") {
+    import spark.implicits._
+    val rows = run("dq_volume_anomaly")
+      .select("tbl", "day", "n", "med", "mad", "is_anomaly")
+      .as[(String, Long, Long, Long, Long, Boolean)].collect()
+    assert(rows.forall(_._6), "non-anomalous rows leaked into the feed")
+    rows.foreach { case (t, d, n, med, mad, _) =>
+      assert(math.abs(n - med) > 3 * mad, s"($t,$d) inside the band")
+      assert(mad >= 0 && med > 0)
+    }
+    // med/mad constant per table
+    rows.groupBy(_._1).foreach { case (t, rs) =>
+      assert(rs.map(r => (r._4, r._5)).distinct.length == 1, s"$t baseline not constant")
+    }
+  }
 }

@@ -114,23 +114,68 @@ class ScrapersSpec extends SparkTestBase {
     df.unpersist()
   }
 
+  test("prom_recording_rules: levels are consistent and the rule tree shares one scan") {
+    import spark.implicits._
+    val rows = run("prom_recording_rules")
+      .select("rule", "event_type", "hour_sec", "value")
+      .as[(String, Option[String], Long, Long)].collect()
+    val l1 = rows.filter(_._1 == "type_hourly_count")
+    val l2 = rows.filter(_._1 == "total_hourly")
+    val l3 = rows.filter(_._1 == "total_max6h")
+    assert(l1.nonEmpty && l2.nonEmpty && l3.size == l2.size)
+    // level 2 = level 1 re-aggregated
+    val l1ByHour = l1.groupBy(_._3).view.mapValues(_.map(_._4).sum).toMap
+    l2.foreach { case (_, _, h, v) => assert(l1ByHour(h) == v, s"hour $h") }
+    // level 3 = trailing-6 max of level 2
+    val l2Sorted = l2.sortBy(_._3)
+    val l2Vals = l2Sorted.map(_._4)
+    l2Sorted.zipWithIndex.foreach { case ((_, _, h, _), i) =>
+      val want = l2Vals.slice(math.max(0, i - 5), i + 1).max
+      val got = l3.find(_._3 == h).get._4
+      assert(got == want, s"hour $h max6h")
+    }
+    // the whole cascade reuses level 1's exchange instead of rescanning:
+    // count scans in the FINAL (post-AQE) section only — the formatted
+    // string repeats the pre-reuse initial plan below it
+    val p = executedPlan("prom_recording_rules")
+    val finalSection = p.split("== Initial Plan ==").head
+    assert(finalSection.contains("ReusedExchange"), "rule tree must share the level-1 shuffle")
+    assert("Scan parquet".r.findAllIn(finalSection).size <= 1,
+      "one events scan for the whole tree")
+  }
+
+  test("prom_ha_dedup: election never keeps fewer samples than the better replica") {
+    import spark.implicits._
+    val rows = run("prom_ha_dedup")
+      .select("event_type", "n_windows", "windows_b", "samples_ingested",
+        "samples_kept", "dedup_ratio")
+      .as[(String, Long, Long, Long, Long, Double)].collect()
+    assert(rows.nonEmpty)
+    val totalEvents = graft.sources.Tables.events(spark, sf).count()
+    // replica a is complete: kept >= a's sample count per series overall
+    val perType = graft.sources.Tables.events(spark, sf)
+      .groupBy("event_type").count().as[(String, Long)].collect().toMap
+    rows.foreach { case (t, nw, wb, ing, kept, ratio) =>
+      assert(nw > 0 && wb <= nw)
+      assert(kept >= perType(t), s"$t kept fewer samples than the complete replica")
+      assert(kept <= ing && ing < 2 * perType(t) + 1)
+      assert(ratio > 0.5 && ratio <= 1.0, s"$t dedup ratio $ratio")
+    }
+    assert(rows.map(_._5).sum >= totalEvents, "dedup lost data overall")
+  }
+
   // ----------------------------------------------------------- federate
 
   test("prom_federate exposes the freshest sample per series, drops stale series, honors own labels") {
-    import spark.implicits._
     val hour = 3600L
-    def ev(id: Long, h: Long, uid: Long, typ: String) =
-      (id, new java.sql.Timestamp(h * hour * 1000L), uid, typ, 1.0, "{}")
+    def ev(id: Long, h: Long, uid: Long, typ: String) = (id, h * hour, uid, typ, 1.0)
     // series (A, shard 0): hours 8,9,10 with 2 events at h=10 → latest (10, 2)
     // series (A, shard 1): fresh at h=7 (inside the 4h lookback vs horizon 10)
     // series (B, shard 2): latest h=5 → STALE (10 - 5 > 4) → dropped
-    val rows =
+    val dir = writeEvents(
       Seq(ev(1, 8, 0, "A"), ev(2, 9, 4, "A"), ev(3, 10, 8, "A"), ev(4, 10, 12, "A"),
         ev(5, 7, 1, "A"), ev(6, 6, 5, "A"),
-        ev(7, 5, 2, "B"), ev(8, 4, 6, "B"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fed").toString
-    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+        ev(7, 5, 2, "B"), ev(8, 4, 6, "B")))
     val got = Scrapers.promFederate(spark, dir)
       .collect().map(r => (r.getString(1), r.getLong(2)) ->
         (r.getString(3), r.getBoolean(4), r.getLong(5), r.getDouble(6))).toMap
@@ -146,7 +191,7 @@ class ScrapersSpec extends SparkTestBase {
   // ------------------------------- HA replica election, scrape cadence
 
   test("metrics_ha_dedup: election keeps the majority replica, ties prefer replica 0, counts conserve") {
-    val rows = SparkEntry.queries("metrics_ha_dedup")(spark, sf).collect()
+    val rows = run("metrics_ha_dedup").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (n0, n1) = (r.getAs[Long]("n_r0"), r.getAs[Long]("n_r1"))
@@ -159,7 +204,7 @@ class ScrapersSpec extends SparkTestBase {
   }
 
   test("metrics_scrape_jitter: median is an observed interval, share in [0,1], gap >= median") {
-    val rows = SparkEntry.queries("metrics_scrape_jitter")(spark, sf).collect()
+    val rows = run("metrics_scrape_jitter").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val share = r.getAs[Double]("jitter_share")

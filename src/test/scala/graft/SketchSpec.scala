@@ -154,7 +154,7 @@ class SketchSpec extends SparkTestBase {
   }
 
   test("sketch_hll_distinct: measured error stays inside 3x the published 1.04/sqrt(m) bound") {
-    val rows = SparkEntry.queries("sketch_hll_distinct")(spark, sf).collect()
+    val rows = run("sketch_hll_distinct").collect()
     val bound = (3.0 * 1.04 / math.sqrt(graft.operators.Sketch.HllM) * 1e4).toLong
     rows.foreach { r =>
       assert(r.getAs[Long]("err_x1e4") <= bound,
@@ -163,7 +163,7 @@ class SketchSpec extends SparkTestBase {
   }
 
   test("sketch_bloom_fpp: split partitions the users; rates on their grids") {
-    val r = SparkEntry.queries("sketch_bloom_fpp")(spark, sf).head()
+    val r = run("sketch_bloom_fpp").head()
     val distinctUsers = graft.sources.Tables.events(spark, sf)
       .select("user_id").distinct().count()
     assert(r.getLong(0) + r.getLong(1) == distinctUsers)

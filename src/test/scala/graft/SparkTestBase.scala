@@ -36,13 +36,13 @@ trait SparkTestBase extends AnyFunSuite {
 
   /** formatted physical plan of an entry, for plan-shape assertions */
   def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.explainString(
+    run(name).queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
 
   /** formatted plan AFTER execution — AQE has re-planned and assigned
     * whole-stage-codegen ids, which the un-executed plan doesn't show. */
   def executedPlan(name: String): String = {
-    val df = SparkEntry.queries(name)(spark, sf)
+    val df = run(name)
     df.collect()
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

@@ -152,7 +152,7 @@ class StatsSpec extends SparkTestBase {
 
   test("cohort_lifecycle: states partition actives, ledger balances week over week") {
     import spark.implicits._
-    val rows = SparkEntry.queries("cohort_lifecycle")(spark, sf)
+    val rows = run("cohort_lifecycle")
       .as[(Long, Long, Long, Long, Long, Long)].collect()
     assert(rows.nonEmpty)
     rows.foreach { case (_, act, nw, ret, res, _) =>
@@ -173,7 +173,7 @@ class StatsSpec extends SparkTestBase {
 
   test("sprt: cumulative counts are exact, llr replays from the embedded constants") {
     import spark.implicits._
-    val rows = SparkEntry.queries("q_sprt_abtest")(spark, sf).orderBy("day")
+    val rows = run("q_sprt_abtest").orderBy("day")
       .as[(Long, Long, Long, Double, String)].collect()
     assert(rows.nonEmpty)
     // cumulative counts are monotone and end at the corpus totals
@@ -194,9 +194,155 @@ class StatsSpec extends SparkTestBase {
   test("stats entries are deterministic under repartitioning") {
     for (name <- Seq("q_gini_revenue", "q_mann_kendall", "q_runs_test", "q_waterfall_bridge",
         "q_ks_test", "q_regression_trend", "q_mutual_info", "cohort_lifecycle")) {
-      val a = SparkEntry.queries(name)(spark, sf).collect().toSeq.sortBy(_.toString)
-      val b = SparkEntry.queries(name)(spark, sf).collect().toSeq.sortBy(_.toString)
+      val a = run(name).collect().toSeq.sortBy(_.toString)
+      val b = run(name).collect().toSeq.sortBy(_.toString)
       assert(a == b, s"$name unstable across runs")
     }
+  }
+
+  test("events_burstiness: statistic in range and exact against a driver-side fold") {
+    import spark.implicits._
+    val rows = run("events_burstiness")
+      .select("event_type", "n_gaps", "sum_gap", "mean_gap", "burstiness")
+      .as[(String, Long, Long, Double, Double)].collect()
+    assert(rows.length == 5)
+    rows.foreach { case (_, n, sx, _, b) =>
+      assert(n > 0 && sx >= 0)
+      assert(b >= -1.0 && b < 1.0)
+    }
+    // exact replay for one series
+    val t0 = rows.head._1
+    val secs = graft.sources.Tables.events(spark, sf)
+      .filter(col("event_type") === t0)
+      .select(expr("cast(unix_timestamp(date_trunc('second', ts)) as bigint)").as("s"),
+        col("event_id"))
+      .as[(Long, Long)].collect().sortBy(identity).map(_._1)
+    val gaps = secs.sliding(2).map(p => p(1) - p(0)).toArray
+    val n = gaps.length.toLong
+    val sx = gaps.sum
+    val rad = (BigInt(n) * gaps.map(g => BigInt(g) * BigInt(g)).sum
+      - BigInt(sx) * BigInt(sx)).toDouble
+    val want = math.floor((math.sqrt(rad) - sx.toDouble)
+      / (math.sqrt(rad) + sx.toDouble) * 1e4) / 1e4
+    assert(rows.head._2 == n && rows.head._3 == sx)
+    assert(rows.head._5 == want, s"${rows.head._5} vs $want")
+  }
+
+  test("late round-8 ledgers: internal invariants hold") {
+    import spark.implicits._
+    // source overlap: symmetric-free canonical pairs, Jaccard in (0, 1]
+    val so = run("dedup_source_overlap")
+      .select("source_a", "source_b", "inter", "na", "nb", "jaccard")
+      .as[(String, String, Long, Long, Long, Double)].collect()
+    assert(so.length == 20 * 19 / 2, "all source pairs overlap on this corpus")
+    so.foreach { case (a, b, inter, na, nb, j) =>
+      assert(a < b && inter >= 1 && inter <= math.min(na, nb))
+      assert(j > 0.0 && j <= 1.0)
+    }
+    // co-occurrence: margins bound pair counts
+    val cp = run("events_cooccur_pmi")
+      .select("type_a", "type_b", "n_ab", "n_a", "n_b", "n_groups")
+      .as[(String, String, Long, Long, Long, Long)].collect()
+    assert(cp.length == 5 * 4 / 2)
+    cp.foreach { case (_, _, ab, a, b, n) =>
+      assert(ab <= math.min(a, b) && math.max(a, b) <= n)
+    }
+    // skew audit: ratio >= 1 (max cannot be below average), keys <= rows
+    val sk = run("q_data_skew_audit")
+      .select("n_rows", "n_keys", "max_rows", "skew_ratio")
+      .as[(Long, Long, Long, Double)].collect()
+    assert(sk.length == 5)
+    sk.foreach { case (r, k, m, ratio) =>
+      assert(k <= r && m >= r / k && ratio >= 1.0 - 1e-4)
+    }
+    // lorenz: shares are monotone per nation and the curve is convex-ish
+    val lz = run("q_lorenz_curve")
+      .select("n_name", "decile", "cust_share", "rev_share")
+      .as[(String, Int, Double, Double)].collect()
+    lz.groupBy(_._1).foreach { case (n, pts) =>
+      val s = pts.sortBy(_._2)
+      s.sliding(2).foreach {
+        case Array(p, q) =>
+          assert(q._3 >= p._3 && q._4 >= p._4, s"$n shares must be monotone")
+        case _ => ()
+      }
+      // Lorenz curve sits below the diagonal (concentration)
+      s.foreach { case (_, _, cs, rs) => assert(rs <= cs + 1e-4, s"$n curve above diagonal") }
+    }
+    // spc: band ordering and flag consistency
+    val spc = run("metrics_spc_control")
+      .select("day_mean", "center", "ucl", "lcl", "out_of_control")
+      .as[(Double, Double, Double, Double, Boolean)].collect()
+    spc.foreach { case (dm, c, u, l, f) =>
+      assert(l <= c && c <= u)
+      // floored columns: only check the unambiguous cases
+      if (dm > u + 1e-4 || dm < l - 1e-4) assert(f)
+      if (dm < u - 1e-4 && dm > l + 1e-4) assert(!f)
+    }
+    // counter repair: repaired series is monotone per series
+    val cr = run("metrics_counter_repair")
+      .select("event_type", "sec", "event_id", "repaired_c")
+      .as[(String, Long, Long, Long)].collect()
+    cr.groupBy(_._1).foreach { case (t, rows) =>
+      val s = rows.sortBy(r => (r._2, r._3))
+      s.sliding(2).foreach {
+        case Array(a, b) => assert(b._4 >= a._4, s"$t repaired series must be monotone")
+        case _ => ()
+      }
+    }
+  }
+
+  test("q_bootstrap_ci: replicate panel is complete and the CI ranks bracket the middle") {
+    import spark.implicits._
+    val rows = run("q_bootstrap_ci")
+      .select("b", "n_eff", "mean_cents", "rank", "is_ci_lo", "is_ci_hi")
+      .as[(Int, Long, Double, Int, Boolean, Boolean)].collect()
+    val B = graft.operators.Stats.BootB
+    assert(rows.length == B)
+    assert(rows.map(_._4).sorted.toSeq == (1 to B), "ranks are not a permutation")
+    assert(rows.count(_._5) == 1 && rows.count(_._6) == 1)
+    val byRank = rows.sortBy(_._4)
+    assert(byRank.sliding(2).forall(p => p(0)._3 <= p(1)._3), "means not ascending in rank")
+    val lo = rows.find(_._5).get._3; val hi = rows.find(_._6).get._3
+    assert(lo <= hi)
+    // Poisson(1) replicate sizes concentrate around n
+    val n = graft.sources.Tables.orders(spark, sf).count()
+    rows.foreach { case (b, nEff, _, _, _, _) =>
+      assert(math.abs(nEff - n) < 6 * math.sqrt(n.toDouble) + 10, s"replicate $b size $nEff vs $n")
+    }
+  }
+
+  test("q_welch_ttest: every type pair once; t sign follows the mean gap; df in Welch bounds") {
+    import spark.implicits._
+    val rows = run("q_welch_ttest")
+      .select("type_a", "type_b", "n_a", "n_b", "mean_a", "mean_b", "t_welch", "df_welch")
+      .as[(String, String, Long, Long, Double, Double, Double, Double)].collect()
+    val nTypes = graft.sources.Tables.events(spark, sf)
+      .select("event_type").distinct().count().toInt
+    assert(rows.length == nTypes * (nTypes - 1) / 2)
+    rows.foreach { case (a, b, na, nb, ma, mb, t, df) =>
+      assert(a < b)
+      if (math.abs(ma - mb) > 1e-3)
+        assert(math.signum(t) == math.signum(ma - mb), s"($a,$b) t sign")
+      assert(df >= math.min(na, nb) - 1 - 1e-9, s"($a,$b) df below min(n)-1")
+      assert(df <= na + nb - 2 + 1e-9, s"($a,$b) df above pooled")
+    }
+  }
+
+  test("q_abc_classification: classes partition parts and shares stack to one") {
+    import spark.implicits._
+    val rows = run("q_abc_classification")
+      .select("cls", "n_parts", "class_cents", "revenue_share")
+      .as[(String, Long, Long, Double)].collect()
+    assert(rows.map(_._1).sorted.toSeq == Seq("A", "B", "C"))
+    val nParts = graft.sources.Tables.lineitem(spark, sf)
+      .select("l_partkey").distinct().count()
+    assert(rows.map(_._2).sum == nParts, "classes don't partition the parts")
+    val shares = rows.map(r => r._1 -> r._4).toMap
+    assert(shares("A") <= 0.80 + 1e-9, "class A exceeds its cumulative budget")
+    assert(math.abs(rows.map(_._4).sum - 1.0) < 2e-3, "shares don't stack to ~1")
+    // Pareto shape: A holds most revenue with fewest big parts per dollar
+    val byCls = rows.map(r => r._1 -> r).toMap
+    assert(byCls("A")._3 > byCls("C")._3, "A class should dominate revenue")
   }
 }

@@ -929,6 +929,84 @@ class StreamingSpec extends SparkTestBase {
     df.unpersist()
   }
 
+  test("ivm_minmax_delta: refcounted extrema match a direct windowless recompute") {
+    import spark.implicits._
+    val got = run("ivm_minmax_delta")
+      .select("day", "min_cents", "max_cents", "n_support")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    // direct recompute of the net multiset per day
+    val want = graft.sources.Tables.events(spark, sf)
+      .select(expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 as bigint)").as("day"),
+        floor(col("value") * 100).cast("long").as("cents"),
+        when(col("event_type") === "error", -1L).otherwise(1L).as("op"))
+      .groupBy("day", "cents").agg(sum("op").as("rc"))
+      .filter(col("rc") > 0)
+      .groupBy("day").agg(min("cents").as("mn"), max("cents").as("mx"),
+        count(lit(1)).as("ns"))
+      .as[(Long, Long, Long, Long)].collect().toSet
+    assert(got == want)
+    got.foreach { case (_, mn, mx, ns) => assert(mn <= mx && ns > 0) }
+  }
+
+  test("ivm_topn_delta: podium matches a direct recompute of the live multiset") {
+    import spark.implicits._
+    val got = run("ivm_topn_delta")
+      .select("day", "rank", "bucket", "rc")
+      .as[(Long, Int, Long, Long)].collect()
+    // rank keys assume the bucket domain fits below 2^24
+    assert(got.forall(r => r._3 >= 0 && r._3 < (1L << 24)))
+    val live = graft.sources.Tables.events(spark, sf)
+      .select(expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 as bigint)").as("day"),
+        floor(col("value")).cast("long").as("bucket"),
+        when(col("event_type") === "error", -1L).otherwise(1L).as("op"))
+      .groupBy("day", "bucket").agg(sum("op").as("rc"))
+      .filter(col("rc") > 0)
+      .as[(Long, Long, Long)].collect()
+    val want = live.groupBy(_._1).toSeq.flatMap { case (day, rows) =>
+      rows.sortBy(r => (-r._3, r._2)).take(3).zipWithIndex
+        .map { case ((_, b, rc), i) => (day, i + 1, b, rc) }
+    }.toSet
+    assert(got.map(r => (r._1, r._2, r._3, r._4)).toSet == want)
+  }
+
+  test("refcount top-N maintenance equals the batch view, any chunking") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // same refcount state as the min/max view, keyed on the dollar bucket
+    val rows = graft.sources.Tables.events(spark, sf)
+      .select(
+        expr("cast(unix_timestamp(date_trunc('second', ts)) div 86400 as bigint)").as("day"),
+        floor(col("value")).cast("long").as("cents"),
+        when(col("event_type") === "error", -1L).otherwise(1L).as("op"),
+        col("event_id"))
+      .as[(Long, Long, Long, Long)].collect()
+    val snapDir = java.nio.file.Files.createTempDirectory("graft_ivmt").toString
+    val input = MemoryStream[(Long, Long, Long, Long)]
+    val q = input.toDF().toDF("day", "cents", "op", "event_id")
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        EventsStream.ivmMinmaxBatchInto(snapDir, df)
+      }.start()
+    try {
+      val chunks = rows.sortBy(_._4).grouped(math.max(1, rows.length / 3 + 1)).toSeq.reverse
+      chunks.foreach { c => input.addData(c.toSeq); q.processAllAvailable() }
+      // read the maintained refcounts back through the top-N rule
+      val snap = spark.read.parquet(s"$snapDir/current")
+        .filter(col("rc") > 0)
+        .select(col("day"), col("cents").as("bucket"), col("rc"))
+        .as[(Long, Long, Long)].collect()
+      val got = snap.groupBy(_._1).toSeq.flatMap { case (day, rs) =>
+        rs.sortBy(r => (-r._3, r._2)).take(3).zipWithIndex
+          .map { case ((_, b, rc), i) => (day, i + 1, b, rc) }
+      }.toSet
+      val want = run("ivm_topn_delta")
+        .select("day", "rank", "bucket", "rc")
+        .as[(Long, Int, Long, Long)].collect()
+        .map(r => (r._1, r._2, r._3, r._4)).toSet
+      assert(got == want, s"streaming=${got.size} batch=${want.size}")
+    } finally q.stop()
+  }
+
   test("stream_ha_dedup: a real MemoryStream run elects exactly the batch twin's replicas") {
     import graft.streaming.EventsStream
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -105,4 +105,65 @@ class TextAnalysisSpec extends SparkTestBase {
       assert(r._4 < r._3, s"k=${r._1} < vocab=${r._2} cannot cover total"))
     df.unpersist()
   }
+
+  test("text_vocab_growth: buckets partition occurrences, growth curve is monotone") {
+    import spark.implicits._
+    val rows = run("text_vocab_growth").orderBy("bucket")
+      .select("bucket", "n_occ", "new_types", "cum_occ", "cum_types")
+      .as[(Long, Long, Long, Long, Long)].collect()
+    assert(rows.nonEmpty && rows.length <= graft.operators.TextAnalysis.VocabGrowthBuckets)
+    // cumulative columns really are the running sums
+    assert(rows.map(_._2).sum == rows.last._4)
+    assert(rows.map(_._3).sum == rows.last._5)
+    rows.sliding(2).foreach { case Array(a, b) =>
+      assert(b._1 > a._1 && b._4 > a._4 && b._5 >= a._5)
+    case _ => ()
+    }
+    // total distinct types equals the corpus-wide distinct bigram count
+    val distinctBigrams = graft.sources.Tables.documents(spark, sf)
+      .select(expr(graft.operators.TextAnalysis.toksExpr).as("toks"))
+      .filter(size(col("toks")) >= 2)
+      .select(explode(expr(
+        "transform(sequence(0, size(toks) - 2), i -> concat(toks[i], ' ', toks[i + 1]))"))
+        .as("b")).distinct().count()
+    assert(rows.last._5 == distinctBigrams)
+    // the (bigram, bucket) pre-aggregation is shared: at execution the
+    // second consumer reuses the exchange instead of re-exploding
+    assert(executedPlan("text_vocab_growth").contains("ReusedExchange"),
+      "occ/firsts must consume one shared exchange")
+  }
+
+  test("text_gopher_rules: failure count consistent, rules match a driver-side replay") {
+    import spark.implicits._
+    val rows = run("text_gopher_rules")
+      .select("doc_id", "n_tokens", "r_len", "r_mwl", "r_alpha", "r_stop", "r_sym",
+        "n_failed", "keep")
+      .as[(Long, Long, Boolean, Boolean, Boolean, Boolean, Boolean, Int, Boolean)]
+      .collect()
+    assert(rows.length == graft.sources.Tables.documents(spark, sf).count())
+    rows.foreach { case (id, _, a, b, c, dd, e, nf, keep) =>
+      val expect = Seq(a, b, c, dd, e).count(!_)
+      assert(nf == expect, s"doc $id n_failed")
+      assert(keep == (nf == 0))
+    }
+    // the word-salad corpus is alphabetic and symbol-free: those rules never fire
+    assert(rows.forall(_._5), "alphabetic rule should pass everywhere")
+    assert(rows.forall(_._7), "symbol rule should pass everywhere")
+    // but the ledger is not vacuous — some docs fail at least one rule
+    assert(rows.exists(!_._9), "expected at least one dropped doc")
+    assert(rows.exists(_._9), "expected at least one kept doc")
+  }
+
+  test("text_char_entropy: classes partition the chars; H within [0, ln 5]") {
+    import spark.implicits._
+    val rows = run("text_char_entropy")
+      .select("n", "c_lower", "c_upper", "c_digit", "c_space", "c_other", "entropy")
+      .as[(Int, Int, Int, Int, Int, Int, Double)].collect()
+    assert(rows.nonEmpty)
+    rows.foreach { case (n, cl, cu, cd, cs, co, h) =>
+      assert(cl + cu + cd + cs + co == n, "class counts don't partition")
+      assert(co >= 0, "negative other-class count")
+      assert(h >= 0.0 && h <= math.log(5.0) + 1e-9, s"entropy $h out of range")
+    }
+  }
 }

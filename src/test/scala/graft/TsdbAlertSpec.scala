@@ -16,7 +16,7 @@ class TsdbAlertSpec extends SparkTestBase {
     // the operator's claim: running-max-over-all == running-max-over-
     // accepted. Recompute per series with an explicitly SEQUENTIAL fold
     // that only advances the head on accepted samples.
-    val got = SparkEntry.queries("tsdb_ooo_ingest")(spark, sf)
+    val got = run("tsdb_ooo_ingest")
       .collect().map(r => r.getString(0) -> (r.getLong(2), r.getLong(3))).toMap
     val raw = graft.sources.Tables.events(spark, sf)
       .select(col("event_type"),
@@ -37,7 +37,7 @@ class TsdbAlertSpec extends SparkTestBase {
 
   test("tsdb_block_plan + retention + head_chunks conserve every sample") {
     val nEvents = graft.sources.Tables.events(spark, sf).count()
-    val plan = SparkEntry.queries("tsdb_block_plan")(spark, sf).collect()
+    val plan = run("tsdb_block_plan").collect()
     assert(plan.map(_.getAs[Long]("total_samples")).sum == nEvents)
     // parents tile the block ids: every child range is disjoint
     val ranges = plan.map(r => (r.getAs[Long]("first_block"), r.getAs[Long]("last_block")))
@@ -45,14 +45,14 @@ class TsdbAlertSpec extends SparkTestBase {
       case Array((_, e1), (s2, _)) => assert(e1 < s2)
       case _ =>
     }
-    val ret = SparkEntry.queries("tsdb_retention")(spark, sf).collect()
+    val ret = run("tsdb_retention").collect()
     assert(ret.map(_.getAs[Long]("n_samples")).sum == nEvents)
     ret.foreach { r =>
       val del = r.getAs[String]("decision") == "delete"
       val blockEnd = (r.getAs[Long]("block_id") + 1) * 7200 - 1
       assert(del == (blockEnd < r.getAs[Long]("boundary_es")))
     }
-    val hc = SparkEntry.queries("tsdb_head_chunks")(spark, sf).collect()
+    val hc = run("tsdb_head_chunks").collect()
     assert(hc.map(_.getAs[Long]("n_samples")).sum == nEvents)
     hc.foreach { r =>
       assert(r.getAs[Long]("max_chunk_fill") <= 120L)
@@ -63,7 +63,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ alert routing
 
   test("alert_group_wait: batch 0 is exactly the group_wait window") {
-    val batches = SparkEntry.queries("alert_group_wait")(spark, sf).collect()
+    val batches = run("alert_group_wait").collect()
     // every alert is in exactly one batch: totals match the alert feed
     val nAlerts = graft.sources.Tables.events(spark, sf)
       .filter(col("value") >= 100).count()
@@ -88,7 +88,7 @@ class TsdbAlertSpec extends SparkTestBase {
       k -> ws.count(w => crits.exists(c =>
         c._3 == w._3 && c._4 == w._4 && c._2 <= w._2 && c._2 >= w._2 - 21600))
     }
-    val got = SparkEntry.queries("alert_inhibition")(spark, sf).collect()
+    val got = run("alert_inhibition").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("n_inhibited")).toMap
     brute.foreach { case (k, n) =>
       assert(got(k) == n.toLong, s"key $k: operator ${got(k)} vs brute-force $n")
@@ -96,7 +96,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("alert_silence_match: regexp silence only ever matches click/view") {
-    val rows = SparkEntry.queries("alert_silence_match")(spark, sf).collect()
+    val rows = run("alert_silence_match").collect()
     rows.foreach { r =>
       val name = r.getString(0)
       assert(r.getAs[Long]("n_silenced") <= r.getAs[Long]("n_alerts"))
@@ -108,7 +108,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("alert_routing_tree: critical stops at A, continue fans out, totals reconcile") {
-    val rows = SparkEntry.queries("alert_routing_tree")(spark, sf).collect()
+    val rows = run("alert_routing_tree").collect()
     val byRecv = rows.groupBy(_.getString(0))
       .map { case (r, g) => r -> g.map(_.getAs[Long]("n_alerts")).sum }
     val a = graft.sources.Tables.events(spark, sf).filter(col("value") >= 100)
@@ -139,7 +139,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ rank statistics
 
   test("q_mann_whitney_u: rank-sum identity R1 + R2 == N(N+1)/2 on the x2 scale") {
-    val r = SparkEntry.queries("q_mann_whitney_u")(spark, sf).collect().head
+    val r = run("q_mann_whitney_u").collect().head
     val (na, nr) = (r.getAs[Long]("n_a"), r.getAs[Long]("n_r"))
     val n = na + nr
     // recompute R1 by brute-force average ranks over the raw rows
@@ -158,7 +158,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("q_kruskal_wallis: H >= 0 and group sizes cover the table") {
-    val rows = SparkEntry.queries("q_kruskal_wallis")(spark, sf).collect()
+    val rows = run("q_kruskal_wallis").collect()
     assert(rows.length == 3)
     val h = rows.map(_.getAs[Double]("h_corr")).distinct
     assert(h.length == 1 && h.head >= 0.0)
@@ -167,7 +167,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("q_bh_fdr: rejections are a contiguous rank prefix obeying the step-up bound") {
-    val rows = SparkEntry.queries("q_bh_fdr")(spark, sf).collect()
+    val rows = run("q_bh_fdr").collect()
       .sortBy(_.getAs[Long]("rank"))
     val m = rows.length
     val rejected = rows.filter(_.getAs[Boolean]("rejected"))
@@ -182,7 +182,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("q_cramers_v: V in [0,1] and dimensions match the contingency") {
-    val r = SparkEntry.queries("q_cramers_v")(spark, sf).collect().head
+    val r = run("q_cramers_v").collect().head
     assert(r.getAs[Long]("r_levels") == 5L && r.getAs[Long]("c_levels") == 3L)
     val v = r.getAs[Double]("cramers_v")
     assert(v >= 0.0 && v <= 1.0)
@@ -191,7 +191,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ scrape policy
 
   test("prom_scrape_limits: a failing scrape keeps nothing") {
-    SparkEntry.queries("prom_scrape_limits")(spark, sf).collect().foreach { r =>
+    run("prom_scrape_limits").collect().foreach { r =>
       if (r.getAs[Long]("up") == 1L)
         assert(r.getAs[Long]("n_kept") == r.getAs[Long]("n_series"))
       else assert(r.getAs[Long]("n_kept") == 0L)
@@ -199,7 +199,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("prom_honor_labels: honoring scraped labels can only collapse cardinality") {
-    val rows = SparkEntry.queries("prom_honor_labels")(spark, sf).collect()
+    val rows = run("prom_honor_labels").collect()
     val byMode = rows.groupBy(_.getString(0))
       .map { case (m, rs) => m -> rs.map(_.getAs[Long]("n_series")).sum }
     assert(byMode("honor_true") <= byMode("honor_false"),
@@ -209,7 +209,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ query sharding
 
   test("prom_query_sharding: shard legs sum exactly to the unsharded answer") {
-    val rows = SparkEntry.queries("prom_query_sharding")(spark, sf).collect()
+    val rows = run("prom_query_sharding").collect()
     val (totals, partials) = rows.partition(_.getAs[Long]("shard") == -1L)
     totals.foreach { t =>
       val legs = partials.filter(_.getString(0) == t.getString(0))
@@ -223,7 +223,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ tombstones
 
   test("tsdb_tombstones: click dies whole-span, conservation holds per block") {
-    val rows = SparkEntry.queries("tsdb_tombstones")(spark, sf).collect()
+    val rows = run("tsdb_tombstones").collect()
     rows.foreach { r =>
       assert(r.getAs[Long]("n_samples") ==
         r.getAs[Long]("n_tombstoned") + r.getAs[Long]("n_remaining"))
@@ -239,7 +239,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ bloom prefilter
 
   test("dedup_bloom_prefilter: no false negatives, positives decompose exactly") {
-    val rows = SparkEntry.queries("dedup_bloom_prefilter")(spark, sf).collect()
+    val rows = run("dedup_bloom_prefilter").collect()
     rows.foreach { r =>
       // a bloom filter can only over-approximate: every exact match is positive
       assert(r.getAs[Long]("n_bloom_pos") >=
@@ -256,7 +256,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ PromQL functions
 
   test("prom_topk_instant: exactly <=2 per (step, job), rank order matches values") {
-    val rows = SparkEntry.queries("prom_topk_instant")(spark, sf).collect()
+    val rows = run("prom_topk_instant").collect()
     rows.groupBy(r => (r.getAs[Long]("step_sec"), r.getString(1))).foreach {
       case (_, g) =>
         assert(g.length <= 2)
@@ -272,7 +272,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("prom_clamp: clamp == clamp_min . clamp_max, inverted bounds yield the empty vector") {
-    SparkEntry.queries("prom_clamp")(spark, sf).collect().foreach { r =>
+    run("prom_clamp").collect().foreach { r =>
       val (v, c, cmin, cmax) = (r.getAs[Long]("cents"), r.getAs[Long]("clamp_cents"),
         r.getAs[Long]("clamp_min_cents"), r.getAs[Long]("clamp_max_cents"))
       assert(c == math.min(math.max(v, 5000L), 20000L))
@@ -284,7 +284,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("prom_label_join: dst overwritten, empty source leaves the bare separator") {
-    val rows = SparkEntry.queries("prom_label_join")(spark, sf).collect()
+    val rows = run("prom_label_join").collect()
     rows.foreach { r =>
       val (job, ieff, za) = (r.getString(0), r.getString(2), r.getString(4))
       assert(za == s"$job-$ieff", "zone must be the joined source labels")
@@ -295,7 +295,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("prom_group_stdvar: group()==1 and stdvar == stddev^2 within the floor grid") {
-    SparkEntry.queries("prom_group_stdvar")(spark, sf).collect().foreach { r =>
+    run("prom_group_stdvar").collect().foreach { r =>
       assert(r.getAs[Long]("group_value") == 1L)
       val (sv, sd) = (r.getAs[Double]("stdvar"), r.getAs[Double]("stddev"))
       assert(sv >= 0 && sd >= 0)
@@ -305,7 +305,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("prom_quantile_aggregator: bracket holds the quantile, interpolation inside it") {
-    SparkEntry.queries("prom_quantile_aggregator")(spark, sf).collect().foreach { r =>
+    run("prom_quantile_aggregator").collect().foreach { r =>
       val (lo, hi, q) = (r.getAs[Long]("lo_cents"), r.getAs[Long]("hi_cents"),
         r.getAs[Double]("quantile_cents"))
       assert(lo <= hi, "sorted bracket")
@@ -316,7 +316,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("model_bradley_terry: points conserve across the tournament, bt averages 1e6") {
-    val rows = SparkEntry.queries("model_bradley_terry")(spark, sf).collect()
+    val rows = run("model_bradley_terry").collect()
     // every game hands out exactly 2 points across its two players
     val totPts = rows.map(_.getAs[Long]("points_x2")).sum
     val totGames = rows.map(_.getAs[Long]("n_games")).sum // each game counted twice
@@ -351,13 +351,13 @@ class TsdbAlertSpec extends SparkTestBase {
       var cum = 0L
       t -> sorted.collectFirst { case (c, rc) if { cum += rc; cum >= rank } => c }.get
     }
-    val got = SparkEntry.queries("ivm_quantile_delta")(spark, sf).collect()
+    val got = run("ivm_quantile_delta").collect()
       .map(r => r.getString(0) -> r.getAs[Long]("median_cents")).toMap
     assert(got == medians, s"operator $got vs chunk-merged recompute $medians")
   }
 
   test("curate_dedup_mix_shift: shares tile 1e6 within floor deficit, shifts sum ~0") {
-    val rows = SparkEntry.queries("curate_dedup_mix_shift")(spark, sf).collect()
+    val rows = run("curate_dedup_mix_shift").collect()
     val m = rows.length
     val before = rows.map(_.getAs[Long]("share_before_x1e6")).sum
     val after = rows.map(_.getAs[Long]("share_after_x1e6")).sum
@@ -373,7 +373,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ training prep
 
   test("ann_binary_quant_recall: k rows per query, overlap bounded, hamming in [0,64]") {
-    val rows = SparkEntry.queries("ann_binary_quant_recall")(spark, sf).collect()
+    val rows = run("ann_binary_quant_recall").collect()
     assert(rows.length == graft.operators.BinaryQuant.NumQueries)
     rows.foreach { r =>
       assert(r.getAs[Long]("k") == graft.operators.BinaryQuant.K.toLong)
@@ -387,7 +387,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("mix_doremi_step: weights monotone in loss, floor deficit bounded") {
-    val rows = SparkEntry.queries("mix_doremi_step")(spark, sf).collect()
+    val rows = run("mix_doremi_step").collect()
     val m = rows.length
     // exp is monotone: a higher-loss domain can never get a lower weight
     rows.sortBy(_.getAs[Long]("loss")).sliding(2).foreach {
@@ -403,7 +403,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("pack_fim_transform: the PSM split loses nothing") {
-    val rows = SparkEntry.queries("pack_fim_transform")(spark, sf).collect()
+    val rows = run("pack_fim_transform").collect()
     rows.foreach { r =>
       assert(r.getAs[Long]("prefix_tokens") + r.getAs[Long]("middle_tokens")
         + r.getAs[Long]("suffix_tokens") == r.getAs[Long]("fim_tokens"),
@@ -419,7 +419,7 @@ class TsdbAlertSpec extends SparkTestBase {
   // ------------------------------------------------ line dedup
 
   test("text_line_dedup: keep-first removes exactly (occurrences - distinct) segments") {
-    val rows = SparkEntry.queries("text_line_dedup")(spark, sf).collect()
+    val rows = run("text_line_dedup").collect()
     val totalSegs = rows.map(_.getAs[Long]("n_segments")).sum
     val totalRemoved = rows.map(_.getAs[Long]("n_removed")).sum
     val distinctSegs = graft.sources.Tables.documents(spark, sf)
@@ -435,7 +435,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("dq_schema_contract: both planted violations surface, everything else is ok") {
-    val v = SparkEntry.queries("dq_schema_contract")(spark, sf).collect()
+    val v = run("dq_schema_contract").collect()
       .map(r => r.getString(0) -> r.getAs[String]("verdict")).toMap
     assert(v("value") == "type_mismatch")
     assert(v("region") == "missing_optional")
@@ -445,7 +445,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("prom_queue_shards: a series never splits across shards, batches drain full-then-tail") {
-    val rows = SparkEntry.queries("prom_queue_shards")(spark, sf).collect()
+    val rows = run("prom_queue_shards").collect()
     val nEvents = graft.sources.Tables.events(spark, sf).count()
     assert(rows.map(_.getAs[Long]("n_samples")).sum == nEvents)
     rows.groupBy(_.getAs[Long]("shard")).foreach { case (_, batches) =>
@@ -473,7 +473,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("tsdb_postings_index: intersections tile the series universe") {
-    val rows = SparkEntry.queries("tsdb_postings_index")(spark, sf).collect()
+    val rows = run("tsdb_postings_index").collect()
     rows.foreach { r =>
       assert(r.getAs[Long]("n_intersect") <= r.getAs[Long]("n_job"))
       assert(r.getAs[Long]("n_intersect") <= r.getAs[Long]("n_instance"))
@@ -487,7 +487,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("model_calibration: ECE is the exact event-weighted gap mean, bins decompose") {
-    val rows = SparkEntry.queries("model_calibration")(spark, sf).collect()
+    val rows = run("model_calibration").collect()
     val n = rows.map(_.getAs[Long]("n_events")).sum
     val wgap = rows.map(r => r.getAs[Long]("n_events") * r.getAs[Long]("gap_x1e6")).sum
     val ece = rows.map(_.getAs[Long]("ece_x1e6")).distinct
@@ -694,7 +694,7 @@ class TsdbAlertSpec extends SparkTestBase {
 
   test("prom_subquery_max_rate: outer max equals the trailing-12-step max of inner counts") {
     import org.apache.spark.sql.functions._
-    val out = SparkEntry.queries("prom_subquery_max_rate")(spark, sf)
+    val out = run("prom_subquery_max_rate")
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getAs[Long]("n_max")).toMap
     // independent recompute of the inner step counts
     val step = graft.operators.PromQl.SubStepSec
@@ -719,7 +719,7 @@ class TsdbAlertSpec extends SparkTestBase {
   }
 
   test("tsdb_dod_timestamps: class histogram tiles the post-header samples; bits reconcile") {
-    val rows = SparkEntry.queries("tsdb_dod_timestamps")(spark, sf).collect()
+    val rows = run("tsdb_dod_timestamps").collect()
     rows.foreach { r =>
       val n = r.getAs[Long]("n_samples")
       val classes = Seq("n_dod0", "n_bits14", "n_bits17", "n_bits20", "n_bits64")
@@ -736,7 +736,7 @@ class TsdbAlertSpec extends SparkTestBase {
 
   test("api/v1 labels + error envelopes parse as JSON with the spec's key order") {
     import org.json4s._
-    val labels = SparkEntry.queries("prom_api_labels_json")(spark, sf)
+    val labels = run("prom_api_labels_json")
       .head().getString(0)
     val lj = jackson.JsonMethods.parse(labels).asInstanceOf[JObject]
     assert(lj.obj.map(_._1) == List("status", "data"))
@@ -744,7 +744,7 @@ class TsdbAlertSpec extends SparkTestBase {
     assert(names == names.sorted, s"label names must be sorted: $names")
     assert(names.contains("__name__") && names.contains("job"))
 
-    val rows = SparkEntry.queries("prom_api_error_json")(spark, sf)
+    val rows = run("prom_api_error_json")
       .orderBy("http_status").collect()
     assert(rows.map(_.getInt(1)).toSeq == Seq(200, 400))
     val err = jackson.JsonMethods.parse(rows(1).getString(2)).asInstanceOf[JObject]
@@ -762,7 +762,7 @@ class TsdbAlertSpec extends SparkTestBase {
   test("api/v1 exemplars + targets bodies parse as JSON with the published shapes") {
     import org.json4s._
     val ex = jackson.JsonMethods.parse(
-      SparkEntry.queries("prom_api_query_exemplars_json")(spark, sf).head().getString(0))
+      run("prom_api_query_exemplars_json").head().getString(0))
     val series = (ex \ "data").asInstanceOf[JArray].arr
     assert(series.nonEmpty)
     series.map(_.asInstanceOf[JObject]).foreach { s0 =>
@@ -773,7 +773,7 @@ class TsdbAlertSpec extends SparkTestBase {
         assert(e.obj.map(_._1) == List("labels", "value", "timestamp")))
     }
     val tg = jackson.JsonMethods.parse(
-      SparkEntry.queries("prom_api_targets_json")(spark, sf).head().getString(0))
+      run("prom_api_targets_json").head().getString(0))
     val active = (tg \ "data" \ "activeTargets").asInstanceOf[JArray].arr
     assert(active.nonEmpty)
     active.map(_.asInstanceOf[JObject]).foreach { t =>
@@ -787,7 +787,7 @@ class TsdbAlertSpec extends SparkTestBase {
 
   test("api/v1 metadata: derived names, reference-pinned events metric, Go key order") {
     import org.json4s._
-    val body = SparkEntry.queries("prom_api_metadata_json")(spark, sf)
+    val body = run("prom_api_metadata_json")
       .head().getString(0)
     val j = jackson.JsonMethods.parse(body).asInstanceOf[JObject]
     assert(j.obj.map(_._1) == List("status", "data"))
@@ -818,7 +818,7 @@ class TsdbAlertSpec extends SparkTestBase {
 
   test("api/v1 buildinfo: Go struct field order, computed revision + buildDate") {
     import org.json4s._
-    val body = SparkEntry.queries("prom_api_buildinfo_json")(spark, sf)
+    val body = run("prom_api_buildinfo_json")
       .head().getString(0)
     val j = jackson.JsonMethods.parse(body).asInstanceOf[JObject]
     assert(j.obj.map(_._1) == List("status", "data"))
@@ -848,7 +848,7 @@ class TsdbAlertSpec extends SparkTestBase {
       .head().getString(0)
     assert(empty == "{\"status\":\"success\",\"data\":[]}")
     // and the real entries still produce non-empty sorted arrays
-    val body = SparkEntry.queries("prom_api_labels_json")(spark, sf).head().getString(0)
+    val body = run("prom_api_labels_json").head().getString(0)
     assert(body.contains("\"data\":[\""))
   }
 }
