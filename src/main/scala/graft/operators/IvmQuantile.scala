@@ -27,8 +27,10 @@ object IvmQuantile {
 
   type Q = (SparkSession, String) => DataFrame
 
-  def quantileDelta: Q = (s, d) => {
-    val rc = Tables.events(s, d)
+  /** The maintained state both reads derive from: the per-(series,
+    * cents) signed refcount histogram, positive cells only. */
+  private def liveCells(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
       .select(col("event_type"),
         floor(col("value") * 100).cast("long").as("cents"),
         when(get_json_object(col("props"), "$.k").cast("int") % 10 === 0, lit(-1L))
@@ -36,6 +38,9 @@ object IvmQuantile {
       .groupBy(col("event_type"), col("cents"))
       .agg(sum(col("op")).as("rc"))
       .filter(col("rc") > 0)
+
+  def quantileDelta: Q = (s, d) => {
+    val rc = liveCells(s, d)
     val wCum = Window.partitionBy(col("event_type")).orderBy(col("cents"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy(col("event_type"))
@@ -84,14 +89,7 @@ object IvmQuantile {
     * histogram-state design); the ranking window partitions by series
     * over the value-domain-bounded cell table. */
   def topkDelta: Q = (s, d) => {
-    val rc = Tables.events(s, d)
-      .select(col("event_type"),
-        floor(col("value") * 100).cast("long").as("cents"),
-        when(get_json_object(col("props"), "$.k").cast("int") % 10 === 0, lit(-1L))
-          .otherwise(lit(1L)).as("op"))
-      .groupBy(col("event_type"), col("cents"))
-      .agg(sum(col("op")).as("rc"))
-      .filter(col("rc") > 0)
+    val rc = liveCells(s, d)
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("cents").desc)
     rc.withColumn("rank", row_number().over(w).cast("long"))

@@ -318,6 +318,16 @@ object Models {
 
   // ------------------------------------------------------- ROC AUC
 
+  /** Per cents score, the purchase (`p`) and non-purchase (`ng`)
+    * counts: the value-domain histogram the AUC and the PR ledger read. */
+  private def centsHist(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d)
+      .select(floor(col("value") * 100).cast("long").as("cents"),
+        (col("event_type") === "purchase").as("pos"))
+      .groupBy(col("cents"))
+      .agg(count(when(col("pos"), 1)).as("p"),
+        count(when(!col("pos"), 1)).as("ng"))
+
   /** ROC AUC of "value predicts purchase" — the Mann–Whitney identity
     * AUC = (U + ties/2)/(P·N) evaluated EXACTLY on the cents
     * value-domain histogram (score = the event's cents value, positive
@@ -332,12 +342,7 @@ object Models {
     * whole curve exact with zero sorting of corpus rows. */
   def aucRoc: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
-    val h = Tables.events(s, d)
-      .select(floor(col("value") * 100).cast("long").as("cents"),
-        (col("event_type") === "purchase").as("pos"))
-      .groupBy(col("cents"))
-      .agg(count(when(col("pos"), 1)).as("p"),
-        count(when(!col("pos"), 1)).as("ng"))
+    val h = centsHist(s, d)
     val w = Window.orderBy(col("cents")).rowsBetween(Window.unboundedPreceding, -1)
     h.withColumn("neg_lt", coalesce(sum(col("ng")).over(w), lit(0L)))
       .agg(sum(col("p")).as("n_pos"), sum(col("ng")).as("n_neg"),
@@ -381,12 +386,7 @@ object Models {
     * integer grid. The 9-row threshold spine joins the ≤|distinct
     * cents| histogram — analysis-plane at any event volume. */
   def precisionRecall: Q = (s, d) => {
-    val h = Tables.events(s, d)
-      .select(floor(col("value") * 100).cast("long").as("cents"),
-        (col("event_type") === "purchase").as("pos"))
-      .groupBy(col("cents"))
-      .agg(count(when(col("pos"), 1)).as("p"),
-        count(when(!col("pos"), 1)).as("ng"))
+    val h = centsHist(s, d)
     val thr = Tables.events(s, d).sparkSession
       .range(0, PrThresholds.size.toLong).toDF("i")
       .select(element_at(

@@ -118,6 +118,15 @@ object RankStats {
 
   // ------------------------------------------------ Kruskal–Wallis H
 
+  /** The quantity histogram pivoted on the three return flags: one row
+    * per qty with its A/N/R counts (`cnt_a`, `cnt_n`, `cnt_r`). */
+  private def flagCounts(s: SparkSession, d: String): DataFrame =
+    qtyHist(s, d)
+      .groupBy(col("qty"))
+      .agg(sum(when(col("flag") === "A", col("cnt")).otherwise(0L)).as("cnt_a"),
+        sum(when(col("flag") === "N", col("cnt")).otherwise(0L)).as("cnt_n"),
+        sum(when(col("flag") === "R", col("cnt")).otherwise(0L)).as("cnt_r"))
+
   /** Kruskal–Wallis across all three return flags: per-group rank sums
     * on the ×2 scale; H = 3/(N(N+1))·Σ Rⱼ²ₓ₂/nⱼ − 3(N+1) with the
     * three group terms added in fixed A+N+R order (one explicit
@@ -125,11 +134,7 @@ object RankStats {
     * by C = 1 − Στ/(N³−N). Emits the per-group rank sums plus the
     * shared H on each row. */
   def kruskalWallis: Q = (s, d) => {
-    val byQty = qtyHist(s, d)
-      .groupBy(col("qty"))
-      .agg(sum(when(col("flag") === "A", col("cnt")).otherwise(0L)).as("cnt_a"),
-        sum(when(col("flag") === "N", col("cnt")).otherwise(0L)).as("cnt_n"),
-        sum(when(col("flag") === "R", col("cnt")).otherwise(0L)).as("cnt_r"))
+    val byQty = flagCounts(s, d)
       .withColumn("cnt", col("cnt_a") + col("cnt_n") + col("cnt_r"))
     val w = Window.orderBy(col("qty")).rowsBetween(Window.unboundedPreceding, -1)
     val ranked = byQty
@@ -644,11 +649,7 @@ object RankStats {
     * double sequence with the three group terms added in explicit
     * A+N+R order (the kruskalWallis discipline), floored at 1e-4. */
   def levene: Q = (s, d) => {
-    val byQty = qtyHist(s, d)
-      .groupBy(col("qty"))
-      .agg(sum(when(col("flag") === "A", col("cnt")).otherwise(0L)).as("cnt_a"),
-        sum(when(col("flag") === "N", col("cnt")).otherwise(0L)).as("cnt_n"),
-        sum(when(col("flag") === "R", col("cnt")).otherwise(0L)).as("cnt_r"))
+    val byQty = flagCounts(s, d)
     val w = Window.orderBy(col("qty")).rowsBetween(Window.unboundedPreceding, -1)
     // medians via a self-contained cumulative pass: for each group the
     // lower median is the first qty whose cumulative count reaches

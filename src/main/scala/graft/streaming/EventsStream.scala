@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -343,10 +343,6 @@ object EventsStream {
       .toDF()
   }
 
-  /** Event-with-watermark row for the streaming path. */
-  case class EventT(user_id: Long, event_id: Long, tsSec: Long, value: Double,
-      eventTime: java.sql.Timestamp)
-
   /** Per-user streaming state: next session index to assign + the
     * events of sessions not yet finalized by the watermark. */
   case class SessState(nextIdx: Long, open: List[Event])
@@ -383,39 +379,51 @@ object EventsStream {
     * Processing-time timeouts would instead busy-loop empty
     * micro-batches and grow state with stream lifetime. */
   def sessionizeStream(events: Dataset[Event]): Dataset[Session] = {
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .withColumn("eventTime", timestamp_seconds(col("tsSec")))
-      .withWatermark("eventTime", s"$GapSeconds seconds")
-      .as[EventT]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[EventT], state: GroupState[SessState]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            val groups = splitAtGaps(st.open.sortBy(e => (e.tsSec, e.event_id)))
-            toSessions(uid, st.nextIdx, groups).iterator
-          } else {
-            val st = state.getOption.getOrElse(SessState(0L, Nil))
-            val all = (st.open ++ batch.map(e =>
-                Event(e.user_id, e.event_id, e.tsSec, e.value)).toList)
-              .sortBy(e => (e.tsSec, e.event_id))
-            val wmSec = state.getCurrentWatermarkMs() / 1000
-            val groups = splitAtGaps(all)
-            // watermark-final prefix: nothing can arrive that extends it
-            val (closed, open) = groups.span(g => g.last.tsSec + GapSeconds <= wmSec)
-            val out = toSessions(uid, st.nextIdx, closed)
-            state.update(SessState(st.nextIdx + closed.size, open.flatten))
-            val lastEnd = all.last.tsSec
-            state.setTimeoutTimestamp(
-              math.max((lastEnd + GapSeconds) * 1000L, state.getCurrentWatermarkMs() + 1000L))
-            out.iterator
-          }
-      }
+    import events.sparkSession.implicits._
+    eventTimeFold(events, s"$GapSeconds seconds", SessState(0L, Nil))(_.user_id) {
+      (uid, st, rows, wmSec) =>
+        val all = (st.open ++ rows).sortBy(e => (e.tsSec, e.event_id))
+        val groups = splitAtGaps(all)
+        // a timer wake-up: every open session is final
+        if (rows.isEmpty) (toSessions(uid, st.nextIdx, groups), None, None)
+        else {
+          // watermark-final prefix: nothing can arrive that extends it
+          val (closed, open) = groups.span(g => g.last.tsSec + GapSeconds <= wmSec)
+          (toSessions(uid, st.nextIdx, closed),
+            Some(SessState(st.nextIdx + closed.size, open.flatten)),
+            Some(all.last.tsSec + GapSeconds))
+        }
+    }
   }
+
+  /** The event-time fold every stateful stream path runs: stamp `tsSec`
+    * as `eventTime`, watermark it by `delay`, group by `key`, and fold
+    * each key through `step` in Append mode under event-time timers.
+    * `step` gets the key, the carried state (`init` for a new key), the
+    * batch's rows and the watermark second; it returns the rows to emit,
+    * the state to keep (None drops it) and the second to wake at, armed
+    * no earlier than one second past the watermark. A timer wake-up is
+    * the only call with no rows. `.as[T]` keeps `eventTime` and its
+    * watermark in the plan. */
+  private def eventTimeFold[T: Encoder, K: Encoder, S: Encoder, O: Encoder](
+      in: Dataset[T], delay: String, init: S)(key: T => K)(
+      step: (K, S, List[T], Long) => (Seq[O], Option[S], Option[Long])): Dataset[O] =
+    in.withColumn("eventTime", timestamp_seconds(col("tsSec")))
+      .withWatermark("eventTime", delay)
+      .as[T]
+      .groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, rows: Iterator[T], state: GroupState[S]) =>
+          val wmMs = state.getCurrentWatermarkMs()
+          val (out, next, wake) = step(k, state.getOption.getOrElse(init), rows.toList, wmMs / 1000)
+          next match {
+            case None => state.remove()
+            case Some(st) =>
+              state.update(st)
+              wake.foreach(w => state.setTimeoutTimestamp(math.max(w * 1000L, wmMs + 1000L)))
+          }
+          out.iterator
+      }
 
   /** Batch twin of streaming exact dedup: hourly unique-event counts
     * (duplicates collapsed on event_id before the windowed count). */
@@ -453,17 +461,24 @@ object EventsStream {
     * parity). The join is equi on user_id with the time range as a
     * residual — one shuffle by user at any scale. */
   def intervalJoinBatch: Q = (s, d) => {
-    val e = Tables.events(s, d)
-      .withColumn("ts", date_trunc("second", col("ts")))
-    val p = e.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-    val c = e.filter(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("c_ts"))
+    val (p, c) = purchasesAndClicks(s, d, col("user_id"))
     p.join(c, Seq("user_id"))
       .filter(col("c_ts") > col("p_ts") - expr("INTERVAL 30 MINUTES") &&
         col("c_ts") <= col("p_ts"))
       .groupBy(col("purchase_id"), col("user_id"))
       .agg(count(lit(1)).as("n_clicks"))
+  }
+
+  /** The purchase side (purchase_id, user_id, p_ts) and click side
+    * (`clickUser`, c_ts) of both interval-join twins, timestamps
+    * truncated to seconds. */
+  private def purchasesAndClicks(s: SparkSession, d: String,
+      clickUser: Column): (DataFrame, DataFrame) = {
+    val e = Tables.events(s, d)
+      .withColumn("ts", date_trunc("second", col("ts")))
+    (e.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts")),
+      e.filter(col("event_type") === "click").select(clickUser, col("ts").as("c_ts")))
   }
 
   val intervalJoinSql: String =
@@ -481,13 +496,17 @@ object EventsStream {
     * drops a buffered row once the watermark proves no future match).
     * Emits raw (purchase, click) matches — aggregation is the batch
     * twin's job; parity asserted in StreamingSpec. */
-  def intervalJoinStream(purchases: DataFrame, clicks: DataFrame): DataFrame = {
-    val p = purchases.withWatermark("p_ts", "1 hour")
-    val c = clicks.withWatermark("c_ts", "1 hour")
-    p.join(c, expr(
-      """p_user = c_user AND
-         c_ts > p_ts - INTERVAL 30 MINUTES AND c_ts <= p_ts"""))
-  }
+  def intervalJoinStream(purchases: DataFrame, clicks: DataFrame): DataFrame =
+    clickWindowJoin(purchases, clicks, "inner")
+
+  /** Both interval-join streams: each side watermarked by 1 hour, clicks
+    * in the 30 minutes up to the purchase, joined as `joinType`. */
+  private def clickWindowJoin(purchases: DataFrame, clicks: DataFrame,
+      joinType: String): DataFrame =
+    purchases.withWatermark("p_ts", "1 hour")
+      .join(clicks.withWatermark("c_ts", "1 hour"), expr(
+        """p_user = c_user AND
+           c_ts > p_ts - INTERVAL 30 MINUTES AND c_ts <= p_ts"""), joinType)
 
   /** Batch twin of the stream-stream LEFT OUTER interval join: every
     * purchase keeps a row even with ZERO clicks in its window — the
@@ -496,12 +515,7 @@ object EventsStream {
     * `count(c_ts)` (non-null side) makes the zero explicit. Same
     * single user-keyed shuffle; the outer row adds no state. */
   def outerIntervalJoinBatch: Q = (s, d) => {
-    val e = Tables.events(s, d)
-      .withColumn("ts", date_trunc("second", col("ts")))
-    val p = e.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
-    val c = e.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
+    val (p, c) = purchasesAndClicks(s, d, col("user_id").as("c_user"))
     p.join(c, col("user_id") === col("c_user") &&
         col("c_ts") > col("p_ts") - expr("INTERVAL 30 MINUTES") &&
         col("c_ts") <= col("p_ts"), "left")
@@ -524,13 +538,8 @@ object EventsStream {
     * can still arrive, then emits it with nulls. The range condition
     * bounds both sides' state exactly as in the inner variant; the
     * null row costs nothing extra. Parity in StreamingSpec. */
-  def outerIntervalJoinStream(purchases: DataFrame, clicks: DataFrame): DataFrame = {
-    val p = purchases.withWatermark("p_ts", "1 hour")
-    val c = clicks.withWatermark("c_ts", "1 hour")
-    p.join(c, expr(
-      """p_user = c_user AND
-         c_ts > p_ts - INTERVAL 30 MINUTES AND c_ts <= p_ts"""), "leftOuter")
-  }
+  def outerIntervalJoinStream(purchases: DataFrame, clicks: DataFrame): DataFrame =
+    clickWindowJoin(purchases, clicks, "leftOuter")
 
   /** Batch twin of the streaming scrape→remote-write loop: the
     * reference scrapes every database on a timer and pushes long-format
@@ -603,8 +612,6 @@ object EventsStream {
        FROM s GROUP BY 1, 2 ORDER BY event_type, window_start"""
 
   case class CSample(event_type: String, event_id: Long, tsSec: Long, value: Double)
-  case class CSampleT(event_type: String, event_id: Long, tsSec: Long, value: Double,
-      eventTime: java.sql.Timestamp)
   /** carry = last sample value of the finalized prefix (the chain
     * continues across hour boundaries); buf = samples in hours the
     * watermark hasn't closed yet. */
@@ -639,44 +646,26 @@ object EventsStream {
     * bounded by rate × (1 hour + watermark slack) — never the series
     * history. */
   def counterRateStream(samples: Dataset[CSample]): Dataset[HourIncrease] = {
-    val s = samples.sparkSession
-    import s.implicits._
-    samples
-      .withColumn("eventTime", timestamp_seconds(col("tsSec")))
-      .withWatermark("eventTime", "1 hour")
-      .as[CSampleT]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[RateState, HourIncrease](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, batch: Iterator[CSampleT], state: GroupState[RateState]) => {
-          // data batches and timeout wakeups run the SAME logic: close
-          // every hour the watermark has passed, keep the rest. A
-          // timeout must NOT flush open hours — it fires on empty
-          // micro-batches long before the hour is final.
-          val st = state.getOption.getOrElse(RateState(None, Nil))
-          val all = (st.buf ++ batch.map(e =>
-              CSample(e.event_type, e.event_id, e.tsSec, e.value)).toList)
-            .sortBy(c => (c.tsSec, c.event_id))
-          val wmSec = state.getCurrentWatermarkMs() / 1000
-          val boundary = wmSec / 3600 * 3600 // hours before this are final
-          val (closed, open) = all.partition(_.tsSec < boundary)
-          val out = chainIncreases(st.carry, closed)
-          val carry = closed.lastOption.map(_.value).orElse(st.carry)
-          // the carry must OUTLIVE the buffer: dropping state when the
-          // buffer drains would restart the chain (a phantom inc=0) on
-          // the series' next sample. A counter series keeps exactly one
-          // double of state for its lifetime — the same contract as a
-          // Prometheus TSDB head.
-          state.update(RateState(carry, open))
-          if (open.nonEmpty) {
-            // wake when the watermark passes the last open hour's end
-            state.setTimeoutTimestamp(
-              math.max((open.last.tsSec / 3600 * 3600 + 3600) * 1000L,
-                state.getCurrentWatermarkMs() + 1000L))
-          }
-          out.iterator
-        }
-      }
+    import samples.sparkSession.implicits._
+    eventTimeFold(samples, "1 hour", RateState(None, Nil))(_.event_type) {
+      (_, st, rows, wmSec) =>
+        // data batches and timeout wakeups run the SAME logic: close
+        // every hour the watermark has passed, keep the rest. A
+        // timeout must NOT flush open hours — it fires on empty
+        // micro-batches long before the hour is final.
+        val all = (st.buf ++ rows).sortBy(c => (c.tsSec, c.event_id))
+        val boundary = wmSec / 3600 * 3600 // hours before this are final
+        val (closed, open) = all.partition(_.tsSec < boundary)
+        // the carry must OUTLIVE the buffer: dropping state when the
+        // buffer drains would restart the chain (a phantom inc=0) on
+        // the series' next sample. A counter series keeps exactly one
+        // double of state for its lifetime — the same contract as a
+        // Prometheus TSDB head.
+        (chainIncreases(st.carry, closed),
+          Some(RateState(closed.lastOption.map(_.value).orElse(st.carry), open)),
+          // wake when the watermark passes the last open hour's end
+          open.lastOption.map(_.tsSec / 3600 * 3600 + 3600))
+    }
   }
 
   /** Batch twin of the foreachBatch incremental upsert: the
@@ -709,24 +698,15 @@ object EventsStream {
          FROM events) t
        WHERE rn = 1 ORDER BY user_id, event_type"""
 
-  /** One micro-batch of the incremental upsert, merged into a KEYED
-    * TABLE on storage — the MERGE INTO shape a lakehouse sink runs:
-    * pre-aggregate the batch to its keyed maxima (the only rows that
-    * can change the snapshot), union with the current snapshot, take
-    * the per-key greatest-of-struct, and atomically swap the snapshot
-    * directory. Fully distributed — no `.collect()`, no driver-side
-    * key map: at 100 TB with billions of keys the merge is one
-    * co-partitioned aggregation whose input is |snapshot| + |batch
-    * keys|, and the only driver work is two directory renames. (A
-    * transactional table format would express the same plan as
-    * MERGE INTO with file-level pruning; plain parquet + rename-swap
-    * is the dependency-free equivalent.) */
-  /** Current contents of a snapshot store, if one has been published. */
+  /** Current contents of a snapshot store, if one has been published:
+    * `current`, or `retired` when a crash fell between
+    * `publishSnapshot`'s two renames — the last published snapshot then
+    * sits there, and the replayed batch re-merges into it. */
   private def currentSnapshot(spark: SparkSession, snapshotDir: String): Option[DataFrame] = {
     import org.apache.hadoop.fs.Path
-    val cur = new Path(snapshotDir, "current")
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(cur)) Some(spark.read.parquet(cur.toString)) else None
+    val fs = new Path(snapshotDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("current", "retired").map(new Path(snapshotDir, _)).find(fs.exists)
+      .map(p => spark.read.parquet(p.toString))
   }
 
   /** Write the merged snapshot BESIDE the current one, then swap —
@@ -747,29 +727,45 @@ object EventsStream {
     fs.delete(old, true)
   }
 
-  def upsertBatchInto(snapshotDir: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val keyed = batch
-      .groupBy(col("user_id"), col("event_type"))
+  /** One micro-batch into a snapshot store: the published snapshot (if
+    * any) unions with the batch's partial summary `delta`, `merge` folds
+    * the union back into one summary, and the result is published. Every
+    * store here is a mergeable summary, so the outcome is independent of
+    * how the stream was chunked. */
+  private def mergeInto(snapshotDir: String, delta: DataFrame)(
+      merge: DataFrame => DataFrame): Unit =
+    publishSnapshot(snapshotDir, merge(currentSnapshot(delta.sparkSession, snapshotDir)
+      .map(_.unionByName(delta)).getOrElse(delta)))
+
+  /** One micro-batch of the incremental upsert, merged into a KEYED
+    * TABLE on storage — the MERGE INTO shape a lakehouse sink runs:
+    * pre-aggregate the batch to its keyed maxima (the only rows that
+    * can change the snapshot), union with the current snapshot, take
+    * the per-key greatest-of-struct, and atomically swap the snapshot
+    * directory. Fully distributed — no `.collect()`, no driver-side
+    * key map: at 100 TB with billions of keys the merge is one
+    * co-partitioned aggregation whose input is |snapshot| + |batch
+    * keys|, and the only driver work is two directory renames. (A
+    * transactional table format would express the same plan as
+    * MERGE INTO with file-level pruning; plain parquet + rename-swap
+    * is the dependency-free equivalent.) */
+  def upsertBatchInto(snapshotDir: String, batch: DataFrame): Unit =
+    mergeInto(snapshotDir, latestPerKey(batch))(latestPerKey)
+
+  /** Each (user, event_type)'s greatest (tsSec, event_id, value): the
+    * batch's keyed maxima and the store's merge alike. */
+  private def latestPerKey(rows: DataFrame): DataFrame =
+    rows.groupBy(col("user_id"), col("event_type"))
       .agg(max(struct(col("tsSec"), col("event_id"), col("value"))).as("m"))
-    val existing = currentSnapshot(spark, snapshotDir)
-      .map(_.select(col("user_id"), col("event_type"),
-        struct(col("tsSec"), col("event_id"), col("value")).as("m")))
-      .getOrElse(keyed.limit(0))
-    val merged = existing.unionByName(keyed)
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(max(col("m")).as("m"))
       .select(col("user_id"), col("event_type"),
         col("m").getField("tsSec").as("tsSec"),
         col("m").getField("event_id").as("event_id"),
         col("m").getField("value").as("value"))
-    publishSnapshot(snapshotDir, merged)
-  }
 
   /** Read-back of the upsert target: the latest-state snapshot in the
     * batch twin's output shape. */
   def upsertSnapshotRead(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/current")
+    currentSnapshot(spark, snapshotDir).get
       .select(col("user_id"), col("event_type"),
         col("tsSec").as("last_ts_sec"), col("value").as("last_value"))
 
@@ -815,22 +811,17 @@ object EventsStream {
     * measured in KB regardless of how many events streamed through;
     * the distinct-count state that NEVER grows with cardinality. */
   def sketchBatchInto(snapshotDir: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
     val k = graft.operators.Sketch.K
-    val batchSk = batch.groupBy(col("day")).agg(expr(s"graft_theta(h, $k)").as("sk"))
-    val merged = currentSnapshot(spark, snapshotDir)
-      .map(_.unionByName(batchSk)).getOrElse(batchSk)
-      .select(col("day"), explode(col("sk")).as("h"))
-      .groupBy(col("day"))
-      .agg(expr(s"graft_theta(h, $k)").as("sk"))
-    publishSnapshot(snapshotDir, merged)
+    def sketch(rows: DataFrame) =
+      rows.groupBy(col("day")).agg(expr(s"graft_theta(h, $k)").as("sk"))
+    mergeInto(snapshotDir, sketch(batch))(u =>
+      sketch(u.select(col("day"), explode(col("sk")).as("h"))))
   }
 
   /** Read-back of the sketch store in the batch twin's output shape. */
   def sketchSnapshotRead(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/current")
+    currentSnapshot(spark, snapshotDir).get
       .select(col("day"), expr(graft.operators.Sketch.estExpr("sk")).as("est_distinct"))
-      .orderBy(col("day"))
 
   /** Counter budget for the streaming heavy-hitters state. */
   val StreamHhK = 64
@@ -876,44 +867,40 @@ object EventsStream {
     *    gives the same final answer — that is the 100 TB shape.
     */
   def heavyHittersBatchInto(countsDir: String, mgDir: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
+    def sumCounts(rows: DataFrame) =
+      rows.groupBy(col("day"), col("user_id")).agg(sum(col("cnt")).as("cnt"))
+    // feeds both stores: cached so the source is read once, and freed
+    // once both are published (the stream thread releases no cuts)
     val batchCounts = batch.groupBy(col("day"), col("user_id"))
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds both stores; don't recompute the source
-    val mergedCounts = currentSnapshot(spark, countsDir)
-      .map(_.unionByName(batchCounts)).getOrElse(batchCounts)
-      .groupBy(col("day"), col("user_id"))
-      .agg(sum(col("cnt")).as("cnt"))
-    publishSnapshot(countsDir, mergedCounts)
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("day")).orderBy(col("cnt").desc, col("user_id"))
-    val wDay = org.apache.spark.sql.expressions.Window.partitionBy(col("day"))
-    val mergedMg = currentSnapshot(spark, mgDir)
-      .map(_.unionByName(batchCounts)).getOrElse(batchCounts)
-      .groupBy(col("day"), col("user_id"))
-      .agg(sum(col("cnt")).as("cnt"))
-      .withColumn("rn", row_number().over(wRank))
-      .withColumn("ck", coalesce(
-        max(when(col("rn") === StreamHhK, col("cnt"))).over(wDay), lit(0L)))
-      .filter(col("cnt") - col("ck") > 0)
-      .select(col("day"), col("user_id"), (col("cnt") - col("ck")).as("cnt"))
-    publishSnapshot(mgDir, mergedMg)
+      .persist()
+    try {
+      mergeInto(countsDir, batchCounts)(sumCounts)
+      val wRank = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("day")).orderBy(col("cnt").desc, col("user_id"))
+      val wDay = org.apache.spark.sql.expressions.Window.partitionBy(col("day"))
+      mergeInto(mgDir, batchCounts)(u => sumCounts(u)
+        .withColumn("rn", row_number().over(wRank))
+        .withColumn("ck", coalesce(
+          max(when(col("rn") === StreamHhK, col("cnt"))).over(wDay), lit(0L)))
+        .filter(col("cnt") - col("ck") > 0)
+        .select(col("day"), col("user_id"), (col("cnt") - col("ck")).as("cnt")))
+    } finally batchCounts.unpersist()
   }
 
   /** Read-back of the heavy-hitter store in the batch twin's shape:
     * threshold the exact counts at cnt·k > n_day. */
   def heavyHittersSnapshotRead(spark: SparkSession, countsDir: String): DataFrame = {
     val wDay = org.apache.spark.sql.expressions.Window.partitionBy(col("day"))
-    spark.read.parquet(s"$countsDir/current")
+    currentSnapshot(spark, countsDir).get
       .withColumn("n", sum(col("cnt")).over(wDay))
       .filter(col("cnt") * StreamHhK > col("n"))
       .select(col("day"), col("user_id"), col("cnt"))
-      .orderBy(col("day"), col("user_id"))
   }
 
   /** The MG store's candidate set (for the containment assertion). */
   def heavyHittersMgRead(spark: SparkSession, mgDir: String): DataFrame =
-    spark.read.parquet(s"$mgDir/current")
+    currentSnapshot(spark, mgDir).get
 
   /** Batch twin for `ivm_agg_delta` — incremental view maintenance
     * with RETRACTIONS, the capability LWW-upsert doesn't cover: the
@@ -950,17 +937,13 @@ object EventsStream {
     * so the stored view never carries tombstone residue. The raw
     * double sums are kept in store (rounding happens only at read) so
     * merges stay associative. */
-  def ivmBatchInto(snapshotDir: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val delta = batch.groupBy(col("user_id"))
-      .agg(sum(col("op")).as("net_events"), sum(col("op") * col("value")).as("raw_value"))
-    val merged = currentSnapshot(spark, snapshotDir)
-      .map(_.unionByName(delta)).getOrElse(delta)
-      .groupBy(col("user_id"))
-      .agg(sum(col("net_events")).as("net_events"), sum(col("raw_value")).as("raw_value"))
-      .filter(col("net_events") =!= 0)
-    publishSnapshot(snapshotDir, merged)
-  }
+  def ivmBatchInto(snapshotDir: String, batch: DataFrame): Unit =
+    mergeInto(snapshotDir, batch.groupBy(col("user_id"))
+      .agg(sum(col("op")).as("net_events"), sum(col("op") * col("value")).as("raw_value"))) {
+      _.groupBy(col("user_id"))
+        .agg(sum(col("net_events")).as("net_events"), sum(col("raw_value")).as("raw_value"))
+        .filter(col("net_events") =!= 0)
+    }
 
   /** Batch twin for `ivm_distinct_delta`: daily distinct users under
     * RETRACTIONS ('error' events retract one unit of that user's
@@ -1079,18 +1062,10 @@ object EventsStream {
        SELECT day, rank, bucket, rc FROM r
        WHERE rank <= $IvmTopN ORDER BY day, rank"""
 
-  /** One micro-batch of value-domain refcount maintenance — identical
-    * merge discipline to the distinct view (add, drop exact zeros,
-    * keep negative debts). */
-  def ivmMinmaxBatchInto(snapshotDir: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val delta = batch.groupBy(col("day"), col("cents")).agg(sum(col("op")).as("rc"))
-    val merged = currentSnapshot(spark, snapshotDir)
-      .map(_.unionByName(delta)).getOrElse(delta)
-      .groupBy(col("day"), col("cents")).agg(sum(col("rc")).as("rc"))
-      .filter(col("rc") =!= 0)
-    publishSnapshot(snapshotDir, merged)
-  }
+  /** One micro-batch of value-domain refcount maintenance — the
+    * distinct view's merge keyed on cents. */
+  def ivmMinmaxBatchInto(snapshotDir: String, batch: DataFrame): Unit =
+    refcountInto(snapshotDir, batch, "cents")
 
   /** Read-back in the batch twin's shape: extrema over rc > 0. */
   def ivmMinmaxSnapshotRead(spark: SparkSession, snapshotDir: String): DataFrame =
@@ -1098,35 +1073,31 @@ object EventsStream {
       .filter(col("rc") > 0)
       .groupBy(col("day")).agg(min(col("cents")).as("min_cents"),
         max(col("cents")).as("max_cents"), count(lit(1)).as("n_support"))
-      .orderBy(col("day"))
 
-  /** One micro-batch of refcount maintenance: batch deltas merge into
-    * the stored refcount table by addition; only EXACT-ZERO rows are
+  /** One micro-batch of refcount maintenance on (day, user). */
+  def ivmDistinctBatchInto(snapshotDir: String, batch: DataFrame): Unit =
+    refcountInto(snapshotDir, batch, "user_id")
+
+  /** Refcount maintenance on (day, `key`): batch deltas merge into the
+    * stored refcount table by addition; only EXACT-ZERO rows are
     * dropped (a negative refcount is a debt that a late insert must
     * still repay — dropping it would double-count). */
-  def ivmDistinctBatchInto(snapshotDir: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val delta = batch.groupBy(col("day"), col("user_id")).agg(sum(col("op")).as("rc"))
-    val merged = currentSnapshot(spark, snapshotDir)
-      .map(_.unionByName(delta)).getOrElse(delta)
-      .groupBy(col("day"), col("user_id")).agg(sum(col("rc")).as("rc"))
-      .filter(col("rc") =!= 0)
-    publishSnapshot(snapshotDir, merged)
-  }
+  private def refcountInto(snapshotDir: String, batch: DataFrame, key: String): Unit =
+    mergeInto(snapshotDir, batch.groupBy(col("day"), col(key)).agg(sum(col("op")).as("rc"))) {
+      _.groupBy(col("day"), col(key)).agg(sum(col("rc")).as("rc")).filter(col("rc") =!= 0)
+    }
 
   /** Read-back in the batch twin's shape: membership is rc > 0. */
   def ivmDistinctSnapshotRead(spark: SparkSession, snapshotDir: String): DataFrame =
     currentSnapshot(spark, snapshotDir).get
       .filter(col("rc") > 0)
       .groupBy(col("day")).agg(count(lit(1)).as("n_users"))
-      .orderBy(col("day"))
 
   /** Read-back of the maintained view in the batch twin's shape. */
   def ivmSnapshotRead(spark: SparkSession, snapshotDir: String): DataFrame =
-    spark.read.parquet(s"$snapshotDir/current")
+    currentSnapshot(spark, snapshotDir).get
       .select(col("user_id"), col("net_events"),
         round(col("raw_value"), 2).as("net_value"))
-      .orderBy(col("user_id"))
 
   /** Static dimension for stream enrichment: user → market segment
     * (events.user_id is 0-based; customer keys are 1-based). */
@@ -1161,8 +1132,6 @@ object EventsStream {
   // ------------------------------------------------------ streaming funnel
 
   case class FEvent(user_id: Long, event_id: Long, tsSec: Long, event_type: String)
-  case class FEventT(user_id: Long, event_id: Long, tsSec: Long, event_type: String,
-      eventTime: java.sql.Timestamp)
   case class FunnelTriple(fv: Option[Long], fqc: Option[Long], fqp: Option[Long])
   case class FunnelState(t: FunnelTriple, buf: List[FEvent])
   case class Conversion(user_id: Long, converted_sec: Long)
@@ -1216,33 +1185,16 @@ object EventsStream {
     * stateful ops: no processing-time state growth, horizontal scale by
     * user key. */
   def funnelStream(events: Dataset[FEvent]): Dataset[Conversion] = {
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .withColumn("eventTime", timestamp_seconds(col("tsSec")))
-      .withWatermark("eventTime", "1 hour")
-      .as[FEventT]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, Conversion](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[FEventT], state: GroupState[FunnelState]) =>
-          val st = state.getOption.getOrElse(FunnelState(FunnelTriple(None, None, None), Nil))
-          val all = (st.buf ++ batch.map(e =>
-              FEvent(e.user_id, e.event_id, e.tsSec, e.event_type)).toList)
-            .sortBy(e => (e.tsSec, e.event_id))
-          val wmSec = state.getCurrentWatermarkMs() / 1000
-          // events with tsSec < wm are final (nothing can still sort before them)
-          val (closed, open) = all.partition(_.tsSec < wmSec)
-          val before = st.t
-          val after = foldFunnel(before, closed)
-          state.update(FunnelState(after, open))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max((open.last.tsSec + 1) * 1000L, state.getCurrentWatermarkMs() + 1000L))
-          if (before.fqp.isEmpty && after.fqp.isDefined)
-            Iterator.single(Conversion(uid, after.fqp.get))
-          else Iterator.empty
-      }
+    import events.sparkSession.implicits._
+    eventTimeFold(events, "1 hour", FunnelState(FunnelTriple(None, None, None), Nil))(_.user_id) {
+      (uid, st, rows, wmSec) =>
+        val all = (st.buf ++ rows).sortBy(e => (e.tsSec, e.event_id))
+        // events with tsSec < wm are final (nothing can still sort before them)
+        val (closed, open) = all.partition(_.tsSec < wmSec)
+        val after = foldFunnel(st.t, closed)
+        (if (st.t.fqp.isEmpty && after.fqp.isDefined) Seq(Conversion(uid, after.fqp.get)) else Nil,
+          Some(FunnelState(after, open)), open.lastOption.map(_.tsSec + 1))
+    }
   }
 
   // -------------------------------------------------- streaming attribution
@@ -1266,48 +1218,30 @@ object EventsStream {
     * StreamingSpec). */
   def attributionStream(events: Dataset[FEvent]): Dataset[Attribution] = {
     val lookback = graft.operators.Funnel.LookbackSec
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .withColumn("eventTime", timestamp_seconds(col("tsSec")))
-      .withWatermark("eventTime", "1 hour")
-      .as[FEventT]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AttrState, Attribution](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[FEventT], state: GroupState[AttrState]) =>
-          val st = state.getOption.getOrElse(AttrState(Nil))
-          val all = (st.buf ++ batch.map(e =>
-              FEvent(e.user_id, e.event_id, e.tsSec, e.event_type)).toList)
-            .sortBy(e => (e.tsSec, e.event_id))
-          val wmSec = state.getCurrentWatermarkMs() / 1000
-          // purchases strictly before the watermark are final
-          val (done, open) = all.partition(e =>
-            e.event_type == "purchase" && e.tsSec < wmSec)
-          val out = done.map { p =>
-            val n = all.count(c => c.event_type == "click" &&
-              c.tsSec >= p.tsSec - lookback && c.tsSec <= p.tsSec)
-            Attribution(uid, p.event_id, p.tsSec, n,
-              if (n > 0) Some(math.floor(1.0 / n * 1e4) / 1e4) else None)
-          }
-          // clicks stay while any future purchase (sec >= wm) could look back to them
-          val keep = open.filter {
-            case c if c.event_type == "click" => c.tsSec >= wmSec - lookback
-            case e => e.event_type == "purchase" // open purchases
-          }
-          if (keep.isEmpty) state.remove()
-          else {
-            state.update(AttrState(keep))
-            // wake when the watermark can finalize a purchase or evict a click
-            val wake = keep.map {
-              case p if p.event_type == "purchase" => p.tsSec + 1
-              case c => c.tsSec + lookback + 1
-            }.min
-            state.setTimeoutTimestamp(
-              math.max(wake * 1000L, state.getCurrentWatermarkMs() + 1000L))
-          }
-          out.iterator
+    import events.sparkSession.implicits._
+    eventTimeFold(events, "1 hour", AttrState(Nil))(_.user_id) { (uid, st, rows, wmSec) =>
+      val all = (st.buf ++ rows).sortBy(e => (e.tsSec, e.event_id))
+      // purchases strictly before the watermark are final
+      val (done, open) = all.partition(e =>
+        e.event_type == "purchase" && e.tsSec < wmSec)
+      val out = done.map { p =>
+        val n = all.count(c => c.event_type == "click" &&
+          c.tsSec >= p.tsSec - lookback && c.tsSec <= p.tsSec)
+        Attribution(uid, p.event_id, p.tsSec, n,
+          if (n > 0) Some(math.floor(1.0 / n * 1e4) / 1e4) else None)
       }
+      // clicks stay while any future purchase (sec >= wm) could look back to them
+      val keep = open.filter {
+        case c if c.event_type == "click" => c.tsSec >= wmSec - lookback
+        case e => e.event_type == "purchase" // open purchases
+      }
+      // wake when the watermark can finalize a purchase or evict a click
+      val wake = keep.map {
+        case p if p.event_type == "purchase" => p.tsSec + 1
+        case c => c.tsSec + lookback + 1
+      }.minOption
+      (out, Some(AttrState(keep)).filter(_.buf.nonEmpty), wake)
+    }
   }
 
   /** Batch entry `stream_attribution`: the same per-user imperative
@@ -1396,33 +1330,17 @@ object EventsStream {
     * contract: the carry outlives the buffer for the series'
     * lifetime). */
   def alertHysteresisStream(samples: Dataset[CSample]): Dataset[HourAlert] = {
-    val s = samples.sparkSession
-    import s.implicits._
-    samples
-      .withColumn("eventTime", timestamp_seconds(col("tsSec")))
-      .withWatermark("eventTime", "1 hour")
-      .as[CSampleT]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[AlertState, HourAlert](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (series: String, batch: Iterator[CSampleT], state: GroupState[AlertState]) =>
-          val st = state.getOption.getOrElse(AlertState(0, 0, Nil))
-          val all = (st.buf ++ batch.map(e =>
-              CSample(e.event_type, e.event_id, e.tsSec, e.value)).toList)
-            .sortBy(c => (c.tsSec, c.event_id))
-          val wmSec = state.getCurrentWatermarkMs() / 1000
-          val boundary = wmSec / 3600 * 3600
-          val (closed, open) = all.partition(_.tsSec < boundary)
-          val hours = closed.groupBy(_.tsSec / 3600 * 3600).toSeq.sortBy(_._1)
-            .map { case (h, ss) => HourPoint(series, h, hourAvg(ss)) }
-          val (out, f, lr) = foldAlert(st.f, st.lr, hours)
-          state.update(AlertState(f, lr, open))
-          if (open.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max((open.last.tsSec / 3600 * 3600 + 3600) * 1000L,
-                state.getCurrentWatermarkMs() + 1000L))
-          out.iterator
-      }
+    import samples.sparkSession.implicits._
+    eventTimeFold(samples, "1 hour", AlertState(0, 0, Nil))(_.event_type) {
+      (series, st, rows, wmSec) =>
+        val all = (st.buf ++ rows).sortBy(c => (c.tsSec, c.event_id))
+        val boundary = wmSec / 3600 * 3600
+        val (closed, open) = all.partition(_.tsSec < boundary)
+        val hours = closed.groupBy(_.tsSec / 3600 * 3600).toSeq.sortBy(_._1)
+          .map { case (h, ss) => HourPoint(series, h, hourAvg(ss)) }
+        val (out, f, lr) = foldAlert(st.f, st.lr, hours)
+        (out, Some(AlertState(f, lr, open)), open.lastOption.map(_.tsSec / 3600 * 3600 + 3600))
+    }
   }
 
   // ---------------------------------------------- schema evolution
@@ -1632,7 +1550,6 @@ object EventsStream {
   }
 
   case class ZSample(event_type: String, tsSec: Long)
-  case class ZSampleT(event_type: String, tsSec: Long, eventTime: java.sql.Timestamp)
   /** Running moments of the CLOSED hours (n, Σx, Σx²) + open-hour
     * partial counts. Σx² is a Long here; a production deployment
     * promotes it to a 128-bit accumulator — the state size (3 numbers
@@ -1709,50 +1626,32 @@ object EventsStream {
     * event-time watermark closes it; the emitted rows equal the batch
     * twin's (StreamingSpec asserts chunk-by-chunk). */
   def anomalyZStream(samples: Dataset[ZSample]): Dataset[HourZ] = {
-    val s = samples.sparkSession
-    import s.implicits._
-    samples
-      .withColumn("eventTime", timestamp_seconds(col("tsSec")))
-      .withWatermark("eventTime", "1 hour")
-      .as[ZSampleT]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[ZState, HourZ](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (k: String, batch: Iterator[ZSampleT], state: GroupState[ZState]) => {
-          val st = state.getOption.getOrElse(ZState(0L, 0L, 0L, Nil))
-          val merged = scala.collection.mutable.Map.empty[Long, Long]
-          st.buf.foreach { case (h, c) => merged(h) = merged.getOrElse(h, 0L) + c }
-          batch.foreach { e =>
-            val h = e.tsSec / 3600 * 3600
-            merged(h) = merged.getOrElse(h, 0L) + 1L
-          }
-          val wmSec = state.getCurrentWatermarkMs() / 1000
-          val boundary = wmSec / 3600 * 3600
-          val (closed, open) = merged.toList.sortBy(_._1).partition(_._1 < boundary)
-          var n = st.n; var sx = st.sx; var sxx = st.sxx
-          val out = closed.map { case (h, c) =>
-            val rad = n * sxx - sx * sx
-            val num = n * c - sx
-            val z = if (n >= 2 && rad > 0)
-              math.floor(num.toDouble / math.sqrt(rad.toDouble) * 1e4) / 1e4 else 0.0
-            val row = HourZ(k, h, c, n, z, n >= 2 && rad > 0 && math.abs(z) > 3.0)
-            n += 1; sx += c; sxx += c * c
-            row
-          }
-          state.update(ZState(n, sx, sxx, open))
-          if (open.nonEmpty) {
-            state.setTimeoutTimestamp(
-              math.max((open.last._1 + 3600) * 1000L,
-                state.getCurrentWatermarkMs() + 1000L))
-          }
-          out.iterator
+    import samples.sparkSession.implicits._
+    eventTimeFold(samples, "1 hour", ZState(0L, 0L, 0L, Nil))(_.event_type) {
+      (k, st, rows, wmSec) =>
+        val merged = scala.collection.mutable.Map.empty[Long, Long]
+        st.buf.foreach { case (h, c) => merged(h) = merged.getOrElse(h, 0L) + c }
+        rows.foreach { e =>
+          val h = e.tsSec / 3600 * 3600
+          merged(h) = merged.getOrElse(h, 0L) + 1L
         }
-      }
+        val boundary = wmSec / 3600 * 3600
+        val (closed, open) = merged.toList.sortBy(_._1).partition(_._1 < boundary)
+        var n = st.n; var sx = st.sx; var sxx = st.sxx
+        val out = closed.map { case (h, c) =>
+          val rad = n * sxx - sx * sx
+          val num = n * c - sx
+          val z = if (n >= 2 && rad > 0)
+            math.floor(num.toDouble / math.sqrt(rad.toDouble) * 1e4) / 1e4 else 0.0
+          val row = HourZ(k, h, c, n, z, n >= 2 && rad > 0 && math.abs(z) > 3.0)
+          n += 1; sx += c; sxx += c * c
+          row
+        }
+        (out, Some(ZState(n, sx, sxx, open)), open.lastOption.map(_._1 + 3600))
+    }
   }
 
   case class SEv(user_id: Long, tsSec: Long, event_id: Long, event_type: String)
-  case class SEvT(user_id: Long, tsSec: Long, event_id: Long, event_type: String,
-      eventTime: java.sql.Timestamp)
   /** Open SCD2 version + samples the watermark hasn't finalized. */
   case class Scd2State(curType: String, curFrom: Long, version: Int, buf: List[SEv])
   case class Scd2Closed(user_id: Long, attr_value: String, version: Int,
@@ -1815,40 +1714,22 @@ object EventsStream {
     * never needs retraction, which is what makes SCD2 maintainable in
     * append mode. */
   def scd2Stream(events: Dataset[SEv]): Dataset[Scd2Closed] = {
-    val s = events.sparkSession
-    import s.implicits._
-    events
-      .withColumn("eventTime", timestamp_seconds(col("tsSec")))
-      .withWatermark("eventTime", "1 hour")
-      .as[SEvT]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Scd2State, Scd2Closed](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (uid: Long, batch: Iterator[SEvT], state: GroupState[Scd2State]) => {
-          val st = state.getOption.getOrElse(Scd2State(null, 0L, 0, Nil))
-          val all = (st.buf ++ batch.map(e =>
-              SEv(e.user_id, e.tsSec, e.event_id, e.event_type)).toList)
-            .sortBy(e => (e.tsSec, e.event_id))
-          val wmSec = state.getCurrentWatermarkMs() / 1000
-          val (closed, open) = all.partition(_.tsSec < wmSec)
-          var cur = st.curType; var curFrom = st.curFrom; var ver = st.version
-          val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Closed]
-          closed.foreach { e =>
-            if (cur == null) { cur = e.event_type; curFrom = e.tsSec; ver = 1 }
-            else if (e.event_type != cur) {
-              out += Scd2Closed(uid, cur, ver, fmtSec(curFrom), fmtSec(e.tsSec))
-              cur = e.event_type; curFrom = e.tsSec; ver += 1
-            }
+    import events.sparkSession.implicits._
+    eventTimeFold(events, "1 hour", Scd2State(null, 0L, 0, Nil))(_.user_id) {
+      (uid, st, rows, wmSec) =>
+        val all = (st.buf ++ rows).sortBy(e => (e.tsSec, e.event_id))
+        val (closed, open) = all.partition(_.tsSec < wmSec)
+        var cur = st.curType; var curFrom = st.curFrom; var ver = st.version
+        val out = scala.collection.mutable.ArrayBuffer.empty[Scd2Closed]
+        closed.foreach { e =>
+          if (cur == null) { cur = e.event_type; curFrom = e.tsSec; ver = 1 }
+          else if (e.event_type != cur) {
+            out += Scd2Closed(uid, cur, ver, fmtSec(curFrom), fmtSec(e.tsSec))
+            cur = e.event_type; curFrom = e.tsSec; ver += 1
           }
-          state.update(Scd2State(cur, curFrom, ver, open))
-          if (open.nonEmpty) {
-            state.setTimeoutTimestamp(
-              math.max((open.last.tsSec + 1) * 1000L,
-                state.getCurrentWatermarkMs() + 1000L))
-          }
-          out.iterator
         }
-      }
+        (out.toSeq, Some(Scd2State(cur, curFrom, ver, open)), open.lastOption.map(_.tsSec + 1))
+    }
   }
 
   /** Batch twin for `stream_sample_quantile`: daily p50/p90 from the
@@ -1897,17 +1778,12 @@ object EventsStream {
     * unions with the batch's and re-truncates to bottom-K by hash —
     * the semilattice merge, so chunk order cannot matter. */
   def sampleQuantileBatchInto(snapshotDir: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
     val k = graft.operators.Sketch.SampleK
-    val batchSk = batch.groupBy(col("day"))
-      .agg(expr(s"graft_sample(h, value, $k)").as("sk"))
-    val merged = currentSnapshot(spark, snapshotDir)
-      .map(_.unionByName(batchSk)).getOrElse(batchSk)
+    def sample(rows: DataFrame) =
+      rows.groupBy(col("day")).agg(expr(s"graft_sample(h, value, $k)").as("sk"))
+    mergeInto(snapshotDir, sample(batch))(u => sample(u
       .select(col("day"), explode(col("sk")).as("p"))
-      .select(col("day"), col("p.h").as("h"), col("p.v").as("value"))
-      .groupBy(col("day"))
-      .agg(expr(s"graft_sample(h, value, $k)").as("sk"))
-    publishSnapshot(snapshotDir, merged)
+      .select(col("day"), col("p.h").as("h"), col("p.v").as("value"))))
   }
 
   /** Read-back in the batch twin's shape. */
@@ -1916,7 +1792,6 @@ object EventsStream {
       .select(col("day"),
         expr(graft.operators.Sketch.qFromSample("sk", "0.5e0")).as("p50"),
         expr(graft.operators.Sketch.qFromSample("sk", "0.9e0")).as("p90"))
-      .orderBy(col("day"))
 
   val entries: Seq[(String, Q, Option[String])] = Seq(
     ("stream_sample_quantile", sampleQuantileDailyBatch, Some(sampleQuantileDailySql)),

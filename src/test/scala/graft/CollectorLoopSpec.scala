@@ -51,7 +51,6 @@ class CollectorLoopSpec extends SparkTestBase {
     val work = s"$base/work"
     @volatile var secrets = Seq(secret("db1.example.com", db1))
 
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val ticks = MemoryStream[Long]
     val q = CollectorLoop.stream(ticks.toDS(), () => secrets, work)
@@ -150,7 +149,6 @@ class CollectorLoopSpec extends SparkTestBase {
     val secrets = Seq(secret("dbr.example.com", db))
     val work = s"$base/work"
 
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val t1 = MemoryStream[Long]
     val q1 = CollectorLoop.stream(t1.toDS(), () => secrets, work)
@@ -471,7 +469,6 @@ class CollectorLoopSpec extends SparkTestBase {
 
     // arm A: one stream tick into workA; arm B: one runOnce into workB
     val workA = s"$base/workA"; val workB = s"$base/workB"
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val ticks = MemoryStream[Long]
     val q = CollectorLoop.stream(ticks.toDS(), () => secrets, workA)

@@ -12,8 +12,6 @@ class DodStreamSpec extends SparkTestBase {
 
   test("stream_dod_encoding: a real MemoryStream run ends at the batch audit's ledger") {
     import graft.streaming.DodStream
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
     // chunk-append order: the batch audit orders (es, arrival) per
@@ -25,24 +23,17 @@ class DodStreamSpec extends SparkTestBase {
       .as[DodStream.DodSample].collect().sortBy(s => (s.es, s.arrival))
 
     val input = MemoryStream[DodStream.DodSample]
-    val q = DodStream.dodEncodingStream(input.toDS())
-      .writeStream.format("memory").queryName("dod_sink")
-      .outputMode(OutputMode.Update).start()
-    try {
-      val third = samples.length / 3
-      Seq(samples.take(third), samples.slice(third, 2 * third),
-        samples.drop(2 * third)).foreach { chunk =>
-        input.addData(chunk.toSeq); q.processAllAvailable()
+    val third = samples.length / 3
+    val got = stream(DodStream.dodEncodingStream(input.toDS()), OutputMode.Update)(
+      feed(input, Seq(samples.take(third).toSeq, samples.slice(third, 2 * third).toSeq,
+        samples.drop(2 * third).toSeq)): _*)
+      .groupBy(_.getString(0))
+      .map { case (k, rows) =>
+        val last = rows.maxBy(_.getLong(1))
+        k -> (1 to 9).map(last.getLong).toList
       }
-      val got = spark.table("dod_sink").collect()
-        .groupBy(_.getString(0))
-        .map { case (k, rows) =>
-          val last = rows.maxBy(_.getLong(1))
-          k -> (1 to 9).map(last.getLong).toList
-        }
-      val want = run("tsdb_dod_timestamps").collect()
-        .map(r => r.getString(0) -> (1 to 9).map(r.getLong).toList).toMap
-      assert(got == want, s"stream/batch fork: got=$got want=$want")
-    } finally q.stop()
+    val want = run("tsdb_dod_timestamps").collect()
+      .map(r => r.getString(0) -> (1 to 9).map(r.getLong).toList).toMap
+    assert(got == want, s"stream/batch fork: got=$got want=$want")
   }
 }

@@ -25,8 +25,6 @@ class HllStreamSpec extends SparkTestBase {
 
   test("stream_hll_distinct: a real MemoryStream run ends at the batch sketch exactly") {
     import graft.streaming.HllStream
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
     val samples = graft.sources.Tables.events(spark, sf)
@@ -34,43 +32,30 @@ class HllStreamSpec extends SparkTestBase {
       .as[HllStream.HllInput].collect()
 
     val input = MemoryStream[HllStream.HllInput]
-    val q = HllStream.hllStream(input.toDS(), auditExact = true)
-      .writeStream.format("memory").queryName("hll_sink")
-      .outputMode(OutputMode.Update).start()
-    try {
-      val third = samples.length / 3
-      Seq(samples.take(third), samples.slice(third, 2 * third),
-        samples.drop(2 * third)).foreach { chunk =>
-        input.addData(chunk.toSeq); q.processAllAvailable()
+    val third = samples.length / 3
+    val got = stream(HllStream.hllStream(input.toDS(), auditExact = true), OutputMode.Update)(
+      feed(input, Seq(samples.take(third).toSeq, samples.slice(third, 2 * third).toSeq,
+        samples.drop(2 * third).toSeq)): _*)
+      .groupBy(_.getString(0))
+      .map { case (k, rows) =>
+        // last snapshot = the one with the most exact-distinct users
+        val last = rows.maxBy(_.getLong(4))
+        k -> (1 to 5).map(last.getLong).toList
       }
-      val got = spark.table("hll_sink").collect()
-        .groupBy(_.getString(0))
-        .map { case (k, rows) =>
-          // last snapshot = the one with the most exact-distinct users
-          val last = rows.maxBy(_.getLong(4))
-          k -> (1 to 5).map(last.getLong).toList
-        }
-      val want = run("sketch_hll_distinct").collect()
-        .map(r => r.getString(0) -> (1 to 5).map(r.getLong).toList).toMap
-      assert(got == want, s"stream/batch fork: got=$got want=$want")
-    } finally q.stop()
+    val want = run("sketch_hll_distinct").collect()
+      .map(r => r.getString(0) -> (1 to 5).map(r.getLong).toList).toMap
+    assert(got == want, s"stream/batch fork: got=$got want=$want")
   }
 
   test("hllStream default mode carries no exact truth set (O(registers) state)") {
     import graft.streaming.HllStream
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[HllStream.HllInput]
-    val q = HllStream.hllStream(input.toDS()) // default: auditExact = false
-      .writeStream.format("memory").queryName("hll_r14_sink")
-      .outputMode(OutputMode.Update).start()
-    try {
-      input.addData(Seq(HllStream.HllInput("s1", 1L), HllStream.HllInput("s1", 2L)))
-      q.processAllAvailable()
-      val row = spark.table("hll_r14_sink").collect().head
-      assert(row.getLong(4) == -1L && row.getLong(5) == -1L,
-        "default mode must not report exact-distinct truth")
-      assert(row.getLong(3) > 0L, "the sketch estimate itself still works")
-    } finally q.stop()
+    val row = stream(HllStream.hllStream(input.toDS()), // default: auditExact = false
+      OutputMode.Update)(
+      _ => input.addData(Seq(HllStream.HllInput("s1", 1L), HllStream.HllInput("s1", 2L)))).head
+    assert(row.getLong(4) == -1L && row.getLong(5) == -1L,
+      "default mode must not report exact-distinct truth")
+    assert(row.getLong(3) > 0L, "the sketch estimate itself still works")
   }
 }

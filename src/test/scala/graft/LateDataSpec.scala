@@ -3,7 +3,7 @@ package graft
 import graft.streaming.LateData
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The batch twin replays Structured Streaming's watermark drop rule —
   * prove it: a real MemoryStream fed chunk-by-chunk in the same md5
@@ -33,38 +33,29 @@ class LateDataSpec extends SparkTestBase {
   test("native streaming session windows emit exactly the batch twin's sessions") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // feed in event-time order (no late data) in two chunks, then flush
     val rows = graft.sources.Tables.events(spark, sf)
       .select(col("event_id"), date_trunc("second", col("ts")).as("ts"),
         col("user_id").cast("string").as("event_type"))
       .as[DEv].collect().sortBy(_.ts.getTime)
     val input = MemoryStream[DEv]
-    val stream = LateData.sessionNativeStream(
-      input.toDF().select(col("ts"), col("event_type").cast("long").as("user_id")))
-    val q = stream.writeStream.format("memory").queryName("sess_sink")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append).start()
-    try {
-      val (a, b) = rows.splitAt(rows.length / 2)
-      input.addData(a.toSeq); q.processAllAvailable()
-      input.addData(b.toSeq); q.processAllAvailable()
-      val maxTs = rows.map(_.ts.getTime).max
-      input.addData(DEv(-1L, new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), "-1"))
-      q.processAllAvailable()
-      val got = spark.table("sess_sink")
-        .filter(col("user_id") >= 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val want = LateData.sessionNativeBatch(spark, sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
-      assert(got.keySet == want.keySet,
-        s"sessions differ: missing=${(want.keySet diff got.keySet).take(3)} extra=${(got.keySet diff want.keySet).take(3)}")
-      want.foreach { case (k, n) => assert(got(k) == n, s"session $k: got ${got(k)} want $n") }
-    } finally q.stop()
+    val (a, b) = rows.splitAt(rows.length / 2)
+    val maxTs = rows.map(_.ts.getTime).max
+    val sink = stream(LateData.sessionNativeStream(
+        input.toDF().select(col("ts"), col("event_type").cast("long").as("user_id"))))(
+      feed(input, Seq(a.toSeq, b.toSeq,
+        Seq(DEv(-1L, new java.sql.Timestamp(maxTs + 24L * 3600 * 1000), "-1")))): _*)
+    val got = sink.filter(_.getLong(0) >= 0)
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val want = LateData.sessionNativeBatch(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
+    assert(got.keySet == want.keySet,
+      s"sessions differ: missing=${(want.keySet diff got.keySet).take(3)} extra=${(got.keySet diff want.keySet).take(3)}")
+    want.foreach { case (k, n) => assert(got(k) == n, s"session $k: got ${got(k)} want $n") }
   }
 
   test("state-store metrics: a real run's progress numbers match the batch twin chunk by chunk") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val twin = LateData.stateMetricsBatch(spark, sf).orderBy("chunk").collect()
     val chunks = LateData.arrivals(spark, sf)
@@ -79,13 +70,10 @@ class LateDataSpec extends SparkTestBase {
     assert(twin.length == chunks.length)
 
     val input = MemoryStream[DEv]
-    val q = LateData.lateDataStream(input.toDF())
-      .writeStream.format("memory").queryName("state_metrics_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      var dropsSeen = 0L
-      var updatesSeen = 0L
-      chunks.zipWithIndex.foreach { case (c, i) =>
+    var dropsSeen = 0L
+    var updatesSeen = 0L
+    stream(LateData.lateDataStream(input.toDF()))(chunks.zipWithIndex.map { case (c, i) =>
+      (q: StreamingQuery) => {
         input.addData(c); q.processAllAvailable()
         val expect = twin(i)
         // the eviction lands in the post-watermark no-data batch, which
@@ -106,17 +94,16 @@ class LateDataSpec extends SparkTestBase {
           s"chunk $i: updated ${updates - updatesSeen} != twin ${expect.getLong(5)}")
         dropsSeen = drops; updatesSeen = updates
       }
-      // sanity: the run must have real watermark pressure — some chunk
-      // drops rows AND some chunk evicts state
-      assert(twin.map(_.getLong(4)).sum > 0, "no rows dropped — twin untested")
-      assert(twin.sliding(2).exists(p => p(1).getLong(6) < p(0).getLong(6) + p(1).getLong(5)),
-        "state never shrank — eviction untested")
-    } finally q.stop()
+    }: _*)
+    // sanity: the run must have real watermark pressure — some chunk
+    // drops rows AND some chunk evicts state
+    assert(twin.map(_.getLong(4)).sum > 0, "no rows dropped — twin untested")
+    assert(twin.sliding(2).exists(p => p(1).getLong(6) < p(0).getLong(6) + p(1).getLong(5)),
+      "state never shrank — eviction untested")
   }
 
   test("streaming run accepts exactly the rows the batch twin predicts") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val chunks = LateData.arrivals(spark, sf)
       .select(col("chunk"), col("arrival"), col("sec"))
@@ -129,26 +116,19 @@ class LateDataSpec extends SparkTestBase {
       }
 
     val input = MemoryStream[DEv]
-    val q = LateData.lateDataStream(input.toDF())
-      .writeStream.format("memory").queryName("late_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      chunks.foreach { c => input.addData(c); q.processAllAvailable() }
-      // far-future flush finalizes every real window
-      val maxSec = chunks.flatten.map(_.ts.getTime).max
-      input.addData(DEv(-1L, new java.sql.Timestamp(maxSec + 10L * 3600 * 1000), "__wm__"))
-      q.processAllAvailable()
+    // far-future flush finalizes every real window
+    val maxSec = chunks.flatten.map(_.ts.getTime).max
+    val sink = stream(LateData.lateDataStream(input.toDF()))(feed(input, chunks :+
+      Seq(DEv(-1L, new java.sql.Timestamp(maxSec + 10L * 3600 * 1000), "__wm__"))): _*)
 
-      val flushStart = (maxSec + 10L * 3600 * 1000) / 1000 / LateData.WindowSec * LateData.WindowSec
-      val got = spark.table("late_sink")
-        .filter(unix_timestamp(col("wstart")) =!= flushStart)
-        .collect().map(r => r.getTimestamp(0).getTime / 1000 -> r.getLong(1)).toMap
-      val want = LateData.lateDataBatch(spark, sf)
-        .filter(col("n_accepted") > 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got.keySet == want.keySet,
-        s"windows differ: missing=${(want.keySet diff got.keySet).take(3)} extra=${(got.keySet diff want.keySet).take(3)}")
-      want.foreach { case (k, n) => assert(got(k) == n, s"window $k: got ${got(k)} want $n") }
-    } finally q.stop()
+    val flushStart = (maxSec + 10L * 3600 * 1000) / 1000 / LateData.WindowSec * LateData.WindowSec
+    val got = sink.map(r => r.getTimestamp(0).getTime / 1000 -> r.getLong(1))
+      .filter(_._1 != flushStart).toMap
+    val want = LateData.lateDataBatch(spark, sf)
+      .filter(col("n_accepted") > 0)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.keySet == want.keySet,
+      s"windows differ: missing=${(want.keySet diff got.keySet).take(3)} extra=${(got.keySet diff want.keySet).take(3)}")
+    want.foreach { case (k, n) => assert(got(k) == n, s"window $k: got ${got(k)} want $n") }
   }
 }

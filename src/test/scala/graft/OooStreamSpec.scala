@@ -11,8 +11,6 @@ class OooStreamSpec extends SparkTestBase {
 
   test("stream_ooo_ingest: a real MemoryStream run ends at the batch audit's tallies") {
     import graft.streaming.OooStream
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
     val samples = graft.sources.Tables.events(spark, sf)
@@ -22,70 +20,53 @@ class OooStreamSpec extends SparkTestBase {
       .as[OooStream.OooSample].collect().sortBy(_.arrival)
 
     val input = MemoryStream[OooStream.OooSample]
-    val q = OooStream.oooIngestStream(input.toDS())
-      .writeStream.format("memory").queryName("ooo_sink")
-      .outputMode(OutputMode.Update).start()
-    try {
-      // three chunks in arrival order — the feed order a push pipeline
-      // (collector -> remote write) actually delivers
-      val third = samples.length / 3
-      Seq(samples.take(third), samples.slice(third, 2 * third),
-        samples.drop(2 * third)).foreach { chunk =>
-        input.addData(chunk.toSeq); q.processAllAvailable()
+    // three chunks in arrival order — the feed order a push pipeline
+    // (collector -> remote write) actually delivers
+    val third = samples.length / 3
+    val sink = stream(OooStream.oooIngestStream(input.toDS()), OutputMode.Update)(
+      feed(input, Seq(samples.take(third).toSeq, samples.slice(third, 2 * third).toSeq,
+        samples.drop(2 * third).toSeq)): _*)
+    // Update-mode memory sink keeps every snapshot; the last one per
+    // series (max n_samples) is the final tally
+    val got = sink.groupBy(_.getString(0))
+      .map { case (k, rows) =>
+        val last = rows.maxBy(_.getLong(1))
+        k -> (last.getLong(1), last.getLong(2), last.getLong(3), last.getLong(4))
       }
-      // Update-mode memory sink keeps every snapshot; the last one per
-      // series (max n_samples) is the final tally
-      val got = spark.table("ooo_sink").collect()
-        .groupBy(_.getString(0))
-        .map { case (k, rows) =>
-          val last = rows.maxBy(_.getLong(1))
-          k -> (last.getLong(1), last.getLong(2), last.getLong(3), last.getLong(4))
+    val want = run("tsdb_ooo_ingest").collect()
+      .map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+    assert(got == want, s"stream/batch fork: got=$got want=$want")
+    // cross-batch ordering detector: the feed is arrival-ordered
+    // across chunks, so n_disorder must be 0 everywhere — a feed
+    // that re-delivered a lower arrival later would surface here
+    val disordered = sink.filter(_.getLong(5) != 0L)
+    assert(disordered.isEmpty,
+      s"cross-batch disorder reported on an ordered feed: ${disordered.take(3).mkString(",")}")
+    // per-batch snapshots are monotone: counts never decrease
+    sink.groupBy(_.getString(0)).foreach {
+      case (_, rows) =>
+        val sorted = rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
+          .sortBy(_._1).toSeq
+        sorted.sliding(2).foreach {
+          case Seq((_, a1, r1), (_, a2, r2)) => assert(a1 <= a2 && r1 <= r2)
+          case _ =>
         }
-      val want = run("tsdb_ooo_ingest").collect()
-        .map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-      assert(got == want, s"stream/batch fork: got=$got want=$want")
-      // cross-batch ordering detector: the feed is arrival-ordered
-      // across chunks, so n_disorder must be 0 everywhere — a feed
-      // that re-delivered a lower arrival later would surface here
-      val disordered = spark.table("ooo_sink").collect()
-        .filter(_.getLong(5) != 0L)
-      assert(disordered.isEmpty,
-        s"cross-batch disorder reported on an ordered feed: ${disordered.take(3).mkString(",")}")
-      // per-batch snapshots are monotone: counts never decrease
-      spark.table("ooo_sink").collect().groupBy(_.getString(0)).foreach {
-        case (_, rows) =>
-          val sorted = rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
-            .sortBy(_._1).toSeq
-          sorted.sliding(2).foreach {
-            case Seq((_, a1, r1), (_, a2, r2)) => assert(a1 <= a2 && r1 <= r2)
-            case _ =>
-          }
-      }
-    } finally q.stop()
+    }
   }
 
   test("stream_ooo_ingest: the cross-batch disorder detector fires on a reordered feed") {
     import graft.streaming.OooStream
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val input = MemoryStream[OooStream.OooSample]
-    val q = OooStream.oooIngestStream(input.toDS())
-      .writeStream.format("memory").queryName("ooo_viol")
-      .outputMode(OutputMode.Update).start()
-    try {
+    val last = stream(OooStream.oooIngestStream(input.toDS()), OutputMode.Update)(feed(input, Seq(
       // batch 1 carries arrivals {5, 6}; batch 2 delivers arrival 2 —
       // a cross-batch reorder the in-batch sort cannot repair
-      input.addData(OooStream.OooSample("s", 100L, 5L),
-        OooStream.OooSample("s", 200L, 6L))
-      q.processAllAvailable()
-      input.addData(OooStream.OooSample("s", 300L, 2L))
-      q.processAllAvailable()
-      val last = spark.table("ooo_viol").collect()
-        .filter(_.getString(0) == "s").maxBy(_.getLong(1))
-      assert(last.getLong(1) == 3L)
-      assert(last.getLong(5) == 1L,
-        s"expected n_disorder = 1 after the reordered chunk, got $last")
-    } finally q.stop()
+      Seq(OooStream.OooSample("s", 100L, 5L), OooStream.OooSample("s", 200L, 6L)),
+      Seq(OooStream.OooSample("s", 300L, 2L)))): _*)
+      .filter(_.getString(0) == "s").maxBy(_.getLong(1))
+    assert(last.getLong(1) == 3L)
+    assert(last.getLong(5) == 1L,
+      s"expected n_disorder = 1 after the reordered chunk, got $last")
   }
 }

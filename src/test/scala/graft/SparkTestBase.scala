@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,6 +30,37 @@ trait SparkTestBase extends AnyFunSuite {
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
+  }
+
+  /** The SQLContext a `MemoryStream` is created in. */
+  implicit lazy val sqlCtx: SQLContext = spark.sqlContext
+
+  /** Runs `df` as a streaming query into a uniquely named memory sink,
+    * or, given `into`, through `into` once per micro-batch. Each feed
+    * step runs and is followed by `processAllAvailable`; the query stops
+    * in a `finally`. Returns the memory sink's rows (none for `into`). */
+  def stream(df: Dataset[_], mode: OutputMode = OutputMode.Append,
+      into: Option[DataFrame => Unit] = None)(steps: (StreamingQuery => Unit)*): Array[Row] = {
+    val w = df.toDF().writeStream.outputMode(mode)
+      .queryName("sink_" + java.util.UUID.randomUUID.toString.replace('-', '_'))
+    val q = into.fold(w.format("memory"))(f =>
+      w.foreachBatch((b: DataFrame, _: Long) => f(b))).start()
+    try {
+      steps.foreach { step => step(q); q.processAllAvailable() }
+      if (into.isEmpty) spark.table(q.name).collect() else Array.empty[Row]
+    } finally q.stop()
+  }
+
+  /** One feed step per chunk, each adding the chunk to `input`. */
+  def feed[A](input: MemoryStream[A], chunks: Seq[Seq[A]]): Seq[StreamingQuery => Unit] =
+    chunks.map[StreamingQuery => Unit](c => _ => input.addData(c))
+
+  /** Asserts a streaming result equals its batch twin's, naming both
+    * sizes and a few entries missing from or extra to the stream. */
+  def assertParity[A](got: Iterable[A], want: Iterable[A]): Unit = {
+    val (g, w) = (got.toSet, want.toSet)
+    assert(g == w, s"streaming=${g.size} batch=${w.size} " +
+      s"missing=${(w diff g).take(3)} extra=${(g diff w).take(3)}")
   }
 
   /** The messages along a throwable's cause chain, outermost first. */
