@@ -40,6 +40,12 @@ object Engine {
       .config("spark.sql.codegen.cache.maxEntries", "1024")
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      // how parquet timestamps infer, fixed for the whole session: the
+      // TIMESTAMP(NANOS) vintage of the test tables reads as raw nanos
+      // (`Tables` converts them), and a TIMESTAMP(MICROS) column that is
+      // not UTC-adjusted reads as the session-UTC TimestampType
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
       // RocksDB state store: spillable + incremental-checkpoint state,
       // the store a watermark-bounded streaming job needs when per-key

@@ -58,18 +58,23 @@ object ScaleUp {
       println(s"[scaleup] $table x$reps written")
     }
 
-    if (denseDocs) {
+    /** documents, each replica > 0 with a replica-unique prefix on
+      * every `nth` word */
+    def replicateDocs(nth: Int): Unit =
       replicate("documents", Seq("doc_id"), (df, rep) =>
         if (rep == 0) df
         else df
-          // splice only every 20TH word: ~3/20 of the 3-shingles
-          // change, cross-replica Jaccard stays ≈ 0.8 — ABOVE the 0.5
-          // near-dup thresholds, so the replicas are genuine near-dups
-          // and pair volume grows quadratically in the replica count
           .withColumn("text", expr(
             s"""array_join(transform(split(text, ' '), (t, i) ->
-                CASE WHEN i % 20 = 0 THEN 'r$rep' || t ELSE t END), ' ')"""))
+                CASE WHEN i % $nth = 0 THEN 'r$rep' || t ELSE t END), ' ')"""))
           .withColumn("n_chars", length(col("text"))))
+
+    if (denseDocs) {
+      // splice only every 20TH word: ~3/20 of the 3-shingles change,
+      // cross-replica Jaccard stays ≈ 0.8 — ABOVE the 0.5 near-dup
+      // thresholds, so the replicas are genuine near-dups and pair
+      // volume grows quadratically in the replica count
+      replicateDocs(20)
       spark.stop()
       return
     }
@@ -84,16 +89,9 @@ object ScaleUp {
     replicate("orders", Seq("o_orderkey", "o_custkey"))
     replicate("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
     replicate("events", Seq("event_id", "user_id"))
-    replicate("documents", Seq("doc_id"), (df, rep) =>
-      if (rep == 0) df
-      else df
-        // prefix a replica-unique fragment onto every 5th word: ~3/5 of
-        // the doc's 3-shingles change, dropping cross-replica Jaccard
-        // well under the 0.5 near-dup thresholds
-        .withColumn("text", expr(
-          s"""array_join(transform(split(text, ' '), (t, i) ->
-              CASE WHEN i % 5 = 0 THEN 'r$rep' || t ELSE t END), ' ')"""))
-        .withColumn("n_chars", length(col("text"))))
+    // every 5th word: ~3/5 of the doc's 3-shingles change, dropping
+    // cross-replica Jaccard well under the 0.5 near-dup thresholds
+    replicateDocs(5)
     replicate("embeddings", Seq("vec_id"), (df, rep) =>
       if (rep == 0) df
       else df.withColumn("embedding", expr(

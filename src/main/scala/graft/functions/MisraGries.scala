@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -80,21 +78,12 @@ case class MisraGries(
     new GenericArrayData(buf.keys.toArray.sorted
       .map(UTF8String.fromString(_).asInstanceOf[Any]))
 
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (i, c) => out.writeUTF(i); out.writeLong(c) }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: Buf): Array[Byte] =
+    Framing.write(buf) { case (out, (i, c)) => out.writeUTF(i); out.writeLong(c) }
 
   override def deserialize(bytes: Array[Byte]): Buf = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
     val buf = createAggregationBuffer()
-    var j = 0
-    while (j < n) { buf.put(in.readUTF(), in.readLong()); j += 1 }
+    Framing.read(bytes)(in => buf.put(in.readUTF(), in.readLong()))
     buf
   }
 

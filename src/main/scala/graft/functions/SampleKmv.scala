@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -71,21 +69,12 @@ case class SampleKmv(
       InternalRow(h, v)
     }.toArray[Any])
 
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach { case (h, v) => out.writeLong(h); out.writeDouble(v) }
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: Buf): Array[Byte] =
+    Framing.write(buf) { case (out, (h, v)) => out.writeLong(h); out.writeDouble(v) }
 
   override def deserialize(bytes: Array[Byte]): Buf = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
     val buf = createAggregationBuffer()
-    var j = 0
-    while (j < n) { buf.put(in.readLong(), in.readDouble()); j += 1 }
+    Framing.read(bytes)(in => buf.put(in.readLong(), in.readDouble()))
     buf
   }
 

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -78,21 +76,12 @@ case class ThetaKmv(
   override def eval(buf: Buf): Any =
     new GenericArrayData(buf.toArray[Long].map(_.asInstanceOf[Any]))
 
-  override def serialize(buf: Buf): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    buf.foreach(out.writeLong)
-    out.flush()
-    bos.toByteArray
-  }
+  override def serialize(buf: Buf): Array[Byte] =
+    Framing.write(buf)(_.writeLong(_))
 
   override def deserialize(bytes: Array[Byte]): Buf = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
     val buf = createAggregationBuffer()
-    var j = 0
-    while (j < n) { buf += in.readLong(); j += 1 }
+    Framing.read(bytes)(in => buf += in.readLong())
     buf
   }
 

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -85,20 +83,12 @@ case class TopKByScore(
 
   override def serialize(buf: Buf): Array[Byte] = {
     trim(buf)
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.length)
-    buf.foreach { case (s, i) => out.writeDouble(s); out.writeLong(i) }
-    out.flush()
-    bos.toByteArray
+    Framing.write(buf) { case (out, (s, i)) => out.writeDouble(s); out.writeLong(i) }
   }
 
   override def deserialize(bytes: Array[Byte]): Buf = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
     val buf = createAggregationBuffer()
-    var j = 0
-    while (j < n) { buf += ((in.readDouble(), in.readLong())); j += 1 }
+    Framing.read(bytes)(in => buf += ((in.readDouble(), in.readLong())))
     buf
   }
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -25,19 +25,25 @@ object AsOf {
 
   /** Each purchase matched to the same user's most recent click at or
     * before it (DuckDB ASOF JOIN semantics: greatest right ts <= left ts). */
-  def asofJoin: Q = (s, d) => {
-    val e = Tables.events(s, d)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("event_id"), col("user_id"), col("ts"),
-        when(col("event_type") === "click", 0).otherwise(1).as("side"))
-    // clicks sort before purchases at equal ts → frame up to -1 row still
-    // sees a same-timestamp click (inclusive >=, like ASOF JOIN)
+  def asofJoin: Q = (s, d) =>
+    withClickTs(s, d, col("ts"))
+      .filter(col("side") === 1 && col("click_ts").isNotNull)
+      .select(col("event_id"), col("user_id"), col("ts"), col("click_ts"))
+
+  /** Clicks (side 0) and purchases (side 1) with `ts` as the column
+    * `ts`, each carrying the same user's latest earlier click as
+    * `click_ts`. Clicks sort before purchases at an equal ts, so a frame
+    * ending one row back still sees a same-timestamp click (inclusive
+    * >=, like ASOF JOIN). */
+  private def withClickTs(s: SparkSession, d: String, ts: Column): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("side"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    e.withColumn("click_ts", max(when(col("side") === 0, col("ts"))).over(w))
-      .filter(col("side") === 1 && col("click_ts").isNotNull)
-      .select(col("event_id"), col("user_id"), col("ts"), col("click_ts"))
+    Tables.events(s, d)
+      .filter(col("event_type").isin("click", "purchase"))
+      .select(col("event_id"), col("user_id"), ts,
+        when(col("event_type") === "click", 0).otherwise(1).as("side"))
+      .withColumn("click_ts", max(when(col("side") === 0, col("ts"))).over(w))
   }
 
   val asofJoinSql: String =
@@ -174,20 +180,12 @@ object AsOf {
     * worse than no feature). Same single-exchange union+window plan;
     * the tolerance is a post-filter on the matched timestamp, not a
     * second join. */
-  def asofTolerance: Q = (s, d) => {
-    val e = Tables.events(s, d)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select(col("event_id"), col("user_id"), date_trunc("second", col("ts")).as("ts"),
-        when(col("event_type") === "click", 0).otherwise(1).as("side"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    e.withColumn("click_ts", max(when(col("side") === 0, col("ts"))).over(w))
+  def asofTolerance: Q = (s, d) =>
+    withClickTs(s, d, date_trunc("second", col("ts")).as("ts"))
       .withColumn("staleness_sec",
         unix_timestamp(col("ts")) - unix_timestamp(col("click_ts")))
       .filter(col("side") === 1 && col("staleness_sec") <= ToleranceSeconds)
       .select(col("event_id"), col("user_id"), col("ts"), col("click_ts"), col("staleness_sec"))
-  }
 
   val asofToleranceSql: String =
     s"""SELECT event_id, user_id, ts, click_ts,
@@ -337,14 +335,7 @@ object AsOf {
   }
 
   def sessionizeOtsu: Q = (s, d) => {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val hist = Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("event_id"),
-        unix_timestamp(date_trunc("second", col("ts"))).as("sec"))
-      .withColumn("gap", col("sec") - lag(col("sec"), 1).over(w))
-      .filter(col("gap").isNotNull)
-      .withColumn("bucket",
-        when(col("gap") <= 0, lit(0)).otherwise(length(bin(col("gap")))).cast("int"))
+    val hist = TimeseriesExt.gapBuckets(s, d)
       .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
     val tot = hist.agg(sum(col("n")).as("nn"),
       sum(col("n") * col("bucket")).as("mm"))

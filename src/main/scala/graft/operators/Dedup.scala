@@ -267,11 +267,7 @@ object Dedup {
   /** [[pairIntersectionsFrom]] body over pre-derived parts: `e` =
     * (doc_id, sh 60-bit), `nsh` = (doc_id, n_sh). */
   private def pairIntersectionsParts(e: DataFrame, nsh: DataFrame): DataFrame = {
-    val bySh = graft.Checkpoints.cutLazy(
-      e.groupBy(col("sh")).agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")).between(2, 500)))
-    val vol = bySh.agg(coalesce(sum(expr("size(ds) * (size(ds) - 1) div 2")), lit(0L)).as("v"))
-    val cut = docCutFromVolume(vol)
+    val (bySh, _, cut) = shingleBuckets(e)
     // doc sample applied to the bucket ARRAYS in place (no second
     // shuffle): pairCombos then only ever generates pairs among
     // surviving docs, so generation cost — not just scoring cost — is
@@ -284,6 +280,17 @@ object Dedup {
       .agg(count(lit(1)).as("inter"), max(col("sample_ppm")).as("sample_ppm"))
       .join(nsh.select(col("doc_id").as("da"), col("n_sh").as("na")), "da")
       .join(nsh.select(col("doc_id").as("db"), col("n_sh").as("nb")), "db")
+  }
+
+  /** Each shingle's sorted doc list `ds` over `e` = (doc_id, sh), cut to
+    * the buckets that pair documents (2..500 docs); the pair volume `v`
+    * those buckets generate; and the doc-sample cutoff that volume sets. */
+  private def shingleBuckets(e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val bySh = graft.Checkpoints.cutLazy(
+      e.groupBy(col("sh")).agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+        .filter(size(col("ds")).between(2, 500)))
+    val vol = bySh.agg(coalesce(sum(expr("size(ds) * (size(ds) - 1) div 2")), lit(0L)).as("v"))
+    (bySh, vol, docCutFromVolume(vol))
   }
 
   /** The pair-stage CTE chain every budget-sampled SQL mirror shares:
@@ -329,11 +336,7 @@ object Dedup {
     val e = sets.select(col("doc_id"), explode(col("shingles")).as("raw"))
       .select(col("doc_id"),
         conv(substring(md5(col("raw")), 1, 15), 16, 10).cast("long").as("sh"))
-    val bySh = graft.Checkpoints.cutLazy(
-      e.groupBy(col("sh")).agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .filter(size(col("ds")).between(2, 500)))
-    val vol = bySh.agg(coalesce(sum(expr("size(ds) * (size(ds) - 1) div 2")), lit(0L)).as("v"))
-    val cut = docCutFromVolume(vol)
+    val (bySh, vol, cut) = shingleBuckets(e)
     // count + countDistinct in ONE agg makes Catalyst Expand the
     // exploded pair stream ×2 before the shuffle; grouping by pair
     // first (map-side combine) and folding the tiny grouped table
@@ -543,30 +546,36 @@ object Dedup {
   /** SQL fragments of the one-permutation signature → band-list chain
     * (CTE names `e`/`sig`/`banded`), shared by every oracle that
     * rebuilds the banded index. */
-  private[operators] val sigSqlExprs: String = (0 until NumHashes)
+  private[operators] val sigSqlExprs: String = sigSql("h")
+  private[operators] val bandSqlExprs: String = bandSql(NumBands, BandSize)
+  private[operators] val blSqlSelects: String = bandListSql(NumBands, "banded")
+
+  /** The signature columns s0.. over the md5 hex hashes in column `h`. */
+  private def sigSql(h: String): String = (0 until NumHashes)
     .map { i =>
       val slot = Integer.toHexString(i)
-      s"coalesce(min(CASE WHEN substr(h, 1, 1) = '$slot' THEN h END), 'e$slot') AS s$i"
+      s"coalesce(min(CASE WHEN substr($h, 1, 1) = '$slot' THEN $h END), 'e$slot') AS s$i"
     }.mkString(", ")
-  private[operators] val bandSqlExprs: String = (0 until NumBands)
-    .map(b => s"md5(${(b * BandSize until (b + 1) * BandSize).map(i => s"s$i").mkString(" || ")}) AS band$b")
+
+  /** `bands` band hashes of `rows` signature columns each. */
+  private def bandSql(bands: Int, rows: Int): String = (0 until bands)
+    .map(b => s"md5(${(b * rows until (b + 1) * rows).map(i => s"s$i").mkString(" || ")}) AS band$b")
     .mkString(", ")
-  private[operators] val blSqlSelects: String = (0 until NumBands)
-    .map(b => s"SELECT doc_id, '$b' AS band_idx, band$b AS bh FROM banded")
+
+  /** The (doc_id, band_idx, bh) band list of the CTE `banded`. */
+  private def bandListSql(bands: Int, banded: String): String = (0 until bands)
+    .map(b => s"SELECT doc_id, '$b' AS band_idx, band$b AS bh FROM $banded")
     .mkString(" UNION ALL ")
 
-  val minhashLshSql: String = {
-    val sigExprs = sigSqlExprs
-    val bandExprs = bandSqlExprs
-    val blSelects = blSqlSelects
+  val minhashLshSql: String =
     s"""WITH sets AS (
           SELECT doc_id, shingles, len(shingles) AS n_sh FROM (
             SELECT doc_id, $shinglesSqlExpr AS shingles FROM documents)
           WHERE len(shingles) > 0),
         e AS (SELECT doc_id, md5(unnest(shingles)) AS h FROM sets),
-        sig AS (SELECT doc_id, $sigExprs FROM e GROUP BY doc_id),
-        banded AS (SELECT doc_id, $bandExprs FROM sig),
-        bl AS ($blSelects),
+        sig AS (SELECT doc_id, $sigSqlExprs FROM e GROUP BY doc_id),
+        banded AS (SELECT doc_id, $bandSqlExprs FROM sig),
+        bl AS ($blSqlSelects),
         cand AS (
           SELECT DISTINCT a.doc_id AS da, b.doc_id AS db
           FROM bl a JOIN bl b ON a.band_idx = b.band_idx AND a.bh = b.bh
@@ -579,7 +588,6 @@ object Dedup {
         WHERE floor((len(list_intersect(sa.shingles, sb.shingles)) * 1.0 /
                 (sa.n_sh + sb.n_sh - len(list_intersect(sa.shingles, sb.shingles)))) * 10000) / 10000.0 >= 0.4
         ORDER BY doc_a, doc_b"""
-  }
 
   /** Hex first-chars of md5(text) that route a document into the
     * incremental DELTA batch (~2/16 ≈ 12.5% of the corpus) — the same
@@ -633,17 +641,6 @@ object Dedup {
   }
 
   val incrementalSql: String = {
-    val sigExprs = (0 until NumHashes)
-      .map { i =>
-        val slot = Integer.toHexString(i)
-        s"coalesce(min(CASE WHEN substr(h, 1, 1) = '$slot' THEN h END), 'e$slot') AS s$i"
-      }.mkString(", ")
-    val bandExprs = (0 until NumBands)
-      .map(b => s"md5(${(b * BandSize until (b + 1) * BandSize).map(i => s"s$i").mkString(" || ")}) AS band$b")
-      .mkString(", ")
-    val blSelects = (0 until NumBands)
-      .map(b => s"SELECT doc_id, '$b' AS band_idx, band$b AS bh FROM banded")
-      .mkString(" UNION ALL ")
     val deltaIn = IncDeltaHex.map(h => s"'$h'").mkString(", ")
     s"""WITH sets AS (
           SELECT doc_id, shingles, len(shingles) AS n_sh FROM (
@@ -652,9 +649,9 @@ object Dedup {
         side AS (SELECT doc_id, substr(md5(text), 1, 1) IN ($deltaIn) AS is_delta
                  FROM documents),
         e AS (SELECT doc_id, md5(unnest(shingles)) AS h FROM sets),
-        sig AS (SELECT doc_id, $sigExprs FROM e GROUP BY doc_id),
-        banded AS (SELECT doc_id, $bandExprs FROM sig),
-        bl AS ($blSelects),
+        sig AS (SELECT doc_id, $sigSqlExprs FROM e GROUP BY doc_id),
+        banded AS (SELECT doc_id, $bandSqlExprs FROM sig),
+        bl AS ($blSqlSelects),
         bls AS (SELECT bl.doc_id, band_idx, bh, is_delta
                 FROM bl JOIN side USING (doc_id)),
         cand AS (
@@ -955,18 +952,7 @@ object Dedup {
       .withColumn("recall", floor(col("n_caught") * lit(10000) / col("n_truth")) / 1e4)
   }
 
-  val lshRecallSql: String = {
-    val sigExprs = (0 until NumHashes)
-      .map { i =>
-        val slot = Integer.toHexString(i)
-        s"coalesce(min(CASE WHEN substr(h2, 1, 1) = '$slot' THEN h2 END), 'e$slot') AS s$i"
-      }.mkString(", ")
-    val bandExprs = (0 until NumBands)
-      .map(b => s"md5(${(b * BandSize until (b + 1) * BandSize).map(i => s"s$i").mkString(" || ")}) AS band$b")
-      .mkString(", ")
-    val blSelects = (0 until NumBands)
-      .map(b => s"SELECT doc_id, '$b' AS band_idx, band$b AS bh FROM banded2")
-      .mkString(" UNION ALL ")
+  val lshRecallSql: String =
     s"""WITH truth AS (
           SELECT doc_a, doc_b, jaccard,
                  CASE WHEN jaccard >= 0.9 THEN 0.9
@@ -977,9 +963,9 @@ object Dedup {
             SELECT doc_id, $shinglesSqlExpr AS shingles FROM documents)
           WHERE len(shingles) > 0),
         e2 AS (SELECT doc_id, md5(unnest(shingles)) AS h2 FROM sets2),
-        sig2 AS (SELECT doc_id, $sigExprs FROM e2 GROUP BY doc_id),
-        banded2 AS (SELECT doc_id, $bandExprs FROM sig2),
-        bl2 AS ($blSelects),
+        sig2 AS (SELECT doc_id, ${sigSql("h2")} FROM e2 GROUP BY doc_id),
+        banded2 AS (SELECT doc_id, $bandSqlExprs FROM sig2),
+        bl2 AS (${bandListSql(NumBands, "banded2")}),
         cand2 AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM bl2 a JOIN bl2 b ON a.band_idx = b.band_idx AND a.bh = b.bh
@@ -989,7 +975,6 @@ object Dedup {
                floor(count(c.doc_a) * 10000 / count(*)) / 1e4 AS recall
         FROM truth t LEFT JOIN cand2 c USING (doc_a, doc_b)
         GROUP BY t.band_lo ORDER BY t.band_lo"""
-  }
 
   /** Cross-corpus dedup with source priority — the dedup-across-dumps
     * rule (CCNet keeps the copy from the earliest crawl; here lower
@@ -1291,23 +1276,12 @@ object Dedup {
   }
 
   lazy val lshTuningSql: String = {
-    val sigExprs = (0 until NumHashes)
-      .map { i =>
-        val slot = Integer.toHexString(i)
-        s"coalesce(min(CASE WHEN substr(h, 1, 1) = '$slot' THEN h END), 'e$slot') AS s$i"
-      }.mkString(", ")
     // band lists + per-config pair volumes come BEFORE the shared
     // cutoff; candidates and the stat rows come after it
     val bandCtes = TuneRows.map { r =>
       val bands = NumHashes / r
-      val bandExprs = (0 until bands)
-        .map(b => s"md5(${(b * r until (b + 1) * r).map(i => s"s$i").mkString(" || ")}) AS band$b")
-        .mkString(", ")
-      val blSelects = (0 until bands)
-        .map(b => s"SELECT doc_id, '$b' AS band_idx, band$b AS bh FROM banded_$r")
-        .mkString(" UNION ALL ")
-      s"""banded_$r AS (SELECT doc_id, $bandExprs FROM sig),
-          bl_$r AS MATERIALIZED ($blSelects),
+      s"""banded_$r AS (SELECT doc_id, ${bandSql(bands, r)} FROM sig),
+          bl_$r AS MATERIALIZED (${bandListSql(bands, s"banded_$r")}),
           vol_$r AS (SELECT coalesce(sum(n * (n - 1) // 2), 0) AS v FROM (
             SELECT count(*) AS n FROM bl_$r GROUP BY band_idx, bh) x)"""
     }.mkString(",\n")
@@ -1335,7 +1309,7 @@ object Dedup {
             SELECT doc_id, $shinglesSqlExpr AS shingles FROM documents)
           WHERE len(shingles) > 0),
         e AS (SELECT doc_id, md5(unnest(shingles)) AS h FROM sets),
-        sig AS MATERIALIZED (SELECT doc_id, $sigExprs FROM e GROUP BY doc_id),
+        sig AS MATERIALIZED (SELECT doc_id, $sigSqlExprs FROM e GROUP BY doc_id),
         esh AS MATERIALIZED (SELECT doc_id, ('0x' || substr(md5(unnest(shingles)), 1, 15))::BIGINT AS sh FROM sets),
         dfx AS MATERIALIZED (SELECT sh, count(*) AS n FROM esh GROUP BY sh HAVING count(*) BETWEEN 2 AND 500),
         vol_truth AS (SELECT coalesce(sum(n * (n - 1) // 2), 0) AS v FROM dfx),

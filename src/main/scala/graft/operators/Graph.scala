@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Checkpoints.cut
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics on DataFrames — PageRank over the
@@ -54,6 +54,25 @@ object Graph {
     * equi-join. */
   private val OrdersBroadcastMax = 10000000L
 
+  /** The trade graph's distinct (customer, supplier) pairs, projected
+    * by `c` and `sup` over o_custkey and l_suppkey, cut once. The slim
+    * (orderkey, custkey) projection broadcasts into the lineitem scan
+    * while its count (parquet stats, one cheap job) fits. */
+  private def tradePairs(sp: SparkSession, d: String, c: Column, sup: Column): DataFrame = {
+    val ordKeys = Tables.orders(sp, d).select(col("o_orderkey"), col("o_custkey"))
+    val ordSide =
+      if (ordKeys.count() <= OrdersBroadcastMax) broadcast(ordKeys) else ordKeys
+    cut(Tables.lineitem(sp, d)
+      .select(col("l_orderkey"), col("l_suppkey"))
+      .join(ordSide, col("l_orderkey") === col("o_orderkey"))
+      .select(c, sup)
+      .distinct())
+  }
+
+  /** [[tradePairs]] keyed by the raw customer and supplier keys. */
+  private def custSuppPairs(sp: SparkSession, d: String): DataFrame =
+    tradePairs(sp, d, col("o_custkey").as("c"), col("l_suppkey").as("sup"))
+
   def pagerank: Q = (sp, d) => {
     // Loop state is keyed by LONG node ids (customer c → 2·custkey,
     // supplier s → 2·suppkey+1), rendered to the public string ids only
@@ -61,15 +80,8 @@ object Graph {
     // hash, compare and shuffle several times cheaper than 10-char
     // string keys, and the rendered set is identical (the id map is a
     // bijection), so the unrolled-SQL oracle keeps its string form.
-    val ordKeys = Tables.orders(sp, d).select(col("o_orderkey"), col("o_custkey"))
-    val nOrders = ordKeys.count() // parquet-stats count, one cheap job
-    val ordSide = if (nOrders <= OrdersBroadcastMax) broadcast(ordKeys) else ordKeys
-    val pairsL = cut(Tables.lineitem(sp, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(ordSide, col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey").cast("long") * 2).as("c"),
-        (col("l_suppkey").cast("long") * 2 + 1).as("sup"))
-      .distinct())
+    val pairsL = tradePairs(sp, d, (col("o_custkey").cast("long") * 2).as("c"),
+      (col("l_suppkey").cast("long") * 2 + 1).as("sup"))
     val e = pairsL.select(col("c").as("src"), col("sup").as("dst"))
       .unionByName(pairsL.select(col("sup").as("src"), col("c").as("dst")))
     // distinct column names end-to-end: deg derives from e, so reusing
@@ -174,14 +186,7 @@ object Graph {
     * aggregate's input vs the doubled edge list and drops every string
     * concat/hash (guide §2.3: narrower keys, fewer bytes). */
   def degreeHistogram: Q = (s, d) => {
-    val ordKeys = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-    val ordSide =
-      if (ordKeys.count() <= OrdersBroadcastMax) broadcast(ordKeys) else ordKeys
-    val pairs = cut(Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(ordSide, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-      .distinct())
+    val pairs = custSuppPairs(s, d)
     pairs.groupBy(col("c")).agg(count(lit(1)).as("degree")).select(col("degree"))
       .unionByName(
         pairs.groupBy(col("sup")).agg(count(lit(1)).as("degree")).select(col("degree")))
@@ -472,19 +477,9 @@ object Graph {
     // Σx² = Σ(xc²+xs²) — so the plan joins the pair list to the two
     // per-side degree tables once each and aggregates once (vs 6
     // rebuilds of the edge union for the naive formulation).
-    // r16: pairs is referenced THREE times (both degree tables + the
-    // moment join) — cut it once instead of re-running the
-    // lineitem⋈orders join + distinct per branch, and build it with the
-    // same dimension-broadcast the other trade-graph entries use
-    // (guide §2.4/§3.1)
-    val ordKeys = Tables.orders(sp, d).select(col("o_orderkey"), col("o_custkey"))
-    val ordSide =
-      if (ordKeys.count() <= OrdersBroadcastMax) broadcast(ordKeys) else ordKeys
-    val pairs = cut(Tables.lineitem(sp, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(ordSide, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("sup"))
-      .distinct())
+    // pairs is referenced THREE times (both degree tables + the moment
+    // join); it is cut once
+    val pairs = custSuppPairs(sp, d)
     val degC = pairs.groupBy(col("c")).agg(count(lit(1)).as("xc"))
     val degS = pairs.groupBy(col("sup")).agg(count(lit(1)).as("xs"))
     pairs.join(degC, Seq("c")).join(degS, Seq("sup"))
@@ -659,18 +654,7 @@ object Graph {
     * side via the bounded `graft_topk` aggregate — never a
     * corpus-wide sort. */
   def hits: Q = (sp, d) => {
-    // same dimension-broadcast edge build as pagerank: the slim orders
-    // projection ships to the lineitem scan when it fits, so the build
-    // shuffles only the distinct-pair aggregation, never the full
-    // lineitem side
-    val ordKeys = Tables.orders(sp, d).select(col("o_orderkey"), col("o_custkey"))
-    val ordSide =
-      if (ordKeys.count() <= OrdersBroadcastMax) broadcast(ordKeys) else ordKeys
-    val pairs = cut(Tables.lineitem(sp, d)
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(ordSide, col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("hub"), col("l_suppkey").as("auth"))
-      .distinct())
+    val pairs = tradePairs(sp, d, col("o_custkey").as("hub"), col("l_suppkey").as("auth"))
     val nHubs = pairs.select(col("hub")).distinct().count()
     // L1 rescale via a GLOBAL WINDOW over the node-sized raw-score
     // aggregate — `sum(raw) OVER ()` — instead of the former 1-row

@@ -37,10 +37,7 @@ object Models {
          * (CAST(xi AS DOUBLE) - CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"""
 
   def registryScore: Q = (s, d) => {
-    val hourly = Tables.events(s, d)
-      .groupBy(col("event_type"),
-        (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("hour_sec"))
-      .agg(floor(round(sum(col("value")), 2) / count(lit(1)) * 1e4).cast("long").as("ym"))
+    val hourly = Timeseries.hourlyMilli(s, d)
     val h0 = hourly.agg(min(expr("hour_sec DIV 3600")).as("x0"))
     val indexed = hourly.crossJoin(broadcast(h0))
       .withColumn("xi", expr("hour_sec DIV 3600 - x0"))

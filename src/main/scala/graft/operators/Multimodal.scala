@@ -50,6 +50,15 @@ object Multimodal {
          array_to_string(list_transform(range(0, CAST(1 + octet_length(encode(text)) // 256 AS INT)), i -> i * 256), ',') AS frame_offsets
        FROM documents ORDER BY doc_id"""
 
+  /** Each document's (doc_id, UTF-8 text bytes): the payload every
+    * partition-batched decoder here reads. */
+  private def payloads(s: SparkSession, d: String): Dataset[(Long, Array[Byte])] = {
+    import s.implicits._
+    Tables.documents(s, d)
+      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
+      .as[(Long, Array[Byte])]
+  }
+
   /** One decoded frame of a fake codec. */
   case class Frame(doc_id: Long, frame_idx: Int, width: Int, height: Int,
       mean_intensity: Double)
@@ -135,9 +144,7 @@ object Multimodal {
     * one row per distinct frame hash per task. */
   def frameDedup: Q = (s, d) => {
     import s.implicits._
-    val frames = Tables.documents(s, d)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      .as[(Long, Array[Byte])]
+    val frames = payloads(s, d)
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (docId, bytes) =>
@@ -207,10 +214,7 @@ object Multimodal {
     * are skipped on both sides. */
   def patchStub(spark: SparkSession, dir: String): Dataset[Patch] = {
     import spark.implicits._
-    val payloads = Tables.documents(spark, dir)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      .as[(Long, Array[Byte])]
-    payloads.mapPartitions { it =>
+    payloads(spark, dir).mapPartitions { it =>
       // a real implementation would initialize codec + tokenizer ONCE here
       it.flatMap { case (docId, bytes) =>
         val nFrames = 1 + bytes.length / 256
@@ -269,10 +273,7 @@ object Multimodal {
     * partition-batched decode pass as the other frame ops. */
   def phashStub(spark: SparkSession, dir: String): Dataset[PHash] = {
     import spark.implicits._
-    val payloads = Tables.documents(spark, dir)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      .as[(Long, Array[Byte])]
-    payloads.mapPartitions { it =>
+    payloads(spark, dir).mapPartitions { it =>
       it.flatMap { case (docId, bytes) =>
         val nFull = bytes.length / 256
         (0 until nFull).iterator.map { f =>
@@ -423,10 +424,7 @@ object Multimodal {
     * are all integer (the peak tie-breaks to the earliest window). */
   def audioStub(spark: SparkSession, dir: String): Dataset[AudioProfile] = {
     import spark.implicits._
-    val payloads = Tables.documents(spark, dir)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      .as[(Long, Array[Byte])]
-    payloads.mapPartitions { it =>
+    payloads(spark, dir).mapPartitions { it =>
       // a real implementation would initialize the DSP pipeline ONCE here
       it.map { case (docId, bytes) =>
         val n = bytes.length / 2
@@ -555,10 +553,7 @@ object Multimodal {
     * the analytics downstream stay declarative. */
   def audioWindows(spark: SparkSession, dir: String): Dataset[AudioWindowRow] = {
     import spark.implicits._
-    val payloads = Tables.documents(spark, dir)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      .as[(Long, Array[Byte])]
-    payloads.mapPartitions { it =>
+    payloads(spark, dir).mapPartitions { it =>
       it.flatMap { case (docId, bytes) =>
         val n = bytes.length / 2
         def sample(k: Int): Int = {
@@ -832,10 +827,7 @@ object Multimodal {
     * frame) so both engines enumerate identical windows. */
   def blurDetect: Q = (s, d) => {
     import s.implicits._
-    val payloads = Tables.documents(s, d)
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-      .as[(Long, Array[Byte])]
-    val frames = payloads.mapPartitions { it =>
+    val frames = payloads(s, d).mapPartitions { it =>
       // a real implementation would initialize the decoder ONCE here
       it.flatMap { case (docId, bytes) =>
         val n = (bytes.length + 255) / 256

@@ -160,15 +160,10 @@ object NativeHistogram {
         org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))))
       .withColumn("nb", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("event_type"))))
-    val est = cum
+    val est = bracket(cum
       .select(col("event_type"), col("idx"), col("cnt"), col("cum"),
         col("total"), col("nb"),
-        explode(array(qLits.map(q => lit(q._1.dropRight(2).toDouble)): _*)).as("q"))
-      .withColumn("target", col("q") * col("total"))
-      .filter(col("cum") >= col("target") &&
-        (col("cum") - col("cnt")) < col("target"))
-      .withColumn("lo", expr(boundOf("idx", -1, "raise_error")))
-      .withColumn("hi", expr(boundOf("idx", 0, "raise_error")))
+        explode(array(qLits.map(q => lit(q._1.dropRight(2).toDouble)): _*)).as("q")))
       .withColumn("est", expr(
         "floor((lo + (hi - lo) * (target - (cum - cnt)) / cnt) * 1e4) / 1e4"))
     est.groupBy(col("event_type"))
@@ -177,6 +172,16 @@ object NativeHistogram {
         max(when(col("q") === 0.9, col("est"))).as("p90"),
         max(when(col("q") === 0.99, col("est"))).as("p99"))
   }
+
+  /** The bucket rows whose cumulative count `cum` brackets the target
+    * rank q·total, with that bucket's bounds `lo` and `hi` (the
+    * overflow bucket fails loudly). */
+  private def bracket(cum: DataFrame): DataFrame =
+    cum.withColumn("target", col("q") * col("total"))
+      .filter(col("cum") >= col("target") &&
+        (col("cum") - col("cnt")) < col("target"))
+      .withColumn("lo", expr(boundOf("idx", -1, "raise_error")))
+      .withColumn("hi", expr(boundOf("idx", 0, "raise_error")))
 
   val nativeQuantileSql: String =
     s"""WITH b AS (
@@ -230,15 +235,10 @@ object NativeHistogram {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val wAll = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type"), col("win_sec"))
-    buckets
+    bracket(buckets
       .withColumn("cum", sum(col("cnt")).over(wCum))
       .withColumn("total", sum(col("cnt")).over(wAll))
-      .withColumn("q", lit(0.9e0))
-      .withColumn("target", col("q") * col("total"))
-      .filter(col("cum") >= col("target") &&
-        (col("cum") - col("cnt")) < col("target"))
-      .withColumn("lo", expr(boundOf("idx", -1, "raise_error")))
-      .withColumn("hi", expr(boundOf("idx", 0, "raise_error")))
+      .withColumn("q", lit(0.9e0)))
       .select(col("event_type"), col("win_sec"), col("total").as("n_samples"),
         expr("floor((lo + (hi - lo) * (target - (cum - cnt)) / cnt) * 1e4) / 1e4")
           .as("p90"),

@@ -106,7 +106,15 @@ object Pipeline {
     * ~2048 estimated tokens (chars/4). pack = floor(exclusive-cumsum /
     * budget) — one window shuffle keyed by language; at 100 TB the key
     * becomes (lang, shard) so no single partition holds a language. */
-  def packTokenBudget: Q = (s, d) => {
+  def packTokenBudget: Q = (s, d) =>
+    packed(s, d)
+      .groupBy(col("lang"), col("pack_id"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("tok_est")).as("pack_tokens"))
+
+  /** Each document's (doc_id, lang, tok_est = chars/4) and its pack:
+    * the exclusive running token sum per language in doc_id order,
+    * divided by [[PackBudget]]. The three pack ledgers read it. */
+  private def packed(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     Tables.documents(s, d)
@@ -114,8 +122,6 @@ object Pipeline {
         ceil(col("n_chars") / 4.0).cast("long").as("tok_est"))
       .withColumn("pack_id",
         floor(coalesce(sum(col("tok_est")).over(w), lit(0L)) / PackBudget).cast("long"))
-      .groupBy(col("lang"), col("pack_id"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("tok_est")).as("pack_tokens"))
   }
 
   val packTokenBudgetSql: String =
@@ -139,15 +145,9 @@ object Pipeline {
     * corpus). Same single (lang-keyed) window pass as the packer: one
     * shuffle, no joins. */
   def packBoundaryOffsets: Q = (s, d) => {
-    val wCum = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
     val wPack = Window.partitionBy(col("lang"), col("pack_id")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        ceil(col("n_chars") / 4.0).cast("long").as("tok_est"))
-      .withColumn("pack_id",
-        floor(coalesce(sum(col("tok_est")).over(wCum), lit(0L)) / PackBudget).cast("long"))
+    packed(s, d)
       .withColumn("off", coalesce(sum(col("tok_est")).over(wPack), lit(0L)))
       .groupBy(col("lang"), col("pack_id"))
       .agg(count(lit(1)).as("n_docs"),
@@ -167,21 +167,14 @@ object Pipeline {
     * no joins, mirrors `pack_token_budget`'s pack assignment so the
     * three pack ledgers (packs, boundaries, density) describe the SAME
     * batches. */
-  def packMaskDensity: Q = (s, d) => {
-    val wCum = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    Tables.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        ceil(col("n_chars") / 4.0).cast("long").as("tok_est"))
-      .withColumn("pack_id",
-        floor(coalesce(sum(col("tok_est")).over(wCum), lit(0L)) / PackBudget).cast("long"))
+  def packMaskDensity: Q = (s, d) =>
+    packed(s, d)
       .groupBy(col("lang"), col("pack_id"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("tok_est")).as("pack_tokens"),
         sum(col("tok_est") * col("tok_est")).as("sum_sq_tokens"))
       .withColumn("mask_valid_x1e6",
         expr("sum_sq_tokens * 1000000 div (pack_tokens * pack_tokens)"))
-  }
 
   val packMaskDensitySql: String =
     s"""WITH t AS (

@@ -30,15 +30,20 @@ object PromQlFns {
   private val secExpr = "cast(unix_timestamp(date_trunc('second', ts)) as bigint)"
   private val secSql = "CAST(epoch(date_trunc('second', ts)) AS BIGINT)"
 
-  /** The instant vector at the feed's newest timestamp, 7-day lookback:
-    * per series the latest sample by (sec, event_id) — the same
-    * deterministic last-sample rule as `prom_query_range`. */
-  private[operators] def instantVector(s: SparkSession, d: String): DataFrame = {
-    val samp = Tables.events(s, d).select(
+  /** Every event as a gauge sample: (job, instance, whole-second sec,
+    * event_id, value in cents). */
+  private def samples(s: SparkSession, d: String): DataFrame =
+    Tables.events(s, d).select(
       col("event_type").as("job"),
       concat(lit("u"), (col("user_id") % 10).cast("string")).as("instance"),
       expr(secExpr).as("sec"), col("event_id"),
       floor(col("value") * 100).cast("long").as("cents"))
+
+  /** The instant vector at the feed's newest timestamp, 7-day lookback:
+    * per series the latest sample by (sec, event_id) — the same
+    * deterministic last-sample rule as `prom_query_range`. */
+  private[operators] def instantVector(s: SparkSession, d: String): DataFrame = {
+    val samp = samples(s, d)
     val now = samp.agg(max(col("sec")).as("now_sec"))
     samp.crossJoin(broadcast(now))
       .filter(col("sec") > col("now_sec") - lit(7L * 86400))
@@ -77,11 +82,7 @@ object PromQlFns {
     * (value desc, instance asc), the deterministic refinement.
     * Ranking windows partition by (step, job). */
   def topkInstant: Q = (s, d) => {
-    val samp = Tables.events(s, d).select(
-      col("event_type").as("job"),
-      concat(lit("u"), (col("user_id") % 10).cast("string")).as("instance"),
-      expr(secExpr).as("sec"), col("event_id"),
-      floor(col("value") * 100).cast("long").as("cents"))
+    val samp = samples(s, d)
       .withColumn("step_sec",
         expr(s"((sec + ${TopkStepSec - 1}) div $TopkStepSec) * $TopkStepSec"))
     val last = samp.groupBy(col("step_sec"), col("job"), col("instance"))

@@ -194,21 +194,30 @@ object PromWire {
     * concatenation of this entry's wire_hex column, in any row order,
     * unhexed, IS a valid `prompb.WriteRequest` body (field order within
     * each frame is fixed; frames commute because field 1 is repeated). */
-  def wireFrame: Q = (s, d) => {
+  def wireFrame: Q = (s, d) =>
+    encodeSamples(stackFamilies(familyAgg(s, d)))
+      .selectExpr("family_type", "metric_name", "event_type", "ts_ms", "value",
+        s"${sparkDia.idiv("length(wire_hex)")} AS wire_len", "wire_hex")
+
+  /** Each event type's family measures: count, 2dp sum, last whole
+    * second in ms, and the gauge mean off the rounded sum. */
+  private def familyAgg(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val agg = Tables.events(s, d).groupBy(col("event_type"))
+    Tables.events(s, d).groupBy(col("event_type"))
       .agg(
         count(lit(1)).cast("double").as("n"),
         round(sum(col("value")), 2).as("vsum"),
         expr("CAST(unix_seconds(date_trunc('second', max(ts))) AS BIGINT) * 1000").as("ts_ms"))
       .withColumn("gavg", expr("floor(vsum / n * 1e4) / 1e4"))
+  }
+
+  /** [[familyAgg]] unpivoted: one (family_type, metric_name, value) row
+    * per event type and family. */
+  private def stackFamilies(agg: DataFrame): DataFrame = {
     val stackArgs = families
       .map { case (f, m, v) => s"'$f', '$m', $v" }.mkString(", ")
-    val stacked = agg.selectExpr("event_type", "ts_ms",
+    agg.selectExpr("event_type", "ts_ms",
       s"stack(${families.size}, $stackArgs) AS (family_type, metric_name, value)")
-    encodeSamples(stacked)
-      .selectExpr("family_type", "metric_name", "event_type", "ts_ms", "value",
-        s"${sparkDia.idiv("length(wire_hex)")} AS wire_len", "wire_hex")
   }
 
   val wireFrameSql: String = {
@@ -508,17 +517,8 @@ object PromWire {
     // localCheckpoint: the |series|-row family aggregate feeds THREE
     // consumers (frames, the symbol join, the symbol tail) — one
     // corpus scan, not three (the shared-table discipline)
-    val agg = Tables.events(s, d).groupBy(col("event_type"))
-      .agg(
-        count(lit(1)).cast("double").as("n"),
-        round(sum(col("value")), 2).as("vsum"),
-        expr("CAST(unix_seconds(date_trunc('second', max(ts))) AS BIGINT) * 1000").as("ts_ms"))
-      .withColumn("gavg", expr("floor(vsum / n * 1e4) / 1e4"))
-      .transform(graft.Checkpoints.cut)
-    val stackArgs = families
-      .map { case (f, m, v) => s"'$f', '$m', $v" }.mkString(", ")
-    val stacked = agg.selectExpr("event_type", "ts_ms",
-      s"stack(${families.size}, $stackArgs) AS (family_type, metric_name, value)")
+    val agg = familyAgg(s, d).transform(graft.Checkpoints.cut)
+    val stacked = stackFamilies(agg)
     // data-driven symbol refs: one row_number over the bounded
     // distinct event-type set (post-aggregate ⇒ bounded input).
     // Event types already present in the constant block are NOT

@@ -425,6 +425,23 @@ object Scrapers {
         FROM a ORDER BY event_type"""
   }
 
+  /** The long sample rows of `prom_remote_write_all`: (family type,
+    * metric name, label literal, aggregate column). */
+  private val remoteWriteRows: Seq[(String, String, String, String)] =
+    Seq(
+      ("COUNTER", "events_total", "''", "n"),
+      ("GAUGE", "events_value_gauge", "''", "gavg")) ++
+    hqLes.map(le => ("HISTOGRAM", "events_value_bucket", s"'$le'", s"b$le")) ++
+    Seq(
+      ("HISTOGRAM", "events_value_bucket", "'+Inf'", "n"),
+      ("HISTOGRAM", "events_value_hist_sum", "''", "vsum"),
+      ("HISTOGRAM", "events_value_hist_count", "''", "n"),
+      ("SUMMARY", "events_value", "'0.5'", "q50"),
+      ("SUMMARY", "events_value", "'0.9'", "q90"),
+      ("SUMMARY", "events_value", "'0.99'", "q99"),
+      ("SUMMARY", "events_value_sum", "''", "vsum"),
+      ("SUMMARY", "events_value_count", "''", "n"))
+
   /** The full ConvertMetricFamilyToTimeSeries switch
     * (collector/internal/utils/prometheus.go:23-120): ONE long sample
     * stream carrying all four MetricFamily types — COUNTER and GAUGE
@@ -449,24 +466,10 @@ object Scrapers {
     val agg = Tables.events(s, d).groupBy(col("event_type"))
       .agg(aggCols.head, aggCols.tail: _*)
       .withColumn("gavg", expr("floor(vsum / n * 1e4) / 1e4"))
-    val rows: Seq[(String, String, String, String)] =
-      Seq(
-        ("COUNTER", "events_total", "''", "n"),
-        ("GAUGE", "events_value_gauge", "''", "gavg")) ++
-      hqLes.map(le => ("HISTOGRAM", "events_value_bucket", s"'$le'", s"b$le")) ++
-      Seq(
-        ("HISTOGRAM", "events_value_bucket", "'+Inf'", "n"),
-        ("HISTOGRAM", "events_value_hist_sum", "''", "vsum"),
-        ("HISTOGRAM", "events_value_hist_count", "''", "n"),
-        ("SUMMARY", "events_value", "'0.5'", "q50"),
-        ("SUMMARY", "events_value", "'0.9'", "q90"),
-        ("SUMMARY", "events_value", "'0.99'", "q99"),
-        ("SUMMARY", "events_value_sum", "''", "vsum"),
-        ("SUMMARY", "events_value_count", "''", "n"))
-    val stackArgs = rows
+    val stackArgs = remoteWriteRows
       .map { case (f, m, l, v) => s"'$f', '$m', $l, $v" }.mkString(", ")
     agg.selectExpr("event_type",
-      s"stack(${rows.size}, $stackArgs) AS (family_type, metric_name, label, value)")
+      s"stack(${remoteWriteRows.size}, $stackArgs) AS (family_type, metric_name, label, value)")
       .select(col("family_type"), col("metric_name"), col("event_type"),
         col("label"), col("value"))
   }
@@ -474,21 +477,7 @@ object Scrapers {
   val remoteWriteAllSql: String = {
     val counts = hqLes.map(le =>
       s"CAST(count(*) FILTER (WHERE value <= $le) AS DOUBLE) AS b$le").mkString(", ")
-    val rows: Seq[(String, String, String, String)] =
-      Seq(
-        ("COUNTER", "events_total", "''", "n"),
-        ("GAUGE", "events_value_gauge", "''", "gavg")) ++
-      hqLes.map(le => ("HISTOGRAM", "events_value_bucket", s"'$le'", s"b$le")) ++
-      Seq(
-        ("HISTOGRAM", "events_value_bucket", "'+Inf'", "n"),
-        ("HISTOGRAM", "events_value_hist_sum", "''", "vsum"),
-        ("HISTOGRAM", "events_value_hist_count", "''", "n"),
-        ("SUMMARY", "events_value", "'0.5'", "q50"),
-        ("SUMMARY", "events_value", "'0.9'", "q90"),
-        ("SUMMARY", "events_value", "'0.99'", "q99"),
-        ("SUMMARY", "events_value_sum", "''", "vsum"),
-        ("SUMMARY", "events_value_count", "''", "n"))
-    val selects = rows.map { case (f, m, l, v) =>
+    val selects = remoteWriteRows.map { case (f, m, l, v) =>
       s"SELECT '$f' AS family_type, '$m' AS metric_name, event_type, $l AS label, $v AS value FROM a"
     }.mkString(" UNION ALL ")
     s"""WITH a0 AS (SELECT event_type,

@@ -124,16 +124,22 @@ object Timeseries {
     * returning no point before first ingest. */
   def gapFill: Q = (s, d) => {
     val h = hourly(s, d)
-    val bounds = h.agg(min(col("hour_sec")).as("h0"), max(col("hour_sec")).as("h1"))
-    val spine = h.select("event_type").distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("event_type"), explode(expr("sequence(h0, h1, 3600)")).as("hour_sec"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("hour_sec"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(h, Seq("event_type", "hour_sec"), "left")
+    hourSpine(h).join(h, Seq("event_type", "hour_sec"), "left")
       .withColumn("filled", col("avg_value").isNull)
       .withColumn("value", last(col("avg_value"), ignoreNulls = true).over(w))
       .select(col("event_type"), col("hour_sec"), col("value"), col("filled"))
+  }
+
+  /** Every hour from the first to the last `hour_sec` of `h`, for each
+    * event_type in `h`: the |series|×|hours| spine, generated by
+    * sequence+explode rather than scanned. */
+  private[operators] def hourSpine(h: DataFrame): DataFrame = {
+    val bounds = h.agg(min(col("hour_sec")).as("h0"), max(col("hour_sec")).as("h1"))
+    h.select("event_type").distinct()
+      .crossJoin(broadcast(bounds))
+      .select(col("event_type"), explode(expr("sequence(h0, h1, 3600)")).as("hour_sec"))
   }
 
   val gapFillSql: String =
@@ -414,7 +420,7 @@ object Timeseries {
 
   /** Per (event_type, hour_sec): the hourly mean value in exact
     * milli-units, `ym`. */
-  private def hourlyMilli(s: SparkSession, d: String): DataFrame =
+  private[operators] def hourlyMilli(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .groupBy(col("event_type"),
         (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("hour_sec"))
@@ -463,7 +469,18 @@ object Timeseries {
     * division runs on raw stored doubles and an integer second delta —
     * an identical IEEE op sequence in both engines — and is
     * floor-truncated at 6dp. */
-  def irate: Q = (s, d) => {
+  def irate: Q = (s, d) =>
+    lastTwoPerHour(s, d)
+      .withColumn("irate_per_sec",
+        when(col("prev_v").isNotNull && col("dt") > 0,
+          floor(when(col("value") < col("prev_v"), col("value"))
+            .otherwise(col("value") - col("prev_v")) / col("dt") * 1e6) / 1e6))
+      .select(col("event_type"), col("hour_sec"), col("irate_per_sec"))
+
+  /** Each series' last sample per hour with the sample before it:
+    * `prev_v` and the whole-second gap `dt` by one series-keyed lag,
+    * then the hour's last sample by a bounded per-hour rank. */
+  private def lastTwoPerHour(s: SparkSession, d: String): DataFrame = {
     val ws = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
     val wh = Window.partitionBy(col("event_type"), col("hour_sec"))
       .orderBy(col("ts").desc, col("event_id").desc)
@@ -475,11 +492,6 @@ object Timeseries {
       .withColumn("hour_sec", (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long"))
       .withColumn("rn", row_number().over(wh))
       .filter(col("rn") === 1)
-      .withColumn("irate_per_sec",
-        when(col("prev_v").isNotNull && col("dt") > 0,
-          floor(when(col("value") < col("prev_v"), col("value"))
-            .otherwise(col("value") - col("prev_v")) / col("dt") * 1e6) / 1e6))
-      .select(col("event_type"), col("hour_sec"), col("irate_per_sec"))
   }
 
   val irateSql: String =
@@ -509,21 +521,12 @@ object Timeseries {
     * restart). Same one-lag + bounded per-hour rank shape as `irate`;
     * the subtraction runs on raw stored doubles (one identical IEEE
     * op in both engines), floor-truncated at 6dp. */
-  def idelta: Q = (s, d) => {
-    val ws = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-    val wh = Window.partitionBy(col("event_type"), col("hour_sec"))
-      .orderBy(col("ts").desc, col("event_id").desc)
-    Tables.events(s, d)
-      .select(col("event_type"), col("ts"), col("event_id"), col("value"))
-      .withColumn("prev_v", lag(col("value"), 1).over(ws))
-      .withColumn("hour_sec", (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long"))
-      .withColumn("rn", row_number().over(wh))
-      .filter(col("rn") === 1)
+  def idelta: Q = (s, d) =>
+    lastTwoPerHour(s, d)
       .withColumn("idelta",
         when(col("prev_v").isNotNull,
           floor((col("value") - col("prev_v")) * 1e6) / 1e6))
       .select(col("event_type"), col("hour_sec"), col("idelta"))
-  }
 
   val ideltaSql: String =
     """WITH s AS (

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Second wave of TSDB read-side operators: time-weighted averages
@@ -132,14 +132,20 @@ object TimeseriesExt {
     * frame would. max() commutes with the final division, so the
     * increase stays BIGINT until one floored divide. Two windows + one
     * aggregation, all keyed by series. */
-  def subqueryMaxRate: Q = (s, d) => {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-    val buckets = samples(s, d)
+  /** Each sample's `delta` from the series' previous one in `w` order
+    * and its counter increase `inc`: 0 for the first sample, the value
+    * itself after a drop (a reset), else the delta. Exact cents. */
+  private def withIncrease(samples: DataFrame, w: WindowSpec): DataFrame =
+    samples
       .withColumn("delta", col("v_c") - lag(col("v_c"), 1).over(w))
       .withColumn("inc",
         when(col("delta").isNull, lit(0L))
           .when(col("delta") < 0, col("v_c"))
           .otherwise(col("delta")))
+
+  def subqueryMaxRate: Q = (s, d) => {
+    val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
+    val buckets = withIncrease(samples(s, d), w)
       .groupBy(col("event_type"), expr(s"sec DIV $SubRateWindowSec").as("bucket"))
       .agg(sum(col("inc")).as("inc_c"))
     val wRange = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
@@ -582,7 +588,15 @@ object TimeseriesExt {
     * bucket k holds gaps in [2^(k−1), 2^k) — no floating log whose
     * last ulp could split a bucket boundary. One user-keyed lag + one
     * tiny aggregation. */
-  def gapLog2Histogram: Q = (s, d) => {
+  def gapLog2Histogram: Q = (s, d) =>
+    gapBuckets(s, d)
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n"), min(col("gap")).as("lo_sec"), max(col("gap")).as("hi_sec"))
+
+  /** Each event's whole-second `gap` since the same user's previous
+    * event, and its log2 `bucket` = bit length of the gap (0 for a
+    * zero gap). A user's first event has no gap and no row. */
+  private[operators] def gapBuckets(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     Tables.events(s, d)
       .select(col("user_id"), col("ts"), col("event_id"),
@@ -591,8 +605,6 @@ object TimeseriesExt {
       .filter(col("gap").isNotNull)
       .withColumn("bucket",
         when(col("gap") <= 0, lit(0)).otherwise(length(bin(col("gap")))).cast("int"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n"), min(col("gap")).as("lo_sec"), max(col("gap")).as("hi_sec"))
   }
 
   val gapLog2HistogramSql: String =
@@ -893,12 +905,7 @@ object TimeseriesExt {
   def counterRepair: Q = (s, d) => {
     val w = Window.partitionBy(col("event_type")).orderBy(col("sec"), col("event_id"))
     val wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    samples(s, d)
-      .withColumn("delta", col("v_c") - lag(col("v_c"), 1).over(w))
-      .withColumn("inc",
-        when(col("delta").isNull, lit(0L))
-          .when(col("delta") < 0, col("v_c"))
-          .otherwise(col("delta")))
+    withIncrease(samples(s, d), w)
       .withColumn("repaired_c", sum(col("inc")).over(wc))
       .withColumn("was_reset", coalesce(col("delta") < 0, lit(false)))
       .select(col("event_type"), col("sec"), col("event_id"), col("v_c").as("raw_c"),
@@ -1008,12 +1015,8 @@ object TimeseriesExt {
       .groupBy(col("event_type"),
         (floor(unix_timestamp(col("ts")) / 3600) * 3600).cast("long").as("hour_sec"))
       .agg(count(lit(1)).as("n_samples"))
-    val bounds = h.agg(min(col("hour_sec")).as("h0"), max(col("hour_sec")).as("h1"))
-    val spine = h.select("event_type").distinct()
-      .crossJoin(broadcast(bounds))
-      .select(col("event_type"), explode(expr("sequence(h0, h1, 3600)")).as("hour_sec"))
     val w = Window.partitionBy(col("event_type")).orderBy(col("hour_sec"))
-    val runs = spine.join(h, Seq("event_type", "hour_sec"), "left")
+    val runs = Timeseries.hourSpine(h).join(h, Seq("event_type", "hour_sec"), "left")
       .select(col("event_type"), col("hour_sec"),
         when(col("n_samples").isNull, 0L).otherwise(1L).as("up"))
       .withColumn("flap",

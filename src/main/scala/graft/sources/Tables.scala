@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.StructType
   * inferred once per file version and every later read supplies it
   * (`spark.read.schema(known).parquet`), which plans the same scan
   * without the job. The key is the qualified path plus the session
-  * settings that change what inference returns (`InferenceConfs`, the
-  * two `tts` sets); the value is the schema with the stamp it was
+  * settings that change what inference returns (`InferenceConfs`,
+  * fixed by `Engine.session`); the value is the schema with the stamp it was
   * inferred at: the path's modification time and length, from one
   * `getFileStatus` per read. A read whose stamp differs (the test data
   * is regenerated between rounds) infers again and replaces the entry,
@@ -36,8 +36,8 @@ import org.apache.spark.sql.types.StructType
   * each infer (the same schema); no lock is held while a job runs.
   */
 object Tables {
-  /** Session settings graft changes that change what parquet schema
-    * inference returns. */
+  /** Session settings that change what parquet schema inference
+    * returns (`Engine.session` fixes both for the timestamp vintages). */
   private val InferenceConfs = Seq(
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled")
@@ -80,11 +80,8 @@ object Tables {
     }
 
   private def tts(spark: SparkSession, dir: String, name: String,
-      tsCols: String*): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      tsCols: String*): DataFrame =
     adaptTs(t(spark, dir, name), tsCols: _*)
-  }
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")
@@ -96,8 +93,9 @@ object Tables {
   /** events.ts arrives in two driver vintages: parquet TIMESTAMP(NANOS)
     * (Spark 4 rejects it as a timestamp type — read raw nanos via the
     * legacy conf and convert) or TIMESTAMP(MICROS, not UTC-adjusted).
-    * For the MICROS vintage, disabling NTZ inference makes the scan
-    * surface the column directly as the session-UTC TimestampType the
+    * For the MICROS vintage, disabled NTZ inference (`Engine.session`)
+    * makes the scan surface the column directly as the session-UTC
+    * TimestampType the
     * operators expect — no per-row cast projection over the corpus
     * scan (the session timezone is pinned UTC, so the reinterpretation
     * is value-preserving and matches DuckDB's naive-timestamp view).

@@ -22,7 +22,7 @@ object Writers {
 
   val Buckets = 8
 
-  private def sfx(d: String): String =
+  private[graft] def sfx(d: String): String =
     java.lang.Integer.toHexString(d.hashCode).takeRight(6)
 
   /** Idempotent re-create: drop the catalog entry AND its location —
@@ -520,8 +520,10 @@ object Writers {
     * in DECIMAL(38,0) — commutative, any partitioning yields the same
     * digest, the `pipeline_repro_ledger` idiom) from the STAGED files
     * and compares both against the same audit run on the source;
-    * only a full match publishes (atomic directory rename — readers
-    * see the old snapshot or the new one, never a half-write). The
+    * only a full match publishes through [[Publish.swap]], so readers
+    * going through [[Publish.current]] see the old snapshot or the new
+    * one, never a half-write or none; a failed rename reports
+    * `published` = false. The
     * emitted ledger carries both audits and the publish verdict; the
     * oracle recomputes the source-side audit, so the hash also
     * certifies that staging round-trips bytes. */
@@ -546,23 +548,12 @@ object Writers {
     val verdict = srcAudit.select(col("n_rows").as("sn"), col("digest").as("sd"))
       .crossJoin(stAudit.select(col("n_rows").as("tn"), col("digest").as("td")))
       .select((col("sn") === col("tn") && col("sd") === col("td")).as("published"))
-    // publish on a clean audit: atomic rename staging → published. The
-    // rename result is CHECKED — a cross-device or permission failure must
-    // not report published=true over a stale/missing dir (java.io.File
-    // assumes a local FS; Files.move(ATOMIC_MOVE) is the loud fallback).
+    // publish on a clean audit; a failed rename must not report
+    // published=true over a stale or missing dir
     val auditOk = verdict.collect().head.getBoolean(0)
-    val published = auditOk && {
-      val pub = new java.io.File(s"$root/published")
-      if (pub.exists()) rm(pub)
-      new java.io.File(staging).renameTo(pub) || {
-        try {
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(staging), pub.toPath,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          true
-        } catch { case _: java.io.IOException => false }
-      }
-    }
+    val published = auditOk &&
+      (try { Publish.swap(s, staging, s"$root/published", s"$root/retired"); true }
+       catch { case _: java.io.IOException => false })
     // on a clean publish read back the published snapshot; on any failure
     // (bad audit OR failed rename) re-emit the staged audit with
     // published=false instead of reading a possibly nonexistent dir

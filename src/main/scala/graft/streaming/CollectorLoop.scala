@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.sources.SourceRegistry
+import graft.sources.{Publish, SourceRegistry}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
@@ -174,39 +175,37 @@ object CollectorLoop {
   def scrapersFor(engine: String): Seq[(String, String)] =
     scrapersFor(engine, null)
 
-  private def exists(spark: SparkSession, path: String): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    } catch { case _: Throwable => false }
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def deleteDir(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    fsOf(spark, path).delete(p, true); ()
-  }
-
   /** Stage → audit → atomic publish of one round's slice of `table`:
-    * write under an invisible dot-dir, count-audit the staged files
-    * against the expected row count, then rename into `round=N`.
-    * A replayed round DELETES its own published dir first — outputs are
-    * per-round idempotent, so a crash-and-restart can never append a
-    * second copy (the `sink_write_audit_publish` discipline). */
+    * write beside the table root, count-audit the staged files against
+    * the expected row count, then [[Publish.swap]] them in as
+    * `round=N`. A replayed round REPLACES its own published slice —
+    * outputs are per-round idempotent, so a crash-and-restart can never
+    * append a second copy (the `sink_write_audit_publish` discipline). */
   private def publishRound(spark: SparkSession, table: String, round: Long,
       df: DataFrame, expectRows: Long): Unit = {
-    val stagedPath = s"$table/.staging_round_$round"
-    df.write.mode("overwrite").parquet(stagedPath)
-    val got = spark.read.parquet(stagedPath).count()
+    val staged = s"${table}_staged_round_$round"
+    df.write.mode("overwrite").parquet(staged)
+    val got = spark.read.schema(df.schema).parquet(staged).count()
     if (got != expectRows)
       sys.error(s"audit failed for $table round $round: staged $got != expected $expectRows")
-    val fs = fsOf(spark, table)
-    val target = new org.apache.hadoop.fs.Path(s"$table/round=$round")
-    if (fs.exists(target)) fs.delete(target, true)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(stagedPath), target))
-      sys.error(s"publish rename failed: $stagedPath -> $target")
+    Publish.swap(spark, staged, s"$table/round=$round", s"${table}_retired_round_$round")
+  }
+
+  /** The state snapshots' schemas, so a round reads them back without
+    * a footer-inference job. */
+  private val RegistrySchema = "source_id STRING, engine STRING"
+  private val WatermarkSchema = "source_id STRING, scraper STRING, watermark BIGINT"
+
+  /** The last published state snapshot at `path`, if any. */
+  private def state(spark: SparkSession, path: String, schema: String): Option[DataFrame] =
+    Publish.current(spark, path, s"${path}_retired").map(spark.read.schema(schema).parquet(_))
+
+  /** Publish `df` as the state snapshot at `path`: written beside it,
+    * then swapped in, so a crash mid-write keeps the last snapshot. */
+  private def advance(spark: SparkSession, path: String, df: DataFrame): Unit = {
+    val staged = s"${path}_staged"
+    df.write.mode("overwrite").parquet(staged)
+    Publish.swap(spark, staged, path, s"${path}_retired")
   }
 
   /** Enrolled registry for one round: id, engine, dsn + the config
@@ -237,11 +236,8 @@ object CollectorLoop {
 
     // 2. diff against the previous registry snapshot
     val regPath = s"$workDir/registry"
-    val prev: Map[String, String] =
-      if (exists(spark, regPath))
-        spark.read.parquet(regPath).select("source_id", "engine")
-          .as[(String, String)].collect().toMap
-      else Map.empty
+    val prev: Map[String, String] = state(spark, regPath, RegistrySchema)
+      .map(_.as[(String, String)].collect().toMap).getOrElse(Map.empty)
     val cur: Map[String, String] = enrolled
       .map(r => r.getAs[String]("source_id") -> r.getAs[String]("engine")).toMap
     val status: Map[String, String] =
@@ -256,11 +252,10 @@ object CollectorLoop {
     // families would permanently skip a lagging family's late rows —
     // silent sample loss the exactly-once machinery can't see.
     val wmPath = s"$workDir/watermarks"
-    val storedWm: Map[(String, String), Long] =
-      if (exists(spark, wmPath))
-        spark.read.parquet(wmPath).as[(String, String, Long)].collect()
-          .map { case (id, fam, w) => (id, fam) -> w }.toMap
-      else Map.empty
+    val storedWm: Map[(String, String), Long] = state(spark, wmPath, WatermarkSchema)
+      .map(_.as[(String, String, Long)].collect()
+        .map { case (id, fam, w) => (id, fam) -> w }.toMap)
+      .getOrElse(Map.empty)
     val failedScrapes = scala.collection.mutable.Set[(String, String)]()
     val scraped: Seq[DataFrame] = enrolled.toSeq.flatMap { r =>
       val id = r.getAs[String]("source_id")
@@ -332,9 +327,9 @@ object CollectorLoop {
       .reduceOption(_ unionByName _)
       .getOrElse(Seq.empty[(String, String, String, String, Double, Long)]
         .toDF("source_id", "engine", "scraper", "name", "val", "ts_sec"))
-    val spool = s"$workDir/.spool_round_$round"
+    val spool = s"$workDir/spool_round_$round"
     scrapedRows.write.mode("overwrite").parquet(spool)
-    val spooled = spark.read.parquet(spool)
+    val spooled = spark.read.schema(scrapedRows.schema).parquet(spool)
 
     // per-(source, scraper) stats off the spool (|sources × families|-
     // bounded): each family's count and max ts_sec feed ITS OWN
@@ -404,13 +399,13 @@ object CollectorLoop {
     // 5. advance snapshots AFTER the publishes: a crash before this
     // point leaves the watermarks unmoved and the restarted round
     // replaces its own round=N dirs — exactly-once outputs per round
-    cur.toSeq.toDF("source_id", "engine").write.mode("overwrite").parquet(regPath)
+    advance(spark, regPath, cur.toSeq.toDF("source_id", "engine"))
     val newWms = (storedWm ++ famCounts.map { case (k, (_, w)) => k -> w })
       .filter { case (k @ (id, _), _) => cur.contains(id) || storedWm.contains(k) }
-    newWms.toSeq.map { case ((id, fam), w) => (id, fam, w) }
-      .toDF("source_id", "scraper", "watermark")
-      .write.mode("overwrite").parquet(wmPath)
-    deleteDir(spark, spool)
+    advance(spark, wmPath, newWms.toSeq.map { case ((id, fam), w) => (id, fam, w) }
+      .toDF("source_id", "scraper", "watermark"))
+    new Path(spool).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(spool), true)
 
     manifestDf.withColumn("round", lit(round))
       .select("round", "source_id", "engine", "status", "old_watermark",
@@ -433,10 +428,10 @@ object CollectorLoop {
     * cron/Lambda deployment IS a sequence of runOnce calls over the
     * same workDir. Returns the round's manifest. */
   def runOnce(spark: SparkSession, secrets: Seq[String], workDir: String): DataFrame = {
-    val manifestPath = s"$workDir/manifest"
+    val manifest = new Path(s"$workDir/manifest")
     val next =
-      if (!exists(spark, manifestPath)) 1L
-      else spark.read.parquet(manifestPath)
+      if (!manifest.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(manifest)) 1L
+      else spark.read.parquet(manifest.toString)
         .agg(org.apache.spark.sql.functions.max(col("round").cast("long")))
         .head() match {
           case r if r.isNullAt(0) => 1L

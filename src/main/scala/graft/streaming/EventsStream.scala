@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.sources.Tables
+import graft.sources.{Publish, Tables}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -698,34 +698,11 @@ object EventsStream {
          FROM events) t
        WHERE rn = 1 ORDER BY user_id, event_type"""
 
-  /** Current contents of a snapshot store, if one has been published:
-    * `current`, or `retired` when a crash fell between
-    * `publishSnapshot`'s two renames — the last published snapshot then
-    * sits there, and the replayed batch re-merges into it. */
-  private def currentSnapshot(spark: SparkSession, snapshotDir: String): Option[DataFrame] = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(snapshotDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq("current", "retired").map(new Path(snapshotDir, _)).find(fs.exists)
-      .map(p => spark.read.parquet(p.toString))
-  }
-
-  /** Write the merged snapshot BESIDE the current one, then swap —
-    * readers never observe a half-written snapshot. The only driver
-    * work is two directory renames. */
-  private def publishSnapshot(snapshotDir: String, merged: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(snapshotDir).getFileSystem(
-      merged.sparkSession.sparkContext.hadoopConfiguration)
-    val cur = new Path(snapshotDir, "current")
-    val tmp = new Path(snapshotDir, "merging")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    val old = new Path(snapshotDir, "retired")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(cur) && !fs.rename(cur, old))
-      sys.error(s"snapshot swap: could not retire $cur")
-    if (!fs.rename(tmp, cur)) sys.error(s"snapshot swap: could not publish $tmp")
-    fs.delete(old, true)
-  }
+  /** Current contents of a snapshot store, if one has been published
+    * (`current`, published through [[Publish.swap]]). */
+  private def currentSnapshot(spark: SparkSession, snapshotDir: String): Option[DataFrame] =
+    Publish.current(spark, s"$snapshotDir/current", s"$snapshotDir/retired")
+      .map(spark.read.parquet(_))
 
   /** One micro-batch into a snapshot store: the published snapshot (if
     * any) unions with the batch's partial summary `delta`, `merge` folds
@@ -733,9 +710,13 @@ object EventsStream {
     * store here is a mergeable summary, so the outcome is independent of
     * how the stream was chunked. */
   private def mergeInto(snapshotDir: String, delta: DataFrame)(
-      merge: DataFrame => DataFrame): Unit =
-    publishSnapshot(snapshotDir, merge(currentSnapshot(delta.sparkSession, snapshotDir)
-      .map(_.unionByName(delta)).getOrElse(delta)))
+      merge: DataFrame => DataFrame): Unit = {
+    val staged = s"$snapshotDir/merging"
+    merge(currentSnapshot(delta.sparkSession, snapshotDir)
+      .map(_.unionByName(delta)).getOrElse(delta))
+      .write.mode("overwrite").parquet(staged)
+    Publish.swap(delta.sparkSession, staged, s"$snapshotDir/current", s"$snapshotDir/retired")
+  }
 
   /** One micro-batch of the incremental upsert, merged into a KEYED
     * TABLE on storage — the MERGE INTO shape a lakehouse sink runs:
@@ -1157,15 +1138,21 @@ object EventsStream {
     FunnelTriple(fv, fqc, fqp)
   }
 
-  /** Batch entry `stream_funnel`: the per-user funnel fold run as
-    * flatMapGroups — identical output to the `funnel_stages` window
-    * formulation (its SQL is this entry's oracle). */
-  def funnelBatch: Q = (s, d) => {
+  /** Every event as an [[FEvent]] (whole-second `tsSec`). */
+  private def fEvents(s: SparkSession, d: String): Dataset[FEvent] = {
     import s.implicits._
     Tables.events(s, d)
       .select(col("user_id"), col("event_id"),
         unix_timestamp(date_trunc("second", col("ts"))).as("tsSec"), col("event_type"))
       .as[FEvent]
+  }
+
+  /** Batch entry `stream_funnel`: the per-user funnel fold run as
+    * flatMapGroups — identical output to the `funnel_stages` window
+    * formulation (its SQL is this entry's oracle). */
+  def funnelBatch: Q = (s, d) => {
+    import s.implicits._
+    fEvents(s, d)
       .groupByKey(_.user_id)
       .mapGroups { (uid, it) =>
         val t = foldFunnel(FunnelTriple(None, None, None),
@@ -1251,10 +1238,7 @@ object EventsStream {
   def attributionBatch: Q = (s, d) => {
     val lookback = graft.operators.Funnel.LookbackSec
     import s.implicits._
-    Tables.events(s, d)
-      .select(col("user_id"), col("event_id"),
-        unix_timestamp(date_trunc("second", col("ts"))).as("tsSec"), col("event_type"))
-      .as[FEvent]
+    fEvents(s, d)
       .groupByKey(_.user_id)
       .flatMapGroups { (uid, it) =>
         val all = it.toSeq

@@ -305,6 +305,42 @@ class CollectorLoopSpec extends SparkTestBase {
     assert(m2.getAs[Long]("old_watermark") == 100 && m2.getAs[Long]("n_new") == 0)
   }
 
+  test("a round starts no job outside SQL and leaves only its published tables in the work dir") {
+    val base = java.nio.file.Files.createTempDirectory("graft_loop_jobs").toString
+    val db = s"$base/src"
+    mkDb(db, Seq(
+      s"CREATE TABLE ${CollectorLoop.ScrapeTable} (name VARCHAR(64), val DOUBLE, ts_sec BIGINT)",
+      s"INSERT INTO ${CollectorLoop.ScrapeTable} VALUES ('m_up', 1.0, 100), ('lat', 2.0, 100)"))
+    val secrets = Seq(secret("jobs.example.com", db))
+    val work = s"$base/work"
+    // round 2 also reads the registry and watermark snapshots back
+    Seq(1L, 2L).foreach { r =>
+      val (_, jobs) = JobsOutsideSql(spark)(CollectorLoop.runRound(spark, secrets, work, r))
+      assert(jobs.isEmpty, s"round $r started ${jobs.mkString(", ")}")
+    }
+    assert(new java.io.File(work).list().sorted.toSeq ==
+      Seq("bodies", "manifest", "registry", "watermarks"))
+    assert(new java.io.File(s"$work/bodies").list().filter(_.startsWith("round=")).sorted.toSeq ==
+      Seq("round=1", "round=2"))
+  }
+
+  test("a crash between the watermark snapshot's two renames does not rescrape published rows") {
+    val base = java.nio.file.Files.createTempDirectory("graft_loop_swap").toString
+    val db = s"$base/src"
+    mkDb(db, Seq(
+      s"CREATE TABLE ${CollectorLoop.ScrapeTable} (name VARCHAR(64), val DOUBLE, ts_sec BIGINT)",
+      s"INSERT INTO ${CollectorLoop.ScrapeTable} VALUES ('m_up', 1.0, 100), ('lat', 2.0, 100)"))
+    val secrets = Seq(secret("swap.example.com", db))
+    val work = s"$base/work"
+    CollectorLoop.runRound(spark, secrets, work, 1L)
+    // the crash window: the last snapshot retired, the new one not yet renamed in
+    java.nio.file.Files.move(java.nio.file.Paths.get(work, "watermarks"),
+      java.nio.file.Paths.get(work, "watermarks_retired"))
+    val m2 = CollectorLoop.runRound(spark, secrets, work, 2L).head()
+    assert(m2.getAs[Long]("old_watermark") == 100 && m2.getAs[Long]("n_new") == 0,
+      s"round 2 lost the stored watermark: $m2")
+  }
+
   test("per-family watermarks: a lagging scraper family's late rows are not skipped by a faster family's advance") {
     val base = java.nio.file.Files.createTempDirectory("graft_loop_wm").toString
     val db = s"$base/my"

@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.Writers
+import graft.sources.{Publish, Writers}
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.sql.functions._
 
 /** The write-side scale promises: bucketed joins shuffle nothing,
@@ -201,5 +202,33 @@ class WritersSpec extends SparkTestBase {
     val Array(p, s0) = rows.sortBy(_._1)
     assert(p._2 == s0._2 && p._3 == s0._3, "published audit differs from source audit")
     assert(p._2 > 0)
+  }
+
+  test("sink_write_audit_publish: a failed final rename keeps the last snapshot readable") {
+    import spark.implicits._
+    def publish() = run("sink_write_audit_publish")
+      .select("side", "n_rows", "published").as[(String, Long, Boolean)].collect()
+    val before = publish()
+    assert(before.forall(_._3))
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.file.impl", classOf[WritersSpec.NoRenameOntoPublished].getName)
+    conf.setBoolean("fs.file.impl.disable.cache", true)
+    val after =
+      try publish()
+      finally { conf.unset("fs.file.impl"); conf.unset("fs.file.impl.disable.cache") }
+    assert(after.forall(!_._3), "a failed rename reported published=true")
+    val root = s"/tmp/graft_wap_${Writers.sfx(sf)}"
+    val last = Publish.current(spark, s"$root/published", s"$root/retired")
+    assert(last.isDefined, "no published snapshot is left")
+    assert(spark.read.parquet(last.get).count() == before.find(_._1 == "published").get._2)
+  }
+}
+
+object WritersSpec {
+  /** The local file system, except that no rename onto a path named
+    * `published` succeeds. */
+  class NoRenameOntoPublished extends LocalFileSystem {
+    override def rename(src: Path, dst: Path): Boolean =
+      dst.getName != "published" && super.rename(src, dst)
   }
 }
