@@ -124,6 +124,17 @@ object TimeseriesExt {
   val SubRateWindowSec = 600L  // inner rate window: 10 min
   val SubOuterBuckets = 6      // outer max_over_time: 1 h = 6 buckets
 
+  /** Each sample's `delta` from the series' previous one in `w` order
+    * and its counter increase `inc`: 0 for the first sample, the value
+    * itself after a drop (a reset), else the delta. Exact cents. */
+  private def withIncrease(in: DataFrame, w: WindowSpec): DataFrame =
+    in
+      .withColumn("delta", col("v_c") - lag(col("v_c"), 1).over(w))
+      .withColumn("inc",
+        when(col("delta").isNull, lit(0L))
+          .when(col("delta") < 0, col("v_c"))
+          .otherwise(col("delta")))
+
   /** PromQL subquery `max_over_time(rate(m[10m])[1h:10m])`: the inner
     * rate per 10-min bucket (counter-reset rule from
     * `metrics_counter_rate`, in exact cents), then a trailing-1h max
@@ -132,17 +143,6 @@ object TimeseriesExt {
     * frame would. max() commutes with the final division, so the
     * increase stays BIGINT until one floored divide. Two windows + one
     * aggregation, all keyed by series. */
-  /** Each sample's `delta` from the series' previous one in `w` order
-    * and its counter increase `inc`: 0 for the first sample, the value
-    * itself after a drop (a reset), else the delta. Exact cents. */
-  private def withIncrease(samples: DataFrame, w: WindowSpec): DataFrame =
-    samples
-      .withColumn("delta", col("v_c") - lag(col("v_c"), 1).over(w))
-      .withColumn("inc",
-        when(col("delta").isNull, lit(0L))
-          .when(col("delta") < 0, col("v_c"))
-          .otherwise(col("delta")))
-
   def subqueryMaxRate: Q = (s, d) => {
     val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
     val buckets = withIncrease(samples(s, d), w)
