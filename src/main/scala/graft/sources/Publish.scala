@@ -6,11 +6,14 @@ import org.apache.spark.sql.SparkSession
 /** How graft publishes a directory atomically. A new version is written
   * in full to `staged`, beside the published `target`; [[swap]] then
   * retires `target` to `retired`, renames `staged` into place and drops
-  * `retired`. Readers go through [[current]], which falls back to
+  * `retired`. Readers that go through [[current]] (the snapshot stores,
+  * write-audit-publish, the collector's state snapshots) fall back to
   * `retired` when a crash or a failed rename fell between the two
-  * renames, so a reader sees the old version or the new one and never a
-  * half-written or missing one. `staged` and `retired` must lie outside
-  * any table root a reader lists. */
+  * renames, so they see the old version or the new one and never a
+  * half-written or missing one. A reader that lists a table root instead
+  * (the collector's `round=N` slices) can miss that one slice after such
+  * a cut-short swap, until the round is run again. `staged` and
+  * `retired` must lie outside any table root a reader lists. */
 object Publish {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -2,9 +2,11 @@ package graft.streaming
 
 import graft.sources.{Publish, SourceRegistry}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The reference's continuously-running service shape, re-expressed as
   * a Structured-Streaming-driven micro-batch loop (the collector
@@ -191,20 +193,23 @@ object CollectorLoop {
     Publish.swap(spark, staged, s"$table/round=$round", s"${table}_retired_round_$round")
   }
 
-  /** The state snapshots' schemas, so a round reads them back without
-    * a footer-inference job. */
-  private val RegistrySchema = "source_id STRING, engine STRING"
-  private val WatermarkSchema = "source_id STRING, scraper STRING, watermark BIGINT"
+  /** The state snapshots' schemas: [[advance]] writes each snapshot
+    * with its schema and [[state]] reads it back with the same one, so
+    * no footer-inference job runs. */
+  private val RegistrySchema = StructType.fromDDL("source_id STRING, engine STRING")
+  private val WatermarkSchema =
+    StructType.fromDDL("source_id STRING, scraper STRING, watermark BIGINT")
 
   /** The last published state snapshot at `path`, if any. */
-  private def state(spark: SparkSession, path: String, schema: String): Option[DataFrame] =
+  private def state(spark: SparkSession, path: String, schema: StructType): Option[DataFrame] =
     Publish.current(spark, path, s"${path}_retired").map(spark.read.schema(schema).parquet(_))
 
-  /** Publish `df` as the state snapshot at `path`: written beside it,
+  /** Publish `rows` as the state snapshot at `path`: written beside it,
     * then swapped in, so a crash mid-write keeps the last snapshot. */
-  private def advance(spark: SparkSession, path: String, df: DataFrame): Unit = {
+  private def advance(spark: SparkSession, path: String, schema: StructType,
+      rows: Seq[Row]): Unit = {
     val staged = s"${path}_staged"
-    df.write.mode("overwrite").parquet(staged)
+    spark.createDataFrame(rows.asJava, schema).write.mode("overwrite").parquet(staged)
     Publish.swap(spark, staged, path, s"${path}_retired")
   }
 
@@ -399,11 +404,11 @@ object CollectorLoop {
     // 5. advance snapshots AFTER the publishes: a crash before this
     // point leaves the watermarks unmoved and the restarted round
     // replaces its own round=N dirs — exactly-once outputs per round
-    advance(spark, regPath, cur.toSeq.toDF("source_id", "engine"))
+    advance(spark, regPath, RegistrySchema, cur.toSeq.map { case (id, e) => Row(id, e) })
     val newWms = (storedWm ++ famCounts.map { case (k, (_, w)) => k -> w })
       .filter { case (k @ (id, _), _) => cur.contains(id) || storedWm.contains(k) }
-    advance(spark, wmPath, newWms.toSeq.map { case ((id, fam), w) => (id, fam, w) }
-      .toDF("source_id", "scraper", "watermark"))
+    advance(spark, wmPath, WatermarkSchema,
+      newWms.toSeq.map { case ((id, fam), w) => Row(id, fam, w) })
     new Path(spool).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new Path(spool), true)
 

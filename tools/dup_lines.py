@@ -1,17 +1,17 @@
 #!/usr/bin/env python3
 """Count copied code: lines inside runs of >= 5 identical consecutive lines.
 
-    python3 tools/dup_lines.py [--imports] [--show] DIR_OR_FILE...
+    python3 tools/dup_lines.py [--show] DIR_OR_FILE...
 
 Each line is stripped of surrounding whitespace. Blank lines, comment
 lines, lines of brackets only, every line of a triple-quoted string (the
 oracle SQL and generated Java, from the line that opens it to the line
 that closes it) and `import`/`package` lines are dropped before the
-scan (`--imports` keeps the last two). A window of 5 consecutive kept lines
-that occurs at two or more places, in one file or across files, marks
-each of its lines as copied; each copied line is counted once. The
-script prints the copied-line count per file (largest first) and the
-total. `--show` also prints each copied run with its line numbers.
+scan. A window of 5 consecutive kept lines that occurs at two or more
+places, in one file or across files, marks each of its lines as copied;
+each copied line is counted once. The script reads `.scala` files and
+prints the copied-line count per file (largest first) and the total.
+`--show` also prints each copied run with its line numbers.
 """
 import os
 import re
@@ -22,7 +22,7 @@ WINDOW = 5
 BRACKETS = re.compile(r"^[\s(){}\[\],;]*$")
 
 
-def kept_lines(path, imports):
+def kept_lines(path):
     """(line number, stripped text) of every line the scan compares."""
     out, in_string = [], False
     with open(path, encoding="utf-8") as f:
@@ -37,9 +37,7 @@ def kept_lines(path, imports):
                 in_string = True
                 continue
             if (not line or BRACKETS.match(line)
-                    or line.startswith(("//", "/*", "*", "#"))):
-                continue
-            if not imports and line.startswith(("import ", "package ")):
+                    or line.startswith(("//", "/*", "*", "import ", "package "))):
                 continue
             out.append((no, line))
     return out
@@ -52,15 +50,14 @@ def scala_files(roots):
             continue
         for d, _, names in sorted(os.walk(root)):
             for n in sorted(names):
-                if n.endswith((".scala", ".java", ".py")):
+                if n.endswith(".scala"):
                     yield os.path.join(d, n)
 
 
 def main(argv):
-    imports = "--imports" in argv
     show = "--show" in argv
     roots = [a for a in argv if not a.startswith("--")] or ["src/main/scala"]
-    files = {p: kept_lines(p, imports) for p in scala_files(roots)}
+    files = {p: kept_lines(p) for p in scala_files(roots)}
     where = defaultdict(list)
     for p, lines in files.items():
         for i in range(len(lines) - WINDOW + 1):
